@@ -530,7 +530,7 @@ def pagerank(
         )
         ranks = (
             nodes.join(contribs, "id", "left")
-            .crossJoin(F.broadcast(dangling))
+            .crossJoin(dangling)
             .select(
                 "id",
                 (

@@ -106,7 +106,7 @@ def zorder_layout(
         F.min(y_col).alias("_ymin"), F.max(y_col).alias("_ymax"),
     )
     with_z = (
-        df.join(F.broadcast(bounds))
+        df.join(bounds)
         .withColumn("_xg", F.expr(grid_expr(x_col, "_xmin", "_xmax", bits)))
         .withColumn("_yg", F.expr(grid_expr(y_col, "_ymin", "_ymax", bits)))
         .withColumn("_z", zvalue(F.col("_xg"), F.col("_yg"), bits))

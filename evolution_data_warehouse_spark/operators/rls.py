@@ -49,7 +49,7 @@ def secured(
     ).distinct()
 
     out = (
-        df.crossJoin(F.broadcast(flags))
+        df.crossJoin(flags)
         .join(
             F.broadcast(scoped),
             F.col(scope_col) == F.col("_rls_scope"),

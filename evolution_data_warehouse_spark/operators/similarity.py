@@ -125,7 +125,7 @@ def brute_force_topk(
         F.col("_vec").alias("_cvec"),
         F.col("_norm").alias("_cnorm"),
     )
-    pairs = c.join(F.broadcast(q), F.col("query_id") != F.col("neighbor_id"))
+    pairs = c.join(q, F.col("query_id") != F.col("neighbor_id"))
     scored = pairs.withColumn(
         "cosine",
         cosine(F.col("_qvec"), F.col("_cvec"), F.col("_qnorm"), F.col("_cnorm")),
@@ -627,7 +627,7 @@ def semantic_dedup(
     # dedup.py::dedup_ngram_jaccard's shingle relation) instead of
     # recomputing the embeddings scan + fixed-point aggregation 3x.
     cc = (
-        e.join(F.broadcast(cent), label_col)
+        e.join(cent, label_col)
         .withColumn(
             "_cc",
             cosine(
@@ -650,7 +650,7 @@ def semantic_dedup(
         )
 
         counts = cc.groupBy(label_col).agg(F.count("*").alias("_cl_n"))
-        guarded = cc.join(F.broadcast(counts), label_col).withColumn(
+        guarded = cc.join(counts, label_col).withColumn(
             "_sub",
             content_hash64(F.col(id_col).cast("string"))
             % F.expr(f"(_cl_n + {max_cluster - 1}) div {max_cluster}"),

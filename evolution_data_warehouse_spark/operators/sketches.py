@@ -98,15 +98,11 @@ def heavy_hitters_exact(
     )
     candidates = summaries.groupBy("item").agg(F.sum("lb").alias("lb"))
     # exact pass: count only candidate items. The candidate union is at
-    # most capacity x partitions rows — broadcastable through thousands
-    # of partitions at the default capacity; at extreme widths drop the
-    # broadcast hint (shuffle semi-join, same plan shape) rather than
-    # rank-truncating candidates: a truncation beyond the MG merge
-    # theorem's trim could drop a true heavy hitter in a way the final
-    # certificate cannot detect, so the candidate set is never pruned
-    # here.
+    # most capacity x partitions rows and is never rank-truncated: a
+    # truncation beyond the MG merge theorem's trim could drop a true
+    # heavy hitter in a way the final certificate cannot detect.
     exact = (
-        src.join(F.broadcast(candidates.select("item")), "item")
+        src.join(candidates.select("item"), "item")
         .groupBy("item")
         .agg(F.count("*").alias("cnt"))
         .orderBy(F.col("cnt").desc(), "item")
@@ -125,7 +121,7 @@ def heavy_hitters_exact(
     # would be pruned away by Catalyst and never evaluated.
     n_total = src.agg(F.count("*").alias("n_total"))
     return (
-        exact.crossJoin(F.broadcast(n_total))
+        exact.crossJoin(n_total)
         .filter(
             F.assert_true(
                 F.col("cnt") * capacity > F.col("n_total"),
@@ -314,7 +310,7 @@ def kmv_overlap(
     common = (
         sk.filter(F.col("seg") == seg_a).select("hv")
         .join(sk.filter(F.col("seg") == seg_b).select("hv"), "hv")
-        .crossJoin(F.broadcast(row.select("theta")))
+        .crossJoin(row.select("theta"))
         .filter(F.col("hv") < F.col("theta"))
         .agg(F.count("*").alias("p_common"))
     )
@@ -330,7 +326,7 @@ def kmv_overlap(
         F.col("p_common").cast("double") * m_dbl
         / F.col("theta").cast("double")
     )
-    return row.crossJoin(F.broadcast(common)).select(
+    return row.crossJoin(common).select(
         F.lit(k).cast("int").alias("k"),
         F.col("n_kept_a").cast("long").alias("n_kept_a"),
         F.col("n_kept_b").cast("long").alias("n_kept_b"),

@@ -147,6 +147,10 @@ def cpu_repartition(df: DataFrame, *cols: str) -> DataFrame:
     return df.repartition(width)
 
 
+# Source-byte bound under which gated_broadcast keeps its hint.
+BROADCAST_GATE_BYTES = 256 << 20
+
+
 def gated_broadcast(df: DataFrame, sf_dir: str, *tables: str) -> DataFrame:
     """Broadcast hint gated on the hinted branch's SOURCE bytes.
 
@@ -158,8 +162,8 @@ def gated_broadcast(df: DataFrame, sf_dir: str, *tables: str) -> DataFrame:
     small SFs it picks the filtered FACT side — the exact inverted
     orientation the r14 star fix removed. This gate keeps the hint
     exactly while it is provably safe: apply it only when the branch's
-    source parquet files total under ``SPARK_GRAFT_BROADCAST_GATE_BYTES``
-    (default 256 MB — the guide §3.1 "a few hundred MB is usually
+    source parquet files total under ``BROADCAST_GATE_BYTES``
+    (256 MB — the guide §3.1 "a few hundred MB is usually
     fine" bound; sf1 orders+customer ≈ 24 MB, a 100 TB run is orders of
     magnitude over). Past the gate the hint vanishes and AQE picks the
     strategy from measured sizes. File metadata only — no data is read
@@ -167,9 +171,6 @@ def gated_broadcast(df: DataFrame, sf_dir: str, *tables: str) -> DataFrame:
     """
     import os
 
-    limit = int(
-        os.environ.get("SPARK_GRAFT_BROADCAST_GATE_BYTES", str(256 << 20))
-    )
     total = 0
     for name in tables:
         path = f"{sf_dir}/{name}.parquet"
@@ -183,7 +184,7 @@ def gated_broadcast(df: DataFrame, sf_dir: str, *tables: str) -> DataFrame:
             total += os.path.getsize(path)
         else:  # unknown source (e.g. a remote URI): be scale-safe
             return df
-    return F.broadcast(df) if total < limit else df
+    return F.broadcast(df) if total < BROADCAST_GATE_BYTES else df
 
 
 def dsum(col: Column | str, scale: int = 2) -> Column:

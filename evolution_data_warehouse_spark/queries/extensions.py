@@ -740,7 +740,7 @@ def agg_sketch_union(spark: SparkSession, sf_dir: str) -> DataFrame:
     exact = orders.agg(
         F.countDistinct("o_custkey").alias("exact_customers")
     )
-    return unioned.join(F.broadcast(exact)).select(
+    return unioned.join(exact).select(
         "n_months",
         "exact_customers",
         (
@@ -833,7 +833,7 @@ def win_share_of_total(spark: SparkSession, sf_dir: str) -> DataFrame:
     nation = t(spark, sf_dir, "nation")
     per_nation = (
         orders.join(cust, orders.o_custkey == cust.c_custkey)
-        .join(F.broadcast(nation), cust.c_nationkey == nation.n_nationkey)
+        .join(nation, cust.c_nationkey == nation.n_nationkey)
         .groupBy("n_regionkey", "n_name")
         .agg(dsum("o_totalprice").alias("nation_rev"))
     )
@@ -910,7 +910,7 @@ def agg_approx_sample_mean(spark: SparkSession, sf_dir: str) -> DataFrame:
         (F.col("_sample_msq") - F.col("sample_mean") * F.col("sample_mean"))
         / F.col("sample_n")
     ) / F.col("sample_mean")
-    return stats.join(F.broadcast(exact)).select(
+    return stats.join(exact).select(
         "sample_n",
         "sample_mean",
         (

@@ -136,7 +136,7 @@ def sim_ivfpq_refine(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     emb = t(spark, sf_dir, "embeddings").select("vec_id", "embedding")
     return (
-        emb.join(F.broadcast(shortlist), "vec_id")
+        emb.join(shortlist, "vec_id")
         .select(
             "vec_id",
             "list_id",
@@ -1299,7 +1299,7 @@ def decontaminate_semantic(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("vec_id", mixed.alias("_vec"))
         .withColumn("_norm", sim.vec_norm(F.col("_vec")))
     )
-    scored = cm.crossJoin(F.broadcast(evn)).select(
+    scored = cm.crossJoin(evn).select(
         "vec_id",
         "eval_id",
         sim.cosine(
@@ -3107,7 +3107,7 @@ def stats_mad_outliers(spark: SparkSession, sf_dir: str) -> DataFrame:
     med = ranked.filter(
         F.col("rn") == F.expr("(n + 1) div 2")
     ).select("event_type", F.col("value").alias("median_value"))
-    dev = ev.join(F.broadcast(med), "event_type").select(
+    dev = ev.join(med, "event_type").select(
         "event_type",
         "event_id",
         "median_value",
@@ -3222,7 +3222,7 @@ def ts_acf_lag1(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).alias("mu"),
         F.count("*").cast("bigint").alias("n_days"),
     )
-    paired = daily.crossJoin(F.broadcast(mu)).select(
+    paired = daily.crossJoin(mu).select(
         "x",
         "mu",
         "n_days",

@@ -198,7 +198,7 @@ def bm25_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
     terms = (
         tf.join(F.broadcast(dft.join(F.broadcast(q), "token")), "token")
         .join(dl, "doc_id")
-        .crossJoin(F.broadcast(g))
+        .crossJoin(g)
         .select(
             "query_id",
             "doc_id",
@@ -976,7 +976,7 @@ def corpus_dsir_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
     # so an unwidened int64 product would wrap silently on the Spark
     # side while DuckDB errors loudly — the same divergence class the
     # BM25 terms guard against.
-    q = bc.crossJoin(F.broadcast(g)).select(
+    q = bc.crossJoin(g).select(
         "bucket",
         F.expr(
             f"CAST(CAST(c_t AS DECIMAL(38,0)) * {_DSIR_FP} * t_r "
@@ -1102,7 +1102,7 @@ def graph_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     # identical.
     nodes = symdeg.select(F.col("u").alias("node")).distinct()
     nn = nodes.agg(F.count(F.lit(1)).cast("bigint").alias("n_nodes"))
-    pr = nodes.crossJoin(F.broadcast(nn)).select(
+    pr = nodes.crossJoin(nn).select(
         "node",
         F.expr(f"{_PR_FP} DIV n_nodes").alias("pr"),
         F.expr(f"(15 * ({_PR_FP} DIV n_nodes)) DIV 100").alias("base"),

@@ -30,6 +30,7 @@ from evolution_data_warehouse_spark.queries.common import (
     dsum_sql,
     fpq,
     fpq_sql,
+    gated_broadcast,
     register,
     t,
 )
@@ -725,10 +726,13 @@ def graph_jaccard_neighbors(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).unionAll(e.select(F.col("pb").alias("node"), F.col("pa").alias("nbr")))
     deg0 = adj0.groupBy("node").agg(F.count("*").cast("bigint").alias("d"))
     keep = deg0.filter(F.col("d") <= _MAX_NBR_DEG).select("node")
+    # per-node tables grow with scale factor: hinted only under the gate
     adj = (
-        adj0.join(F.broadcast(keep), "node")
+        adj0.join(gated_broadcast(keep, sf_dir, "lineitem"), "node")
         .join(
-            F.broadcast(keep.withColumnRenamed("node", "nbr")),
+            gated_broadcast(
+                keep.withColumnRenamed("node", "nbr"), sf_dir, "lineitem"
+            ),
             "nbr",
         )
         .select("node", "nbr")
@@ -746,11 +750,15 @@ def graph_jaccard_neighbors(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(F.count("*").cast("bigint").alias("common"))
         .filter(F.col("common") >= 2)
     )
-    du = F.broadcast(
-        deg.select(F.col("node").alias("u"), F.col("d").alias("deg_u"))
+    du = gated_broadcast(
+        deg.select(F.col("node").alias("u"), F.col("d").alias("deg_u")),
+        sf_dir,
+        "lineitem",
     )
-    dw = F.broadcast(
-        deg.select(F.col("node").alias("w"), F.col("d").alias("deg_w"))
+    dw = gated_broadcast(
+        deg.select(F.col("node").alias("w"), F.col("d").alias("deg_w")),
+        sf_dir,
+        "lineitem",
     )
     scored = (
         wedge.join(du, "u")
@@ -1607,7 +1615,7 @@ def corpus_epoch_schedule(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     )
     n = toks.agg(F.count("*").cast("bigint").alias("n_sources"))
-    plan = toks.crossJoin(F.broadcast(n)).select(
+    plan = toks.crossJoin(n).select(
         "source",
         "tokens_available",
         F.expr(f"{_EPOCH_BUDGET} DIV n_sources")
@@ -2750,7 +2758,7 @@ def pii_pseudonymize_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     n = t(spark, sf_dir, "nation").select("n_nationkey", "n_name")
     return (
         o.join(c, "cust_token")
-        .join(F.broadcast(n), c.c_nationkey == n.n_nationkey)
+        .join(n, c.c_nationkey == n.n_nationkey)
         .groupBy("n_name")
         .agg(
             F.count("*").cast("bigint").alias("n_orders"),
@@ -3711,7 +3719,7 @@ def event_entropy_rate(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     tot = trans.groupBy("cur").agg(F.sum("k").cast("bigint").alias("n"))
     p = F.col("k").cast("double") / F.col("n").cast("double")
-    terms = trans.join(F.broadcast(tot), "cur").select(
+    terms = trans.join(tot, "cur").select(
         "cur",
         F.floor(-p * F.log2(p) * F.lit(float(_ER_FP)))
         .cast("bigint")
@@ -3720,7 +3728,7 @@ def event_entropy_rate(spark: SparkSession, sf_dir: str) -> DataFrame:
     return (
         terms.groupBy("cur")
         .agg(F.sum("term_fp").alias("sum_fp"))
-        .join(F.broadcast(tot), "cur")
+        .join(tot, "cur")
         .select(
             F.col("cur").alias("from_type"),
             F.col("n").alias("n_transitions"),
@@ -3867,7 +3875,7 @@ def sim_ann_nprobe_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(F.count("*").cast("bigint").alias("n_hit"))
     )
     truth = bf.agg(F.count("*").cast("bigint").alias("n_truth"))
-    return hit.crossJoin(F.broadcast(truth)).select(
+    return hit.crossJoin(truth).select(
         "nprobe",
         "n_truth",
         "n_hit",
@@ -4084,8 +4092,8 @@ def agg_percent_of_parent(spark: SparkSession, sf_dir: str) -> DataFrame:
     r = t(spark, sf_dir, "region").select("r_regionkey", "r_name")
     rev = (
         o.join(c, o.o_custkey == c.c_custkey)
-        .join(F.broadcast(n), c.c_nationkey == n.n_nationkey)
-        .join(F.broadcast(r), n.n_regionkey == r.r_regionkey)
+        .join(n, c.c_nationkey == n.n_nationkey)
+        .join(r, n.n_regionkey == r.r_regionkey)
         .groupBy(
             F.col("n_name").alias("nation"), F.col("r_name").alias("region")
         )

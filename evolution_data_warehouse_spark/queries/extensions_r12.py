@@ -510,8 +510,8 @@ def corpus_doremi_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     k0 = st.agg(F.count("*").cast("bigint").alias("nk"))
     base = (
-        st.crossJoin(F.broadcast(gl))
-        .crossJoin(F.broadcast(k0))
+        st.crossJoin(gl)
+        .crossJoin(k0)
         .select(
             "domain",
             "n_docs",
@@ -549,7 +549,7 @@ def corpus_doremi_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         tot = wu.agg(F.sum("wu").cast("decimal(38,0)").alias("tot"))
         w = (
-            wu.crossJoin(F.broadcast(tot))
+            wu.crossJoin(tot)
             .select(
                 "domain",
                 "n_docs",
@@ -989,9 +989,9 @@ def stats_chi2_independence(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     diff = F.col("n").cast("double") - e
     return (
-        c.join(F.broadcast(rt), "lang")
-        .join(F.broadcast(ct), "source")
-        .crossJoin(F.broadcast(g))
+        c.join(rt, "lang")
+        .join(ct, "source")
+        .crossJoin(g)
         .select(
             "lang",
             "source",
@@ -1095,7 +1095,7 @@ def event_markov_stationary(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     p = (
         e.select("src").distinct()
-        .crossJoin(F.broadcast(k0))
+        .crossJoin(k0)
         .select(
             F.col("src").alias("state"),
             F.expr(f"CAST({_MKV_FP} DIV nk AS BIGINT)").alias("p"),
@@ -1210,7 +1210,7 @@ def fe_woe_encoding(spark: SparkSession, sf_dir: str) -> DataFrame:
         2 * F.col("t_neg") + F.col("k")
     ).cast("double")
     woe = F.log(p_pos / p_neg)
-    return c.crossJoin(F.broadcast(g)).select(
+    return c.crossJoin(g).select(
         "category",
         "n_pos",
         "n_neg",
@@ -1654,7 +1654,7 @@ def quality_psi_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.lit(_PSI_BUCKETS - 1),
     )
     c = (
-        ev.crossJoin(F.broadcast(span))
+        ev.crossJoin(span)
         .select("event_type", half.alias("half"), bucket.alias("bucket"))
         .groupBy("event_type", "bucket")
         .agg(
@@ -1801,7 +1801,7 @@ def graph_hits(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     k0 = nodes.agg(F.count("*").cast("bigint").alias("nk"))
     s = (
-        nodes.crossJoin(F.broadcast(k0))
+        nodes.crossJoin(k0)
         .select(
             "state",
             F.expr(f"CAST({_HITS_FP} DIV nk AS BIGINT)").alias("a"),
@@ -1834,7 +1834,7 @@ def graph_hits(spark: SparkSession, sf_dir: str) -> DataFrame:
         return (
             state_df.select("state", keep_col)
             .join(raw, "state", "left")
-            .crossJoin(F.broadcast(tot))
+            .crossJoin(tot)
             .select(
                 "state",
                 F.col(keep_col),
@@ -1987,10 +1987,8 @@ def dedup_bloom_prefilter(spark: SparkSession, sf_dir: str) -> DataFrame:
     batch = kp.filter(F.col("doc_id") % 5 == 0)
     out = batch
     for i in range(_BLOOM_K):
-        b = F.broadcast(
-            bloom.select(
-                F.col("word").alias(f"word{i}"), F.col("w").alias(f"w{i}")
-            )
+        b = bloom.select(
+            F.col("word").alias(f"word{i}"), F.col("w").alias(f"w{i}")
         )
         out = out.join(
             b, F.expr(f"p{i} div {_BLOOM_WORD}") == F.col(f"word{i}"),
@@ -2006,7 +2004,7 @@ def dedup_bloom_prefilter(spark: SparkSession, sf_dir: str) -> DataFrame:
     ck = corpus_keys.select(F.col("key").alias("ck_key"))
     return (
         out.join(
-            F.broadcast(ck), F.col("key") == F.col("ck_key"), "left"
+            ck, F.col("key") == F.col("ck_key"), "left"
         )
         .select(
             "doc_id",
@@ -2767,7 +2765,7 @@ def text_template_ratio(spark: SparkSession, sf_dir: str) -> DataFrame:
     # as d's — rename it before the join or drop() resolves the wrong
     # one (the self-join lineage trap; caught by the oracle diff)
     tpl = (
-        df.join(F.broadcast(sdocs), "source")
+        df.join(sdocs, "source")
         .filter(F.col("df") * 1000 > _TPL_DF_PM * F.col("n_docs"))
         .select(
             F.col("source").alias("tpl_source"),

@@ -358,7 +358,7 @@ def sim_ann_frontier(spark: SparkSession, sf_dir: str) -> DataFrame:
                     .cast("bigint")
                     .alias("recall_fp"),
                 )
-                .crossJoin(F.broadcast(n_cand))
+                .crossJoin(n_cand)
                 .select(
                     "nprobe",
                     "method",
@@ -657,7 +657,7 @@ def sim_ivf_balance_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     return (
         corpus_b.groupBy("centroid_id")
         .agg(F.count("*").cast("bigint").alias("n_vecs"))
-        .crossJoin(F.broadcast(tot))
+        .crossJoin(tot)
         .select(
             "centroid_id",
             "n_vecs",
@@ -814,7 +814,7 @@ def text_query_likelihood(spark: SparkSession, sf_dir: str) -> DataFrame:
     terms = (
         ex.join(F.broadcast(ctf), "token")
         .join(tf, ["doc_id", "token"], "left")
-        .crossJoin(F.broadcast(g))
+        .crossJoin(g)
         .select(
             "query_id",
             "doc_id",
@@ -1424,7 +1424,7 @@ def stats_permutation_test(spark: SparkSession, sf_dir: str) -> DataFrame:
             dsum(F.when(F.col("grp"), F.col("y")), 2).alias("s_a"),
             dsum(F.when(~F.col("grp"), F.col("y")), 2).alias("s_b"),
         )
-        .crossJoin(F.broadcast(sizes))
+        .crossJoin(sizes)
         .select(
             "na",
             "nb",
@@ -1460,7 +1460,7 @@ def stats_permutation_test(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     )
     perm = (
-        ranked.crossJoin(F.broadcast(sizes.select("na")))
+        ranked.crossJoin(sizes.select("na"))
         .groupBy("i")
         .agg(
             dsum(
@@ -1470,7 +1470,7 @@ def stats_permutation_test(spark: SparkSession, sf_dir: str) -> DataFrame:
                 F.when(F.col("rnk") > F.col("na"), F.col("y")), 2
             ).alias("s_b"),
         )
-        .crossJoin(F.broadcast(sizes))
+        .crossJoin(sizes)
         .select(
             "i",
             diff_fp(
@@ -1479,7 +1479,7 @@ def stats_permutation_test(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     )
     return (
-        perm.crossJoin(F.broadcast(obs))
+        perm.crossJoin(obs)
         .agg(
             F.first("na").alias("n_a"),
             F.first("nb").alias("n_b"),
@@ -1583,7 +1583,7 @@ def corpus_token_budget_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
     tw = w.agg(F.sum("weight_fp").cast("bigint").alias("tw"))
     return (
         w.join(tok, "domain")
-        .crossJoin(F.broadcast(tw))
+        .crossJoin(tw)
         .select(
             "domain",
             "n_docs",
@@ -1851,7 +1851,7 @@ def graph_modularity(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     return (
         dsum_c.join(intra, "community", "left")
-        .crossJoin(F.broadcast(m))
+        .crossJoin(m)
         .select(
             "community",
             "n_nodes",
@@ -2061,7 +2061,7 @@ def ts_acf_multi_lag(spark: SparkSession, sf_dir: str) -> DataFrame:
         "x",
         F.explode(F.array(*[F.lit(L) for L in _ACF_LAGS])).alias("lag"),
     )
-    paired = lagged.crossJoin(F.broadcast(mu))
+    paired = lagged.crossJoin(mu)
     # one ordered window per lag partition; lead distance is the lag
     # value — expressed via a join-free when() ladder over the pinned
     # lag literals (lead() needs a literal offset)
@@ -2194,7 +2194,7 @@ def ts_seasonal_residual_anomaly(
             / F.count("*").cast("double")
         ).alias("expected")
     )
-    resid = daily.join(F.broadcast(season), "dow").select(
+    resid = daily.join(season, "dow").select(
         "day", "dow", "v", "expected",
         (F.col("v") - F.col("expected")).alias("r"),
     )
@@ -2203,7 +2203,7 @@ def ts_seasonal_residual_anomaly(
         dsum("r", 6).alias("s1"),
         dsum(F.col("r") * F.col("r") / F.lit(1000000.0), 6).alias("s2m"),
     )
-    z = resid.crossJoin(F.broadcast(mom)).select(
+    z = resid.crossJoin(mom).select(
         "day", "dow", "v", "expected", "r",
         F.sqrt(
             F.greatest(
@@ -2753,7 +2753,7 @@ def sim_lsh_recall_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     return (
         ncand.join(hit, "radius", "left")
-        .crossJoin(F.broadcast(truth))
+        .crossJoin(truth)
         .select(
             "radius",
             "n_candidates",
@@ -3021,7 +3021,7 @@ def text_burstiness_dispersion(
     )
     return (
         stats.filter(F.col("df") >= _BURST_MIN_DF)
-        .crossJoin(F.broadcast(nd))
+        .crossJoin(nd)
         .select(
             "token",
             "df",
@@ -3388,12 +3388,12 @@ def ts_theil_sen_trend(spark: SparkSession, sf_dir: str) -> DataFrame:
         "rn", F.row_number().over(W.orderBy("slope_fp"))
     )
     med = (
-        ranked.crossJoin(F.broadcast(stats.select("n_pairs")))
+        ranked.crossJoin(stats.select("n_pairs"))
         .filter(F.col("rn") == F.expr("(n_pairs + 1) DIV 2"))
         .select(F.col("slope_fp").alias("theil_sen_slope_fp"))
     )
     return (
-        stats.crossJoin(F.broadcast(n_days))
+        stats.crossJoin(n_days)
         .crossJoin(F.broadcast(med))
         .select(
             "n_pairs",
@@ -3478,7 +3478,7 @@ def tok_vocab_coverage_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     return (
         ranked.filter(F.col("vocab_size").isin(list(_VCC_RANKS)))
-        .crossJoin(F.broadcast(tot))
+        .crossJoin(tot)
         .select(
             "vocab_size",
             "tokens_covered",
@@ -4169,7 +4169,7 @@ def er_blocking_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
         )
         leg = (
-            retained.crossJoin(F.broadcast(cost))
+            retained.crossJoin(cost)
             .select(
                 F.lit(scheme).alias("scheme"),
                 F.lit(n_true).cast("bigint").alias("n_true"),
@@ -4449,7 +4449,7 @@ def stream_lateness_policy_sweep(
     b1 = ev.filter(F.col("event_id") % 3 != 0).select("ts")
     b2 = ev.filter(F.col("event_id") % 3 == 0).select("ts")
     wm = b1.agg(F.max("ts").alias("mx"))
-    j = b2.crossJoin(F.broadcast(wm))
+    j = b2.crossJoin(wm)
     win_end = F.date_trunc("day", F.col("ts")) + F.expr("INTERVAL 1 DAY")
     out = None
     for hours, interval in _LPS_DELAYS:

@@ -21,7 +21,11 @@ from evolution_data_warehouse_spark.operators.datapipe import (
     CHUNK_SIZE,
     chunk_fixed_tokens,
 )
-from evolution_data_warehouse_spark.queries.common import register, t
+from evolution_data_warehouse_spark.queries.common import (
+    gated_broadcast,
+    register,
+    t,
+)
 
 _CHUNK_STRIDE = CHUNK_SIZE - CHUNK_OVERLAP
 
@@ -213,7 +217,7 @@ def text_quality_calibration(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("id").cast("bigint").alias("decile")
     )
     fences = (
-        deciles.crossJoin(F.broadcast(tot))
+        deciles.crossJoin(tot)
         .join(
             cum.select("score_q", "cum_n"),
             F.col("cum_n")
@@ -224,7 +228,7 @@ def text_quality_calibration(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     return (
         fences.join(cum, F.col("fence_score") == cum["score_q"])
-        .crossJoin(F.broadcast(tot))
+        .crossJoin(tot)
         .select(
             F.col("decile").cast("bigint").alias("decile"),
             F.col("fence_score").cast("bigint").alias("fence_score"),
@@ -575,7 +579,7 @@ def chunk_bm25_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     terms = (
         tf.join(F.broadcast(dft.join(F.broadcast(q), "token")), "token")
-        .crossJoin(F.broadcast(g))
+        .crossJoin(g)
         .select(
             "query_id",
             "doc_id",
@@ -697,18 +701,26 @@ def graph_adamic_adar(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).unionAll(e.select(F.col("pb").alias("node"), F.col("pa").alias("nbr")))
     deg0 = adj0.groupBy("node").agg(F.count("*").cast("bigint").alias("d"))
     keep = deg0.filter(F.col("d") <= _AA_MAX_DEG).select("node")
+    # per-node tables grow with scale factor: hinted only under the gate
     adj = (
-        adj0.join(F.broadcast(keep), "node")
-        .join(F.broadcast(keep.withColumnRenamed("node", "nbr")), "nbr")
+        adj0.join(gated_broadcast(keep, sf_dir, "lineitem"), "node")
+        .join(
+            gated_broadcast(
+                keep.withColumnRenamed("node", "nbr"), sf_dir, "lineitem"
+            ),
+            "nbr",
+        )
         .select("node", "nbr")
         .localCheckpoint(eager=True)
     )
     deg = adj.groupBy("node").agg(F.count("*").cast("bigint").alias("d"))
-    wz = F.broadcast(
+    wz = gated_broadcast(
         deg.filter(F.col("d") >= 2).select(
             F.col("node").alias("wnode"),
             F.expr(f"CAST(FLOOR({_AA_FP} / ln(d)) AS BIGINT)").alias("w_q"),
-        )
+        ),
+        sf_dir,
+        "lineitem",
     )
     a, b = adj.alias("a"), adj.alias("b")
     pairs = (
@@ -927,7 +939,7 @@ def ivm_join_maintenance(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     def agg_leg(r, s):
         return (
-            r.join(F.broadcast(s), r["o_custkey"] == s["c_custkey"])
+            r.join(s, r["o_custkey"] == s["c_custkey"])
             .groupBy("c_mktsegment")
             .agg(
                 F.count("*").cast("bigint").alias("dn"),
@@ -1052,7 +1064,7 @@ def fe_quantile_binning(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("id").cast("bigint").alias("bin")
     )
     fences = (
-        bins.crossJoin(F.broadcast(tot))
+        bins.crossJoin(tot)
         .join(
             cum.select("cents", "cum_n"),
             F.col("cum_n") >= F.expr(f"(n * (bin - 1)) DIV {_QBIN_N} + 1"),
@@ -1065,7 +1077,7 @@ def fe_quantile_binning(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).select("bin", "fence_cents", "cum_n", "n_v")
     wl = W.orderBy("bin")
     return (
-        fc.crossJoin(F.broadcast(tot))
+        fc.crossJoin(tot)
         .select(
             F.col("bin").cast("bigint").alias("bin"),
             F.col("fence_cents").cast("bigint").alias("fence_cents"),

@@ -565,7 +565,7 @@ def agg_benford_firstdigit(spark: SparkSession, sf_dir: str) -> DataFrame:
             .otherwise(expected)
         )
     share = F.col("n").cast("double") / F.col("total").cast("double")
-    return counts.crossJoin(F.broadcast(tot)).select(
+    return counts.crossJoin(tot).select(
         "first_digit", "n",
         fpq(share).alias("share"),
         expected.cast("double").alias("expected"),
@@ -609,7 +609,7 @@ def join_delta_maintenance(spark: SparkSession, sf_dir: str) -> DataFrame:
     db = cust.filter(F.col("c_custkey") % 2 != 0)
     cols = ["c_nationkey", "o_totalprice"]
     join = lambda o, c: o.join(  # noqa: E731
-        F.broadcast(c), o.o_custkey == c.c_custkey
+        c, o.o_custkey == c.c_custkey
     ).select(*cols)
     unioned = (
         join(a, b)
@@ -655,10 +655,10 @@ def join_bloom_prefilter(spark: SparkSession, sf_dir: str) -> DataFrame:
     part_f = t(spark, sf_dir, "part").filter(F.col("p_size") < 10)
     keys = part_f.select("p_partkey")
     reduced = li.join(
-        F.broadcast(keys), li.l_partkey == keys.p_partkey, "left_semi"
+        keys, li.l_partkey == keys.p_partkey, "left_semi"
     )
     joined = reduced.join(
-        F.broadcast(part_f), reduced.l_partkey == part_f.p_partkey
+        part_f, reduced.l_partkey == part_f.p_partkey
     )
     return joined.groupBy("p_brand").agg(
         F.count("*").alias("n_items"),
@@ -782,14 +782,14 @@ def agg_mad_outliers(spark: SparkSession, sf_dir: str) -> DataFrame:
     med = ev.groupBy("event_type").agg(
         fpq(F.percentile("value", F.lit(0.5))).alias("median_value")
     )
-    dev = ev.join(F.broadcast(med), "event_type").withColumn(
+    dev = ev.join(med, "event_type").withColumn(
         "d", F.abs(F.col("value") - F.col("median_value"))
     )
     mad = dev.groupBy("event_type", "median_value").agg(
         fpq(F.percentile("d", F.lit(0.5))).alias("mad_value")
     )
     return (
-        dev.join(F.broadcast(mad.drop("median_value")), "event_type")
+        dev.join(mad.drop("median_value"), "event_type")
         .groupBy("event_type", "median_value", "mad_value")
         .agg(
             F.count("*").alias("n"),
@@ -1095,7 +1095,7 @@ def agg_rfm_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
         _dsum("value").alias("monetary"),
     )
     anchor = per_user.agg(F.max("last_day").alias("max_day"))
-    scored = per_user.crossJoin(F.broadcast(anchor)).withColumn(
+    scored = per_user.crossJoin(anchor).withColumn(
         "recency_days", F.datediff("max_day", "last_day")
     )
     r_q = F.ntile(4).over(W.orderBy("recency_days", "user_id"))
@@ -1510,7 +1510,7 @@ def agg_market_basket(spark: SparkSession, sf_dir: str) -> DataFrame:
     out = (
         pairs.join(ia, F.col("part_a") == F.col("ia.l_partkey"))
         .join(ib, F.col("part_b") == F.col("ib.l_partkey"))
-        .crossJoin(F.broadcast(n_orders))
+        .crossJoin(n_orders)
     )
     return out.select(
         "part_a", "part_b", "n_pair",
@@ -1813,7 +1813,7 @@ def corpus_mix_temperature(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = t(spark, sf_dir, "documents")
     counts = docs.groupBy("lang").agg(F.count("*").alias("n_g"))
     mn = counts.agg(F.min("n_g").alias("n_min"))
-    thresh = counts.crossJoin(F.broadcast(mn)).select(
+    thresh = counts.crossJoin(mn).select(
         "lang",
         F.floor(
             MIX_BUCKETS
@@ -2348,7 +2348,7 @@ def join_drill_across(spark: SparkSession, sf_dir: str) -> DataFrame:
     li = t(spark, sf_dir, "lineitem")
     sup = t(spark, sf_dir, "supplier")
     li_rev = (
-        li.join(F.broadcast(sup), li.l_suppkey == sup.s_suppkey)
+        li.join(sup, li.l_suppkey == sup.s_suppkey)
         .groupBy(F.col("s_nationkey").alias("nationkey"))
         .agg(
             dsum(
@@ -2359,7 +2359,7 @@ def join_drill_across(spark: SparkSession, sf_dir: str) -> DataFrame:
     orders = t(spark, sf_dir, "orders")
     cust = t(spark, sf_dir, "customer")
     ord_rev = (
-        orders.join(F.broadcast(cust), orders.o_custkey == cust.c_custkey)
+        orders.join(cust, orders.o_custkey == cust.c_custkey)
         .groupBy(F.col("c_nationkey").alias("nationkey"))
         .agg(dsum("o_totalprice").alias("order_revenue"))
     )
@@ -2489,7 +2489,7 @@ def event_churn_monthly(spark: SparkSession, sf_dir: str) -> DataFrame:
         "left_semi",
     )
     return (
-        active.join(F.broadcast(has_next), "month", "left_semi")
+        active.join(has_next, "month", "left_semi")
         .join(churned, "month", "left")
         .select(
             "month", "n_active",
@@ -2611,7 +2611,7 @@ def text_keywords_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     n_docs = docs.agg(F.count("*").alias("n"))
     scored = (
         tf.join(df_, "term")
-        .crossJoin(F.broadcast(n_docs))
+        .crossJoin(n_docs)
         .select(
             "doc_id", "term",
             (
@@ -2687,7 +2687,7 @@ def agg_pareto_deciles(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     wc = W.orderBy("decile").rowsBetween(W.unboundedPreceding, W.currentRow)
     return (
-        by_decile.crossJoin(F.broadcast(tot))
+        by_decile.crossJoin(tot)
         .select(
             "decile", "n_customers",
             (F.col("dec_cents").cast("double") / F.col("total").cast("double"))

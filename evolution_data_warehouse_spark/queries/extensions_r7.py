@@ -129,7 +129,7 @@ def corpus_token_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.sum("c0").alias("t0"), F.sum("c1").alias("t1")
     )
     return (
-        tc.crossJoin(F.broadcast(tot))
+        tc.crossJoin(tot)
         .groupBy("t0", "t1")
         .agg(
             F.count("*").alias("vocab"),
@@ -268,7 +268,7 @@ def win_yoy_growth(spark: SparkSession, sf_dir: str) -> DataFrame:
     cur, prev = m.alias("cur"), m.alias("prev")
     return (
         cur.join(
-            F.broadcast(prev),
+            prev,
             F.col("prev.month") == F.add_months(F.col("cur.month"), -12),
             "left",
         )
@@ -471,7 +471,7 @@ def graph_copurchase_triangles(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(F.count("*").alias("n_triangles"))
     )
     n_edges = d.agg(F.count("*").alias("n_edges"))
-    return tri.crossJoin(F.broadcast(n_edges))
+    return tri.crossJoin(n_edges)
 
 
 _DEGREE_ORACLE = f"""
@@ -554,7 +554,7 @@ def ts_autocorr_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     cur, prev = daily.alias("cur"), daily.alias("prev")
     pairs = cur.join(
-        F.broadcast(prev),
+        prev,
         F.col("prev.day") == F.date_sub(F.col("cur.day"), 7),
     ).select(F.col("cur.x").alias("x"), F.col("prev.x").alias("y"))
     s = pairs.agg(
@@ -747,9 +747,9 @@ def agg_cramers_v(spark: SparkSession, sf_dir: str) -> DataFrame:
         + F.lit(0.5)
     ).cast("bigint")
     joined = (
-        cell.join(F.broadcast(rows_), "s")
-        .join(F.broadcast(cols_), "p")
-        .crossJoin(F.broadcast(n_))
+        cell.join(rows_, "s")
+        .join(cols_, "p")
+        .crossJoin(n_)
     )
     nr = rows_.agg(F.count("*").alias("r"))
     nc = cols_.agg(F.count("*").alias("c"))
@@ -757,8 +757,8 @@ def agg_cramers_v(spark: SparkSession, sf_dir: str) -> DataFrame:
         joined.select(term.alias("term_fp"), "n")
         .groupBy("n")
         .agg((F.sum("term_fp").cast("double") / 1e9).alias("chi2"))
-        .crossJoin(F.broadcast(nr))
-        .crossJoin(F.broadcast(nc))
+        .crossJoin(nr)
+        .crossJoin(nc)
     )
     v = F.sqrt(
         F.col("chi2") / (F.col("n") * F.least(F.col("r") - 1, F.col("c") - 1))
@@ -1231,7 +1231,7 @@ def agg_theil_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     ratio = F.col("cents").cast("double") * F.col("n") / F.col("tcents")
     term = F.floor(ratio * F.log(ratio) * 1e12 + F.lit(0.5)).cast("bigint")
     return (
-        cust.crossJoin(F.broadcast(tot))
+        cust.crossJoin(tot)
         .filter(F.col("cents") > 0)
         .select(term.alias("term_fp"), "n")
         .groupBy("n")
@@ -1277,7 +1277,7 @@ def ts_weekday_seasonality(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(F.count("*").alias("n_events"))
     )
     tot = c.agg(F.sum("n_events").alias("total"))
-    return c.crossJoin(F.broadcast(tot)).select(
+    return c.crossJoin(tot).select(
         "dw",
         "n_events",
         ((F.lit(7) * F.col("n_events")).cast("double") / F.col("total")).alias(
@@ -1532,9 +1532,9 @@ def event_cooccurrence_pmi(spark: SparkSession, sf_dir: str) -> DataFrame:
         / (F.col("sa.k").cast("double") * F.col("sb.k"))
     )
     return (
-        pair.join(F.broadcast(sa), F.col("type_a") == F.col("sa.event_type"))
-        .join(F.broadcast(sb), F.col("type_b") == F.col("sb.event_type"))
-        .crossJoin(F.broadcast(nb))
+        pair.join(sa, F.col("type_a") == F.col("sa.event_type"))
+        .join(sb, F.col("type_b") == F.col("sb.event_type"))
+        .crossJoin(nb)
         .select(
             "type_a",
             "type_b",
@@ -1609,7 +1609,7 @@ def ts_revenue_anomaly_months(spark: SparkSession, sf_dir: str) -> DataFrame:
     var = F.col("s2").cast("double") / F.col("n") - mean * mean
     z = (F.col("cents").cast("double") - mean) / F.sqrt(var)
     return (
-        m.crossJoin(F.broadcast(s))
+        m.crossJoin(s)
         .filter(F.abs(z) > 1.5)
         .select(
             "month",
@@ -2127,7 +2127,7 @@ def ts_cusum_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     w = Window.orderBy("day").rowsBetween(
         Window.unboundedPreceding, Window.currentRow
     )
-    c = daily.crossJoin(F.broadcast(tot)).withColumn(
+    c = daily.crossJoin(tot).withColumn(
         "cusum",
         F.sum(F.col("cents") * F.col("d") - F.col("total")).over(w),
     )

@@ -200,7 +200,7 @@ def join_spatial_grid(spark: SparkSession, sf_dir: str) -> DataFrame:
         * (F.col("lon_md") - F.col("hlon_md"))
     )
     hits = (
-        pts.join(F.broadcast(probes), ["cx", "cy"])
+        pts.join(probes, ["cx", "cy"])
         .filter(d2 <= F.lit(R * R))
         .groupBy("n_nationkey", "n_name")
         .agg(
@@ -459,7 +459,7 @@ def surv_kaplan_meier(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     )
     horizon = spans.agg(F.max("last_day").alias("obs_end"))
-    lives = spans.crossJoin(F.broadcast(horizon)).select(
+    lives = spans.crossJoin(horizon).select(
         F.datediff("last_day", "first_day").cast("long").alias("t"),
         F.when(
             F.col("last_day") < F.date_sub(F.col("obs_end"), 7), 1
@@ -801,7 +801,7 @@ def stats_ks_two_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     d_abs = F.abs(F.col("f1") * F.col("n2") - F.col("f2") * F.col("n1"))
     return (
-        cum.join(F.broadcast(tot))
+        cum.join(tot)
         .groupBy("n1", "n2")
         .agg(
             F.max(d_abs).cast("long").alias("d_num"),

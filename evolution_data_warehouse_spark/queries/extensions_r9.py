@@ -1481,7 +1481,7 @@ def proc_zorder_report(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.min("l_suppkey").alias("ymin"), F.max("l_suppkey").alias("ymax"),
     )
     g = (
-        li.join(F.broadcast(bounds))
+        li.join(bounds)
         .withColumn("xg", F.expr(grid_expr("l_partkey", "xmin", "xmax")))
         .withColumn("yg", F.expr(grid_expr("l_suppkey", "ymin", "ymax")))
         .withColumn("zv", zvalue(F.col("xg"), F.col("yg")))

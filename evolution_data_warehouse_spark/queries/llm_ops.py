@@ -1306,7 +1306,7 @@ def text_tfidf(spark: SparkSession, sf_dir: str) -> DataFrame:
     # (mirrors the oracle's CROSS JOIN n): the whole query is one job,
     # instead of a separate driver-side count() scan of documents.
     n = docs.agg(F.count(F.lit(1)).alias("n_docs"))
-    scored = tf.join(df_, "token").crossJoin(F.broadcast(n)).select(
+    scored = tf.join(df_, "token").crossJoin(n).select(
         "doc_id",
         "token",
         (
@@ -1581,7 +1581,7 @@ def emb_norm_outliers(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.lit(0.0),
         )
     )
-    return e.join(F.broadcast(stats)).select(
+    return e.join(stats).select(
         "vec_id", "norm", (F.col("norm") > thresh).alias("is_outlier")
     )
 

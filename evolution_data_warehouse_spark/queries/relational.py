@@ -364,9 +364,9 @@ def join_inner_equi(spark: SparkSession, sf_dir: str) -> DataFrame:
     revenue_expr = F.col("l_extendedprice") * (1 - F.col("l_discount"))
     df = (
         li.join(orders, li.l_orderkey == orders.o_orderkey)
-        .join(F.broadcast(customer), orders.o_custkey == customer.c_custkey)
-        .join(F.broadcast(nation), customer.c_nationkey == nation.n_nationkey)
-        .join(F.broadcast(region), nation.n_regionkey == region.r_regionkey)
+        .join(customer, orders.o_custkey == customer.c_custkey)
+        .join(nation, customer.c_nationkey == nation.n_nationkey)
+        .join(region, nation.n_regionkey == region.r_regionkey)
         .groupBy(
             F.col("r_name").alias("region_name"),
             F.year("o_orderdate").alias("annee"),
@@ -474,13 +474,14 @@ GROUP BY p_brand
     _BCAST_ORACLE,
     doc="Dimension key lookup as broadcast join — replaces the reference's "
     "in-memory dict map. Ref: analytics/etl/load_facts.py:74-88 "
-    "(get_dim_mapping). F.broadcast avoids shuffling the fact side.",
+    "(get_dim_mapping). The planner broadcasts the dim, so the fact "
+    "side is never shuffled.",
 )
 def join_broadcast_lookup(spark: SparkSession, sf_dir: str) -> DataFrame:
     li = cpu_repartition(t(spark, sf_dir, "lineitem"), "l_partkey")
     part = t(spark, sf_dir, "part").select("p_partkey", "p_brand")
     return (
-        li.join(F.broadcast(part), li.l_partkey == part.p_partkey)
+        li.join(part, li.l_partkey == part.p_partkey)
         .groupBy("p_brand")
         .agg(
             dsum("l_extendedprice").alias("brand_revenue"),
@@ -920,8 +921,8 @@ GROUP BY ROLLUP (r_name, n_name)
 def agg_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     df = (
         t(spark, sf_dir, "customer")
-        .join(F.broadcast(t(spark, sf_dir, "nation")), F.col("c_nationkey") == F.col("n_nationkey"))
-        .join(F.broadcast(t(spark, sf_dir, "region")), F.col("n_regionkey") == F.col("r_regionkey"))
+        .join(t(spark, sf_dir, "nation"), F.col("c_nationkey") == F.col("n_nationkey"))
+        .join(t(spark, sf_dir, "region"), F.col("n_regionkey") == F.col("r_regionkey"))
     )
     return df.rollup("r_name", "n_name").agg(F.count("*").alias("n_customers"))
 
@@ -1211,7 +1212,7 @@ def join_effective_dated(spark, sf_dir: str):
     li = t(spark, sf_dir, "lineitem").select("l_suppkey", "l_shipdate")
     return (
         li.join(
-            F.broadcast(dim),
+            dim,
             (li.l_suppkey == dim.s_suppkey)
             & (li.l_shipdate >= dim.valid_from)
             & (li.l_shipdate < dim.valid_to),

@@ -69,7 +69,7 @@ def tpch_q3(spark: SparkSession, sf_dir: str) -> DataFrame:
     # keeps most of orders, so at 100 TB this branch is fact-scale and
     # a hard hint would OOM — past 256 MB of source the hint vanishes
     # and AQE picks the strategy from measured sizes.
-    dim = orders.join(F.broadcast(cust), cust.c_custkey == orders.o_custkey)
+    dim = orders.join(cust, cust.c_custkey == orders.o_custkey)
     return (
         li.join(
             gated_broadcast(dim, sf_dir, "orders", "customer"),
@@ -119,19 +119,19 @@ def tpch_q5(spark: SparkSession, sf_dir: str) -> DataFrame:
     # never broadcast lineitem. The orders ⋈ customer branch hint is
     # gated on source bytes like q3's — the 1-year orders filter still
     # leaves a fact-scale branch at 100 TB.
-    dim = orders.join(F.broadcast(cust), cust.c_custkey == orders.o_custkey)
+    dim = orders.join(cust, cust.c_custkey == orders.o_custkey)
     return (
         li.join(
             gated_broadcast(dim, sf_dir, "orders", "customer"),
             dim.o_orderkey == li.l_orderkey,
         )
         .join(
-            F.broadcast(supp),
+            supp,
             (li.l_suppkey == supp.s_suppkey)
             & (cust.c_nationkey == supp.s_nationkey),
         )
-        .join(F.broadcast(nation), supp.s_nationkey == nation.n_nationkey)
-        .join(F.broadcast(region), nation.n_regionkey == region.r_regionkey)
+        .join(nation, supp.s_nationkey == nation.n_nationkey)
+        .join(region, nation.n_regionkey == region.r_regionkey)
         .groupBy("n_name")
         .agg(dsum(revenue, 4).alias("revenue"))
     )
@@ -289,7 +289,7 @@ def tpch_q10(spark: SparkSession, sf_dir: str) -> DataFrame:
     return (
         cust.join(orders, cust.c_custkey == orders.o_custkey)
         .join(li, orders.o_orderkey == li.l_orderkey)
-        .join(F.broadcast(nation), cust.c_nationkey == nation.n_nationkey)
+        .join(nation, cust.c_nationkey == nation.n_nationkey)
         .groupBy("c_custkey", "c_name", "n_name")
         .agg(dsum(revenue, 4).alias("revenue"))
         .orderBy(F.desc("revenue"), F.asc("c_custkey"))
@@ -327,7 +327,7 @@ def tpch_q14(spark: SparkSession, sf_dir: str) -> DataFrame:
     rev = F.col("l_extendedprice") * (1 - F.col("l_discount"))
     promo_rev = F.when(F.col("p_type") == "PROMO", rev).otherwise(F.lit(0))
     return (
-        li.join(F.broadcast(part), li.l_partkey == part.p_partkey)
+        li.join(part, li.l_partkey == part.p_partkey)
         .agg(
             (F.lit(100.0) * dsum(promo_rev, 4) / dsum(rev, 4)).alias(
                 "promo_revenue"
@@ -380,7 +380,7 @@ def tpch_q19(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     rev = F.col("l_extendedprice") * (1 - F.col("l_discount"))
     return (
-        li.join(F.broadcast(part), li.l_partkey == part.p_partkey)
+        li.join(part, li.l_partkey == part.p_partkey)
         .filter(band)
         .agg(dsum(rev, 4).alias("revenue"))
     )
@@ -440,8 +440,8 @@ def tpch_q7(spark: SparkSession, sf_dir: str) -> DataFrame:
         supp.join(li, supp.s_suppkey == li.l_suppkey)
         .join(orders, li.l_orderkey == orders.o_orderkey)
         .join(cust, orders.o_custkey == cust.c_custkey)
-        .join(F.broadcast(n1), supp.s_nationkey == F.col("s_nk"))
-        .join(F.broadcast(n2), cust.c_nationkey == F.col("c_nk"))
+        .join(n1, supp.s_nationkey == F.col("s_nk"))
+        .join(n2, cust.c_nationkey == F.col("c_nk"))
         .filter(pair)
         .groupBy(
             "supp_nation",
@@ -563,7 +563,7 @@ def tpch_q15(spark: SparkSession, sf_dir: str) -> DataFrame:
     return (
         supp.join(rev, supp.s_suppkey == rev.supplier_no)
         .join(
-            F.broadcast(max_rev),
+            max_rev,
             F.col("total_revenue") == F.col("max_revenue"),
         )
         .select("s_suppkey", "s_name", "total_revenue")
@@ -717,7 +717,7 @@ def tpch_q21(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(
             (F.col("late") == 1) & (F.col("n_supp") > 1) & (F.col("n_late") == 1)
         )
-        .join(F.broadcast(supp), F.col("l_suppkey") == F.col("s_suppkey"))
+        .join(supp, F.col("l_suppkey") == F.col("s_suppkey"))
         .groupBy("s_suppkey", "s_name")
         .agg(F.count("*").alias("numwait"))
         .orderBy(F.desc("numwait"), F.asc("s_suppkey"))
@@ -764,7 +764,7 @@ def tpch_q22(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     return (
         cust.join(recent, cust.c_custkey == recent.o_custkey, "left_anti")
-        .join(F.broadcast(avg_bal))
+        .join(avg_bal)
         .filter(F.col("c_acctbal") > F.col("avg_bal"))
         .groupBy("c_nationkey")
         .agg(
@@ -823,9 +823,9 @@ def tpch_q2(spark: SparkSession, sf_dir: str) -> DataFrame:
     nation = t(spark, sf_dir, "nation")
     region = t(spark, sf_dir, "region").filter(F.col("r_name") == "EUROPE")
     eu = (
-        cost.join(F.broadcast(supp), cost.l_suppkey == supp.s_suppkey)
-        .join(F.broadcast(nation), supp.s_nationkey == nation.n_nationkey)
-        .join(F.broadcast(region), nation.n_regionkey == region.r_regionkey)
+        cost.join(supp, cost.l_suppkey == supp.s_suppkey)
+        .join(nation, supp.s_nationkey == nation.n_nationkey)
+        .join(region, nation.n_regionkey == region.r_regionkey)
         .select("l_partkey", "l_suppkey", "unit_cost", "s_name", "s_acctbal", "n_name")
     )
     best = eu.groupBy(F.col("l_partkey").alias("b_partkey")).agg(
@@ -837,7 +837,8 @@ def tpch_q2(spark: SparkSession, sf_dir: str) -> DataFrame:
     return (
         eu.join(best, eu.l_partkey == best.b_partkey)
         .filter(F.col("unit_cost") == F.col("min_cost"))
-        .join(F.broadcast(part), eu.l_partkey == part.p_partkey)
+        # part grows with scale factor: hinted only under the gate
+        .join(gated_broadcast(part, sf_dir, "part"), eu.l_partkey == part.p_partkey)
         .orderBy(
             F.desc("s_acctbal"), F.asc("n_name"), F.asc("s_name"),
             F.asc("p_partkey"),
@@ -899,13 +900,13 @@ def tpch_q8(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.lit(0)
     )
     return (
-        li.join(F.broadcast(part), li.l_partkey == part.p_partkey)
-        .join(F.broadcast(supp), li.l_suppkey == supp.s_suppkey)
+        li.join(part, li.l_partkey == part.p_partkey)
+        .join(supp, li.l_suppkey == supp.s_suppkey)
         .join(orders, li.l_orderkey == orders.o_orderkey)
         .join(cust, orders.o_custkey == cust.c_custkey)
-        .join(F.broadcast(n1), cust.c_nationkey == F.col("c_nk"))
-        .join(F.broadcast(region), F.col("c_rk") == region.r_regionkey)
-        .join(F.broadcast(n2), supp.s_nationkey == F.col("s_nk"))
+        .join(n1, cust.c_nationkey == F.col("c_nk"))
+        .join(region, F.col("c_rk") == region.r_regionkey)
+        .join(n2, supp.s_nationkey == F.col("s_nk"))
         .groupBy(F.year("o_orderdate").cast("int").alias("o_year"))
         .agg((dsum(nat_vol, 4) / dsum(volume, 4)).alias("mkt_share"))
     )
@@ -946,10 +947,10 @@ def tpch_q9(spark: SparkSession, sf_dir: str) -> DataFrame:
         0.5
     ) * F.col("p_retailprice") * F.col("l_quantity")
     return (
-        li.join(F.broadcast(part), li.l_partkey == part.p_partkey)
-        .join(F.broadcast(supp), li.l_suppkey == supp.s_suppkey)
+        li.join(part, li.l_partkey == part.p_partkey)
+        .join(supp, li.l_suppkey == supp.s_suppkey)
         .join(orders, li.l_orderkey == orders.o_orderkey)
-        .join(F.broadcast(nation), supp.s_nationkey == nation.n_nationkey)
+        .join(nation, supp.s_nationkey == nation.n_nationkey)
         .groupBy(
             F.col("n_name").alias("nation"),
             F.year("o_orderdate").cast("int").alias("o_year"),
@@ -989,14 +990,14 @@ def tpch_q11(spark: SparkSession, sf_dir: str) -> DataFrame:
     supp = t(spark, sf_dir, "supplier")
     nation = t(spark, sf_dir, "nation").filter(F.col("n_name") == "NATION_1")
     v = (
-        li.join(F.broadcast(supp), li.l_suppkey == supp.s_suppkey)
-        .join(F.broadcast(nation), supp.s_nationkey == nation.n_nationkey)
+        li.join(supp, li.l_suppkey == supp.s_suppkey)
+        .join(nation, supp.s_nationkey == nation.n_nationkey)
         .groupBy("l_partkey")
         .agg(dsum("l_extendedprice").alias("part_value"))
     )
     total = v.agg(dsum("part_value").alias("total_value"))
     return (
-        v.join(F.broadcast(total))
+        v.join(total)
         .filter(F.col("part_value") > F.lit(0.002) * F.col("total_value"))
         .select("l_partkey", "part_value")
     )
@@ -1037,11 +1038,11 @@ def tpch_q16(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     return (
         li.join(
-            F.broadcast(bad_supp),
+            bad_supp,
             li.l_suppkey == bad_supp.s_suppkey,
             "left_anti",
         )
-        .join(F.broadcast(part), li.l_partkey == part.p_partkey)
+        .join(part, li.l_partkey == part.p_partkey)
         .groupBy("p_brand", "p_type", "p_size")
         .agg(F.countDistinct("l_suppkey").alias("supplier_cnt"))
     )
@@ -1082,7 +1083,7 @@ def tpch_q20(spark: SparkSession, sf_dir: str) -> DataFrame:
         & (F.col("l_shipdate") < F.lit("1997-01-01").cast("timestamp"))
     )
     qualified = (
-        li.join(F.broadcast(part), li.l_partkey == part.p_partkey)
+        li.join(part, li.l_partkey == part.p_partkey)
         .groupBy("l_partkey", "l_suppkey")
         .agg(dsum("l_quantity").alias("ship_qty"))
         .filter(F.col("ship_qty") > 30)
@@ -1093,7 +1094,7 @@ def tpch_q20(spark: SparkSession, sf_dir: str) -> DataFrame:
     region = t(spark, sf_dir, "region").filter(F.col("r_name") == "EUROPE")
     return (
         supp.join(qualified, supp.s_suppkey == qualified.l_suppkey, "left_semi")
-        .join(F.broadcast(nation), supp.s_nationkey == nation.n_nationkey)
-        .join(F.broadcast(region), nation.n_regionkey == region.r_regionkey)
+        .join(nation, supp.s_nationkey == nation.n_nationkey)
+        .join(region, nation.n_regionkey == region.r_regionkey)
         .select("s_name", "s_acctbal")
     )

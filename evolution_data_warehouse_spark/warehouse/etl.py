@@ -25,7 +25,11 @@ from evolution_data_warehouse_spark.operators.security import (
     build_zones,
 )
 from evolution_data_warehouse_spark.pipeline import Step, run_pipeline
-from evolution_data_warehouse_spark.sources.staging import TableSpec, prepare_tables
+from evolution_data_warehouse_spark.sources.staging import (
+    TableSpec,
+    prepare_tables,
+    tables_summary,
+)
 from evolution_data_warehouse_spark.warehouse import dimensions as dims_mod
 from evolution_data_warehouse_spark.warehouse import facts as facts_mod
 
@@ -82,19 +86,11 @@ def run_full_etl(
     def staging() -> int:
         with logged_step(spark, log_dir, "staging", "all") as info:
             state["staged"] = prepare_tables(spark, specs)
-            # Log-only row total: one job over a union of 1-row
-            # aggregates, not one count() job per table.
-            counts = [
-                df.agg(F.count(F.lit(1)).alias("n"))
-                for df in state["staged"].values()
-            ]
-            if not counts:
-                info["lignes"] = 0
-                return 0
-            total = counts[0]
-            for c in counts[1:]:
-                total = total.unionAll(c)
-            info["lignes"] = sum(r.n for r in total.collect())
+            info["lignes"] = (
+                sum(r.n_rows for r in tables_summary(state["staged"]).collect())
+                if state["staged"]
+                else 0
+            )
             return info["lignes"]
 
     def security() -> int:

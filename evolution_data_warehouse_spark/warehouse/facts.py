@@ -18,7 +18,7 @@ from evolution_data_warehouse_spark.sources.staging import resolve_column
 
 
 def _temps_lookup(dim_temps: DataFrame) -> DataFrame:
-    return F.broadcast(dim_temps.select("temps_id", "annee"))
+    return dim_temps.select("temps_id", "annee")
 
 
 def _geo_lookup(dim_geographie: DataFrame) -> DataFrame:

@@ -209,6 +209,32 @@ def test_star_orientation_fact_never_broadcast(spark, sf_dir, name):
         )
 
 
+@pytest.mark.parametrize("name", ["tpch_q2", "tpch_q3", "tpch_q5"])
+def test_scaling_dims_broadcast_only_through_gate(
+    spark, sf_dir, name, monkeypatch
+):
+    """customer, supplier, orders and part grow with the scale factor,
+    so no hint may broadcast them unconditionally: with the gate closed
+    and size-based auto-broadcast off, none of them sits under a
+    BroadcastExchange."""
+    from evolution_data_warehouse_spark.queries import common
+
+    monkeypatch.setattr(common, "BROADCAST_GATE_BYTES", 0)
+    key = "spark.sql.autoBroadcastJoinThreshold"
+    old = spark.conf.get(key)
+    spark.conf.set(key, "-1")
+    try:
+        df = REGISTRY[name].fn(spark, sf_dir)
+        plan = df._jdf.queryExecution().executedPlan().toString()
+    finally:
+        spark.conf.set(key, old)
+    for sub in _broadcast_subtrees(plan):
+        for prefix in ("c_", "s_", "o_", "p_"):
+            assert f"FileScan parquet [{prefix}" not in sub, (
+                f"{name}: a scaling table is broadcast past the gate:\n{sub}"
+            )
+
+
 def test_spatial_grid_join_is_cell_keyed_broadcast(spark, sf_dir):
     """The radius join must go through the (cx, cy) grid-cell equi-join
     — BroadcastHashJoin on cell keys, never a nested-loop over the
