@@ -236,7 +236,9 @@ def _hot_guard_seconds(spark, sf_dir: str) -> float:
     from pyspark.sql import functions as F
 
     from evolution_data_warehouse_spark.operators.dedup import minhash_lsh_pairs
-    from evolution_data_warehouse_spark.queries.llm_ops import _doc_shingles
+    from evolution_data_warehouse_spark.queries.text import (
+        doc_shingles as _doc_shingles,
+    )
 
     btoks = "common boiler plate text repeated everywhere in this corpus".split()
     bsh = [" ".join(btoks[i : i + 3]) for i in range(len(btoks) - 2)]
@@ -268,9 +270,7 @@ def _bpe_encode_seconds(spark, sf_dir: str) -> float:
         bpe_vocab,
     )
     from evolution_data_warehouse_spark.queries.common import t
-    from evolution_data_warehouse_spark.queries.extensions_r8 import (
-        _BPE_MERGES,
-    )
+    from evolution_data_warehouse_spark.queries.text import _BPE_MERGES
 
     def run():
         bpe_encode_ids(
@@ -340,7 +340,9 @@ def _shingle_guard_seconds(spark, sf_dir: str) -> float:
         cap_shingle_df,
         content_hash64,
     )
-    from evolution_data_warehouse_spark.queries.llm_ops import _doc_shingles
+    from evolution_data_warehouse_spark.queries.text import (
+        doc_shingles as _doc_shingles,
+    )
 
     btoks = "common boiler plate text repeated everywhere in this corpus".split()
     bsh = [" ".join(btoks[i : i + 3]) for i in range(len(btoks) - 2)]

@@ -31,7 +31,7 @@ pure-Python reference implementation on the same word counts
 k-round argmax recursion is not expressible as one ANSI-SQL oracle,
 the same status as PageRank — and the registry's driver-level
 evidence for the tokenizer family is `tok_bpe_segment`
-(queries/extensions_r8.py), which applies a pinned merge table
+(queries/text.py), which applies a pinned merge table
 learned by this trainer under an exact DuckDB oracle.
 
 Reference-parity note: haelbrek/Evolution-DATA-WAREHOUSE has no
@@ -43,6 +43,8 @@ from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+
+from evolution_data_warehouse_spark.operators.textops import lower_tokens
 
 #: end-of-word sentinel (the classic `</w>`): keeps merges from
 #: crossing word boundaries and lets the learned vocab distinguish
@@ -82,7 +84,7 @@ def bpe_prepare_words(docs: DataFrame, text_col: str = "text") -> DataFrame:
     sentinel appended. One shuffle at word cardinality."""
     words = (
         docs.select(
-            F.explode(F.split(F.lower(F.col(text_col)), r"\s+")).alias("w")
+            F.explode(lower_tokens(text_col, r"\s+")).alias("w")
         )
         .filter(F.col("w") != "")
         .groupBy("w")
@@ -197,7 +199,7 @@ def bpe_encode_ids(
     no Python. One explode + one join + one explode, nothing else."""
     words = docs.select(
         F.col(id_col),
-        F.posexplode(F.split(F.lower(F.col(text_col)), r"\s+")).alias(
+        F.posexplode(lower_tokens(text_col, r"\s+")).alias(
             "word_pos", "w"
         ),
     ).filter(F.col("w") != "")
@@ -230,18 +232,4 @@ def bpe_encode_ids(
             F.col("z.subs").alias("subword"),
             F.col("z.ids").cast("int").alias("token_id"),
         )
-    )
-
-
-def bpe_train_df(
-    docs: DataFrame, text_col: str = "text", n_merges: int = 10
-) -> DataFrame:
-    """bpe_train as a DataFrame: (rank, left, right, merged, cnt)."""
-    spark = docs.sparkSession
-    rows = [
-        (r, a, b, a + b, c)
-        for r, a, b, c in bpe_train(docs, text_col, n_merges)
-    ]
-    return spark.createDataFrame(
-        rows, "rank int, left string, right string, merged string, cnt bigint"
     )

@@ -1,6 +1,6 @@
 """Image-text (caption) alignment — the CLIP-score gate of LAION-style
 image-corpus curation, shared by mm_caption_alignment and
-mm_image_curation (queries/extensions_r11.py / extensions_r10.py).
+mm_image_curation (queries/multimodal.py).
 
 One source of truth for the constants, the Spark expression builder,
 and the DuckDB CTE chain: a change to any threshold or to the

@@ -31,7 +31,7 @@ N_BANDS = 4
 ROWS_PER_BAND = N_MINHASH // N_BANDS
 SIMHASH_BITS = 16
 # Hot-bucket guard default, shared with the DuckDB oracle
-# (queries/llm_ops.py interpolates this constant into the oracle SQL so
+# (queries/dedup.py interpolates this constant into the oracle SQL so
 # engine and oracle can never diverge silently).
 DEFAULT_MAX_BUCKET = 1000
 # Document-frequency cap for the exact shingle self-join family

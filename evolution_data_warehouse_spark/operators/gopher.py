@@ -37,6 +37,8 @@ from __future__ import annotations
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
+from evolution_data_warehouse_spark.operators.textops import lower_tokens
+
 #: the paper's stop-word list, verbatim (§A1.1).
 GOPHER_STOPWORDS = ("the", "be", "to", "of", "and", "that", "have", "with")
 
@@ -79,7 +81,7 @@ def gopher_metrics(text: Column) -> dict[str, Column]:
     over the text column (names are the contract the flag builder and
     the SQL twin share)."""
     toks = F.split(text, " ")
-    ltoks = F.split(F.lower(text), " ")
+    ltoks = lower_tokens(text)
     lines = F.split(text, "\n")
     stop_lit = F.array(*[F.lit(w) for w in GOPHER_STOPWORDS])
     return {

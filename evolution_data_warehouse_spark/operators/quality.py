@@ -15,6 +15,8 @@ from dataclasses import dataclass
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from evolution_data_warehouse_spark.operators.textops import k_gram_windows, lower_tokens
+
 
 def orphan_keys(
     fact: DataFrame, dim: DataFrame, fact_key: str, dim_key: str | None = None
@@ -192,12 +194,8 @@ def blocklist_matches(
     blocklist naturally arrives mixed-case — lowering only the corpus
     would make such phrases silently match nothing).
     """
-    from evolution_data_warehouse_spark.operators.textops import (
-        k_gram_windows,
-    )
-
     spark = docs.sparkSession
-    toks = F.split(F.lower(F.col(text_col)), " ")
+    toks = lower_tokens(text_col)
     base = docs.select(id_col, toks.alias("_tk"))
     by_len: dict[int, list[tuple[str, int]]] = {}
     for phrase, severity in phrases:

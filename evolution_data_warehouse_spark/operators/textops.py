@@ -29,6 +29,39 @@ def tokens_ws(text: Column) -> Column:
     return F.split(text, " ")
 
 
+def lower_tokens(text: Column | str, sep: str = " ") -> Column:
+    """Lower-cased tokens, ``split(lower(text), sep)`` (``sep`` is a
+    regex): the tokenization the text, dedup and curation queries
+    share."""
+    c = F.col(text) if isinstance(text, str) else text
+    return F.split(F.lower(c), sep)
+
+
+def word_shingles(toks: Column) -> Column:
+    """Every 3-word shingle of a token array, joined with a single space
+    (empty below 3 tokens): the shingle recipe every near-dup query
+    shares — batch dedup, decontamination, the crawl funnel and the
+    streaming index cannot shingle differently."""
+    n = F.size(toks)
+    return F.when(
+        n >= 3,
+        F.transform(
+            F.sequence(F.lit(0), n - 3),
+            lambda i: F.concat_ws(
+                " ",
+                F.element_at(toks, i + 1),
+                F.element_at(toks, i + 2),
+                F.element_at(toks, i + 3),
+            ),
+        ),
+    ).otherwise(F.array().cast("array<string>"))
+
+
+def lower_tokens_sql(expr: str) -> str:
+    """DuckDB mirror of :func:`lower_tokens` with the default separator."""
+    return f"str_split(lower({expr}), ' ')"
+
+
 def stopword_hits(text: Column, words: list[str]) -> Column:
     """Count of whitespace tokens that are in ``words``."""
     lst = F.array(*[F.lit(w) for w in words])

@@ -12,15 +12,17 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 
-from evolution_data_warehouse_spark.queries.common import TABLES, t
-
 
 def register_star_views(spark: SparkSession, sf_dir: str) -> None:
+    # Deferred: the queries package imports this module for the view
+    # SQL its dashboard oracle is built from.
+    from evolution_data_warehouse_spark.queries.common import TABLES, t
+
     for name in TABLES:
         t(spark, sf_dir, name).createOrReplaceTempView(name)
 
 
-_DATAMART_SQL = {
+DATAMART_SQL = {
     # vm_demographie_departement analog (005:14-42): star join + SUM +
     # guarded per-1000 ratio.
     "vm_demographie": """
@@ -99,7 +101,7 @@ _DATAMART_SQL = {
 # NULLIF-guarded LEFT JOINs on aggregated subqueries for the datamarts
 # kept at a finer grain (sector, statut) that must be re-rolled-up to
 # the dashboard's (geo, annee) grain.
-_DASHBOARD_SQL = """
+DASHBOARD_SQL = """
     SELECT g.n_name AS geo_name, t.annee,
            demo.total_spend, demo.n_orders, demo.avg_order,
            ent.chiffre_affaires AS ca_entreprises,
@@ -131,12 +133,12 @@ _DASHBOARD_SQL = """
 def create_datamarts(spark: SparkSession, sf_dir: str) -> list[str]:
     """Register star views + all datamart views; returns view names."""
     register_star_views(spark, sf_dir)
-    for name, sql in _DATAMART_SQL.items():
+    for name, sql in DATAMART_SQL.items():
         spark.sql(f"CREATE OR REPLACE TEMPORARY VIEW {name} AS {sql}")
     spark.sql(
-        f"CREATE OR REPLACE TEMPORARY VIEW vm_tableau_bord AS {_DASHBOARD_SQL}"
+        f"CREATE OR REPLACE TEMPORARY VIEW vm_tableau_bord AS {DASHBOARD_SQL}"
     )
-    return [*_DATAMART_SQL.keys(), "vm_tableau_bord"]
+    return [*DATAMART_SQL.keys(), "vm_tableau_bord"]
 
 
 def datamart(spark: SparkSession, name: str) -> DataFrame:

@@ -15,74 +15,36 @@ Determinism rules applied across the registry (see queries/common.py):
 
 from __future__ import annotations
 
+import importlib
+
 from evolution_data_warehouse_spark.queries.common import REGISTRY, Query
 
-# Importing the modules populates REGISTRY via the @register decorator.
-from evolution_data_warehouse_spark.queries import relational as _relational  # noqa: E402,F401
-from evolution_data_warehouse_spark.queries import scalar_fns as _scalar_fns  # noqa: E402,F401
-from evolution_data_warehouse_spark.queries import scd as _scd  # noqa: E402,F401
-from evolution_data_warehouse_spark.queries import llm_ops as _llm_ops  # noqa: E402,F401
-from evolution_data_warehouse_spark.queries import streaming_ops as _streaming_ops  # noqa: E402,F401
-from evolution_data_warehouse_spark.queries import sources_ext as _sources_ext  # noqa: E402,F401
-from evolution_data_warehouse_spark.queries import extensions as _extensions  # noqa: E402,F401
-from evolution_data_warehouse_spark.queries import tpch_style as _tpch_style  # noqa: E402,F401
-from evolution_data_warehouse_spark.queries import dashboard as _dashboard  # noqa: E402,F401
-from evolution_data_warehouse_spark.queries import datapipe as _datapipe  # noqa: E402,F401
-from evolution_data_warehouse_spark.queries import event_analytics as _event_analytics  # noqa: E402,F401
-from evolution_data_warehouse_spark.queries import extensions_r6 as _extensions_r6  # noqa: E402,F401
-from evolution_data_warehouse_spark.queries import extensions_r7 as _extensions_r7  # noqa: E402,F401
-from evolution_data_warehouse_spark.queries import extensions_r8 as _extensions_r8  # noqa: E402,F401
-from evolution_data_warehouse_spark.queries import extensions_r9 as _extensions_r9  # noqa: E402,F401
-from evolution_data_warehouse_spark.queries import extensions_r10 as _extensions_r10  # noqa: E402,F401
-from evolution_data_warehouse_spark.queries import extensions_r11 as _extensions_r11  # noqa: E402,F401
-from evolution_data_warehouse_spark.queries import extensions_r11b as _extensions_r11b  # noqa: E402,F401
-from evolution_data_warehouse_spark.queries import extensions_r12 as _extensions_r12  # noqa: E402,F401
-from evolution_data_warehouse_spark.queries import extensions_r13 as _extensions_r13  # noqa: E402,F401
-from evolution_data_warehouse_spark.queries import extensions_r14 as _extensions_r14  # noqa: E402,F401
+# Family module → the query-name prefixes it owns. Every query lives in
+# the module of its prefix (tests/test_query_layout.py enforces this;
+# QUERIES.md lists the registry by family). Importing the modules
+# populates REGISTRY via @register.
+FAMILIES: dict[str, tuple[str, ...]] = {
+    "relational": ("agg", "filter", "join", "limit", "proj", "set", "sort", "win"),
+    "scalar_fns": ("fn", "geo", "udf", "udtf", "pandas"),
+    "tpch_style": ("tpch",),
+    "event_analytics": ("event", "cdc", "cohort", "funnel", "session", "seq", "ts"),
+    "streaming_ops": ("stream", "ivm"),
+    "sources_ext": ("src", "snk", "profile", "web"),
+    "datapipe": (
+        "corpus", "curation", "pack", "sample", "split", "chunk", "fe",
+        "decontaminate", "source",
+    ),
+    "scd": ("proc", "view", "dim", "snapshot", "warehouse"),
+    "text": ("text", "tok", "pii"),
+    "dedup": ("dedup", "er"),
+    "similarity": ("sim", "emb"),
+    "multimodal": ("mm",),
+    "graph": ("graph",),
+    "stats": ("stats", "drift", "surv"),
+    "quality": ("quality",),
+}
 
-# Registration order is verification priority, not import order: the
-# driver verifies the FIRST 50 registry entries each round, so the
-# front of the registry is the set we most need a verdict on.  The
-# round-15 window (per the CLAUDE.md rotation and the r14 verdict's
-# directive #2): the 11 entries with no driver verdict yet (the 10 r14
-# mid-round additions + stream_session_ingest; all green in
-# LOCAL_CONTRACT_r14.json at sf0.01 AND LOCAL_CONTRACT_r14_sf01.json
-# at sf0.1), then the oldest-verdict block — the 9 remaining r5-era
-# verdicts followed by the first 30 of the r6 block (registration
-# order) — keeping the window at exactly 50.
-_R15_WINDOW = (
-    # 11 never-driver-verified entries
-    "chunk_overlap_spans", "text_quality_calibration",
-    "view_session_durations", "stream_chunk_ingest", "chunk_bm25_topk",
-    "graph_adamic_adar", "sim_ann_ndcg_eval", "ivm_join_maintenance",
-    "fe_quantile_binning", "chunk_sentence_bins", "stream_session_ingest",
-    # 9 oldest-verdict entries (official verdict r5) — refresh them
-    "stream_window_counts", "stream_interval_join", "view_open_errors",
-    "profile_columns", "tpch_q7", "tpch_q12", "tpch_q13", "tpch_q15",
-    "tpch_q18",
-    # 30 from the next-oldest block (official verdict r6)
-    "snk_clustered_prune", "join_effective_dated", "snk_csv",
-    "src_schema_evolution", "join_null_safe", "join_right_outer",
-    "fn_try_cast", "fn_explode_outer", "text_bigram_topk",
-    "emb_norm_outliers", "dedup_exact_normalized", "text_lm_score",
-    "dedup_minhash_incremental", "mm_filter_by_meta", "text_chunk_overlap",
-    "quality_expectations", "proc_maintenance_layout", "win_moving_avg",
-    "agg_stats_suite", "agg_histogram", "agg_incremental_merge",
-    "agg_sketch_union", "win_range_7d", "win_share_of_total",
-    "agg_approx_sample_mean", "geo_nearest_hub", "agg_pivot_multi",
-    "agg_weighted_avg", "tpch_q17", "tpch_q21",
-)
-_ordered: list[str] = list(_R15_WINDOW)
-_ordered.extend(n for n in REGISTRY if n not in _ordered)
-_missing = [n for n in _R15_WINDOW if n not in REGISTRY]
-if _missing:
-    raise RuntimeError(f"priority names absent from REGISTRY: {_missing}")
-_reordered = {name: REGISTRY[name] for name in _ordered}
-if len(_reordered) != len(REGISTRY):
-    raise RuntimeError(
-        f"registry reorder dropped entries: {len(_reordered)} != {len(REGISTRY)}"
-    )
-REGISTRY.clear()
-REGISTRY.update(_reordered)
+for _family in FAMILIES:
+    importlib.import_module(f"{__name__}.{_family}")
 
-__all__ = ["REGISTRY", "Query"]
+__all__ = ["FAMILIES", "REGISTRY", "Query"]

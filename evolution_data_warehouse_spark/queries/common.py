@@ -2,6 +2,7 @@
 
 from __future__ import annotations
 
+import os
 import re
 from collections.abc import Callable
 from dataclasses import dataclass
@@ -125,6 +126,16 @@ def t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return spark.read.parquet(f"{sf_dir}/{name}.parquet")
 
 
+_SCRATCH = os.path.join(os.path.dirname(os.path.dirname(os.path.dirname(__file__))), ".scratch")
+
+
+def scratch(name: str, sf_dir: str) -> str:
+    """Per-query scratch directory (repo-local, one per scale factor)
+    for queries that write and read back their own files."""
+    tag = os.path.basename(os.path.normpath(sf_dir))
+    return os.path.join(_SCRATCH, f"{name}_{tag}")
+
+
 def cpu_repartition(df: DataFrame, *cols: str) -> DataFrame:
     """Repartition to core count for per-row-CPU-heavy narrow stages
     (codec decode, fingerprinting, token explode): the parquet scan
@@ -169,8 +180,6 @@ def gated_broadcast(df: DataFrame, sf_dir: str, *tables: str) -> DataFrame:
     strategy from measured sizes. File metadata only — no data is read
     and nothing about the query's result changes.
     """
-    import os
-
     total = 0
     for name in tables:
         path = f"{sf_dir}/{name}.parquet"

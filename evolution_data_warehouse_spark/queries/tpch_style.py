@@ -1,6 +1,6 @@
-"""Realistic composite analytics queries (TPC-H Q3/Q5 shapes) — the
-end-to-end "a BI user runs this" checks on top of the per-operator
-inventory. Same determinism rules as everything else."""
+"""Realistic composite analytics queries (``tpch_*``: TPC-H Q1–Q22
+shapes) — the end-to-end "a BI user runs this" checks on top of the
+per-operator inventory. Same determinism rules as everything else."""
 
 from __future__ import annotations
 

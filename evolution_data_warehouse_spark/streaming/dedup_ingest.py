@@ -33,6 +33,7 @@ from evolution_data_warehouse_spark.operators.dedup import (
     minhash_pairs_against,
     minhash_signature,
 )
+from evolution_data_warehouse_spark.operators.textops import lower_tokens, word_shingles
 
 SIGS_SUBDIR = "sigs"
 BANDS_SUBDIR = "bands"
@@ -40,23 +41,10 @@ BANDS_SUBDIR = "bands"
 
 def shingle_docs(docs: DataFrame, id_col: str = "doc_id") -> DataFrame:
     """doc rows (id, text) → distinct 3-gram word shingles, exploded —
-    the SAME construction as the batch dedup family (queries/
-    llm_ops.py::_doc_shingles), shared so index build, batch twin, and
+    the SAME construction as the batch dedup family
+    (queries/text.py::doc_shingles), shared so index build, batch twin, and
     streaming micro-batches can never shingle differently."""
-    toks = F.split(F.lower(F.col("text")), " ")
-    n = F.size(toks)
-    shingles = F.when(
-        n >= 3,
-        F.transform(
-            F.sequence(F.lit(0), n - 3),
-            lambda i: F.concat_ws(
-                " ",
-                F.element_at(toks, i + 1),
-                F.element_at(toks, i + 2),
-                F.element_at(toks, i + 3),
-            ),
-        ),
-    ).otherwise(F.array().cast("array<string>"))
+    shingles = word_shingles(lower_tokens("text"))
     return docs.select(
         id_col, F.explode(F.array_distinct(shingles)).alias("shingle")
     )

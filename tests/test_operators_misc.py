@@ -357,7 +357,7 @@ def test_minhash_bands_checkpoint_output_identical(spark):
 
 
 def _word_shingles(docs):
-    """3-gram word shingles, same recipe as queries/llm_ops."""
+    """3-gram word shingles, same recipe as queries/text.py::doc_shingles."""
     from pyspark.sql import functions as F
 
     toks = F.split(F.lower(F.col("text")), " ")
@@ -483,7 +483,7 @@ def test_ivf_multiprobe_recall_monotone(spark, sf_dir):
         ivf_assign,
         with_norm,
     )
-    from evolution_data_warehouse_spark.queries.llm_ops import _KM_CENTROIDS
+    from evolution_data_warehouse_spark.queries.similarity import _KM_CENTROIDS
 
     K, N_QUERIES = 10, 20
     emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
@@ -1249,7 +1249,9 @@ def test_minhash_recall_vs_exact_jaccard(spark):
         content_hash64,
         minhash_lsh_pairs,
     )
-    from evolution_data_warehouse_spark.queries.llm_ops import _doc_shingles
+    from evolution_data_warehouse_spark.queries.text import (
+        doc_shingles as _doc_shingles,
+    )
 
     sf_dir = "/root/testdata/sf0.001"
     sh = (

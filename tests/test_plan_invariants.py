@@ -314,7 +314,9 @@ def test_minhash_guard_shares_pair_join_exchange(spark, sf_dir):
     from evolution_data_warehouse_spark.operators.dedup import (
         minhash_lsh_pairs,
     )
-    from evolution_data_warehouse_spark.queries.llm_ops import _doc_shingles
+    from evolution_data_warehouse_spark.queries.text import (
+        doc_shingles as _doc_shingles,
+    )
 
     prev = spark.conf.get("spark.sql.adaptive.enabled")
     spark.conf.set("spark.sql.adaptive.enabled", "false")

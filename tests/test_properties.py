@@ -671,10 +671,7 @@ def test_chunk_overlap_covers_every_token(spark, sf_dir):
     # per-BOUNDARY continuity: each chunk must start no later than the
     # previous chunk's end + 1, i.e. stride <= previous chunk length —
     # the end-reached check alone would miss mid-document gaps
-    from evolution_data_warehouse_spark.queries.llm_ops import (
-        _CHUNK_SIZE,
-        _CHUNK_STRIDE,
-    )
+    from evolution_data_warehouse_spark.queries.text import _CHUNK_SIZE, _CHUNK_STRIDE
 
     assert _CHUNK_STRIDE <= _CHUNK_SIZE
     from pyspark.sql import Window as W
@@ -1164,10 +1161,10 @@ def test_pq_assign_exactness_and_recall(spark, sf_dir):
         pq_quantize_codebooks,
     )
     from evolution_data_warehouse_spark.queries.common import t
-    from evolution_data_warehouse_spark.queries.extensions_r9 import (
-        _PQ_BOOKS,
-        _PQ_QUERY,
+    from evolution_data_warehouse_spark.queries.pq_codebooks import (
+        PQ_BOOKS as _PQ_BOOKS,
     )
+    from evolution_data_warehouse_spark.queries.similarity import _PQ_QUERY
 
     emb = t(spark, sf_dir, "embeddings").select("vec_id", "embedding")
     rows = sorted(
@@ -1240,9 +1237,7 @@ def test_pq_assign_exactness_and_recall(spark, sf_dir):
     assert r_refine >= 7, r_refine  # measured 7/25 at sf0.001
 
     # and the engine's sim_ivfpq_refine returns exactly this model
-    from evolution_data_warehouse_spark.queries.extensions_r10 import (
-        sim_ivfpq_refine,
-    )
+    from evolution_data_warehouse_spark.queries.similarity import sim_ivfpq_refine
 
     got_refine = [
         (r.vec_id, r.exact_dist)
@@ -1333,10 +1328,10 @@ def test_bm25_matches_pure_python_model(spark, sf_dir):
     both Spark and DuckDB."""
     from collections import Counter
 
-    from evolution_data_warehouse_spark.queries.extensions_r11 import (
-        _BM25_FP,
-        _BM25_QUERIES,
-        _BM25_TOP_K,
+    from evolution_data_warehouse_spark.queries.text import (
+        BM25_FP as _BM25_FP,
+        BM25_QUERIES as _BM25_QUERIES,
+        BM25_TOP_K as _BM25_TOP_K,
         text_bm25_topk,
     )
     from evolution_data_warehouse_spark.queries.common import t
@@ -1380,7 +1375,7 @@ def test_bm25_matches_pure_python_model(spark, sf_dir):
 
 
 def test_pagerank_mass_and_shape(spark, sf_dir):
-    from evolution_data_warehouse_spark.queries.extensions_r11 import (
+    from evolution_data_warehouse_spark.queries.graph import (
         _PR_FP,
         _PR_TOP,
         graph_pagerank,
@@ -1399,9 +1394,7 @@ def test_pagerank_mass_and_shape(spark, sf_dir):
 
 
 def test_shuffled_shards_ranges_disjoint_and_clean(spark, sf_dir):
-    from evolution_data_warehouse_spark.queries.extensions_r11 import (
-        snk_shuffled_shards,
-    )
+    from evolution_data_warehouse_spark.queries.sources_ext import snk_shuffled_shards
 
     rows = sorted(
         snk_shuffled_shards(spark, sf_dir).collect(),
@@ -1419,7 +1412,7 @@ def test_shuffled_shards_ranges_disjoint_and_clean(spark, sf_dir):
 
 
 def test_inverted_index_postings_sorted_and_consistent(spark, sf_dir):
-    from evolution_data_warehouse_spark.queries.extensions_r11 import (
+    from evolution_data_warehouse_spark.queries.text import (
         _INV_POSTINGS_CAP,
         text_inverted_index,
     )
@@ -1437,7 +1430,7 @@ def test_inverted_index_postings_sorted_and_consistent(spark, sf_dir):
 
 
 def test_rrf_fusion_scores_recompute(spark, sf_dir):
-    from evolution_data_warehouse_spark.queries.extensions_r11 import (
+    from evolution_data_warehouse_spark.queries.similarity import (
         _RRF_FP,
         _RRF_K,
         _RRF_LIST,
@@ -1465,10 +1458,7 @@ def test_rrf_fusion_scores_recompute(spark, sf_dir):
 
 
 def test_rsi_and_bollinger_bounds(spark, sf_dir):
-    from evolution_data_warehouse_spark.queries.extensions_r11b import (
-        win_bollinger,
-        win_rsi,
-    )
+    from evolution_data_warehouse_spark.queries.relational import win_bollinger, win_rsi
 
     rsi_rows = win_rsi(spark, sf_dir).collect()
     assert rsi_rows, "RSI produced no rows"
@@ -1483,9 +1473,7 @@ def test_rsi_and_bollinger_bounds(spark, sf_dir):
 
 
 def test_spearman_in_unit_interval(spark, sf_dir):
-    from evolution_data_warehouse_spark.queries.extensions_r11b import (
-        stats_spearman_corr,
-    )
+    from evolution_data_warehouse_spark.queries.stats import stats_spearman_corr
 
     rows = stats_spearman_corr(spark, sf_dir).collect()
     assert rows
@@ -1496,7 +1484,7 @@ def test_spearman_in_unit_interval(spark, sf_dir):
 
 def test_kfold_partitions_every_document(spark, sf_dir):
     from evolution_data_warehouse_spark.queries.common import t
-    from evolution_data_warehouse_spark.queries.extensions_r11b import (
+    from evolution_data_warehouse_spark.queries.datapipe import (
         _K_FOLDS,
         split_kfold_hash,
     )
@@ -1514,9 +1502,7 @@ def test_kfold_partitions_every_document(spark, sf_dir):
 
 
 def test_date_spine_contiguous_and_calendar_sane(spark, sf_dir):
-    from evolution_data_warehouse_spark.queries.extensions_r11b import (
-        dim_date_spine,
-    )
+    from evolution_data_warehouse_spark.queries.scd import dim_date_spine
 
     rows = sorted(
         dim_date_spine(spark, sf_dir).collect(), key=lambda r: r["day"]
@@ -1535,7 +1521,7 @@ def test_date_spine_contiguous_and_calendar_sane(spark, sf_dir):
 
 
 def test_jaccard_neighbors_scores_valid(spark, sf_dir):
-    from evolution_data_warehouse_spark.queries.extensions_r11b import (
+    from evolution_data_warehouse_spark.queries.graph import (
         _JACCARD_FP,
         _JACCARD_TOP,
         _MAX_NBR_DEG,
@@ -1558,11 +1544,11 @@ def test_webdataset_tars_are_deterministic_and_well_formed(spark, sf_dir):
     import os
     import tarfile
 
-    from evolution_data_warehouse_spark.queries.extensions_r11b import (
+    from evolution_data_warehouse_spark.queries.sources_ext import (
         _WDS_SHARDS,
         snk_webdataset_shards,
     )
-    from evolution_data_warehouse_spark.queries.relational import _scratch
+    from evolution_data_warehouse_spark.queries.common import scratch as _scratch
 
     base = _scratch("snk_webdataset_shards", sf_dir)
 
@@ -1596,7 +1582,7 @@ def test_webdataset_tars_are_deterministic_and_well_formed(spark, sf_dir):
 
 
 def test_fk_orphans_covers_every_relation(spark, sf_dir):
-    from evolution_data_warehouse_spark.queries.extensions_r11b import (
+    from evolution_data_warehouse_spark.queries.quality import (
         _FK_RELATIONS,
         quality_fk_orphans,
     )
@@ -1611,7 +1597,7 @@ def test_fk_orphans_covers_every_relation(spark, sf_dir):
 
 def test_window_funnel_depths_partition_viewers(spark, sf_dir):
     from evolution_data_warehouse_spark.queries.common import t
-    from evolution_data_warehouse_spark.queries.extensions_r11b import (
+    from evolution_data_warehouse_spark.queries.event_analytics import (
         event_window_funnel,
     )
 
@@ -1629,7 +1615,7 @@ def test_window_funnel_depths_partition_viewers(spark, sf_dir):
 
 
 def test_epoch_schedule_budget_invariants(spark, sf_dir):
-    from evolution_data_warehouse_spark.queries.extensions_r11b import (
+    from evolution_data_warehouse_spark.queries.datapipe import (
         _EPOCH_BUDGET,
         _EPOCH_FP,
         _EPOCH_MAX_REPEAT,
@@ -1650,7 +1636,7 @@ def test_epoch_schedule_budget_invariants(spark, sf_dir):
 
 
 def test_keyset_page_strictly_after_cursor_and_ordered(spark, sf_dir):
-    from evolution_data_warehouse_spark.queries.extensions_r11b import (
+    from evolution_data_warehouse_spark.queries.relational import (
         _PAGE_CURSOR_DATE,
         _PAGE_CURSOR_KEY,
         _PAGE_SIZE,
@@ -1671,9 +1657,7 @@ def test_keyset_page_strictly_after_cursor_and_ordered(spark, sf_dir):
 
 
 def test_pk_uniqueness_reports_known_fixture_violation(spark, sf_dir):
-    from evolution_data_warehouse_spark.queries.extensions_r11b import (
-        quality_pk_uniqueness,
-    )
+    from evolution_data_warehouse_spark.queries.quality import quality_pk_uniqueness
 
     rows = {r["tbl"]: r for r in quality_pk_uniqueness(spark, sf_dir).collect()}
     for r in rows.values():
@@ -1685,7 +1669,7 @@ def test_pk_uniqueness_reports_known_fixture_violation(spark, sf_dir):
 
 
 def test_threshold_sweep_monotone(spark, sf_dir):
-    from evolution_data_warehouse_spark.queries.extensions_r11b import (
+    from evolution_data_warehouse_spark.queries.dedup import (
         _SWEEP_THRESHOLDS,
         dedup_threshold_sweep,
     )
@@ -1705,7 +1689,7 @@ def test_threshold_sweep_monotone(spark, sf_dir):
 
 def test_session_windows_match_gap_model(spark, sf_dir):
     from evolution_data_warehouse_spark.queries.common import t
-    from evolution_data_warehouse_spark.queries.extensions_r11b import (
+    from evolution_data_warehouse_spark.queries.streaming_ops import (
         stream_session_windows,
     )
 
@@ -1728,9 +1712,7 @@ def test_session_windows_match_gap_model(spark, sf_dir):
 
 def test_rolling_median_bounded_by_frame_extremes(spark, sf_dir):
     from evolution_data_warehouse_spark.queries.common import dsum, t
-    from evolution_data_warehouse_spark.queries.extensions_r11b import (
-        win_rolling_median,
-    )
+    from evolution_data_warehouse_spark.queries.relational import win_rolling_median
 
     med = {
         (r["o_orderpriority"], r["day"]): r["med"]
@@ -1866,9 +1848,7 @@ def test_hll_distinct_error_within_sketch_bound(spark, sf_dir):
     # HLL with m=256 has ~1.04/sqrt(256) = 6.5% std error; assert
     # every group lands within a generous 4-sigma envelope — a wrong
     # register construction blows past this immediately.
-    from evolution_data_warehouse_spark.queries.extensions_r12 import (
-        agg_hll_distinct,
-    )
+    from evolution_data_warehouse_spark.queries.relational import agg_hll_distinct
 
     for r in agg_hll_distinct(spark, sf_dir).collect():
         rel = abs(r.est_distinct - r.n_exact) / r.n_exact
@@ -1879,7 +1859,7 @@ def test_markov_stationary_conserves_mass(spark, sf_dir):
     # Power iteration over a row-stochastic matrix preserves total
     # mass up to the documented per-edge floor leak: the sum must be
     # 1e12 minus at most (#edges x #iterations).
-    from evolution_data_warehouse_spark.queries.extensions_r12 import (
+    from evolution_data_warehouse_spark.queries.event_analytics import (
         _MKV_FP,
         _MKV_T,
         event_markov_stationary,
@@ -1900,9 +1880,7 @@ def test_ccnet_buckets_are_ordered_thirds(spark, sf_dir):
     # approximation.
     from collections import defaultdict
 
-    from evolution_data_warehouse_spark.queries.extensions_r12 import (
-        text_quality_ccnet,
-    )
+    from evolution_data_warehouse_spark.queries.text import text_quality_ccnet
 
     by_lang = defaultdict(lambda: defaultdict(list))
     for r in text_quality_ccnet(spark, sf_dir).collect():
@@ -2102,12 +2080,8 @@ def test_substring_maximal_bounded_by_diagonal_form(spark, sf_dir):
     # De-overlapped coverage can never exceed the per-diagonal total,
     # and every pair found by one form is found by the other (identical
     # anchor join underneath).
-    from evolution_data_warehouse_spark.queries.extensions_r13 import (
-        dedup_substring_maximal,
-    )
-    from evolution_data_warehouse_spark.queries.extensions_r12 import (
-        dedup_substring_cross,
-    )
+    from evolution_data_warehouse_spark.queries.dedup import dedup_substring_maximal
+    from evolution_data_warehouse_spark.queries.dedup import dedup_substring_cross
 
     mx = {
         (r.doc_a, r.doc_b): r
@@ -2134,9 +2108,7 @@ def test_ann_frontier_invariants(spark, sf_dir):
     # shortlist@50, so exact hits == |top10 ∩ cand| and bound the
     # quantized codecs; both hits and candidate counts are monotone in
     # probe depth for the exact codec (cand1 ⊆ cand2).
-    from evolution_data_warehouse_spark.queries.extensions_r13 import (
-        sim_ann_frontier,
-    )
+    from evolution_data_warehouse_spark.queries.similarity import sim_ann_frontier
 
     rows = {
         (r.nprobe, r.method): r
@@ -2160,12 +2132,8 @@ def test_adc_batch_query0_matches_single_query_scan(spark, sf_dir):
     # Batch leg 0 IS the registered single-query workload: its top-10
     # by ADC distance must equal ranking sim_pq_assign's adc_dist
     # column directly (same pinned query, same codebooks).
-    from evolution_data_warehouse_spark.queries.extensions_r9 import (
-        sim_pq_assign,
-    )
-    from evolution_data_warehouse_spark.queries.extensions_r13 import (
-        sim_adc_batch_topk,
-    )
+    from evolution_data_warehouse_spark.queries.similarity import sim_pq_assign
+    from evolution_data_warehouse_spark.queries.similarity import sim_adc_batch_topk
 
     got = [
         (r.vec_id, r.adc_dist)
@@ -2188,9 +2156,7 @@ def test_pca_recon_energy_bounds(spark, sf_dir):
     # Orthonormal rotation: the leading-k capture can never exceed the
     # vector's own energy (floor-div jitter is absolutely bounded and
     # tiny vs energy); explained fraction lies in [0, 1e6].
-    from evolution_data_warehouse_spark.queries.extensions_r13 import (
-        emb_pca_recon_error,
-    )
+    from evolution_data_warehouse_spark.queries.similarity import emb_pca_recon_error
 
     rows = emb_pca_recon_error(spark, sf_dir).collect()
     assert rows
@@ -2207,9 +2173,7 @@ def test_band_sweep_nested_configs_are_monotone(spark, sf_dir):
     # estimated Jaccard) rises as bands widen. (The hot-bucket guard
     # could in principle drop a loose-config bucket whose refinement
     # survives, but no fixture bucket approaches the cap.)
-    from evolution_data_warehouse_spark.queries.extensions_r13 import (
-        dedup_minhash_band_sweep,
-    )
+    from evolution_data_warehouse_spark.queries.dedup import dedup_minhash_band_sweep
 
     rows = {
         r.rows_per_band: r
@@ -2228,9 +2192,7 @@ def test_band_sweep_nested_configs_are_monotone(spark, sf_dir):
 
 
 def test_permutation_test_ledger(spark, sf_dir):
-    from evolution_data_warehouse_spark.queries.extensions_r13 import (
-        stats_permutation_test,
-    )
+    from evolution_data_warehouse_spark.queries.stats import stats_permutation_test
     from evolution_data_warehouse_spark.queries.common import t
 
     r = stats_permutation_test(spark, sf_dir).collect()[0]
@@ -2242,7 +2204,7 @@ def test_permutation_test_ledger(spark, sf_dir):
 
 
 def test_token_budget_plan_conserves_budget(spark, sf_dir):
-    from evolution_data_warehouse_spark.queries.extensions_r13 import (
+    from evolution_data_warehouse_spark.queries.datapipe import (
         _BUDGET_TOKENS,
         corpus_token_budget_plan,
     )
@@ -2262,9 +2224,7 @@ def test_token_budget_plan_conserves_budget(spark, sf_dir):
 def test_t_closeness_triad_consistency(spark, sf_dir):
     # Same QI grain as k-anonymity/l-diversity: one row per
     # (nation, balance-bucket) class; TVD is a [0, 1] quantity in ppm.
-    from evolution_data_warehouse_spark.queries.extensions_r13 import (
-        quality_t_closeness,
-    )
+    from evolution_data_warehouse_spark.queries.quality import quality_t_closeness
     from evolution_data_warehouse_spark.queries.common import t
 
     rows = quality_t_closeness(spark, sf_dir).collect()
@@ -2292,12 +2252,8 @@ def test_modularity_ledger(spark, sf_dir):
     # intra-edge ledger must account for every edge (sum e_c == m)
     # and the degree ledger for both endpoints (sum d_c == 2m);
     # total modularity = 1 - sum(d_c^2)/4m^2 lies in [0, 1).
-    from evolution_data_warehouse_spark.queries.extensions_r13 import (
-        graph_modularity,
-    )
-    from evolution_data_warehouse_spark.queries.extensions_r7 import (
-        _edges,
-    )
+    from evolution_data_warehouse_spark.queries.graph import graph_modularity
+    from evolution_data_warehouse_spark.queries.graph import _edges
 
     rows = graph_modularity(spark, sf_dir).collect()
     m = _edges(spark, sf_dir).count()
@@ -2308,9 +2264,7 @@ def test_modularity_ledger(spark, sf_dir):
 
 
 def test_feature_hashing_mass_conservation(spark, sf_dir):
-    from evolution_data_warehouse_spark.queries.extensions_r13 import (
-        fe_feature_hashing,
-    )
+    from evolution_data_warehouse_spark.queries.datapipe import fe_feature_hashing
     from evolution_data_warehouse_spark.queries.common import t
 
     rows = fe_feature_hashing(spark, sf_dir).collect()
@@ -2323,12 +2277,8 @@ def test_feature_hashing_mass_conservation(spark, sf_dir):
 
 
 def test_acf_multi_lag_consistent_with_lag1(spark, sf_dir):
-    from evolution_data_warehouse_spark.queries.extensions_r10 import (
-        ts_acf_lag1,
-    )
-    from evolution_data_warehouse_spark.queries.extensions_r13 import (
-        ts_acf_multi_lag,
-    )
+    from evolution_data_warehouse_spark.queries.event_analytics import ts_acf_lag1
+    from evolution_data_warehouse_spark.queries.event_analytics import ts_acf_multi_lag
 
     multi = {
         r.lag: r for r in ts_acf_multi_lag(spark, sf_dir).collect()
@@ -2345,9 +2295,7 @@ def test_acf_multi_lag_consistent_with_lag1(spark, sf_dir):
 def test_knn_graph_shape(spark, sf_dir):
     from collections import defaultdict
 
-    from evolution_data_warehouse_spark.queries.extensions_r13 import (
-        emb_knn_graph,
-    )
+    from evolution_data_warehouse_spark.queries.similarity import emb_knn_graph
 
     by_vec = defaultdict(list)
     for r in emb_knn_graph(spark, sf_dir).collect():
@@ -2364,9 +2312,7 @@ def test_knn_graph_shape(spark, sf_dir):
 
 
 def test_power_analysis_sane(spark, sf_dir):
-    from evolution_data_warehouse_spark.queries.extensions_r13 import (
-        stats_power_analysis,
-    )
+    from evolution_data_warehouse_spark.queries.stats import stats_power_analysis
 
     rows = stats_power_analysis(spark, sf_dir).collect()
     assert len(rows) == 5  # the five market segments
@@ -2376,7 +2322,7 @@ def test_power_analysis_sane(spark, sf_dir):
 
 
 def test_seasonal_residual_flags_exceed_threshold(spark, sf_dir):
-    from evolution_data_warehouse_spark.queries.extensions_r13 import (
+    from evolution_data_warehouse_spark.queries.event_analytics import (
         ts_seasonal_residual_anomaly,
     )
 
@@ -2386,7 +2332,7 @@ def test_seasonal_residual_flags_exceed_threshold(spark, sf_dir):
 
 
 def test_quality_mix_report_conserves_corpus(spark, sf_dir):
-    from evolution_data_warehouse_spark.queries.extensions_r13 import (
+    from evolution_data_warehouse_spark.queries.datapipe import (
         corpus_quality_mix_report,
     )
     from evolution_data_warehouse_spark.queries.common import t
@@ -2401,9 +2347,7 @@ def test_quality_mix_report_conserves_corpus(spark, sf_dir):
 
 
 def test_fertility_at_least_one_subword_per_word(spark, sf_dir):
-    from evolution_data_warehouse_spark.queries.extensions_r13 import (
-        tok_fertility_by_lang,
-    )
+    from evolution_data_warehouse_spark.queries.text import tok_fertility_by_lang
 
     rows = tok_fertility_by_lang(spark, sf_dir).collect()
     assert rows
@@ -2416,9 +2360,7 @@ def test_lsh_recall_monotone_in_radius(spark, sf_dir):
     # Radius-1 candidates are a superset of radius-0 (the probe set
     # includes the home bucket), so both candidate volume and hits
     # are monotone; recall is a valid fraction.
-    from evolution_data_warehouse_spark.queries.extensions_r13 import (
-        sim_lsh_recall_eval,
-    )
+    from evolution_data_warehouse_spark.queries.similarity import sim_lsh_recall_eval
 
     rows = {r.radius: r for r in sim_lsh_recall_eval(spark, sf_dir).collect()}
     assert set(rows) == {0, 1}
@@ -2433,9 +2375,7 @@ def test_dp_release_noise_calibration(spark, sf_dir):
     # Laplace(b=2): |noise| is Exp(1/b); every draw is finite, the
     # noisy count equals true + noise at fpq precision, and the draw
     # is a pure function of the group key (stable across runs).
-    from evolution_data_warehouse_spark.queries.extensions_r13 import (
-        quality_dp_count_release,
-    )
+    from evolution_data_warehouse_spark.queries.quality import quality_dp_count_release
 
     rows = quality_dp_count_release(spark, sf_dir).collect()
     assert rows
@@ -2450,9 +2390,7 @@ def test_dp_release_noise_calibration(spark, sf_dir):
 
 
 def test_assortativity_in_valid_range(spark, sf_dir):
-    from evolution_data_warehouse_spark.queries.extensions_r13 import (
-        graph_assortativity,
-    )
+    from evolution_data_warehouse_spark.queries.graph import graph_assortativity
 
     r = graph_assortativity(spark, sf_dir).collect()[0]
     assert -1.0 <= r.assortativity <= 1.0
@@ -2464,9 +2402,7 @@ def test_burstiness_matches_python_reference(spark, sf_dir):
     # Exact integer identity vs a from-scratch per-term recount.
     from collections import Counter, defaultdict
 
-    from evolution_data_warehouse_spark.queries.extensions_r13 import (
-        text_burstiness_dispersion,
-    )
+    from evolution_data_warehouse_spark.queries.text import text_burstiness_dispersion
     from evolution_data_warehouse_spark.queries.common import t
 
     got = {
@@ -2493,9 +2429,7 @@ def test_ivm_retraction_equals_recompute(spark, sf_dir):
     # The maintained view must equal a from-scratch recompute over
     # (base - deletes + inserts) — engine-side, independent of the
     # DuckDB oracle (which checks the same identity).
-    from evolution_data_warehouse_spark.queries.extensions_r13 import (
-        ivm_agg_retraction,
-    )
+    from evolution_data_warehouse_spark.queries.streaming_ops import ivm_agg_retraction
     from evolution_data_warehouse_spark.queries.common import t
 
     got = {
@@ -2529,7 +2463,7 @@ def test_rake_scores_match_python_reference(spark, sf_dir):
     # per-word scores — the full corpus top-20 must agree exactly.
     from collections import defaultdict
 
-    from evolution_data_warehouse_spark.queries.extensions_r13 import (
+    from evolution_data_warehouse_spark.queries.text import (
         _RAKE_MAX_LEN,
         _RAKE_STOPS,
         _RAKE_TOP_K,
@@ -2585,7 +2519,7 @@ def test_rake_scores_match_python_reference(spark, sf_dir):
 
 
 def test_theil_sen_is_exact_order_statistic(spark, sf_dir):
-    from evolution_data_warehouse_spark.queries.extensions_r13 import (
+    from evolution_data_warehouse_spark.queries.event_analytics import (
         ts_theil_sen_trend,
     )
 
@@ -2595,9 +2529,7 @@ def test_theil_sen_is_exact_order_statistic(spark, sf_dir):
 
 
 def test_vocab_coverage_monotone(spark, sf_dir):
-    from evolution_data_warehouse_spark.queries.extensions_r13 import (
-        tok_vocab_coverage_curve,
-    )
+    from evolution_data_warehouse_spark.queries.text import tok_vocab_coverage_curve
 
     rows = sorted(
         tok_vocab_coverage_curve(spark, sf_dir).collect(),
@@ -2616,9 +2548,7 @@ def test_asof_nearest_beats_or_ties_backward(spark, sf_dir):
     # For every purchase matched by BOTH variants, the nearest match's
     # |gap| can never exceed the backward match's gap (backward is a
     # feasible candidate of nearest); unmatched purchases still appear.
-    from evolution_data_warehouse_spark.queries.extensions_r13 import (
-        join_asof_nearest,
-    )
+    from evolution_data_warehouse_spark.queries.relational import join_asof_nearest
     from evolution_data_warehouse_spark.queries.common import t
 
     near = {
@@ -2660,7 +2590,7 @@ def test_asof_nearest_beats_or_ties_backward(spark, sf_dir):
 
 
 def test_cross_source_overlap_symmetric_and_bounded(spark, sf_dir):
-    from evolution_data_warehouse_spark.queries.extensions_r13 import (
+    from evolution_data_warehouse_spark.queries.datapipe import (
         corpus_cross_source_overlap,
     )
 
@@ -2677,7 +2607,7 @@ def test_phash_sweep_monotone_and_fence_semantics(spark, sf_dir):
     # Thresholds nest; the family construction puts swap-variant pairs
     # at exactly distance 2, so fences 0/1 agree and 2/3 agree, with
     # the non-exact pairs appearing only from fence 2 on.
-    from evolution_data_warehouse_spark.queries.extensions_r13 import (
+    from evolution_data_warehouse_spark.queries.multimodal import (
         mm_phash_threshold_sweep,
     )
 
@@ -2702,9 +2632,7 @@ def test_er_blocking_eval_scheme_contrast(spark, sf_dir):
     # The stable-prefix scheme must retain every true pair (all
     # synthesized typos touch the name's tail), the tail scheme must
     # lose almost all of them, and costs/ledgers must be consistent.
-    from evolution_data_warehouse_spark.queries.extensions_r13 import (
-        er_blocking_eval,
-    )
+    from evolution_data_warehouse_spark.queries.dedup import er_blocking_eval
 
     rows = {r.scheme: r for r in er_blocking_eval(spark, sf_dir).collect()}
     assert set(rows) == {"prefix17", "digits_mid", "last2"}
@@ -2721,9 +2649,7 @@ def test_bpe_merge_curve_monotone_compression(spark, sf_dir):
     # Each merge batch can only REDUCE subword count (a merge replaces
     # two tokens with one, never splits); 0 merges is the character-
     # tokenization ceiling; word count is constant across the curve.
-    from evolution_data_warehouse_spark.queries.extensions_r13 import (
-        tok_bpe_merge_curve,
-    )
+    from evolution_data_warehouse_spark.queries.text import tok_bpe_merge_curve
 
     rows = sorted(
         tok_bpe_merge_curve(spark, sf_dir).collect(),
@@ -2743,12 +2669,8 @@ def test_clustering_coeff_consistent_with_triangle_closure(spark, sf_dir):
     # exceed its wedge count; and the closed-wedge ledger sums to
     # 3x the global triangle count (each triangle closes one wedge at
     # each of its three corners).
-    from evolution_data_warehouse_spark.queries.extensions_r13 import (
-        graph_clustering_coeff,
-    )
-    from evolution_data_warehouse_spark.queries.extensions_r7 import (
-        _edges,
-    )
+    from evolution_data_warehouse_spark.queries.graph import graph_clustering_coeff
+    from evolution_data_warehouse_spark.queries.graph import _edges
     from pyspark.sql import functions as SF
 
     rows = graph_clustering_coeff(spark, sf_dir).collect()

@@ -113,9 +113,7 @@ def test_stream_dedup_within_watermark(spark, sf_dir, tmp_path):
     # the claim its docstring makes.
     from pyspark.sql import functions as F
 
-    from evolution_data_warehouse_spark.queries.extensions_r11 import (
-        stream_dedup_ingest,
-    )
+    from evolution_data_warehouse_spark.queries.streaming_ops import stream_dedup_ingest
 
     rolled = sorted(
         map(
@@ -1246,7 +1244,7 @@ def test_lateness_audit_ledger_consistency(spark, sf_dir):
     Restart idempotence (a zero-input re-drain processes nothing) is
     asserted INSIDE the query between batch 2 and the flush — the
     query raising is the test failing."""
-    from evolution_data_warehouse_spark.queries.extensions_r13 import (
+    from evolution_data_warehouse_spark.queries.streaming_ops import (
         stream_lateness_audit,
     )
 
@@ -1278,7 +1276,7 @@ def test_stream_ivm_matches_batch_twin(spark, sf_dir):
     row-for-row (same splits, same signed algebra, same decimal
     discipline) — and idempotence of a zero-input drain is asserted
     inside the query (it raising is the failure)."""
-    from evolution_data_warehouse_spark.queries.extensions_r13 import (
+    from evolution_data_warehouse_spark.queries.streaming_ops import (
         ivm_agg_retraction,
         stream_ivm_ingest,
     )
@@ -1300,7 +1298,7 @@ def test_lateness_policy_sweep_consistent_with_audit(spark, sf_dir):
     same applied/dropped ledger — the closed-form rule and the
     deployed stream cannot diverge. Loss must be monotone
     non-increasing in the delay."""
-    from evolution_data_warehouse_spark.queries.extensions_r13 import (
+    from evolution_data_warehouse_spark.queries.streaming_ops import (
         stream_lateness_audit,
         stream_lateness_policy_sweep,
     )

@@ -1,5 +1,6 @@
-"""Generate QUERIES.md: the full registry catalog (name, module,
-oracle status, one-line doc) grouped by query module.
+"""Generate QUERIES.md: the full registry catalog (name, oracle status,
+one-line doc) grouped by family module, with the name prefixes each
+family owns.
 
 Usage: python tools/gen_catalog.py   (re-run after adding queries)
 """
@@ -15,7 +16,7 @@ sys.path.insert(0, REPO)
 
 
 def main() -> None:
-    from evolution_data_warehouse_spark.queries import REGISTRY
+    from evolution_data_warehouse_spark.queries import FAMILIES, REGISTRY
 
     by_module: dict[str, list] = defaultdict(list)
     for name, q in REGISTRY.items():
@@ -27,13 +28,22 @@ def main() -> None:
         "",
         f"{len(REGISTRY)} queries; every entry is a Spark callable "
         "paired with a DuckDB oracle (hash-compared by the driver at "
-        "sf0.01 and by tools/drive_contract.py). Registration order is "
-        "driver-verification priority (see queries/__init__.py); this "
-        "catalog is grouped by module for navigation. One-line docs "
-        "are the first sentence of each query's registered doc.",
+        "sf0.01 and by tools/drive_contract.py). Each query lives in the "
+        "family module its name prefix names (queries/__init__.py::"
+        "FAMILIES); this catalog follows that grouping. The driver's "
+        "verification order is computed from the committed "
+        "CORRECTNESS_r*.json evidence (evolution_data_warehouse_spark/"
+        "evidence.py). One-line docs are the first sentence of each "
+        "query's registered doc.",
         "",
+        "| module | prefixes | queries |",
+        "|---|---|---|",
     ]
-    for mod in sorted(by_module):
+    for mod, prefixes in FAMILIES.items():
+        cells = ", ".join(f"`{p}_*`" for p in prefixes)
+        out.append(f"| `queries/{mod}.py` | {cells} | {len(by_module[mod])} |")
+    out.append("")
+    for mod, prefixes in FAMILIES.items():
         entries = by_module[mod]
         out.append(f"## {mod} ({len(entries)})")
         out.append("")

@@ -1,6 +1,8 @@
 """Regenerate the COVERAGE.md evidence ledger from CORRECTNESS_r*.json.
 
-Latest driver verdict per registry query, in registry order. Rewrites
+Latest driver verdict per registry query, in the driver's verification
+order (evolution_data_warehouse_spark/evidence.py, the order
+``__spark_entry__.queries()`` returns). Rewrites
 everything in COVERAGE.md from the ledger table header to EOF, plus the
 pass/err/never-verified summary line.
 
@@ -9,8 +11,6 @@ Usage: python tools/gen_ledger.py
 
 from __future__ import annotations
 
-import glob
-import json
 import os
 import re
 import sys
@@ -20,28 +20,18 @@ sys.path.insert(0, REPO)
 
 
 def main() -> None:
+    from evolution_data_warehouse_spark.evidence import (
+        latest_verdicts,
+        verification_order,
+    )
     from evolution_data_warehouse_spark.queries import REGISTRY
 
-    latest: dict[str, tuple[int, bool]] = {}
-    for path in sorted(glob.glob(f"{REPO}/CORRECTNESS_r*.json")):
-        rnd = int(re.search(r"_r(\d+)", path).group(1))
-        with open(path) as f:
-            data = json.load(f)
-        for name, rec in data.items():
-            ok = (
-                rec.get("err") is None
-                and rec.get("rows_match")
-                and rec.get("schema_match") is not False
-                and rec.get("hash_match") is not False
-            )
-            # keep the highest round, not file order (lexicographic
-            # glob order breaks at r10 vs r2 / r100 vs r99)
-            if name not in latest or rnd >= latest[name][0]:
-                latest[name] = (rnd, bool(ok))
+    latest = latest_verdicts(REPO)
 
     rows = []
     n_pass = n_err = n_never = 0
-    for name, q in REGISTRY.items():
+    for name in verification_order(REGISTRY, REPO):
+        q = REGISTRY[name]
         check = "oracle" if q.oracle is not None else "rows-only"
         if name in latest:
             rnd, ok = latest[name]
