@@ -11,7 +11,7 @@ operators/datapipe.py for the 100 TB plan shapes.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, Window as W, Window
+from pyspark.sql import DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 
 from evolution_data_warehouse_spark.operators.datapipe import (
@@ -201,7 +201,7 @@ def _shingles_with_source(spark: SparkSession, sf_dir: str) -> DataFrame:
     text.doc_shingles plus the source column.
 
     Spread to core width before the tokenize+explode for the same
-    reason as _doc_shingles (r14 profile: split_leakage_audit's
+    reason as doc_shingles (r14 profile: split_leakage_audit's
     shingle stage held 57.5 s of executorRunTime in the 10 scan tasks
     at sf1; the raw-doc shuffle is tiny next to the exploded output,
     and the spread is a no-op once the scan is already wide)."""
@@ -538,7 +538,7 @@ def source_quality_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = t(spark, sf_dir, "documents").select(
         "source", "lang", "n_chars", content_hash64(F.col("text")).alias("h")
     )
-    n_same = F.count("*").over(Window.partitionBy("h"))
+    n_same = F.count("*").over(W.partitionBy("h"))
     return (
         docs.withColumn("n_same", n_same)
         .groupBy("source")

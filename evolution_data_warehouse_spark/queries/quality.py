@@ -8,7 +8,7 @@ queries/common.py).
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, Window, Window as W
+from pyspark.sql import DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 
 from evolution_data_warehouse_spark.operators.dedup import (
@@ -121,14 +121,14 @@ def quality_key_gaps(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.col("o_orderkey") % 97 != 0)
         .select(F.col("o_orderkey").alias("k"))
     )
-    w = Window.orderBy("k")
+    w = W.orderBy("k")
     r = keys.withColumn("grp", F.col("k") - F.row_number().over(w))
     islands = r.groupBy("grp").agg(
         F.min("k").alias("island_start"),
         F.max("k").alias("island_end"),
         F.count("*").alias("n_keys"),
     )
-    w2 = Window.orderBy("island_start")
+    w2 = W.orderBy("island_start")
     gaps = islands.withColumn(
         "lead_start", F.lead("island_start").over(w2)
     ).filter(F.col("lead_start").isNotNull())

@@ -24,7 +24,6 @@ from evolution_data_warehouse_spark.functions.naming import normalize_name
 from evolution_data_warehouse_spark.operators.asof import asof_join
 from evolution_data_warehouse_spark.operators.dedup import (
     content_hash64,
-    content_hash64_sql as _ch64_sql,
     content_hash64_sql,
 )
 from evolution_data_warehouse_spark.operators.sketches import (
@@ -43,7 +42,6 @@ from evolution_data_warehouse_spark.queries.common import (
     davg,
     davg_sql,
     dsum,
-    dsum as _dsum,
     dsum_sql,
     fpq,
     fpq_sql,
@@ -2689,7 +2687,7 @@ def agg_rfm_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
     per_user = t(spark, sf_dir, "events").groupBy("user_id").agg(
         F.max(F.to_date("ts")).alias("last_day"),
         F.count("*").alias("frequency"),
-        _dsum("value").alias("monetary"),
+        dsum("value").alias("monetary"),
     )
     anchor = per_user.agg(F.max("last_day").alias("max_day"))
     scored = per_user.crossJoin(anchor).withColumn(
@@ -3795,7 +3793,7 @@ _KMV_M_DBL = repr(float(_KMV_M))
 # Same hash expression the Spark side gets from content_hash64 — one
 # definition in operators/dedup.py, mirrored here through its _sql twin
 # so a future hash-width change cannot desynchronize the oracle.
-_KMV_HV_SQL = _ch64_sql("'kmv:' || CAST(o_custkey AS VARCHAR)")
+_KMV_HV_SQL = content_hash64_sql("'kmv:' || CAST(o_custkey AS VARCHAR)")
 
 
 _KMV_ORACLE = f"""

@@ -9,7 +9,7 @@ queries/common.py).
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, Window, Window as W
+from pyspark.sql import DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 
 from evolution_data_warehouse_spark.operators.dedup import (
@@ -230,8 +230,8 @@ def surv_kaplan_meier(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.sum("died").cast("long").alias("d"),
         F.count("*").alias("ending"),
     )
-    w_desc = Window.orderBy(F.col("t").desc()).rowsBetween(
-        Window.unboundedPreceding, Window.currentRow
+    w_desc = W.orderBy(F.col("t").desc()).rowsBetween(
+        W.unboundedPreceding, W.currentRow
     )
     risk = by_t.select(
         "t", "d", F.sum("ending").over(w_desc).cast("long").alias("n_risk")
@@ -252,8 +252,8 @@ def surv_kaplan_meier(spark: SparkSession, sf_dir: str) -> DataFrame:
         "t", "d", "n_risk",
         logterm.alias("logterm_fp"), extinct.alias("extinct"),
     )
-    w_asc = Window.orderBy("t").rowsBetween(
-        Window.unboundedPreceding, Window.currentRow
+    w_asc = W.orderBy("t").rowsBetween(
+        W.unboundedPreceding, W.currentRow
     )
     curve = terms.select(
         "t", "d", "n_risk",
@@ -358,8 +358,8 @@ FROM a
 )
 def stats_mannwhitney_u(spark: SparkSession, sf_dir: str) -> DataFrame:
     byv = _click_view_by_cents(spark, sf_dir)
-    w_cum = Window.orderBy("cents").rowsBetween(
-        Window.unboundedPreceding, -1
+    w_cum = W.orderBy("cents").rowsBetween(
+        W.unboundedPreceding, -1
     )
     w = byv.select(
         "cents", "c1", "ct",
@@ -455,8 +455,8 @@ GROUP BY n1, n2
 )
 def stats_ks_two_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     byv = _click_view_by_cents(spark, sf_dir)
-    w_cum = Window.orderBy("cents").rowsBetween(
-        Window.unboundedPreceding, Window.currentRow
+    w_cum = W.orderBy("cents").rowsBetween(
+        W.unboundedPreceding, W.currentRow
     )
     cum = byv.select(
         F.sum("c1").over(w_cum).cast("long").alias("f1"),
@@ -563,8 +563,8 @@ def drift_psi(spark: SparkSession, sf_dir: str) -> DataFrame:
         .cast("long")
         .alias("n_cur"),
     )
-    w_all = Window.rowsBetween(
-        Window.unboundedPreceding, Window.unboundedFollowing
+    w_all = W.rowsBetween(
+        W.unboundedPreceding, W.unboundedFollowing
     )
     tot = c.select(
         "bin", "n_base", "n_cur",
@@ -901,10 +901,10 @@ def stats_spearman_corr(spark: SparkSession, sf_dir: str) -> DataFrame:
     o = t(spark, sf_dir, "orders").select(
         "o_orderpriority", "o_totalprice", "o_orderdate", "o_orderkey"
     )
-    wx = Window.partitionBy("o_orderpriority").orderBy(
+    wx = W.partitionBy("o_orderpriority").orderBy(
         "o_totalprice", "o_orderkey"
     )
-    wy = Window.partitionBy("o_orderpriority").orderBy(
+    wy = W.partitionBy("o_orderpriority").orderBy(
         "o_orderdate", "o_orderkey"
     )
     r = o.select(

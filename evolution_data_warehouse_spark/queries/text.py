@@ -250,7 +250,7 @@ SELECT doc_id, token, score, rank FROM (
 )
 def text_tfidf(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = t(spark, sf_dir, "documents")
-    # Same single-split guard as _doc_shingles: the tokenize+explode is
+    # Same single-split guard as doc_shingles: the tokenize+explode is
     # the heavy stage; never let one input split serialize it.
     wide = cpu_repartition(docs, "doc_id")
     tk = wide.select(

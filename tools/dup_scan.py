@@ -1,22 +1,24 @@
-"""Count duplicated code lines in a package directory.
+"""Count duplicated code lines in the query package.
 
-Slides a window of N consecutive code lines (non-blank, not ``#``
-comments, whitespace-stripped) over every ``*.py`` file in the directory
-and marks the lines of each window whose text occurs more than once
-anywhere in the directory. Prints the code-line total, the duplicated
-line count, and the most repeated windows.
+Slides a window of WINDOW consecutive code lines (non-blank, not ``#``
+comments, whitespace-stripped) over every ``*.py`` file in
+``evolution_data_warehouse_spark/queries`` and marks the lines of each
+window whose text occurs more than once anywhere in that directory.
+Prints the code-line total, the duplicated line count, and the TOP most
+repeated windows.
 
-Usage: python tools/dup_scan.py [DIR] [--window N] [--top K]
-(default DIR: evolution_data_warehouse_spark/queries, N 6, K 10)
+Usage: python tools/dup_scan.py
 """
 
 from __future__ import annotations
 
-import argparse
 import os
 from collections import defaultdict
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+QUERIES = os.path.join(REPO, "evolution_data_warehouse_spark", "queries")
+WINDOW = 6
+TOP = 10
 
 
 def code_lines(path: str) -> list[tuple[int, str]]:
@@ -53,15 +55,9 @@ def scan(directory: str, window: int) -> tuple[int, int, list]:
 
 
 def main() -> None:
-    ap = argparse.ArgumentParser()
-    ap.add_argument("directory", nargs="?", default=os.path.join(
-        REPO, "evolution_data_warehouse_spark", "queries"))
-    ap.add_argument("--window", type=int, default=6)
-    ap.add_argument("--top", type=int, default=10)
-    args = ap.parse_args()
-    total, n_dup, repeated = scan(args.directory, args.window)
-    print(f"{total} code lines, {n_dup} in a repeated {args.window}-line window")
-    for n, key, where in repeated[: args.top]:
+    total, n_dup, repeated = scan(QUERIES, WINDOW)
+    print(f"{total} code lines, {n_dup} in a repeated {WINDOW}-line window")
+    for n, key, where in repeated[:TOP]:
         print(f"  x{n} {where[0][0]}: {key[0][:70]}")
 
 
