@@ -7,7 +7,7 @@ chunk (PCM and WAVE_FORMAT_EXTENSIBLE with a PCM subformat), and
 8-bit-unsigned / 16/24/32-bit signed little-endian sample frames —
 so audio-bearing corpora get real validation, duration, and
 sample-level features inside the engine instead of beside it.
-(`multimodal.audio_features_batch` remains the declared plumbing fake
+(`multimodal.audio_features_documents` remains the declared plumbing fake
 for schema-shape tests.)
 
 Reference parity note: the reference warehouse treats media as opaque
@@ -16,7 +16,7 @@ way every codec here does.
 
 Error contract (identical to the image codecs): malformed, truncated,
 or oversized input raises ValueError, nothing else — which keeps the
-per-row quarantine path (multimodal.decode_image_tolerant_batch's
+per-row quarantine path (multimodal.decode_image_tolerant_row's
 shape) sound for audio too. Tests pin conformance to real third-party
 encodes: CPython's test/audiodata pluck-pcm{8,16,24,32}.wav decode
 byte-exactly against the stdlib `wave` module's independent parse, and

@@ -19,7 +19,7 @@ validation inside the engine, not beside it.
 Error contract (identical to jpeg.py/multimodal.py): every malformed,
 truncated, or oversized input raises ValueError; deliberate format
 gates raise NotImplementedError; nothing else escapes. That contract is
-what lets decode_image_tolerant_batch quarantine corrupt objects per
+what lets decode_image_tolerant_row quarantine corrupt objects per
 row instead of killing the task.
 
 Decode semantics: `decode_gif` returns the FIRST frame as RGB

@@ -34,9 +34,12 @@ coverage (SURVEY §7 growth direction).
 
 from __future__ import annotations
 
-from pyspark.sql import Column
+from collections import Counter
+
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from evolution_data_warehouse_spark.operators.arrow_map import map_rows
 from evolution_data_warehouse_spark.operators.textops import lower_tokens
 
 #: the paper's stop-word list, verbatim (§A1.1).
@@ -209,15 +212,16 @@ def gopher_flags_sql(
     return {p + name: sql for name, sql in flags.items()}
 
 
-def repetition_ngram_stats_batch(
-    top_ns: tuple[int, ...], dup_ns: tuple[int, ...]
-):
-    """mapInPandas fn for the repetition-rule n-gram statistics:
+def repetition_ngram_stats(
+    docs: DataFrame, top_ns: tuple[int, ...], dup_ns: tuple[int, ...]
+) -> DataFrame:
+    """Repetition-rule n-gram statistics as one map_rows pass:
     ``(doc_id, text)`` (text already lower-cased; single-space
     tokenization) → one row per doc with >= 2 tokens carrying
     ``total_chars``, ``top_cov_{n}`` for each n in ``top_ns`` (MAX over
     grams of count x gram-char-length) and ``dup_chars_{n}`` for each n
-    in ``dup_ns`` (SUM over grams seen >= 2 of count x char-length).
+    in ``dup_ns`` (SUM over grams seen >= 2 of count x char-length),
+    all bigint.
 
     Pure integer math over exact token tuples — no hashing, no floats —
     so the output is bit-identical to the previous JVM formulation
@@ -233,51 +237,33 @@ def repetition_ngram_stats_batch(
     shuffle, one narrow Arrow batch across the boundary per task —
     the guide-§4.2 shape.
     """
-    import pandas as pd
-
-    cols = (
-        ["doc_id", "total_chars"]
-        + [f"top_cov_{n}" for n in top_ns]
-        + [f"dup_chars_{n}" for n in dup_ns]
+    schema = ", ".join(
+        ["doc_id bigint", "total_chars bigint"]
+        + [f"top_cov_{n} bigint" for n in top_ns]
+        + [f"dup_chars_{n} bigint" for n in dup_ns]
     )
 
-    def fn(batches):
-        from collections import Counter
+    def stats(doc_id, text):
+        if text is None:  # NULL text = no n-grams, like a 1-token doc
+            return
+        toks = text.split(" ")
+        if len(toks) < 2:
+            return
+        grams = {
+            n: Counter(zip(*(toks[k:] for k in range(n))))
+            for n in {*top_ns, *dup_ns}
+        }
+        yield (
+            doc_id,
+            sum(map(len, toks)),
+            *(
+                max((cnt * sum(map(len, g)) for g, cnt in grams[n].items()), default=0)
+                for n in top_ns
+            ),
+            *(
+                sum(cnt * sum(map(len, g)) for g, cnt in grams[n].items() if cnt >= 2)
+                for n in dup_ns
+            ),
+        )
 
-        for pdf in batches:
-            rows = []
-            for doc_id, text in zip(pdf["doc_id"].values, pdf["text"].values):
-                toks = text.split(" ")
-                if len(toks) < 2:
-                    continue
-                total = sum(map(len, toks))
-                row = [int(doc_id), total]
-                for n in top_ns:
-                    c = Counter(zip(*(toks[k:] for k in range(n))))
-                    row.append(
-                        max(
-                            (
-                                cnt * sum(map(len, g))
-                                for g, cnt in c.items()
-                            ),
-                            default=0,
-                        )
-                    )
-                for n in dup_ns:
-                    c = Counter(zip(*(toks[k:] for k in range(n))))
-                    row.append(
-                        sum(
-                            cnt * sum(map(len, g))
-                            for g, cnt in c.items()
-                            if cnt >= 2
-                        )
-                    )
-                rows.append(row)
-            if rows:
-                yield pd.DataFrame(rows, columns=cols)
-            else:
-                yield pd.DataFrame(
-                    {c: pd.Series(dtype="int64") for c in cols}
-                )
-
-    return fn
+    return map_rows(docs, stats, schema)

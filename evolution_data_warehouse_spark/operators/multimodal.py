@@ -14,7 +14,7 @@ tested. Decode comes in two tiers:
   1/2/4/8-bit with PLTE, gray+alpha, RGBA; Adam7-interlaced or not,
   zlib inflate + full None/Sub/Up/Average/Paeth unfiltering,
   CRC-checked). These parse the actual byte format —
-  `decode_image_real_batch` dispatches on magic bytes and emits
+  `decode_image_row` dispatches on magic bytes and emits
   width/height plus exact per-channel pixel sums (integer sums, so the
   output is bit-deterministic and oracle-checkable). Conformance is
   pinned to real third-party encoders, not just hermetic round-trips:
@@ -27,7 +27,7 @@ tested. Decode comes in two tiers:
   selection + successive approximation). Arithmetic-coded JPEG raises
   ValueError (a different entropy path, stated plainly).
 
-The original deterministic fake (`decode_image_batch()`) remains for
+The original deterministic fake (`decode_documents`) remains for
 plumbing-only tests.
 """
 
@@ -35,13 +35,13 @@ from __future__ import annotations
 
 import struct
 import zlib
-from collections.abc import Iterator
 
 import numpy as np
-import pandas as pd
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from evolution_data_warehouse_spark.operators.arrow_map import map_columns, map_rows
 
 DECODE_SCHEMA = (
     "doc_id long, n_bytes long, fake_width int, fake_height int, format string"
@@ -899,37 +899,37 @@ def decode_png(data: bytes) -> tuple[int, int, np.ndarray]:
     return w, h, np.concatenate([rgb, g[:, :, 1:]], axis=2)
 
 
-def decode_image_auto(data: bytes) -> dict:
-    """Dispatch on magic bytes and decode for real. Returns format,
-    dimensions, and EXACT per-channel integer pixel sums (alpha ignored
-    for RGBA) — integer outputs keep the operator bit-deterministic.
-    Unknown magics raise ValueError (quarantine contract)."""
+_PNM_FORMATS = {b"P6": "ppm", b"P5": "pgm", b"P4": "pbm"}
+
+
+def decode_pixels(data: bytes) -> tuple[str, int, int, np.ndarray]:
+    """Dispatch on magic bytes to the engine's real decoders:
+    (format, width, height, pixels). The one magic-byte dispatcher —
+    channel sums, dHash and histograms all decode through it. Unknown
+    magics raise ValueError (quarantine contract)."""
     if data[:2] == b"\xff\xd8":
         from evolution_data_warehouse_spark.operators.jpeg import decode_jpeg
 
-        fmt, (w, h, px) = "jpeg", decode_jpeg(data)
-        sums = px.reshape(-1, 3).astype(np.int64).sum(axis=0)
-        return {
-            "format": fmt,
-            "width": w,
-            "height": h,
-            "sum_r": int(sums[0]),
-            "sum_g": int(sums[1]),
-            "sum_b": int(sums[2]),
-        }
+        return ("jpeg", *decode_jpeg(data))
     if data[:4] == b"GIF8":
         from evolution_data_warehouse_spark.operators.gif import decode_gif
 
-        fmt, (w, h, px) = "gif", decode_gif(data)
-    elif data[:2] == b"BM":
-        fmt, (w, h, px) = "bmp", decode_bmp(data)
-    elif data[:2] in (b"P6", b"P5", b"P4"):
-        fmt = {b"P6": "ppm", b"P5": "pgm", b"P4": "pbm"}[data[:2]]
-        fmt, (w, h, px) = fmt, decode_ppm(data)
-    elif data[: len(_PNG_SIG)] == _PNG_SIG:
-        fmt, (w, h, px) = "png", decode_png(data)
-    else:
-        raise ValueError(f"unrecognized image magic {data[:8]!r}")
+        return ("gif", *decode_gif(data))
+    if data[:2] == b"BM":
+        return ("bmp", *decode_bmp(data))
+    if data[:2] in _PNM_FORMATS:
+        return (_PNM_FORMATS[data[:2]], *decode_ppm(data))
+    if data[: len(_PNG_SIG)] == _PNG_SIG:
+        return ("png", *decode_png(data))
+    raise ValueError(f"unrecognized image magic {data[:8]!r}")
+
+
+def decode_image_auto(data: bytes) -> dict:
+    """Decode for real (:func:`decode_pixels`). Returns format,
+    dimensions, and EXACT per-channel integer pixel sums (alpha ignored
+    for RGBA) — integer outputs keep the operator bit-deterministic.
+    Unknown magics raise ValueError (quarantine contract)."""
+    fmt, w, h, px = decode_pixels(data)
     sums = px.reshape(-1, px.shape[2]).astype(np.int64).sum(axis=0)
     return {
         "format": fmt,
@@ -947,63 +947,42 @@ REAL_DECODE_SCHEMA = (
 )
 
 
-def decode_image_real_batch():
-    """mapInPandas fn: real BMP/PPM/PNG parse of the `payload` column →
-    (format, width, height, exact channel sums) per row."""
-
-    def real_decode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            feats = [decode_image_auto(bytes(b)) for b in pdf["payload"]]
-            out = pd.DataFrame(feats)
-            out.insert(0, "doc_id", pdf["doc_id"].astype("int64").values)
-            out["width"] = out["width"].astype("int32")
-            out["height"] = out["height"].astype("int32")
-            yield out
-
-    return real_decode
+def decode_image_row(doc_id, payload):
+    """map_rows fn: real BMP/PPM/PNG parse of one payload →
+    (doc_id, format, width, height, exact channel sums)."""
+    yield (doc_id, *decode_image_auto(bytes(payload)).values())
 
 
-def synth_image_payload_batch():
-    """mapInPandas fn synthesizing a REAL image per doc (format cycles
+def _synth_image_payload(doc_id):
+    """map_rows fn synthesizing a REAL image per doc (format cycles
     bmp/ppm/png by doc_id % 3) with closed-form pixel content — r = x
     gradient, g = y gradient, b = doc_id % 256 — so an oracle can
     compute the exact decoded channel sums from doc_id alone. The PNG
     rows cycle through all five filter types, so decoding these
     payloads exercises the full unfilter path, not just filter 0."""
+    d = int(doc_id)
+    w, h = 4 + d % 13, 3 + d % 7
+    px = np.zeros((h, w, 3), dtype=np.uint8)
+    px[:, :, 0] = np.arange(w, dtype=np.uint8)[None, :]
+    px[:, :, 1] = np.arange(h, dtype=np.uint8)[:, None]
+    px[:, :, 2] = d % 256
+    yield d, (encode_bmp, encode_ppm, encode_png)[d % 3](px)
 
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            payloads = []
-            for doc_id in pdf["doc_id"]:
-                d = int(doc_id)
-                w, h = 4 + d % 13, 3 + d % 7
-                x = np.arange(w, dtype=np.uint8)
-                y = np.arange(h, dtype=np.uint8)
-                px = np.zeros((h, w, 3), dtype=np.uint8)
-                px[:, :, 0] = x[None, :]
-                px[:, :, 1] = y[:, None]
-                px[:, :, 2] = d % 256
-                enc = (encode_bmp, encode_ppm, encode_png)[d % 3]
-                payloads.append(enc(px))
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"].astype("int64"),
-                    "payload": payloads,
-                }
-            )
 
-    return gen
+def synth_image_payloads(df: DataFrame) -> DataFrame:
+    """(doc_id, payload binary): :func:`_synth_image_payload` per doc."""
+    return map_rows(
+        df.select("doc_id"), _synth_image_payload, "doc_id long, payload binary"
+    )
 
 
 def decode_documents_real(df: DataFrame) -> DataFrame:
     """documents → synthesized real image payloads → real decode.
-    Two mapInPandas stages over the same partitioning (no shuffle
-    between them: both are narrow maps)."""
-    ids = df.select("doc_id")
-    payloads = ids.mapInPandas(
-        synth_image_payload_batch(), "doc_id long, payload binary"
+    Two map passes over the same partitioning (no shuffle between
+    them: both are narrow maps)."""
+    return map_rows(
+        synth_image_payloads(df), decode_image_row, REAL_DECODE_SCHEMA
     )
-    return payloads.mapInPandas(decode_image_real_batch(), REAL_DECODE_SCHEMA)
 
 
 TOLERANT_DECODE_SCHEMA = (
@@ -1012,60 +991,23 @@ TOLERANT_DECODE_SCHEMA = (
 )
 
 
-def decode_image_tolerant_batch():
-    """mapInPandas fn: like decode_image_real_batch but per-row
-    fault-tolerant — the production shape. At corpus scale some
-    payloads are always corrupt, and one bad object must not fail the
-    task (and, after retries, the job): each row decodes inside its
-    own try, emitting status='ok' with features or status='error' with
-    nulls, so the caller routes failures to quarantine exactly like
-    the relational quality suite (operators/quality.py) routes bad
-    rows. Relies on the decoders' hardened contract: EVERY malformed
-    input raises ValueError/NotImplementedError (fuzz-tested), so
-    nothing else needs catching and a genuine code bug still fails
-    loudly."""
-
-    def tolerant_decode(
-        batches: Iterator[pd.DataFrame],
-    ) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-                try:
-                    f = decode_image_auto(bytes(payload))
-                    rows.append(
-                        {
-                            "doc_id": int(doc_id),
-                            "status": "ok",
-                            "format": f["format"],
-                            "width": f["width"],
-                            "height": f["height"],
-                            "sum_r": f["sum_r"],
-                            "sum_g": f["sum_g"],
-                            "sum_b": f["sum_b"],
-                        }
-                    )
-                except (ValueError, NotImplementedError):
-                    rows.append(
-                        {
-                            "doc_id": int(doc_id),
-                            "status": "error",
-                            "format": None,
-                            "width": None,
-                            "height": None,
-                            "sum_r": None,
-                            "sum_g": None,
-                            "sum_b": None,
-                        }
-                    )
-            out = pd.DataFrame(rows)
-            out["width"] = out["width"].astype("Int32")
-            out["height"] = out["height"].astype("Int32")
-            for c in ("sum_r", "sum_g", "sum_b"):
-                out[c] = out[c].astype("Int64")
-            yield out
-
-    return tolerant_decode
+def decode_image_tolerant_row(doc_id, payload):
+    """map_rows fn: like decode_image_row but per-row fault-tolerant —
+    the production shape. At corpus scale some payloads are always
+    corrupt, and one bad object must not fail the task (and, after
+    retries, the job): each row decodes inside its own try, emitting
+    status='ok' with features or status='error' with nulls, so the
+    caller routes failures to quarantine exactly like the relational
+    quality suite (operators/quality.py) routes bad rows. Relies on
+    the decoders' hardened contract: EVERY malformed input raises
+    ValueError/NotImplementedError (fuzz-tested), so nothing else
+    needs catching and a genuine code bug still fails loudly."""
+    try:
+        f = decode_image_auto(bytes(payload))
+    except (ValueError, NotImplementedError):
+        yield (doc_id, "error") + (None,) * 6
+        return
+    yield (doc_id, "ok", *f.values())
 
 
 def decode_documents_tolerant(
@@ -1075,11 +1017,7 @@ def decode_documents_tolerant(
     truncated to half its bytes → tolerant decode. The corruption rule
     is closed-form in doc_id so an oracle can state exactly which rows
     error and which decode."""
-    ids = df.select("doc_id")
-    payloads = ids.mapInPandas(
-        synth_image_payload_batch(), "doc_id long, payload binary"
-    )
-    maimed = payloads.select(
+    maimed = synth_image_payloads(df).select(
         "doc_id",
         F.when(
             F.col("doc_id") % corrupt_every == 0,
@@ -1088,136 +1026,88 @@ def decode_documents_tolerant(
         .otherwise(F.col("payload"))
         .alias("payload"),
     )
-    return maimed.mapInPandas(
-        decode_image_tolerant_batch(), TOLERANT_DECODE_SCHEMA
-    )
-
-
-def decode_image_batch(real: bool = False):
-    """Return a mapInPandas function decoding `payload` → features.
-
-    real=True returns the stdlib BMP/PPM/PNG parser
-    (`decode_image_real_batch` — note its different output schema,
-    REAL_DECODE_SCHEMA); the default fake path is deterministic in the
-    payload bytes for plumbing-only checks.
-    """
-    if real:
-        return decode_image_real_batch()
-
-    def fake_decode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            n_bytes = pdf["payload"].map(len).astype("int64")
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"].astype("int64"),
-                    "n_bytes": n_bytes,
-                    "fake_width": (16 + n_bytes % 32).astype("int32"),
-                    "fake_height": (16 + (n_bytes // 32) % 32).astype("int32"),
-                    "format": "fake/png",
-                }
-            )
-
-    return fake_decode
+    return map_rows(maimed, decode_image_tolerant_row, TOLERANT_DECODE_SCHEMA)
 
 
 def decode_documents(df: DataFrame) -> DataFrame:
-    """documents table → fake-decoded feature table via Arrow batches."""
+    """documents table → fake-decoded feature table via Arrow batches:
+    deterministic in the payload bytes, for plumbing-only checks."""
+
+    def fake_decode(pdf):
+        n_bytes = pdf["payload"].map(len)
+        return {
+            "doc_id": pdf["doc_id"],
+            "n_bytes": n_bytes,
+            "fake_width": 16 + n_bytes % 32,
+            "fake_height": 16 + (n_bytes // 32) % 32,
+            "format": "fake/png",
+        }
+
     payloads = with_binary_payload(df).select("doc_id", "payload")
-    return payloads.mapInPandas(decode_image_batch(), DECODE_SCHEMA)
+    return map_columns(payloads, fake_decode, DECODE_SCHEMA)
 
 
 RESIZE_SCHEMA = "doc_id long, width int, height int, n_tiles int"
 
 
-def resize_batch(target: int = 16):
-    """Fake resize: derive tile grid from the fake decode dimensions.
-    Real path would call PIL.Image.resize — same batch signature."""
-
-    def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            n_bytes = pdf["payload"].map(len).astype("int64")
-            w = (16 + n_bytes % 32).astype("int64")
-            h = (16 + (n_bytes // 32) % 32).astype("int64")
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"].astype("int64"),
-                    "width": target,
-                    "height": target,
-                    "n_tiles": (((w + target - 1) // target)
-                                * ((h + target - 1) // target)).astype("int32"),
-                }
-            )
-
-    return fn
-
-
 def resize_documents(df: DataFrame, target: int = 16) -> DataFrame:
+    """Fake resize: derive tile grid from the fake decode dimensions.
+    Real path would call PIL.Image.resize — same pass shape."""
+
+    def resize(pdf):
+        n_bytes = pdf["payload"].map(len)
+        w = 16 + n_bytes % 32
+        h = 16 + (n_bytes // 32) % 32
+        return {
+            "doc_id": pdf["doc_id"],
+            "width": target,
+            "height": target,
+            "n_tiles": ((w + target - 1) // target)
+            * ((h + target - 1) // target),
+        }
+
     payloads = with_binary_payload(df).select("doc_id", "payload")
-    return payloads.mapInPandas(resize_batch(target), RESIZE_SCHEMA)
+    return map_columns(payloads, resize, RESIZE_SCHEMA)
 
 
 FRAME_SCHEMA = "doc_id long, frame_idx int, frame_bytes int"
 
 
-def frame_sample_batch(frame_size: int = 256, stride: int = 4):
+def frame_sample_documents(
+    df: DataFrame, frame_size: int = 256, stride: int = 4
+) -> DataFrame:
     """Fake video frame sampling: the payload is split into fixed-size
     frames and every ``stride``-th frame is emitted with its true byte
     length (the tail frame may be short) — the row-explosion shape of
     real frame extraction."""
 
-    def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out_ids, out_idx, out_len = [], [], []
-            for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-                n = len(payload)
-                n_frames = (n + frame_size - 1) // frame_size
-                for i in range(0, n_frames, stride):
-                    out_ids.append(int(doc_id))
-                    out_idx.append(i)
-                    out_len.append(min(frame_size, n - i * frame_size))
-            yield pd.DataFrame(
-                {
-                    "doc_id": pd.Series(out_ids, dtype="int64"),
-                    "frame_idx": pd.Series(out_idx, dtype="int32"),
-                    "frame_bytes": pd.Series(out_len, dtype="int32"),
-                }
-            )
+    def frames(doc_id, payload):
+        n = len(payload)
+        for i in range(0, (n + frame_size - 1) // frame_size, stride):
+            yield doc_id, i, min(frame_size, n - i * frame_size)
 
-    return fn
-
-
-def frame_sample_documents(
-    df: DataFrame, frame_size: int = 256, stride: int = 4
-) -> DataFrame:
     payloads = with_binary_payload(df).select("doc_id", "payload")
-    return payloads.mapInPandas(frame_sample_batch(frame_size, stride), FRAME_SCHEMA)
+    return map_rows(payloads, frames, FRAME_SCHEMA)
 
 
 AUDIO_SCHEMA = "doc_id long, n_bytes long, first_byte int, last_byte int, loudness_fake double"
 
 
-def audio_features_batch():
-    """Fake audio feature extraction: first/last byte + their midpoint
-    as a stand-in loudness — deterministic in the payload, same batch
-    signature a librosa-backed extractor would use."""
-
-    def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            firsts = pdf["payload"].map(lambda b: b[0] if len(b) else 0)
-            lasts = pdf["payload"].map(lambda b: b[-1] if len(b) else 0)
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"].astype("int64"),
-                    "n_bytes": pdf["payload"].map(len).astype("int64"),
-                    "first_byte": firsts.astype("int32"),
-                    "last_byte": lasts.astype("int32"),
-                    "loudness_fake": (firsts + lasts).astype("float64") / 2.0,
-                }
-            )
-
-    return fn
-
-
 def audio_features_documents(df: DataFrame) -> DataFrame:
+    """Fake audio feature extraction: first/last byte + their midpoint
+    as a stand-in loudness — deterministic in the payload, same pass
+    shape a librosa-backed extractor would use."""
+
+    def features(pdf):
+        firsts = pdf["payload"].map(lambda b: b[0] if len(b) else 0)
+        lasts = pdf["payload"].map(lambda b: b[-1] if len(b) else 0)
+        return {
+            "doc_id": pdf["doc_id"],
+            "n_bytes": pdf["payload"].map(len),
+            "first_byte": firsts,
+            "last_byte": lasts,
+            "loudness_fake": (firsts + lasts) / 2.0,
+        }
+
     payloads = with_binary_payload(df).select("doc_id", "payload")
-    return payloads.mapInPandas(audio_features_batch(), AUDIO_SCHEMA)
+    return map_columns(payloads, features, AUDIO_SCHEMA)

@@ -31,10 +31,7 @@ can never turn the join quadratic. Verification is a JVM-side
 
 from __future__ import annotations
 
-from typing import Iterator
-
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
@@ -101,53 +98,15 @@ def dhash64(px: np.ndarray) -> int:
     return val
 
 
-def _decode_pixels(data: bytes) -> np.ndarray:
-    """Magic-byte dispatch to the engine's real decoders, returning the
-    raw pixel array (decode_image_auto's sibling that keeps pixels
-    instead of reducing to channel sums). Unknown magics raise
-    ValueError — the same quarantine contract as every decoder."""
+def image_dhash(doc_id, payload):
+    """map_rows fn: (id, payload binary) → (id, dhash bigint). Decode
+    through the real codecs (``multimodal.decode_pixels``) + hash —
+    narrow, zero shuffle, embarrassingly parallel."""
     from evolution_data_warehouse_spark.operators.multimodal import (
-        _PNG_SIG,
-        decode_bmp,
-        decode_png,
-        decode_ppm,
+        decode_pixels,
     )
 
-    if data[:2] == b"\xff\xd8":
-        from evolution_data_warehouse_spark.operators.jpeg import decode_jpeg
-
-        return decode_jpeg(data)[2]
-    if data[:4] == b"GIF8":
-        from evolution_data_warehouse_spark.operators.gif import decode_gif
-
-        return decode_gif(data)[2]
-    if data[:2] == b"BM":
-        return decode_bmp(data)[2]
-    if data[:2] in (b"P6", b"P5", b"P4"):
-        return decode_ppm(data)[2]
-    if data[: len(_PNG_SIG)] == _PNG_SIG:
-        return decode_png(data)[2]
-    raise ValueError("unknown image magic for dhash")
-
-
-def image_dhash_batch(id_col: str = "doc_id", payload_col: str = "payload"):
-    """mapInPandas fn: (id, payload binary) → (id, dhash bigint).
-    Decode through the real codecs + hash, one Arrow batch at a time —
-    narrow, zero shuffle, embarrassingly parallel."""
-
-    def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            yield pd.DataFrame(
-                {
-                    id_col: pdf[id_col].astype("int64"),
-                    "dhash": [
-                        dhash64(_decode_pixels(bytes(p)))
-                        for p in pdf[payload_col]
-                    ],
-                }
-            )
-
-    return fn
+    yield doc_id, dhash64(decode_pixels(bytes(payload))[3])
 
 
 def dhash_pairs(

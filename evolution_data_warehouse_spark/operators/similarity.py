@@ -15,8 +15,15 @@ is reproducible across runs and engines.
 
 from __future__ import annotations
 
+import numpy as np
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+
+from evolution_data_warehouse_spark.operators.arrow_map import map_columns
+
+#: id and vector columns of the embeddings relation the numpy vector
+#: passes read (:func:`_vector_pass`).
+VEC_ID, VEC = "vec_id", "embedding"
 
 
 def as_double(vec: Column) -> Column:
@@ -343,13 +350,13 @@ def pca_fit(
     k: int = 8,
     vec_col: str = "embedding",
 ):
-    """Distributed PCA via per-partition Gram accumulation.
+    """Distributed PCA via per-batch Gram accumulation.
 
-    The shape that scales: each partition reduces its vectors to one
-    (d×d partial Gram, d-vector partial sum, count) triple inside an
-    Arrow-batched ``mapInPandas`` (numpy matmul — vectorized, no
-    per-row Python), the driver sums partition partials (bounded by
-    n_partitions · d², never by rows) and eigendecomposes the d×d
+    The shape that scales: each Arrow batch reduces its vectors to one
+    (d×d partial Gram, d-vector partial sum, count) triple inside a
+    :func:`map_columns` pass (numpy matmul — vectorized, no per-row
+    Python), the driver sums the batch partials (bounded by
+    n_batches · d², never by rows) and eigendecomposes the d×d
     covariance with numpy. Only O(d²) state ever moves; the corpus is
     read once. Returns (components k×d, mean d, explained_variance k).
 
@@ -360,36 +367,13 @@ def pca_fit(
     assertions, not a hash-checked oracle query — the honest split the
     registry applies to iterative/spectral ops.)
     """
-    import numpy as np
 
-    d = None
+    def partials(pdf):
+        x = np.stack(pdf[vec_col].to_numpy()).astype(np.float64)
+        return {"gram": [(x.T @ x).ravel()], "s": [x.sum(axis=0)], "n": [len(x)]}
 
-    def partials(batches):
-        import pandas as pd
-
-        gram = None
-        s = None
-        n = 0
-        for pdf in batches:
-            x = np.stack(pdf[vec_col].to_numpy()).astype(np.float64)
-            if gram is None:
-                dim = x.shape[1]
-                gram = np.zeros((dim, dim))
-                s = np.zeros(dim)
-            gram += x.T @ x
-            s += x.sum(axis=0)
-            n += len(x)
-        if n:
-            yield pd.DataFrame(
-                {
-                    "gram": [gram.reshape(-1).tolist()],
-                    "s": [s.tolist()],
-                    "n": [n],
-                }
-            )
-
-    rows = df.select(vec_col).mapInPandas(
-        partials, "gram array<double>, s array<double>, n long"
+    rows = map_columns(
+        df.select(vec_col), partials, "gram array<double>, s array<double>, n long"
     ).collect()
     gram = None
     s = None
@@ -416,37 +400,18 @@ def pca_fit(
     return comps, mean, evals[order]
 
 
-def pca_project(
-    df: DataFrame,
-    components,
-    mean,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
+def pca_project(df: DataFrame, components, mean) -> DataFrame:
     """Project vectors onto fitted components — distributed, via one
-    Arrow-batched matmul per partition; components/mean ride along as
-    task-closure literals (k·d doubles, broadcast-sized)."""
-    import numpy as np
-
+    Arrow-batched matmul per batch (:func:`_vector_pass`);
+    components/mean ride along as task-closure literals (k·d doubles,
+    broadcast-sized). Returns (vec_id, proj array<double>)."""
     comps = np.asarray(components, dtype=np.float64)
     mu = np.asarray(mean, dtype=np.float64)
 
-    def project(batches):
-        import pandas as pd
+    def project(ids, x):
+        return {VEC_ID: ids, "proj": list((x - mu) @ comps.T)}
 
-        for pdf in batches:
-            x = np.stack(pdf[vec_col].to_numpy()).astype(np.float64)
-            z = (x - mu) @ comps.T
-            yield pd.DataFrame(
-                {
-                    id_col: pdf[id_col].astype("int64"),
-                    "proj": list(z),
-                }
-            )
-
-    return df.select(id_col, vec_col).mapInPandas(
-        project, f"{id_col} long, proj array<double>"
-    )
+    return _vector_pass(df, comps.shape[1], project, "proj array<double>")
 
 
 # Within-cluster pair-join fan-out guard default, mirroring
@@ -482,9 +447,11 @@ def _neighbor_counts_grouped(
       the rank comparator mirrors that ordering explicitly;
     * a zero norm product is excluded (``nullif`` → NULL in the JVM);
     * vectors of different lengths never pair (zip_with pads with NULL
-      → NULL dot), so slices are processed per distinct dimension.
+      → NULL dot), so slices are processed per distinct dimension;
+    * two rows with the SAME id never pair (the join's ``_ida != _idb``),
+      and the counts of rows sharing an id add up into one output row
+      (the join's ``groupBy("_ida")``).
     """
-    import numpy as np
     import pandas as pd
 
     id_type = dict(guarded.dtypes)[id_col]
@@ -492,7 +459,7 @@ def _neighbor_counts_grouped(
 
     def counts(pdf: pd.DataFrame) -> pd.DataFrame:
         work = pdf[~pdf["_bad"]]
-        out_ids, out_counts = [], []
+        better = {}
         arrs = [np.asarray(v, dtype="float64") for v in work["_vec"]]
         lens = np.array([a.shape[0] for a in arrs])
         for dim in np.unique(lens):
@@ -523,19 +490,16 @@ def _neighbor_counts_grouped(
                     lt = ccv < ci
                     eq = ccv == ci
                 qual &= lt | (eq & (ids < ids[i]))
-                qual[i] = False
+                qual &= ids != ids[i]
                 c = int(np.count_nonzero(qual))
                 if c:
-                    out_ids.append(ids[i])
-                    out_counts.append(c)
-        if not out_ids:  # empty frames need explicit dtypes for Arrow
-            return pd.DataFrame(
-                {
-                    "_ida": pd.Series(dtype=pdf[id_col].dtype),
-                    "_n_better": pd.Series(dtype="int64"),
-                }
-            )
-        return pd.DataFrame({"_ida": out_ids, "_n_better": out_counts})
+                    better[ids[i]] = better.get(ids[i], 0) + c
+        return pd.DataFrame(
+            {
+                "_ida": pd.Series(list(better), dtype=object),
+                "_n_better": list(better.values()),
+            }
+        )
 
     slim = guarded.select(
         label_col,
@@ -731,6 +695,69 @@ def semantic_dedup(
 PQ_SCALE = 1_000_000
 
 
+def _stack_vectors(ids: np.ndarray, vecs, dim: int) -> np.ndarray:
+    """The batch's vectors as one (n, dim) float64 matrix. Rejects, with
+    a ValueError naming the first offending id, what the expression
+    forms would turn into NULL or undefined codes: a NULL vector, a
+    vector whose length is not ``dim`` (ragged), and a NULL, NaN or
+    ±inf element (Arrow hands NULL elements over as NaN)."""
+    for i, v in enumerate(vecs):
+        if v is None or len(v) != dim:
+            what = "NULL" if v is None else f"{len(v)}-element"
+            raise ValueError(
+                f"vec_id {ids[i]!r}: {what} vector, expected {dim} elements"
+            )
+    x = np.stack(vecs).astype(np.float64)
+    bad = np.flatnonzero(~np.isfinite(x).all(axis=1))
+    if len(bad):
+        raise ValueError(
+            f"vec_id {ids[bad[0]]!r}: NULL, NaN or infinite vector element"
+        )
+    return x
+
+
+def _fixed_point(x: np.ndarray) -> np.ndarray:
+    """floor(x * PQ_SCALE) as int64 — the IEEE multiply + floor the JVM
+    expression forms evaluate."""
+    return np.floor(x * PQ_SCALE).astype(np.int64)
+
+
+def _nearest(v: np.ndarray, books: np.ndarray) -> np.ndarray:
+    """(n, m) nearest-centroid index of each of the m contiguous
+    subspaces of the fixed-point rows ``v`` against ``books``
+    (m × k × dsub int64): exact int64 squared distances, and numpy
+    argmin returns the FIRST minimum — the array_position tie rule of
+    :func:`pq_code_from_fixed`."""
+    dsub = books.shape[2]
+    return np.stack(
+        [
+            ((v[:, None, j * dsub : (j + 1) * dsub] - book[None]) ** 2)
+            .sum(axis=2)
+            .argmin(axis=1)
+            for j, book in enumerate(books)
+        ],
+        axis=1,
+    )
+
+
+def _vector_pass(embeddings: DataFrame, dim: int, fn, schema: str) -> DataFrame:
+    """The numpy vector passes' shared core: one :func:`map_columns`
+    pass over (vec_id, embedding). Per Arrow batch, ``fn(ids, x)`` gets
+    the ids untouched and the :func:`_stack_vectors` matrix and returns
+    the output columns; ``schema`` declares the columns after vec_id,
+    whose type is taken from the input (Arrow casts each returned array
+    to its declared type)."""
+    id_type = dict(embeddings.dtypes)[VEC_ID]
+
+    def run(pdf):
+        ids = pdf[VEC_ID].to_numpy()
+        return fn(ids, _stack_vectors(ids, pdf[VEC].to_numpy(), dim))
+
+    return map_columns(
+        embeddings.select(VEC_ID, VEC), run, f"{VEC_ID} {id_type}, {schema}"
+    )
+
+
 def pq_quantize_codebooks(
     codebooks: list[list[list[float]]],
 ) -> list[list[list[int]]]:
@@ -743,10 +770,7 @@ def pq_quantize_codebooks(
 
 
 def pq_assign(
-    embeddings: DataFrame,
-    codebooks: list[list[list[float]]],
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
+    embeddings: DataFrame, codebooks: list[list[list[float]]]
 ) -> DataFrame:
     """Product-quantization code assignment (Jégou et al. 2011, the
     standard PQ for billion-scale ANN): the d-dim vector splits into
@@ -766,9 +790,9 @@ def pq_assign(
     qbooks = pq_quantize_codebooks(codebooks)
     dsub = len(qbooks[0][0])
     return embeddings.select(
-        id_col,
+        VEC_ID,
         *[
-            pq_code_column(F.col(vec_col), book, j * dsub).alias(f"code{j}")
+            pq_code_column(F.col(VEC), book, j * dsub).alias(f"code{j}")
             for j, book in enumerate(qbooks)
         ],
     )
@@ -825,10 +849,7 @@ def pq_code_from_fixed(
 
 
 def pq_assign_batch(
-    embeddings: DataFrame,
-    codebooks: list[list[list[float]]],
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
+    embeddings: DataFrame, codebooks: list[list[list[float]]]
 ) -> DataFrame:
     """:func:`pq_assign` as one Arrow-batched numpy pass — same
     (id, code0..code{m-1} INT) output, bit-identical by construction:
@@ -843,32 +864,18 @@ def pq_assign_batch(
     extends it to the unrotated assignment after profiling showed the
     ADC-family sf1 legs spending 9+ s of executorRunTime in the argmin
     folds. No shuffle; partitioning preserved; codebooks ride in the
-    task closure (model-sized).
+    task closure (model-sized). Dirty input is rejected, not coded
+    (:func:`_vector_pass`).
     """
-    import numpy as np
-
-    qbooks = np.array(
-        pq_quantize_codebooks(codebooks), dtype=np.int64
-    )  # m × k × dsub
+    qbooks = np.array(pq_quantize_codebooks(codebooks), dtype=np.int64)
     m, _k, dsub = qbooks.shape
 
-    def assign(batches):
-        import pandas as pd
+    def assign(ids, x):
+        codes = _nearest(_fixed_point(x), qbooks)
+        return {VEC_ID: ids, **{f"code{j}": codes[:, j] for j in range(m)}}
 
-        for pdf in batches:
-            x = np.stack(pdf[vec_col].to_numpy()).astype(np.float64)
-            vq = np.floor(x * PQ_SCALE).astype(np.int64)
-            out = {id_col: pdf[id_col].astype("int64")}
-            for j in range(m):
-                sub = vq[:, j * dsub : (j + 1) * dsub]
-                d = ((sub[:, None, :] - qbooks[j][None]) ** 2).sum(axis=2)
-                out[f"code{j}"] = d.argmin(axis=1).astype("int32")
-            yield pd.DataFrame(out)
-
-    schema = f"{id_col} long, " + ", ".join(
-        f"code{j} int" for j in range(m)
-    )
-    return embeddings.select(id_col, vec_col).mapInPandas(assign, schema)
+    schema = ", ".join(f"code{j} int" for j in range(m))
+    return _vector_pass(embeddings, m * dsub, assign, schema)
 
 
 def pq_adc_scan(
@@ -877,8 +884,6 @@ def pq_adc_scan(
     codebooks: list[list[list[float]]],
     lut: list[list[int]],
     probes: list[int],
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
 ) -> DataFrame:
     """The fused single-pass IVF-PQ compressed-domain scan: coarse
     assignment, probed-list pruning, fine assignment and the ADC sum,
@@ -895,43 +900,25 @@ def pq_adc_scan(
     adc_dist come back — at 100 TB this is the scan-speed shape for a
     ~32x-compressed ANN sweep.
     """
-    import numpy as np
-
-    qcoarse = np.array(
-        pq_quantize_codebooks([coarse])[0], dtype=np.int64
-    )  # k × d
-    qbooks = np.array(
-        pq_quantize_codebooks(codebooks), dtype=np.int64
-    )  # m × k × dsub
+    qcoarse = np.array(pq_quantize_codebooks([coarse]), dtype=np.int64)
+    qbooks = np.array(pq_quantize_codebooks(codebooks), dtype=np.int64)
     lut_np = np.array(lut, dtype=np.int64)  # m × k
     probe_set = np.array(sorted(probes), dtype=np.int64)
-    m, _k, dsub = qbooks.shape
+    m = qbooks.shape[0]
 
-    def scan(batches):
-        import pandas as pd
+    def scan(ids, x):
+        vq = _fixed_point(x)
+        list_id = _nearest(vq, qcoarse)[:, 0]
+        keep = np.isin(list_id, probe_set)
+        codes = _nearest(vq[keep], qbooks)
+        return {
+            VEC_ID: ids[keep],
+            "list_id": list_id[keep],
+            "adc_dist": lut_np[np.arange(m), codes].sum(axis=1),
+        }
 
-        for pdf in batches:
-            x = np.stack(pdf[vec_col].to_numpy()).astype(np.float64)
-            vq = np.floor(x * PQ_SCALE).astype(np.int64)
-            dc = ((vq[:, None, :] - qcoarse[None]) ** 2).sum(axis=2)
-            list_id = dc.argmin(axis=1).astype(np.int64)
-            keep = np.isin(list_id, probe_set)
-            vq = vq[keep]
-            adc = np.zeros(vq.shape[0], dtype=np.int64)
-            for j in range(m):
-                sub = vq[:, j * dsub : (j + 1) * dsub]
-                d = ((sub[:, None, :] - qbooks[j][None]) ** 2).sum(axis=2)
-                adc += lut_np[j][d.argmin(axis=1)]
-            yield pd.DataFrame(
-                {
-                    id_col: pdf[id_col].to_numpy()[keep],
-                    "list_id": list_id[keep].astype("int32"),
-                    "adc_dist": adc,
-                }
-            )
-
-    return embeddings.select(id_col, vec_col).mapInPandas(
-        scan, f"{id_col} long, list_id int, adc_dist long"
+    return _vector_pass(
+        embeddings, qcoarse.shape[2], scan, "list_id int, adc_dist long"
     )
 
 
@@ -997,8 +984,6 @@ def opq_assign(
     embeddings: DataFrame,
     rotation: list[list[float]],
     codebooks: list[list[list[float]]],
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
 ) -> DataFrame:
     """Optimized-product-quantization code assignment (Ge et al. 2013,
     parametric OPQ): rotate each vector by the learned orthogonal R
@@ -1013,7 +998,7 @@ def opq_assign(
     oracle-mirrorable; argmin ties break to the lowest centroid id
     (numpy argmin returns the FIRST min, the array_position rule).
 
-    Scale: one Arrow-batched ``mapInPandas`` — the rotation is a dense
+    Scale: one :func:`_vector_pass` — the rotation is a dense
     64×64 int64 matmul per batch, which vectorized numpy does ~100×
     faster than Catalyst's interpreted higher-order functions (the
     expression form was measured at ~10 ms/row on this table — a
@@ -1021,45 +1006,23 @@ def opq_assign(
     row; pq_assign's per-subspace argmin survives as expressions
     because its tree is 32× smaller). R and the codebooks ride in the
     task closure (model-sized); no shuffle, partitioning preserved."""
-    import numpy as np
-
     qrot = np.array(opq_quantize_rotation(rotation), dtype=np.int64)
-    qbooks = np.array(
-        pq_quantize_codebooks(codebooks), dtype=np.int64
-    )  # m × k × dsub
-    m, _k, dsub = qbooks.shape
-    s = OPQ_R_SCALE
+    qbooks = np.array(pq_quantize_codebooks(codebooks), dtype=np.int64)
+    m = qbooks.shape[0]
 
-    def assign(batches):
-        import pandas as pd
+    def assign(ids, x):
+        # numpy // floors, = the SQL mirror
+        codes = _nearest((_fixed_point(x) @ qrot.T) // OPQ_R_SCALE, qbooks)
+        return {VEC_ID: ids, **{f"code{j}": codes[:, j] for j in range(m)}}
 
-        for pdf in batches:
-            x = np.stack(pdf[vec_col].to_numpy()).astype(np.float64)
-            vq = np.floor(x * PQ_SCALE).astype(np.int64)
-            z = (vq @ qrot.T) // s  # numpy // floors, = the SQL mirror
-            out = {id_col: pdf[id_col].astype("int64")}
-            for j in range(m):
-                sub = z[:, j * dsub : (j + 1) * dsub]
-                d = ((sub[:, None, :] - qbooks[j][None]) ** 2).sum(
-                    axis=2
-                )
-                out[f"code{j}"] = d.argmin(axis=1).astype("int32")
-            yield pd.DataFrame(out)
-
-    schema = f"{id_col} long, " + ", ".join(
-        f"code{j} int" for j in range(m)
-    )
-    return embeddings.select(id_col, vec_col).mapInPandas(
-        assign, schema
-    )
+    schema = ", ".join(f"code{j} int" for j in range(m))
+    return _vector_pass(embeddings, qrot.shape[1], assign, schema)
 
 
 def opq_rotated_energy(
     embeddings: DataFrame,
     rotation: list[list[float]],
     k: int,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
 ) -> DataFrame:
     """Per-vector spectral energy capture under the learned orthogonal
     rotation: (id, energy, captured_k) where energy = Σ vq² over the
@@ -1075,28 +1038,19 @@ def opq_rotated_energy(
     Magnitudes: |vq| <= ~1e6 ⇒ per-term squares <= ~1e12, 64-term sums
     <= ~6.5e13 — inside int64 with margin.
     """
-    import numpy as np
-
     qrot = np.array(opq_quantize_rotation(rotation), dtype=np.int64)
-    s = OPQ_R_SCALE
 
-    def energize(batches):
-        import pandas as pd
+    def energize(ids, x):
+        vq = _fixed_point(x)
+        z = (vq @ qrot[:k].T) // OPQ_R_SCALE
+        return {
+            VEC_ID: ids,
+            "energy": (vq * vq).sum(axis=1),
+            "captured_k": (z * z).sum(axis=1),
+        }
 
-        for pdf in batches:
-            x = np.stack(pdf[vec_col].to_numpy()).astype(np.float64)
-            vq = np.floor(x * PQ_SCALE).astype(np.int64)
-            z = (vq @ qrot.T) // s
-            yield pd.DataFrame(
-                {
-                    id_col: pdf[id_col].astype("int64"),
-                    "energy": (vq * vq).sum(axis=1),
-                    "captured_k": (z[:, :k] * z[:, :k]).sum(axis=1),
-                }
-            )
-
-    return embeddings.select(id_col, vec_col).mapInPandas(
-        energize, f"{id_col} long, energy long, captured_k long"
+    return _vector_pass(
+        embeddings, qrot.shape[1], energize, "energy long, captured_k long"
     )
 
 

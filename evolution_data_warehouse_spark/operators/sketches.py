@@ -5,16 +5,16 @@ The two-pass exact top-k pattern for corpora whose key cardinality is
 too large to groupBy comfortably but whose heavy hitters are what the
 user actually wants (trending tokens, hot URLs, dominant entities):
 
-1. **Candidate pass** — each partition runs a Misra-Gries summary of
-   capacity m (classic streaming frequent-items; Misra & Gries 1982).
-   A partition holding n_p items guarantees every item with local
-   frequency > n_p/m is retained, and the retained lower-bound counts
-   undercount by at most n_p/m. Summing the per-partition summaries
+1. **Candidate pass** — each Arrow batch runs a Misra-Gries summary
+   of capacity m (classic streaming frequent-items; Misra & Gries
+   1982). A batch holding n_b items guarantees every item with local
+   frequency > n_b/m is retained, and the retained lower-bound counts
+   undercount by at most n_b/m. Summing the per-batch summaries
    preserves the guarantee globally: any item with TOTAL frequency
-   > n_total/m appears in the merged candidate set. Per-partition
-   state is O(m) regardless of partition size — the property that
-   makes this run on 100 TB where a full groupBy would shuffle the
-   whole key space.
+   > n_total/m appears in the merged candidate set. Per-batch state
+   is O(m) regardless of partition size — the property that makes
+   this run on 100 TB where a full groupBy would shuffle the whole
+   key space.
 2. **Exact pass** — re-count ONLY the candidates (broadcast semi-join
    against the raw stream), then take the tie-broken top-k of exact
    counts.
@@ -26,10 +26,10 @@ small, so a silent wrong answer is impossible. With m >= a few
 thousand and any remotely Zipfian key distribution the guarantee
 holds by orders of magnitude.
 
-Implemented as Arrow-batched mapInPandas (no row-at-a-time Python);
-the merged candidate set is candidate-cardinality (<= m rows per
-partition before the merge aggregate), so everything after the first
-linear scan is model-sized.
+Implemented as an Arrow-batched map_columns pass (no row-at-a-time
+Python); the candidate set is candidate-cardinality (<= m rows per
+Arrow batch before the map-side-combined merge aggregate), so
+everything after the first linear scan works on candidates only.
 
 This is new capability relative to the reference (its pandas ETL
 value_counts entire columns in memory); it is the distributed form of
@@ -38,44 +38,32 @@ the same report.
 
 from __future__ import annotations
 
-from collections.abc import Iterator
-
-import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+
+from evolution_data_warehouse_spark.operators.arrow_map import map_columns
 
 DEFAULT_CAPACITY = 2048
 
 
 def _mg_summarize(capacity: int):
-    """mapInPandas fn: (item string) batches → one Misra-Gries summary
-    per partition as (item, lb) rows, lb = the retained lower-bound
-    count.
+    """map_columns fn: one (item string) Arrow batch → its Misra-Gries
+    summary as (item, lb) rows, lb = the retained lower-bound count.
 
     Vectorized via the MG MERGE theorem (Agarwal et al., "Mergeable
-    Summaries"): each Arrow batch is exactly counted with C-speed
-    ``value_counts`` (an error-0 summary), merged into the running
-    summary by summing, and trimmed back to capacity by subtracting
-    the (capacity+1)-th largest count and dropping non-positives —
-    which preserves the n/m undercount bound exactly like per-item
-    decrements, while touching Python only once per DISTINCT item per
-    batch instead of once per row."""
+    Summaries"): the batch is exactly counted with C-speed
+    ``value_counts`` (an error-0 summary, sorted by count) and trimmed
+    to capacity by subtracting the (capacity+1)-th largest count and
+    dropping non-positives — which preserves the n/m undercount bound
+    exactly like per-item decrements, while touching Python only once
+    per batch instead of once per row."""
 
-    def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        summary: dict[str, int] = {}
-        for pdf in batches:
-            for item, c in pdf["item"].value_counts().items():
-                summary[item] = summary.get(item, 0) + int(c)
-            if len(summary) > capacity:
-                vals = sorted(summary.values(), reverse=True)
-                thresh = vals[capacity]
-                summary = {
-                    it: c - thresh for it, c in summary.items() if c > thresh
-                }
-        if summary:
-            yield pd.DataFrame(
-                {"item": list(summary.keys()), "lb": list(summary.values())}
-            )
+    def fn(pdf):
+        summary = pdf["item"].value_counts()
+        if len(summary) > capacity:
+            thresh = summary.iloc[capacity]
+            summary = summary[summary > thresh] - thresh
+        return {"item": summary.index, "lb": summary.to_numpy()}
 
     return fn
 
@@ -93,9 +81,7 @@ def heavy_hitters_exact(
     """
     col = F.col(item_col) if isinstance(item_col, str) else item_col
     src = items.select(col.cast("string").alias("item"))
-    summaries = src.mapInPandas(
-        _mg_summarize(capacity), "item string, lb long"
-    )
+    summaries = map_columns(src, _mg_summarize(capacity), "item string, lb long")
     candidates = summaries.groupBy("item").agg(F.sum("lb").alias("lb"))
     # exact pass: count only candidate items. The candidate union is at
     # most capacity x partitions rows and is never rank-truncated: a

@@ -9,10 +9,12 @@ queries/common.py).
 
 from __future__ import annotations
 
-import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 
+from evolution_data_warehouse_spark.operators.arrow_map import map_rows
+from evolution_data_warehouse_spark.operators.audio import decode_wav, encode_wav
+from evolution_data_warehouse_spark.operators.audio_fp import audio_fingerprint64
 from evolution_data_warehouse_spark.operators.datapipe import incremental_new
 from evolution_data_warehouse_spark.operators.dedup import (
     cap_lsh_buckets,
@@ -64,6 +66,11 @@ from evolution_data_warehouse_spark.queries.similarity import (
 from evolution_data_warehouse_spark.queries.text import (
     doc_shingles,
     SHINGLE_OVERLAP_SQL,
+)
+from evolution_data_warehouse_spark.sources.warc import (
+    build_warc,
+    parse_warc,
+    payload_digest,
 )
 
 
@@ -914,28 +921,16 @@ def dedup_image_phash(spark: SparkSession, sf_dir: str) -> DataFrame:
     return dhash_pairs(hashes, max_dist=2)
 
 
-def _afp_payload_batch():
-    """mapInPandas fn: doc_id → a REAL PCM16 WAV payload from the
+def _afp_payload(doc_id):
+    """map_rows fn: doc_id → a REAL PCM16 WAV payload from the
     near-dup family construction above."""
+    yield doc_id, encode_wav(afp_family_signal(doc_id)[:, None], 16000, width=2)
 
-    def gen(batches):
-        from evolution_data_warehouse_spark.operators.audio import (
-            encode_wav,
-        )
 
-        for pdf in batches:
-            payloads = []
-            for doc_id in pdf["doc_id"]:
-                sig = afp_family_signal(int(doc_id))
-                payloads.append(encode_wav(sig[:, None], 16000, width=2))
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"].astype("int64"),
-                    "payload": payloads,
-                }
-            )
-
-    return gen
+def _afp(doc_id, payload):
+    """map_rows fn: (doc_id, WAV payload) → (doc_id, 64-bit audio
+    fingerprint) through the engine's own WAV parser."""
+    yield doc_id, audio_fingerprint64(decode_wav(bytes(payload))["samples"])
 
 
 _AFP_ORACLE = """
@@ -969,30 +964,9 @@ JOIN documents b
 def dedup_audio_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
     from evolution_data_warehouse_spark.operators.phash import dhash_pairs
 
-    def fp_batch(batches):
-        from evolution_data_warehouse_spark.operators.audio import (
-            decode_wav,
-        )
-        from evolution_data_warehouse_spark.operators.audio_fp import (
-            audio_fingerprint64,
-        )
-
-        for pdf in batches:
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"].astype("int64"),
-                    "afp": [
-                        audio_fingerprint64(decode_wav(bytes(p))["samples"])
-                        for p in pdf["payload"]
-                    ],
-                }
-            )
-
     ids = t(spark, sf_dir, "documents").select("doc_id")
-    payloads = ids.mapInPandas(
-        _afp_payload_batch(), "doc_id long, payload binary"
-    )
-    hashes = payloads.mapInPandas(fp_batch, "doc_id long, afp long")
+    payloads = map_rows(ids, _afp_payload, "doc_id long, payload binary")
+    hashes = map_rows(payloads, _afp, "doc_id long, afp long")
     return dhash_pairs(hashes, hash_col="afp", max_dist=2)
 
 
@@ -1039,45 +1013,28 @@ WHERE NOT EXISTS (
     "pages — closed-form in doc_id — with their stored byte counts.",
 )
 def dedup_crawl_snapshots(spark: SparkSession, sf_dir: str) -> DataFrame:
-    def snap_batch(crawl: int):
-        def fn(batches):
-            from evolution_data_warehouse_spark.sources.warc import (
-                build_warc,
-                parse_warc,
-                payload_digest,
+    def snapshot(crawl: int):
+        def fn(doc_id, text):
+            body = ("" if text is None else str(text)).encode("utf-8")
+            if crawl == 2 and doc_id % 4 == 0:
+                body = body + b" v2"
+            uri = f"http://corpus.local/doc/{doc_id}"
+            rec = parse_warc(
+                build_warc([("response", uri, body)], per_record_gzip=True)
+            )[0]
+            yield (
+                doc_id,
+                rec["uri"],
+                payload_digest(rec["payload"]),
+                len(rec["payload"]),
             )
-
-            for pdf in batches:
-                rows = []
-                for doc_id, text in zip(pdf["doc_id"], pdf["text"]):
-                    d = int(doc_id)
-                    body = (
-                        "" if text is None else str(text)
-                    ).encode("utf-8")
-                    if crawl == 2 and d % 4 == 0:
-                        body = body + b" v2"
-                    uri = f"http://corpus.local/doc/{d}"
-                    rec = parse_warc(
-                        build_warc(
-                            [("response", uri, body)], per_record_gzip=True
-                        )
-                    )[0]
-                    rows.append(
-                        {
-                            "doc_id": d,
-                            "uri": rec["uri"],
-                            "digest": payload_digest(rec["payload"]),
-                            "n_bytes": len(rec["payload"]),
-                        }
-                    )
-                yield pd.DataFrame(rows)
 
         return fn
 
     schema = "doc_id long, uri string, digest string, n_bytes long"
     docs = t(spark, sf_dir, "documents").select("doc_id", "text")
-    prior = docs.mapInPandas(snap_batch(1), schema)
-    fresh = docs.mapInPandas(snap_batch(2), schema)
+    prior = map_rows(docs, snapshot(1), schema)
+    fresh = map_rows(docs, snapshot(2), schema)
     return fresh.join(
         prior.select("uri", "digest"), ["uri", "digest"], "left_anti"
     ).select("doc_id", "uri", "n_bytes")

@@ -10,16 +10,45 @@ queries/common.py).
 from __future__ import annotations
 
 import struct as _struct
-from typing import Iterator
 
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from evolution_data_warehouse_spark.operators.arrow_map import map_rows
+from evolution_data_warehouse_spark.operators.audio import (
+    _ALAW_DEC,
+    _ULAW_DEC,
+    decode_wav,
+    encode_wav,
+    encode_wav_g711,
+    encode_wav_ima,
+)
+from evolution_data_warehouse_spark.operators.audio_fp import (
+    N_BUCKETS,
+    N_FFT,
+    audio_fingerprint64,
+    dominant_bin,
+    spectrum32,
+)
 from evolution_data_warehouse_spark.operators.caption import (
     caption_cte_chain,
     caption_pair_stats,
+)
+from evolution_data_warehouse_spark.operators.exif import (
+    build_exif_jpeg,
+    parse_exif,
+    strip_exif,
+)
+from evolution_data_warehouse_spark.operators.gif import (
+    decode_gif,
+    encode_gif,
+    gif_meta,
+)
+from evolution_data_warehouse_spark.operators.jpeg import (
+    decode_jpeg,
+    encode_jpeg,
+    encode_jpeg_progressive,
 )
 from evolution_data_warehouse_spark.operators.multimodal import (
     audio_features_documents,
@@ -27,10 +56,9 @@ from evolution_data_warehouse_spark.operators.multimodal import (
     decode_documents,
     decode_documents_real,
     decode_documents_tolerant,
-    decode_image_auto as _decode_auto,
+    decode_pixels,
     decode_png,
     decode_png_text,
-    decode_ppm,
     encode_bmp,
     encode_png,
     encode_png_gray,
@@ -38,7 +66,16 @@ from evolution_data_warehouse_spark.operators.multimodal import (
     encode_ppm,
     frame_sample_documents,
     resize_documents,
-    synth_image_payload_batch,
+    synth_image_payloads,
+)
+from evolution_data_warehouse_spark.operators.phash import (
+    dhash64,
+    dhash_pairs,
+    image_dhash,
+)
+from evolution_data_warehouse_spark.operators.video import (
+    encode_avi_mjpeg,
+    parse_avi_mjpeg,
 )
 from evolution_data_warehouse_spark.operators.similarity import as_double
 from evolution_data_warehouse_spark.queries.common import cpu_repartition, register, t
@@ -134,45 +171,23 @@ FROM documents
     "breaks the hash.",
 )
 def mm_png_metadata(spark: SparkSession, sf_dir: str) -> DataFrame:
-    def synth(batches):
-        for pdf in batches:
-            px = np.zeros((2, 2, 3), dtype=np.uint8)
-            payloads = [
-                encode_png(
-                    px,
-                    text={
-                        "title": f"doc-{int(r.doc_id)}",
-                        "lang": str(r.lang),
-                        "source": str(r.source),
-                    },
-                )
-                for r in pdf.itertuples()
-            ]
-            yield pd.DataFrame(
-                {"doc_id": pdf["doc_id"].astype("int64"), "payload": payloads}
-            )
+    px = np.zeros((2, 2, 3), dtype=np.uint8)
 
-    def parse(batches):
-        for pdf in batches:
-            metas = [decode_png_text(bytes(b)) for b in pdf["payload"]]
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"].astype("int64"),
-                    "title": [m.get("title") for m in metas],
-                    "lang_meta": [m.get("lang") for m in metas],
-                    "source_meta": [m.get("source") for m in metas],
-                    "n_chunks": pd.Series(
-                        [len(m) for m in metas], dtype="int32"
-                    ),
-                }
-            )
+    def synth(doc_id, lang, source):
+        text = {"title": f"doc-{doc_id}", "lang": str(lang), "source": str(source)}
+        yield doc_id, encode_png(px, text=text)
 
-    payloads = (
-        t(spark, sf_dir, "documents")
-        .select("doc_id", "lang", "source")
-        .mapInPandas(synth, "doc_id long, payload binary")
+    def parse(doc_id, payload):
+        m = decode_png_text(bytes(payload))
+        yield doc_id, m.get("title"), m.get("lang"), m.get("source"), len(m)
+
+    payloads = map_rows(
+        t(spark, sf_dir, "documents").select("doc_id", "lang", "source"),
+        synth,
+        "doc_id long, payload binary",
     )
-    return payloads.mapInPandas(
+    return map_rows(
+        payloads,
         parse,
         "doc_id long, title string, lang_meta string, "
         "source_meta string, n_chunks int",
@@ -391,45 +406,34 @@ FROM documents
     "stages, Arrow-batched, no shuffle.",
 )
 def mm_decode_jpeg(spark: SparkSession, sf_dir: str) -> DataFrame:
-    def synth_and_decode(batches):
-        from evolution_data_warehouse_spark.operators.jpeg import (
-            decode_jpeg,
-            encode_jpeg,
+    def synth_and_decode(d):
+        w, h = 4 + d % 13, 3 + d % 7
+        px = np.zeros((h, w, 3), dtype=np.uint8)
+        px[:, :, 0] = np.arange(w, dtype=np.uint8)[None, :]
+        px[:, :, 1] = np.arange(h, dtype=np.uint8)[:, None]
+        px[:, :, 2] = d % 256
+        sub = d % 2 == 1
+        data = encode_jpeg(px, subsample=sub)
+        if data[:2] != b"\xff\xd8":
+            raise ValueError("encoder emitted non-JPEG magic")
+        ww, hh, out = decode_jpeg(data)
+        mae = float(
+            np.abs(
+                out.astype(np.int64) - px.astype(np.int64)
+            ).mean()
+        )
+        yield (
+            d,
+            "jpeg",
+            ww,
+            hh,
+            "420" if sub else "444",
+            bool(mae <= (8.0 if sub else 3.0)),
         )
 
-        for pdf in batches:
-            rows = []
-            for doc_id in pdf["doc_id"]:
-                d = int(doc_id)
-                w, h = 4 + d % 13, 3 + d % 7
-                px = np.zeros((h, w, 3), dtype=np.uint8)
-                px[:, :, 0] = np.arange(w, dtype=np.uint8)[None, :]
-                px[:, :, 1] = np.arange(h, dtype=np.uint8)[:, None]
-                px[:, :, 2] = d % 256
-                sub = d % 2 == 1
-                data = encode_jpeg(px, subsample=sub)
-                if data[:2] != b"\xff\xd8":
-                    raise ValueError("encoder emitted non-JPEG magic")
-                ww, hh, out = decode_jpeg(data)
-                mae = float(
-                    np.abs(
-                        out.astype(np.int64) - px.astype(np.int64)
-                    ).mean()
-                )
-                rows.append(
-                    {
-                        "doc_id": d,
-                        "format": "jpeg",
-                        "width": np.int32(ww),
-                        "height": np.int32(hh),
-                        "sampling": "420" if sub else "444",
-                        "within_tol": bool(mae <= (8.0 if sub else 3.0)),
-                    }
-                )
-            yield pd.DataFrame(rows)
-
     ids = t(spark, sf_dir, "documents").select("doc_id")
-    return ids.mapInPandas(
+    return map_rows(
+        ids,
         synth_and_decode,
         "doc_id long, format string, width int, height int, "
         "sampling string, within_tol boolean",
@@ -469,41 +473,15 @@ FROM documents
     "shuffle.",
 )
 def mm_channel_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
-    def hist_batch(batches):
-        def decode_px(data: bytes) -> np.ndarray:
-            if data[:2] == b"BM":
-                return decode_bmp(data)[2]
-            if data[:2] == b"P6":
-                return decode_ppm(data)[2]
-            return decode_png(data)[2]
+    def histogram(doc_id, payload):
+        r = decode_pixels(bytes(payload))[3][:, :, 0].astype(np.int64)
+        yield doc_id, *(
+            int(((r >= 4 * b) & (r < 4 * (b + 1))).sum()) for b in range(4)
+        )
 
-        for pdf in batches:
-            rows = []
-            for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-                px = decode_px(bytes(payload))
-                r = px[:, :, 0].astype(np.int64)
-                counts = [
-                    int(((r >= 4 * b) & (r < 4 * (b + 1))).sum())
-                    for b in range(4)
-                ]
-                rows.append(
-                    {
-                        "doc_id": int(doc_id),
-                        "r_b0": counts[0],
-                        "r_b1": counts[1],
-                        "r_b2": counts[2],
-                        "r_b3": counts[3],
-                    }
-                )
-            yield pd.DataFrame(rows)
-
-
-    ids = t(spark, sf_dir, "documents").select("doc_id")
-    payloads = ids.mapInPandas(
-        synth_image_payload_batch(), "doc_id long, payload binary"
-    )
-    return payloads.mapInPandas(
-        hist_batch,
+    return map_rows(
+        synth_image_payloads(t(spark, sf_dir, "documents")),
+        histogram,
         "doc_id long, r_b0 long, r_b1 long, r_b2 long, r_b3 long",
     )
 
@@ -539,41 +517,29 @@ FROM documents
     "embarrassingly parallel at any corpus size.",
 )
 def mm_decode_progressive(spark: SparkSession, sf_dir: str) -> DataFrame:
-    def synth_and_decode(batches):
-        from evolution_data_warehouse_spark.operators.jpeg import (
-            decode_jpeg,
-            encode_jpeg,
-            encode_jpeg_progressive,
+    def synth_and_decode(d):
+        w, h = 4 + d % 13, 3 + d % 7
+        px = np.zeros((h, w, 3), dtype=np.uint8)
+        px[:, :, 0] = np.arange(w, dtype=np.uint8)[None, :]
+        px[:, :, 1] = np.arange(h, dtype=np.uint8)[:, None]
+        px[:, :, 2] = d % 256
+        ri = d % 3
+        _, _, base = decode_jpeg(encode_jpeg(px))
+        ww, hh, prog = decode_jpeg(
+            encode_jpeg_progressive(px, restart_interval=ri)
+        )
+        yield (
+            d,
+            "jpeg-progressive",
+            ww,
+            hh,
+            ri,
+            bool(np.array_equal(base, prog)),
         )
 
-        for pdf in batches:
-            rows = []
-            for doc_id in pdf["doc_id"]:
-                d = int(doc_id)
-                w, h = 4 + d % 13, 3 + d % 7
-                px = np.zeros((h, w, 3), dtype=np.uint8)
-                px[:, :, 0] = np.arange(w, dtype=np.uint8)[None, :]
-                px[:, :, 1] = np.arange(h, dtype=np.uint8)[:, None]
-                px[:, :, 2] = d % 256
-                ri = d % 3
-                _, _, base = decode_jpeg(encode_jpeg(px))
-                ww, hh, prog = decode_jpeg(
-                    encode_jpeg_progressive(px, restart_interval=ri)
-                )
-                rows.append(
-                    {
-                        "doc_id": d,
-                        "format": "jpeg-progressive",
-                        "width": np.int32(ww),
-                        "height": np.int32(hh),
-                        "restart_interval": np.int32(ri),
-                        "exact_match": bool(np.array_equal(base, prog)),
-                    }
-                )
-            yield pd.DataFrame(rows)
-
     ids = cpu_repartition(t(spark, sf_dir, "documents").select("doc_id"))
-    return ids.mapInPandas(
+    return map_rows(
+        ids,
         synth_and_decode,
         "doc_id long, format string, width int, height int, "
         "restart_interval int, exact_match boolean",
@@ -609,37 +575,25 @@ FROM documents
     "parallel.",
 )
 def mm_decode_interlaced(spark: SparkSession, sf_dir: str) -> DataFrame:
-    def synth_and_decode(batches):
-        for pdf in batches:
-            rows = []
-            for doc_id in pdf["doc_id"]:
-                d = int(doc_id)
-                w, h = 1 + d % 19, 1 + d % 11
-                yy, xx = np.mgrid[0:h, 0:w]
-                px = np.stack(
-                    [
-                        (xx * 257 + d) % 65536,
-                        (yy * 4099 + d * 31) % 65536,
-                        (xx * yy * 7 + d * 101) % 65536,
-                    ],
-                    axis=2,
-                ).astype(np.uint16)
-                ww, hh, out = decode_png(
-                    encode_png(px, interlace=1, depth=16)
-                )
-                rows.append(
-                    {
-                        "doc_id": d,
-                        "format": "png-adam7-16bit",
-                        "width": np.int32(ww),
-                        "height": np.int32(hh),
-                        "exact_match": bool(np.array_equal(out, px)),
-                    }
-                )
-            yield pd.DataFrame(rows)
+    def synth_and_decode(d):
+        w, h = 1 + d % 19, 1 + d % 11
+        yy, xx = np.mgrid[0:h, 0:w]
+        px = np.stack(
+            [
+                (xx * 257 + d) % 65536,
+                (yy * 4099 + d * 31) % 65536,
+                (xx * yy * 7 + d * 101) % 65536,
+            ],
+            axis=2,
+        ).astype(np.uint16)
+        ww, hh, out = decode_png(
+            encode_png(px, interlace=1, depth=16)
+        )
+        yield d, "png-adam7-16bit", ww, hh, bool(np.array_equal(out, px))
 
     ids = t(spark, sf_dir, "documents").select("doc_id")
-    return ids.mapInPandas(
+    return map_rows(
+        ids,
         synth_and_decode,
         "doc_id long, format string, width int, height int, "
         "exact_match boolean",
@@ -679,7 +633,7 @@ FROM documents
     doc="Fault-tolerant image decode — the quarantine path a 100 TB "
     "media corpus REQUIRES: every 4th payload is deliberately "
     "truncated to half its bytes, and the per-row try in "
-    "decode_image_tolerant_batch (multimodal.py) turns each broken "
+    "decode_image_tolerant_row (multimodal.py) turns each broken "
     "object into status='error' with NULL features instead of a task "
     "failure that would kill the job after retries. Healthy rows "
     "decode to the same closed-form channel sums mm_decode_real "
@@ -724,76 +678,54 @@ FROM documents
     "parallel across a 100 TB corpus.",
 )
 def mm_video_frames(spark: SparkSession, sf_dir: str) -> DataFrame:
-    def synth_mux_sample(batches):
-        from evolution_data_warehouse_spark.operators.jpeg import (
-            decode_jpeg,
-            encode_jpeg,
+    # Fixture-synthesis cache: frame pixels depend only on
+    # (w, h, k, d % 256) — ≤ 9·5·6·256 = 69,120 distinct JPEGs
+    # (k ranges over 0..5 since n_frames = 2 + d % 5 ≤ 6)
+    # versus one encode per (doc, frame). Caching the synthesis
+    # (NOT the mux/demux/decode under test) is the same
+    # per-batch-frame-cache discipline that fixed
+    # mm_video_curation in r10; profiled r11: encode was 68% of
+    # the leg, and a task-lifetime cache converts most of it to
+    # dict hits once the (d%9, d%5, d%256) cycle wraps.
+    frame_cache: dict[tuple[int, int, int, int], bytes] = {}
+
+    def synth_frame(w: int, h: int, k: int, blue: int) -> bytes:
+        key = (w, h, k, blue)
+        got = frame_cache.get(key)
+        if got is None:
+            px = np.zeros((h, w, 3), dtype=np.uint8)
+            px[:, :, 0] = np.arange(w, dtype=np.uint8)[None, :]
+            px[:, :, 1] = (k * 16) % 256
+            px[:, :, 2] = blue
+            got = frame_cache[key] = encode_jpeg(px)
+        return got
+
+    def synth_mux_sample(d):
+        n_frames = 2 + d % 5
+        w, h = 8 + d % 9, 8 + d % 5
+        jpegs = [
+            synth_frame(w, h, k, d % 256) for k in range(n_frames)
+        ]
+        avi = encode_avi_mjpeg(jpegs, w, h, fps=12)
+        parsed = parse_avi_mjpeg(avi)  # one demux, sampled below
+        sampled = list(enumerate(parsed["frames"]))[::2]
+        ok = (
+            parsed["width"] == w
+            and parsed["height"] == h
+            and parsed["fps"] == 12
+            and len(parsed["frames"]) == n_frames
         )
-        from evolution_data_warehouse_spark.operators.video import (
-            encode_avi_mjpeg,
-            parse_avi_mjpeg,
-        )
-
-        # Fixture-synthesis cache: frame pixels depend only on
-        # (w, h, k, d % 256) — ≤ 9·5·6·256 = 69,120 distinct JPEGs
-        # (k ranges over 0..5 since n_frames = 2 + d % 5 ≤ 6)
-        # versus one encode per (doc, frame). Caching the synthesis
-        # (NOT the mux/demux/decode under test) is the same
-        # per-batch-frame-cache discipline that fixed
-        # mm_video_curation in r10; profiled r11: encode was 68% of
-        # the leg, and a task-lifetime cache converts most of it to
-        # dict hits once the (d%9, d%5, d%256) cycle wraps.
-        frame_cache: dict[tuple[int, int, int, int], bytes] = {}
-
-        def synth_frame(w: int, h: int, k: int, blue: int) -> bytes:
-            key = (w, h, k, blue)
-            got = frame_cache.get(key)
-            if got is None:
-                px = np.zeros((h, w, 3), dtype=np.uint8)
-                px[:, :, 0] = np.arange(w, dtype=np.uint8)[None, :]
-                px[:, :, 1] = (k * 16) % 256
-                px[:, :, 2] = blue
-                got = frame_cache[key] = encode_jpeg(px)
-            return got
-
-        for pdf in batches:
-            rows = []
-            for doc_id in pdf["doc_id"]:
-                d = int(doc_id)
-                n_frames = 2 + d % 5
-                w, h = 8 + d % 9, 8 + d % 5
-                jpegs = [
-                    synth_frame(w, h, k, d % 256) for k in range(n_frames)
-                ]
-                avi = encode_avi_mjpeg(jpegs, w, h, fps=12)
-                parsed = parse_avi_mjpeg(avi)  # one demux, sampled below
-                sampled = list(enumerate(parsed["frames"]))[::2]
-                ok = (
-                    parsed["width"] == w
-                    and parsed["height"] == h
-                    and parsed["fps"] == 12
-                    and len(parsed["frames"]) == n_frames
-                )
-                for idx, frame in sampled:
-                    # byte equality first — once the demuxed bytes ARE
-                    # the muxed JPEG, ONE decode pins the pixel claim
-                    ok = ok and frame == jpegs[idx]
-                    fw, fh, _fpx = decode_jpeg(frame)
-                    ok = ok and (fw, fh) == (w, h)
-                rows.append(
-                    {
-                        "doc_id": d,
-                        "n_frames": np.int32(n_frames),
-                        "n_sampled": np.int32(len(sampled)),
-                        "width": np.int32(w),
-                        "height": np.int32(h),
-                        "exact_match": bool(ok),
-                    }
-                )
-            yield pd.DataFrame(rows)
+        for idx, frame in sampled:
+            # byte equality first — once the demuxed bytes ARE
+            # the muxed JPEG, ONE decode pins the pixel claim
+            ok = ok and frame == jpegs[idx]
+            fw, fh, _fpx = decode_jpeg(frame)
+            ok = ok and (fw, fh) == (w, h)
+        yield d, n_frames, len(sampled), w, h, bool(ok)
 
     ids = cpu_repartition(t(spark, sf_dir, "documents").select("doc_id"))
-    return ids.mapInPandas(
+    return map_rows(
+        ids,
         synth_mux_sample,
         "doc_id long, n_frames int, n_sampled int, width int, "
         "height int, exact_match boolean",
@@ -835,53 +767,41 @@ FROM documents
     "at corpus scale.",
 )
 def mm_decode_gif(spark: SparkSession, sf_dir: str) -> DataFrame:
-    def synth_and_decode(batches):
-        from evolution_data_warehouse_spark.operators.gif import (
-            decode_gif,
-            encode_gif,
-            gif_meta,
+    def synth_and_decode(d):
+        w, h = 3 + d % 14, 2 + d % 9
+        npal = 2 + d % 255
+        ii, jj = np.indices((h, w))
+        idx = ((ii * 7 + jj * 3 + d) % npal).astype(np.uint8)
+        k = np.arange(npal, dtype=np.int64)
+        pal = np.stack(
+            [(k * 5 + d) % 256, (k * 11) % 256, (k * 17 + d) % 256],
+            axis=1,
+        ).astype(np.uint8)
+        data = encode_gif(
+            idx,
+            pal,
+            interlace=d % 2 == 1,
+            transparent=0 if d % 4 == 0 else None,
+            comment=f"doc {d}" if d % 5 == 0 else None,
+        )
+        ww, hh, px = decode_gif(data)
+        meta = gif_meta(data)
+        yield (
+            d,
+            "gif",
+            ww,
+            hh,
+            bool(meta["interlaced"]),
+            meta["n_frames"],
+            bool(
+                (ww, hh) == (w, h)
+                and np.array_equal(px, pal[idx])
+            ),
         )
 
-        for pdf in batches:
-            rows = []
-            for doc_id in pdf["doc_id"]:
-                d = int(doc_id)
-                w, h = 3 + d % 14, 2 + d % 9
-                npal = 2 + d % 255
-                ii, jj = np.indices((h, w))
-                idx = ((ii * 7 + jj * 3 + d) % npal).astype(np.uint8)
-                k = np.arange(npal, dtype=np.int64)
-                pal = np.stack(
-                    [(k * 5 + d) % 256, (k * 11) % 256, (k * 17 + d) % 256],
-                    axis=1,
-                ).astype(np.uint8)
-                data = encode_gif(
-                    idx,
-                    pal,
-                    interlace=d % 2 == 1,
-                    transparent=0 if d % 4 == 0 else None,
-                    comment=f"doc {d}" if d % 5 == 0 else None,
-                )
-                ww, hh, px = decode_gif(data)
-                meta = gif_meta(data)
-                rows.append(
-                    {
-                        "doc_id": d,
-                        "format": "gif",
-                        "width": np.int32(ww),
-                        "height": np.int32(hh),
-                        "interlaced": bool(meta["interlaced"]),
-                        "n_frames": np.int32(meta["n_frames"]),
-                        "exact_match": bool(
-                            (ww, hh) == (w, h)
-                            and np.array_equal(px, pal[idx])
-                        ),
-                    }
-                )
-            yield pd.DataFrame(rows)
-
     ids = t(spark, sf_dir, "documents").select("doc_id")
-    return ids.mapInPandas(
+    return map_rows(
+        ids,
         synth_and_decode,
         "doc_id long, format string, width int, height int, "
         "interlaced boolean, n_frames int, exact_match boolean",
@@ -927,74 +847,68 @@ FROM documents
 )
 def mm_decode_paletted(spark: SparkSession, sf_dir: str) -> DataFrame:
 
-    def synth_and_decode(batches):
-        for pdf in batches:
-            rows = []
-            for doc_id in pdf["doc_id"]:
-                d = int(doc_id)
-                w, h = 2 + d % 13, 1 + d % 8
-                depth = (1, 2, 4, 8)[d % 4]
-                inter = d % 2
-                n = 1 << depth
-                ii, jj = np.indices((h, w))
-                idx = ((ii * 5 + jj * 3 + d) % n).astype(np.uint8)
-                k = np.arange(n, dtype=np.int64)
-                pal = np.stack(
-                    [(k * 7 + d) % 256, (k * 13) % 256, (k * 29 + d) % 256],
-                    axis=1,
-                ).astype(np.uint8)
-                _, _, ppx = decode_png(
-                    encode_png_indexed(idx, pal, depth=depth, interlace=inter)
-                )
-                pal_ok = np.array_equal(ppx, pal[idx])
-                g = idx  # gray samples at the same depth
-                scale = 255 // (n - 1)
-                _, _, gpx = decode_png(
-                    encode_png_gray(g, depth=depth, interlace=inter)
-                )
-                gray_ok = np.array_equal(
-                    gpx, np.repeat((g * scale).astype(np.uint8)[:, :, None], 3, axis=2)
-                )
-                # 16-bpp 565 bitfields BMP of deterministic words
-                words = ((ii * 131 + jj * 17 + d) % (1 << 16)).astype("<u2")
-                stride = (2 * w + 3) // 4 * 4
-                rowbuf = np.zeros((h, stride), dtype=np.uint8)
-                rowbuf[:, : 2 * w] = words.view(np.uint8).reshape(h, 2 * w)
-                bmp = (
-                    _struct.pack("<2sIHHI", b"BM", 14 + 40 + 12 + stride * h, 0, 0, 14 + 40 + 12)
-                    + _struct.pack(
-                        "<IiiHHIIiiII",
-                        40, w, h, 1, 16, 3, stride * h, 2835, 2835, 0, 0,
-                    )
-                    + _struct.pack("<III", 0xF800, 0x07E0, 0x001F)
-                    + rowbuf[::-1].tobytes()
-                )
-                _, _, bpx = decode_bmp(bmp)
-                wu = words.astype(np.uint32)
-                exp = np.stack(
-                    [
-                        (((wu >> 11) & 0x1F) * 255 // 31).astype(np.uint8),
-                        (((wu >> 5) & 0x3F) * 255 // 63).astype(np.uint8),
-                        ((wu & 0x1F) * 255 // 31).astype(np.uint8),
-                    ],
-                    axis=2,
-                )
-                rows.append(
-                    {
-                        "doc_id": d,
-                        "width": np.int32(w),
-                        "height": np.int32(h),
-                        "depth": np.int32(depth),
-                        "interlaced": bool(inter),
-                        "paletted_match": bool(pal_ok),
-                        "gray_match": bool(gray_ok),
-                        "bitfields_match": bool(np.array_equal(bpx, exp)),
-                    }
-                )
-            yield pd.DataFrame(rows)
+    def synth_and_decode(d):
+        w, h = 2 + d % 13, 1 + d % 8
+        depth = (1, 2, 4, 8)[d % 4]
+        inter = d % 2
+        n = 1 << depth
+        ii, jj = np.indices((h, w))
+        idx = ((ii * 5 + jj * 3 + d) % n).astype(np.uint8)
+        k = np.arange(n, dtype=np.int64)
+        pal = np.stack(
+            [(k * 7 + d) % 256, (k * 13) % 256, (k * 29 + d) % 256],
+            axis=1,
+        ).astype(np.uint8)
+        _, _, ppx = decode_png(
+            encode_png_indexed(idx, pal, depth=depth, interlace=inter)
+        )
+        pal_ok = np.array_equal(ppx, pal[idx])
+        g = idx  # gray samples at the same depth
+        scale = 255 // (n - 1)
+        _, _, gpx = decode_png(
+            encode_png_gray(g, depth=depth, interlace=inter)
+        )
+        gray_ok = np.array_equal(
+            gpx, np.repeat((g * scale).astype(np.uint8)[:, :, None], 3, axis=2)
+        )
+        # 16-bpp 565 bitfields BMP of deterministic words
+        words = ((ii * 131 + jj * 17 + d) % (1 << 16)).astype("<u2")
+        stride = (2 * w + 3) // 4 * 4
+        rowbuf = np.zeros((h, stride), dtype=np.uint8)
+        rowbuf[:, : 2 * w] = words.view(np.uint8).reshape(h, 2 * w)
+        bmp = (
+            _struct.pack("<2sIHHI", b"BM", 14 + 40 + 12 + stride * h, 0, 0, 14 + 40 + 12)
+            + _struct.pack(
+                "<IiiHHIIiiII",
+                40, w, h, 1, 16, 3, stride * h, 2835, 2835, 0, 0,
+            )
+            + _struct.pack("<III", 0xF800, 0x07E0, 0x001F)
+            + rowbuf[::-1].tobytes()
+        )
+        _, _, bpx = decode_bmp(bmp)
+        wu = words.astype(np.uint32)
+        exp = np.stack(
+            [
+                (((wu >> 11) & 0x1F) * 255 // 31).astype(np.uint8),
+                (((wu >> 5) & 0x3F) * 255 // 63).astype(np.uint8),
+                ((wu & 0x1F) * 255 // 31).astype(np.uint8),
+            ],
+            axis=2,
+        )
+        yield (
+            d,
+            w,
+            h,
+            depth,
+            bool(inter),
+            bool(pal_ok),
+            bool(gray_ok),
+            bool(np.array_equal(bpx, exp)),
+        )
 
     ids = t(spark, sf_dir, "documents").select("doc_id")
-    return ids.mapInPandas(
+    return map_rows(
+        ids,
         synth_and_decode,
         "doc_id long, width int, height int, depth int, "
         "interlaced boolean, paletted_match boolean, gray_match boolean, "
@@ -1033,40 +947,29 @@ FROM documents
     "samples. One narrow mapInPandas stage, no shuffle.",
 )
 def mm_audio_wav(spark: SparkSession, sf_dir: str) -> DataFrame:
-    def synth_and_decode(batches):
-        from evolution_data_warehouse_spark.operators.audio import (
-            decode_wav,
-            encode_wav,
+    def synth_and_decode(d):
+        rate = 8000 + (d % 5) * 1000
+        ch = 1 + d % 2
+        width = 1 + d % 4
+        n = 64 + d % 193
+        hi = (1 << (8 * width - 1)) - 1
+        i, c = np.indices((n, ch))
+        s = ((i * 2311 + c * 757 + d * 13) % (2 * hi + 1)) - hi
+        out = decode_wav(encode_wav(s, rate, width))
+        yield (
+            d,
+            out["sample_rate"],
+            out["n_channels"],
+            out["sample_width"],
+            out["samples"].shape[0],
+            bool(
+                np.array_equal(out["samples"], s)
+            ),
         )
 
-        for pdf in batches:
-            rows = []
-            for doc_id in pdf["doc_id"]:
-                d = int(doc_id)
-                rate = 8000 + (d % 5) * 1000
-                ch = 1 + d % 2
-                width = 1 + d % 4
-                n = 64 + d % 193
-                hi = (1 << (8 * width - 1)) - 1
-                i, c = np.indices((n, ch))
-                s = ((i * 2311 + c * 757 + d * 13) % (2 * hi + 1)) - hi
-                out = decode_wav(encode_wav(s, rate, width))
-                rows.append(
-                    {
-                        "doc_id": d,
-                        "sample_rate": np.int32(out["sample_rate"]),
-                        "n_channels": np.int32(out["n_channels"]),
-                        "sample_width": np.int32(out["sample_width"]),
-                        "n_frames": np.int32(out["samples"].shape[0]),
-                        "exact_match": bool(
-                            np.array_equal(out["samples"], s)
-                        ),
-                    }
-                )
-            yield pd.DataFrame(rows)
-
     ids = t(spark, sf_dir, "documents").select("doc_id")
-    return ids.mapInPandas(
+    return map_rows(
+        ids,
         synth_and_decode,
         "doc_id long, sample_rate int, n_channels int, sample_width int, "
         "n_frames int, exact_match boolean",
@@ -1129,41 +1032,19 @@ def _phash_family_pixels(d: int) -> np.ndarray:
     return np.repeat(gray.astype(np.uint8)[:, :, None], 3, axis=2)
 
 
-def _phash_payload_batch():
-    """mapInPandas fn: doc_id → a REAL encoded image payload from the
+def _phash_payload(d):
+    """map_rows fn: doc_id → a REAL encoded image payload from the
     near-dup family construction above."""
-
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            payloads = []
-            for doc_id in pdf["doc_id"]:
-                d = int(doc_id)
-                px = _phash_family_pixels(d)
-                enc = (encode_bmp, encode_ppm, encode_png)[d % 3]
-                payloads.append(enc(px))
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"].astype("int64"),
-                    "payload": payloads,
-                }
-            )
-
-    return gen
+    yield d, (encode_bmp, encode_ppm, encode_png)[d % 3](_phash_family_pixels(d))
 
 
 def image_dhashes(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(doc_id, dhash): the 64-bit dHash of each document's synthetic
-    image payload (_phash_payload_batch), decoded and hashed in two
-    narrow mapInPandas stages spread to core width."""
-    from evolution_data_warehouse_spark.operators.phash import image_dhash_batch
-
+    image payload (_phash_payload), decoded and hashed in two narrow
+    map passes spread to core width."""
     ids = cpu_repartition(t(spark, sf_dir, "documents").select("doc_id"))
-    payloads = ids.mapInPandas(
-        _phash_payload_batch(), "doc_id long, payload binary"
-    )
-    return payloads.mapInPandas(
-        image_dhash_batch(), "doc_id long, dhash long"
-    )
+    payloads = map_rows(ids, _phash_payload, "doc_id long, payload binary")
+    return map_rows(payloads, image_dhash, "doc_id long, dhash long")
 
 
 # ---------------------------------------------------------------------------
@@ -1202,63 +1083,48 @@ FROM documents
     "no shuffle — linear in corpus bytes like every codec here.",
 )
 def mm_audio_companding(spark: SparkSession, sf_dir: str) -> DataFrame:
-    def synth_and_decode(batches):
-        from evolution_data_warehouse_spark.operators.audio import (
-            _ALAW_DEC,
-            _ULAW_DEC,
-            _ima_step,
-            decode_wav,
-            encode_wav_g711,
-            encode_wav_ima,
+    def synth_and_decode(d):
+        codec = ("ulaw", "alaw", "ima_adpcm")[d % 3]
+        rate = 8000 + (d % 3) * 3025
+        ch = 1 + d % 2
+        n = 120 + d % 211
+        i, c = np.indices((n, ch))
+        if codec in ("ulaw", "alaw"):
+            table = _ULAW_DEC if codec == "ulaw" else _ALAW_DEC
+            sig = table[(i * 131 + c * 37 + d * 11) % 256]
+            wav = encode_wav_g711(sig, rate, codec)
+            out = decode_wav(wav)
+            ok = np.array_equal(out["samples"], sig)
+        else:
+            t_ = i.astype(np.float64)
+            sig = (
+                3000 * np.sin(t_ / 17.0 + d % 7)
+                + 400 * np.sin(t_ / 3.0)
+                + c * 23
+            ).astype(np.int64)
+            wav = encode_wav_ima(sig, rate, frames_per_block=105)
+            out = decode_wav(wav)
+            # independent re-simulation of the decoder over the
+            # encoded nibble stream happens in decode_wav; here
+            # assert bounded tracking error + exact first
+            # sample per block header contract
+            err = int(np.abs(out["samples"] - sig).max())
+            ok = (
+                err < 2000
+                and np.array_equal(out["samples"][0], sig[0])
+            )
+        yield (
+            d,
+            codec,
+            out["sample_rate"],
+            out["n_channels"],
+            out["samples"].shape[0],
+            bool(ok),
         )
 
-        for pdf in batches:
-            rows = []
-            for doc_id in pdf["doc_id"]:
-                d = int(doc_id)
-                codec = ("ulaw", "alaw", "ima_adpcm")[d % 3]
-                rate = 8000 + (d % 3) * 3025
-                ch = 1 + d % 2
-                n = 120 + d % 211
-                i, c = np.indices((n, ch))
-                if codec in ("ulaw", "alaw"):
-                    table = _ULAW_DEC if codec == "ulaw" else _ALAW_DEC
-                    sig = table[(i * 131 + c * 37 + d * 11) % 256]
-                    wav = encode_wav_g711(sig, rate, codec)
-                    out = decode_wav(wav)
-                    ok = np.array_equal(out["samples"], sig)
-                else:
-                    t_ = i.astype(np.float64)
-                    sig = (
-                        3000 * np.sin(t_ / 17.0 + d % 7)
-                        + 400 * np.sin(t_ / 3.0)
-                        + c * 23
-                    ).astype(np.int64)
-                    wav = encode_wav_ima(sig, rate, frames_per_block=105)
-                    out = decode_wav(wav)
-                    # independent re-simulation of the decoder over the
-                    # encoded nibble stream happens in decode_wav; here
-                    # assert bounded tracking error + exact first
-                    # sample per block header contract
-                    err = int(np.abs(out["samples"] - sig).max())
-                    ok = (
-                        err < 2000
-                        and np.array_equal(out["samples"][0], sig[0])
-                    )
-                rows.append(
-                    {
-                        "doc_id": d,
-                        "codec": codec,
-                        "sample_rate": np.int32(out["sample_rate"]),
-                        "n_channels": np.int32(out["n_channels"]),
-                        "n_frames": np.int32(out["samples"].shape[0]),
-                        "roundtrip_ok": bool(ok),
-                    }
-                )
-            yield pd.DataFrame(rows)
-
     ids = t(spark, sf_dir, "documents").select("doc_id")
-    return ids.mapInPandas(
+    return map_rows(
+        ids,
         synth_and_decode,
         "doc_id long, codec string, sample_rate int, n_channels int, "
         "n_frames int, roundtrip_ok boolean",
@@ -1302,75 +1168,52 @@ FROM documents
     "stage, no shuffle.",
 )
 def mm_exif_gps_redact(spark: SparkSession, sf_dir: str) -> DataFrame:
-    def synth_and_parse(batches):
-        from evolution_data_warehouse_spark.operators.exif import (
-            build_exif_jpeg,
-            parse_exif,
-            strip_exif,
+    def synth_and_parse(d):
+        w, h = 4 + d % 13, 3 + d % 7
+        x = np.arange(w, dtype=np.uint8)
+        y = np.arange(h, dtype=np.uint8)
+        px = np.zeros((h, w, 3), dtype=np.uint8)
+        px[:, :, 0] = x[None, :]
+        px[:, :, 1] = y[:, None]
+        px[:, :, 2] = d % 256
+        gps = (
+            (d % 90 + 0.5, -(d % 180 + 0.25))
+            if d % 3 == 0
+            else None
         )
-        from evolution_data_warehouse_spark.operators.jpeg import (
-            decode_jpeg,
+        jpg = build_exif_jpeg(
+            px,
+            make=f"Cam{d % 7}",
+            model=f"M{d % 4}",
+            orientation=1 + d % 8,
+            gps=gps,
+            byte_order="II" if d % 2 else "MM",
         )
-
-        for pdf in batches:
-            rows = []
-            for doc_id in pdf["doc_id"]:
-                d = int(doc_id)
-                w, h = 4 + d % 13, 3 + d % 7
-                x = np.arange(w, dtype=np.uint8)
-                y = np.arange(h, dtype=np.uint8)
-                px = np.zeros((h, w, 3), dtype=np.uint8)
-                px[:, :, 0] = x[None, :]
-                px[:, :, 1] = y[:, None]
-                px[:, :, 2] = d % 256
-                gps = (
-                    (d % 90 + 0.5, -(d % 180 + 0.25))
-                    if d % 3 == 0
-                    else None
-                )
-                jpg = build_exif_jpeg(
-                    px,
-                    make=f"Cam{d % 7}",
-                    model=f"M{d % 4}",
-                    orientation=1 + d % 8,
-                    gps=gps,
-                    byte_order="II" if d % 2 else "MM",
-                )
-                meta = parse_exif(jpg)
-                scrubbed = strip_exif(jpg)
-                sm = parse_exif(scrubbed)
-                dw, dh, dp = decode_jpeg(jpg)
-                sw, sh, sp = decode_jpeg(scrubbed)
-                ok = (
-                    not sm["has_exif"]
-                    and (dw, dh) == (sw, sh)
-                    and bool(np.array_equal(dp, sp))
-                )
-                g = meta["gps"]
-                rows.append(
-                    {
-                        "doc_id": d,
-                        "make": meta["make"],
-                        "orientation": np.int32(meta["orientation"][0]),
-                        "byte_order": meta["byte_order"],
-                        "has_gps": g is not None,
-                        "lat_deg": (
-                            np.int32(g["gps_lat"][0][0])
-                            if g is not None
-                            else None
-                        ),
-                        "lon_ref": (
-                            g["gps_lon_ref"] if g is not None else None
-                        ),
-                        "redact_ok": bool(ok),
-                    }
-                )
-            out = pd.DataFrame(rows)
-            out["lat_deg"] = out["lat_deg"].astype("Int32")
-            yield out
+        meta = parse_exif(jpg)
+        scrubbed = strip_exif(jpg)
+        sm = parse_exif(scrubbed)
+        dw, dh, dp = decode_jpeg(jpg)
+        sw, sh, sp = decode_jpeg(scrubbed)
+        ok = (
+            not sm["has_exif"]
+            and (dw, dh) == (sw, sh)
+            and bool(np.array_equal(dp, sp))
+        )
+        g = meta["gps"]
+        yield (
+            d,
+            meta["make"],
+            meta["orientation"][0],
+            meta["byte_order"],
+            g is not None,
+            g["gps_lat"][0][0] if g is not None else None,
+            g["gps_lon_ref"] if g is not None else None,
+            bool(ok),
+        )
 
     ids = t(spark, sf_dir, "documents").select("doc_id")
-    return ids.mapInPandas(
+    return map_rows(
+        ids,
         synth_and_parse,
         "doc_id long, make string, orientation int, byte_order string, "
         "has_gps boolean, lat_deg int, lon_ref string, redact_ok boolean",
@@ -1409,51 +1252,29 @@ FROM documents
     "the same scale shape as every decoder.",
 )
 def mm_audio_spectral(spark: SparkSession, sf_dir: str) -> DataFrame:
-    def synth_and_analyze(batches):
-        from evolution_data_warehouse_spark.operators.audio import (
-            decode_wav,
-            encode_wav,
+    def synth_and_analyze(d):
+        k = 1 + d % 30
+        n_frames = 2 + d % 5
+        n = np.arange(N_FFT * n_frames, dtype=np.float64)
+        sig = np.floor(
+            6000.0 * np.sin(2.0 * np.pi * k * n / N_FFT) + 0.5
+        ).astype(np.int64)[:, None]
+        wav = encode_wav(sig, 16000, width=2)
+        out = decode_wav(wav)
+        spec = spectrum32(out["samples"])
+        per_frame = spec[:, 1:].argmax(axis=1) + 1
+        peak = spec[np.arange(len(spec)), per_frame]
+        rest = spec[:, 1:].copy()
+        rest[np.arange(len(spec)), per_frame - 1] = 0
+        runner = rest.max(axis=1)
+        ok = bool(
+            np.all(per_frame == k) and np.all(peak >= 4 * runner)
         )
-        from evolution_data_warehouse_spark.operators.audio_fp import (
-            N_FFT,
-            dominant_bin,
-            spectrum32,
-        )
-
-        for pdf in batches:
-            rows = []
-            for doc_id in pdf["doc_id"]:
-                d = int(doc_id)
-                k = 1 + d % 30
-                n_frames = 2 + d % 5
-                n = np.arange(N_FFT * n_frames, dtype=np.float64)
-                sig = np.floor(
-                    6000.0 * np.sin(2.0 * np.pi * k * n / N_FFT) + 0.5
-                ).astype(np.int64)[:, None]
-                wav = encode_wav(sig, 16000, width=2)
-                out = decode_wav(wav)
-                spec = spectrum32(out["samples"])
-                per_frame = spec[:, 1:].argmax(axis=1) + 1
-                peak = spec[np.arange(len(spec)), per_frame]
-                rest = spec[:, 1:].copy()
-                rest[np.arange(len(spec)), per_frame - 1] = 0
-                runner = rest.max(axis=1)
-                ok = bool(
-                    np.all(per_frame == k) and np.all(peak >= 4 * runner)
-                )
-                rows.append(
-                    {
-                        "doc_id": d,
-                        "n_frames": np.int32(spec.shape[0]),
-                        "n_bins": np.int32(spec.shape[1]),
-                        "dominant_bin": np.int32(dominant_bin(spec)),
-                        "spectral_ok": ok,
-                    }
-                )
-            yield pd.DataFrame(rows)
+        yield d, spec.shape[0], spec.shape[1], dominant_bin(spec), ok
 
     ids = t(spark, sf_dir, "documents").select("doc_id")
-    return ids.mapInPandas(
+    return map_rows(
+        ids,
         synth_and_analyze,
         "doc_id long, n_frames int, n_bins int, dominant_bin int, "
         "spectral_ok boolean",
@@ -1492,10 +1313,6 @@ def afp_family_signal(d: int) -> np.ndarray:
     1 + d % 3. ONE definition — shared by dedup_audio_fingerprint and
     mm_audio_curation so their closed-form pair/funnel oracles can
     never diverge (review finding)."""
-    from evolution_data_warehouse_spark.operators.audio_fp import (
-        N_BUCKETS,
-    )
-
     base = d // 10
     amps = np.array(
         [
@@ -1550,89 +1367,72 @@ FROM documents
     "one decode per frame, linear in corpus bytes.",
 )
 def mm_video_keyframes(spark: SparkSession, sf_dir: str) -> DataFrame:
-    def synth_and_detect(batches):
-        from evolution_data_warehouse_spark.operators.jpeg import (
-            decode_jpeg,
-            encode_jpeg,
+    def synth_and_detect(d):
+        n_frames = 6 + d % 7
+        scene_len = 2 + d % 3
+        w, h = 8 + d % 9, 8 + d % 5
+        # frames within a scene are pixel-identical BY
+        # CONSTRUCTION (the zero in-scene energy property
+        # depends on it), so encode each scene once and reuse
+        # the bytes (review finding: 2-4x fewer encodes)
+        scene_jpegs: dict[int, bytes] = {}
+        jpegs = []
+        for k in range(n_frames):
+            scene = k // scene_len
+            if scene not in scene_jpegs:
+                px = np.zeros((h, w, 3), dtype=np.uint8)
+                px[:, :, 0] = np.arange(w, dtype=np.uint8)[
+                    None, :
+                ]
+                px[:, :, 1] = (40 * scene) % 256
+                px[:, :, 2] = d % 256
+                scene_jpegs[scene] = encode_jpeg(px)
+            jpegs.append(scene_jpegs[scene])
+        parsed = parse_avi_mjpeg(
+            encode_avi_mjpeg(jpegs, w, h, fps=12)
         )
-        from evolution_data_warehouse_spark.operators.video import (
-            encode_avi_mjpeg,
-            parse_avi_mjpeg,
+        pixels = [
+            decode_jpeg(fr)[2].astype(np.int64)
+            for fr in parsed["frames"]
+        ]
+        energies = [
+            int(np.abs(pixels[k] - pixels[k - 1]).sum())
+            for k in range(1, len(pixels))
+        ]
+        thresh = 8 * w * h
+        keyframes = [0] + [
+            k
+            for k in range(1, len(pixels))
+            if energies[k - 1] > thresh
+        ]
+        expected = [0] + [
+            k
+            for k in range(1, n_frames)
+            if k % scene_len == 0
+        ]
+        in_scene_zero = all(
+            e == 0
+            for k, e in enumerate(energies, start=1)
+            if k % scene_len != 0
         )
-
-        for pdf in batches:
-            rows = []
-            for doc_id in pdf["doc_id"]:
-                d = int(doc_id)
-                n_frames = 6 + d % 7
-                scene_len = 2 + d % 3
-                w, h = 8 + d % 9, 8 + d % 5
-                # frames within a scene are pixel-identical BY
-                # CONSTRUCTION (the zero in-scene energy property
-                # depends on it), so encode each scene once and reuse
-                # the bytes (review finding: 2-4x fewer encodes)
-                scene_jpegs: dict[int, bytes] = {}
-                jpegs = []
-                for k in range(n_frames):
-                    scene = k // scene_len
-                    if scene not in scene_jpegs:
-                        px = np.zeros((h, w, 3), dtype=np.uint8)
-                        px[:, :, 0] = np.arange(w, dtype=np.uint8)[
-                            None, :
-                        ]
-                        px[:, :, 1] = (40 * scene) % 256
-                        px[:, :, 2] = d % 256
-                        scene_jpegs[scene] = encode_jpeg(px)
-                    jpegs.append(scene_jpegs[scene])
-                parsed = parse_avi_mjpeg(
-                    encode_avi_mjpeg(jpegs, w, h, fps=12)
-                )
-                pixels = [
-                    decode_jpeg(fr)[2].astype(np.int64)
-                    for fr in parsed["frames"]
-                ]
-                energies = [
-                    int(np.abs(pixels[k] - pixels[k - 1]).sum())
-                    for k in range(1, len(pixels))
-                ]
-                thresh = 8 * w * h
-                keyframes = [0] + [
-                    k
-                    for k in range(1, len(pixels))
-                    if energies[k - 1] > thresh
-                ]
-                expected = [0] + [
-                    k
-                    for k in range(1, n_frames)
-                    if k % scene_len == 0
-                ]
-                in_scene_zero = all(
-                    e == 0
-                    for k, e in enumerate(energies, start=1)
-                    if k % scene_len != 0
-                )
-                ok = (
-                    keyframes == expected
-                    and in_scene_zero
-                    and parsed["width"] == w
-                    and parsed["height"] == h
-                    and len(pixels) == n_frames
-                )
-                rows.append(
-                    {
-                        "doc_id": d,
-                        "n_frames": np.int32(len(pixels)),
-                        "n_keyframes": np.int32(len(keyframes)),
-                        "first_cut": np.int32(
-                            keyframes[1] if len(keyframes) > 1 else -1
-                        ),
-                        "detect_ok": bool(ok),
-                    }
-                )
-            yield pd.DataFrame(rows)
+        ok = (
+            keyframes == expected
+            and in_scene_zero
+            and parsed["width"] == w
+            and parsed["height"] == h
+            and len(pixels) == n_frames
+        )
+        yield (
+            d,
+            len(pixels),
+            len(keyframes),
+            keyframes[1] if len(keyframes) > 1 else -1,
+            bool(ok),
+        )
 
     ids = t(spark, sf_dir, "documents").select("doc_id")
-    return ids.mapInPandas(
+    return map_rows(
+        ids,
         synth_and_detect,
         "doc_id long, n_frames int, n_keyframes int, first_cut int, "
         "detect_ok boolean",
@@ -1688,56 +1488,41 @@ FROM dims
     "dedup_image_phash the way the text gates feed the funnel.",
 )
 def mm_image_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
-    def synth_and_measure(batches):
-        from evolution_data_warehouse_spark.operators.phash import (
-            _decode_pixels,
+    def synth_and_measure(d):
+        leg = d % 5
+        if leg == 0:
+            w, h = 2, 2
+        elif leg == 1:
+            w, h = 40, 4
+        elif leg == 2:
+            w, h = 8, 8
+        else:
+            # height floor 4 so every healthy leg PASSES all
+            # gates (review finding: 3 + d%7 let ~14% of
+            # "healthy" docs fail r_min_dim, muddying the
+            # fixture's defect schedule)
+            w, h = 4 + d % 13, 4 + d % 7
+        px = np.zeros((h, w, 3), dtype=np.uint8)
+        if leg == 2:
+            px[:, :, :] = d % 256  # solid placeholder
+        else:
+            x = (16 * np.arange(w, dtype=np.int64)) % 256
+            y = (16 * np.arange(h, dtype=np.int64)) % 256
+            px[:, :, 0] = x[None, :].astype(np.uint8)
+            px[:, :, 1] = y[:, None].astype(np.uint8)
+            px[:, :, 2] = d % 256
+        enc = (encode_bmp, encode_ppm, encode_png)[d % 3]
+        dec = decode_pixels(enc(px))[3]
+        dh, dw = dec.shape[0], dec.shape[1]
+        rng = max(
+            int(dec[:, :, c].max()) - int(dec[:, :, c].min())
+            for c in range(dec.shape[2])
         )
-
-        for pdf in batches:
-            rows = []
-            for doc_id in pdf["doc_id"]:
-                d = int(doc_id)
-                leg = d % 5
-                if leg == 0:
-                    w, h = 2, 2
-                elif leg == 1:
-                    w, h = 40, 4
-                elif leg == 2:
-                    w, h = 8, 8
-                else:
-                    # height floor 4 so every healthy leg PASSES all
-                    # gates (review finding: 3 + d%7 let ~14% of
-                    # "healthy" docs fail r_min_dim, muddying the
-                    # fixture's defect schedule)
-                    w, h = 4 + d % 13, 4 + d % 7
-                px = np.zeros((h, w, 3), dtype=np.uint8)
-                if leg == 2:
-                    px[:, :, :] = d % 256  # solid placeholder
-                else:
-                    x = (16 * np.arange(w, dtype=np.int64)) % 256
-                    y = (16 * np.arange(h, dtype=np.int64)) % 256
-                    px[:, :, 0] = x[None, :].astype(np.uint8)
-                    px[:, :, 1] = y[:, None].astype(np.uint8)
-                    px[:, :, 2] = d % 256
-                enc = (encode_bmp, encode_ppm, encode_png)[d % 3]
-                dec = _decode_pixels(enc(px))
-                dh, dw = dec.shape[0], dec.shape[1]
-                rng = max(
-                    int(dec[:, :, c].max()) - int(dec[:, :, c].min())
-                    for c in range(dec.shape[2])
-                )
-                rows.append(
-                    {
-                        "doc_id": d,
-                        "width": np.int32(dw),
-                        "height": np.int32(dh),
-                        "px_range": np.int32(rng),
-                    }
-                )
-            yield pd.DataFrame(rows)
+        yield d, dw, dh, rng
 
     ids = t(spark, sf_dir, "documents").select("doc_id")
-    measured = ids.mapInPandas(
+    measured = map_rows(
+        ids,
         synth_and_measure,
         "doc_id long, width int, height int, px_range int",
     )
@@ -1775,8 +1560,6 @@ def _curation_funnel(
     banded pair join); the report then carries an extra
     n_caption_aligned column counting quality survivors that also
     pass alignment."""
-    from evolution_data_warehouse_spark.operators.phash import dhash_pairs
-
     gate = quality if aligned is None else (quality & aligned)
     survivors = measured.filter(gate).select(
         "doc_id", "source", hash_col
@@ -1903,46 +1686,28 @@ _IMG_CURATION_ORACLE = _img_curation_oracle()
     "the gate from the embeddings table with the same integer math.",
 )
 def mm_image_curation(spark: SparkSession, sf_dir: str) -> DataFrame:
-    def synth_and_measure(batches):
-        from evolution_data_warehouse_spark.operators.phash import (
-            _decode_pixels,
-            dhash64,
+    def synth_and_measure(d, source):
+        leg = d % 10
+        if leg == 8:
+            px = np.full((8, 9, 3), d % 256, dtype=np.uint8)
+        elif leg == 9:
+            px = np.zeros((2, 2, 3), dtype=np.uint8)
+            px[:, :, 0] = (16 * np.arange(2))[None, :]
+        else:
+            px = _phash_family_pixels(d)
+        enc = (encode_bmp, encode_ppm, encode_png)[d % 3]
+        dec = decode_pixels(enc(px))[3]
+        rng = max(
+            int(dec[:, :, c].max()) - int(dec[:, :, c].min())
+            for c in range(dec.shape[2])
         )
-
-        for pdf in batches:
-            rows = []
-            for doc_id, source in zip(pdf["doc_id"], pdf["source"]):
-                d = int(doc_id)
-                leg = d % 10
-                if leg == 8:
-                    px = np.full((8, 9, 3), d % 256, dtype=np.uint8)
-                elif leg == 9:
-                    px = np.zeros((2, 2, 3), dtype=np.uint8)
-                    px[:, :, 0] = (16 * np.arange(2))[None, :]
-                else:
-                    px = _phash_family_pixels(d)
-                enc = (encode_bmp, encode_ppm, encode_png)[d % 3]
-                dec = _decode_pixels(enc(px))
-                rng = max(
-                    int(dec[:, :, c].max()) - int(dec[:, :, c].min())
-                    for c in range(dec.shape[2])
-                )
-                rows.append(
-                    {
-                        "doc_id": d,
-                        "source": source,
-                        "width": np.int32(dec.shape[1]),
-                        "height": np.int32(dec.shape[0]),
-                        "px_range": np.int32(rng),
-                        "dhash": dhash64(dec),
-                    }
-                )
-            yield pd.DataFrame(rows)
+        yield d, source, dec.shape[1], dec.shape[0], rng, dhash64(dec)
 
     docs = cpu_repartition(
         t(spark, sf_dir, "documents").select("doc_id", "source")
     )
-    measured = docs.mapInPandas(
+    measured = map_rows(
+        docs,
         synth_and_measure,
         "doc_id long, source string, width int, height int, "
         "px_range int, dhash long",
@@ -2020,37 +1785,26 @@ FROM m
     "mm_image_quality feeds mm_image_curation.",
 )
 def mm_audio_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
-    def synth_and_measure(batches):
-        from evolution_data_warehouse_spark.operators.audio import (
-            decode_wav,
-            encode_wav,
+    def synth_and_measure(d):
+        sig = _audio_defect_signal(d)
+        if sig is None:
+            n = 64 * (13 + d % 7)
+            t_ = np.arange(n, dtype=np.float64)
+            sig = np.floor(
+                6000.0 * np.sin(2.0 * np.pi * t_ / 64.0) + 0.5
+            ).astype(np.int64)
+        out = decode_wav(encode_wav(sig[:, None], 16000, width=2))
+        x = out["samples"][:, 0].astype(np.int64)
+        yield (
+            d,
+            len(x),
+            int((np.abs(x) < 16).sum()),
+            int((np.abs(x) >= 32760).sum()),
         )
 
-        for pdf in batches:
-            rows = []
-            for doc_id in pdf["doc_id"]:
-                d = int(doc_id)
-                sig = _audio_defect_signal(d)
-                if sig is None:
-                    n = 64 * (13 + d % 7)
-                    t_ = np.arange(n, dtype=np.float64)
-                    sig = np.floor(
-                        6000.0 * np.sin(2.0 * np.pi * t_ / 64.0) + 0.5
-                    ).astype(np.int64)
-                out = decode_wav(encode_wav(sig[:, None], 16000, width=2))
-                x = out["samples"][:, 0].astype(np.int64)
-                rows.append(
-                    {
-                        "doc_id": d,
-                        "n_frames": len(x),
-                        "n_silent": int((np.abs(x) < 16).sum()),
-                        "n_clipped": int((np.abs(x) >= 32760).sum()),
-                    }
-                )
-            yield pd.DataFrame(rows)
-
     ids = t(spark, sf_dir, "documents").select("doc_id")
-    m = ids.mapInPandas(
+    m = map_rows(
+        ids,
         synth_and_measure,
         "doc_id long, n_frames long, n_silent long, n_clipped long",
     )
@@ -2115,52 +1869,32 @@ FROM flags GROUP BY source
     "all-pairs, linear in corpus bytes.",
 )
 def mm_audio_curation(spark: SparkSession, sf_dir: str) -> DataFrame:
-    def synth_and_measure(batches):
-        from evolution_data_warehouse_spark.operators.audio import (
-            decode_wav,
-            encode_wav,
+    def synth_and_measure(d, source):
+        sig = _audio_defect_signal(d)
+        if sig is None:
+            sig = afp_family_signal(d)
+        out = decode_wav(encode_wav(sig[:, None], 16000, width=2))
+        x = out["samples"][:, 0].astype(np.int64)
+        n = len(x)
+        # NULL, not 0, for un-fingerprintable clips: 0 is a
+        # legitimate fingerprint (all non-increasing block
+        # energies), and NULL keys can never equi-join, so a
+        # sentinel can never merge unrelated docs even if the
+        # duration gate stops excluding them (r10 ADVICE).
+        yield (
+            d,
+            source,
+            n,
+            int((np.abs(x) < 16).sum()),
+            int((np.abs(x) >= 32760).sum()),
+            audio_fingerprint64(x) if n >= N_BUCKETS else None,
         )
-        from evolution_data_warehouse_spark.operators.audio_fp import (
-            N_BUCKETS,
-            audio_fingerprint64,
-        )
-
-        for pdf in batches:
-            rows = []
-            afps: list[int | None] = []
-            for doc_id, source in zip(pdf["doc_id"], pdf["source"]):
-                d = int(doc_id)
-                sig = _audio_defect_signal(d)
-                if sig is None:
-                    sig = afp_family_signal(d)
-                out = decode_wav(encode_wav(sig[:, None], 16000, width=2))
-                x = out["samples"][:, 0].astype(np.int64)
-                n = len(x)
-                rows.append(
-                    {
-                        "doc_id": d,
-                        "source": source,
-                        "n_frames": n,
-                        "n_silent": int((np.abs(x) < 16).sum()),
-                        "n_clipped": int((np.abs(x) >= 32760).sum()),
-                    }
-                )
-                # NULL, not 0, for un-fingerprintable clips: 0 is a
-                # legitimate fingerprint (all non-increasing block
-                # energies), and NULL keys can never equi-join, so a
-                # sentinel can never merge unrelated docs even if the
-                # duration gate stops excluding them (r10 ADVICE).
-                afps.append(audio_fingerprint64(x) if n >= N_BUCKETS else None)
-            out_pdf = pd.DataFrame(rows)
-            # Explicit nullable Int64: a None in a plain int column
-            # would coerce to float64 and corrupt 64-bit fingerprints.
-            out_pdf["afp"] = pd.array(afps, dtype="Int64")
-            yield out_pdf
 
     docs = cpu_repartition(
         t(spark, sf_dir, "documents").select("doc_id", "source")
     )
-    measured = docs.mapInPandas(
+    measured = map_rows(
+        docs,
         synth_and_measure,
         "doc_id long, source string, n_frames long, n_silent long, "
         "n_clipped long, afp long",
@@ -2223,87 +1957,70 @@ FROM flags GROUP BY source
     "corpus bytes.",
 )
 def mm_video_curation(spark: SparkSession, sf_dir: str) -> DataFrame:
-    def synth_and_measure(batches):
-        from evolution_data_warehouse_spark.operators.jpeg import (
-            decode_jpeg,
-            encode_jpeg,
-        )
-        from evolution_data_warehouse_spark.operators.phash import (
-            dhash64,
-        )
-        from evolution_data_warehouse_spark.operators.video import (
-            encode_avi_mjpeg,
-            parse_avi_mjpeg,
-        )
-
-        def family_frame(pat: int, w: int, h: int, shift: int):
-            # vectorized splitmix64 (numpy uint64 wraps mod 2^64 like
-            # the scalar mask) — the python double loop here was the
-            # sf1 leg's entire cost (~48M scalar mix calls)
-            with np.errstate(over="ignore"):
-                v = np.uint64((pat * 10007) & ((1 << 64) - 1)) + np.arange(
-                    h * w, dtype=np.uint64
-                )
-                v = v * np.uint64(0x9E3779B97F4A7C15)
-                v ^= v >> np.uint64(29)
-                v = v * np.uint64(0xBF58476D1CE4E5B9)
-                v ^= v >> np.uint64(32)
-            gray = ((v % np.uint64(200)).astype(np.int64) + shift) % 256
-            px = np.repeat(
-                gray.reshape(h, w).astype(np.uint8)[:, :, None], 3, axis=2
+    def family_frame(pat: int, w: int, h: int, shift: int):
+        # vectorized splitmix64 (numpy uint64 wraps mod 2^64 like
+        # the scalar mask) — the python double loop here was the
+        # sf1 leg's entire cost (~48M scalar mix calls)
+        with np.errstate(over="ignore"):
+            v = np.uint64((pat * 10007) & ((1 << 64) - 1)) + np.arange(
+                h * w, dtype=np.uint64
             )
-            return px
+            v = v * np.uint64(0x9E3779B97F4A7C15)
+            v ^= v >> np.uint64(29)
+            v = v * np.uint64(0xBF58476D1CE4E5B9)
+            v ^= v >> np.uint64(32)
+        gray = ((v % np.uint64(200)).astype(np.int64) + shift) % 256
+        px = np.repeat(
+            gray.reshape(h, w).astype(np.uint8)[:, :, None], 3, axis=2
+        )
+        return px
 
-        for pdf in batches:
-            rows = []
-            # family siblings re-encode the SAME frames (same pattern,
-            # dims, shift) — memoize per batch so each distinct frame
-            # is rendered + JPEG-encoded once, not once per member
-            frame_cache: dict[tuple, bytes] = {}
+    # family siblings re-encode the SAME frames (same pattern, dims,
+    # shift) — memoize per task so each distinct frame is rendered +
+    # JPEG-encoded once, not once per member; cleared when it reaches
+    # roughly one Arrow batch's worth of frames, so memory stays bounded
+    frame_cache: dict[tuple, bytes] = {}
 
-            def cached_jpeg(pat, w, h, shift):
-                key = (pat, w, h, shift)
-                if key not in frame_cache:
-                    frame_cache[key] = encode_jpeg(
-                        family_frame(pat, w, h, shift)
-                    )
-                return frame_cache[key]
+    def cached_jpeg(pat, w, h, shift):
+        key = (pat, w, h, shift)
+        if key not in frame_cache:
+            if len(frame_cache) >= 1 << 14:
+                frame_cache.clear()
+            frame_cache[key] = encode_jpeg(family_frame(pat, w, h, shift))
+        return frame_cache[key]
 
-            for doc_id, source in zip(pdf["doc_id"], pdf["source"]):
-                d = int(doc_id)
-                fam = d // 10
-                leg = d % 10
-                pat = fam + 1_000_003 if leg == 5 else fam
-                if leg == 9:
-                    w, h, n_frames = 2, 2, 3
-                else:
-                    w = 9 + fam % 8
-                    h = 8 + fam % 5
-                    n_frames = 1 if leg == 8 else 2 + d % 7
-                jpegs = [
-                    cached_jpeg(pat, w, h, 16 * k)
-                    for k in range(n_frames)
-                ]
-                parsed = parse_avi_mjpeg(
-                    encode_avi_mjpeg(jpegs, w, h, fps=12)
-                )
-                key_px = decode_jpeg(parsed["frames"][0])[2]
-                rows.append(
-                    {
-                        "doc_id": d,
-                        "source": source,
-                        "n_frames": len(parsed["frames"]),
-                        "width": np.int32(parsed["width"]),
-                        "height": np.int32(parsed["height"]),
-                        "dhash": dhash64(key_px),
-                    }
-                )
-            yield pd.DataFrame(rows)
+    def synth_and_measure(d, source):
+        fam = d // 10
+        leg = d % 10
+        pat = fam + 1_000_003 if leg == 5 else fam
+        if leg == 9:
+            w, h, n_frames = 2, 2, 3
+        else:
+            w = 9 + fam % 8
+            h = 8 + fam % 5
+            n_frames = 1 if leg == 8 else 2 + d % 7
+        jpegs = [
+            cached_jpeg(pat, w, h, 16 * k)
+            for k in range(n_frames)
+        ]
+        parsed = parse_avi_mjpeg(
+            encode_avi_mjpeg(jpegs, w, h, fps=12)
+        )
+        key_px = decode_jpeg(parsed["frames"][0])[2]
+        yield (
+            d,
+            source,
+            len(parsed["frames"]),
+            parsed["width"],
+            parsed["height"],
+            dhash64(key_px),
+        )
 
     docs = cpu_repartition(
         t(spark, sf_dir, "documents").select("doc_id", "source")
     )
-    measured = docs.mapInPandas(
+    measured = map_rows(
+        docs,
         synth_and_measure,
         "doc_id long, source string, n_frames long, width int, "
         "height int, dhash long",
@@ -2395,8 +2112,6 @@ GROUP BY d.max_dist
     "fence in the sweep.",
 )
 def mm_phash_threshold_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from evolution_data_warehouse_spark.operators.phash import dhash_pairs
-
     hashes = image_dhashes(spark, sf_dir)
     pairs = dhash_pairs(hashes, max_dist=max(_PHS_DISTS)).localCheckpoint(
         eager=True

@@ -12,13 +12,13 @@ import shutil
 import tarfile
 import tempfile
 from hashlib import md5
-from typing import Iterator
 
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from evolution_data_warehouse_spark.operators.arrow_map import map_rows
 from evolution_data_warehouse_spark.operators.datapipe import hash_bucket
 from evolution_data_warehouse_spark.operators.dedup import (
     content_hash64,
@@ -52,6 +52,7 @@ from evolution_data_warehouse_spark.queries.common import (
 )
 from evolution_data_warehouse_spark.queries.datapipe import bucket_sql
 from evolution_data_warehouse_spark.queries.dedup import guarded_bands_sql, MH_SQL
+from evolution_data_warehouse_spark.sources.charset import decode_payload
 from evolution_data_warehouse_spark.sources.external import (
     jdbc_available,
     list_blobs,
@@ -65,6 +66,16 @@ from evolution_data_warehouse_spark.sources.pydatasource import (
     register_synth_source,
     SYNTH_MOD,
     SYNTH_MULT,
+)
+from evolution_data_warehouse_spark.sources.sitemap import (
+    build_sitemap,
+    build_sitemap_index,
+    parse_sitemap,
+)
+from evolution_data_warehouse_spark.sources.warc import (
+    build_warc,
+    parse_warc,
+    payload_digest,
 )
 
 
@@ -581,43 +592,30 @@ FROM documents
     "NULL-safe via COALESCE.",
 )
 def src_warc_records(spark: SparkSession, sf_dir: str) -> DataFrame:
-    def mux_and_parse(batches):
-        from evolution_data_warehouse_spark.sources.warc import (
-            build_warc,
-            parse_warc,
+    def mux_and_parse(doc_id, text):
+        payload = ("" if text is None else str(text)).encode("utf-8")
+        uri = f"http://corpus.local/doc/{doc_id}"
+        data = build_warc(
+            [
+                ("warcinfo", "", b"software: engine\r\n"),
+                ("response", uri, payload),
+            ],
+            per_record_gzip=True,
+        )
+        recs = parse_warc(data)
+        resp = recs[-1]
+        yield (
+            doc_id,
+            len(recs),
+            resp["type"],
+            resp["uri"],
+            resp["content_length"],
+            resp["payload"] == payload,
         )
 
-        for pdf in batches:
-            rows = []
-            for doc_id, text in zip(pdf["doc_id"], pdf["text"]):
-                d = int(doc_id)
-                payload = ("" if text is None else str(text)).encode(
-                    "utf-8"
-                )
-                uri = f"http://corpus.local/doc/{d}"
-                data = build_warc(
-                    [
-                        ("warcinfo", "", b"software: engine\r\n"),
-                        ("response", uri, payload),
-                    ],
-                    per_record_gzip=True,
-                )
-                recs = parse_warc(data)
-                resp = recs[-1]
-                rows.append(
-                    {
-                        "doc_id": d,
-                        "n_records": len(recs),
-                        "rec_type": resp["type"],
-                        "uri": resp["uri"],
-                        "content_len": resp["content_length"],
-                        "payload_match": resp["payload"] == payload,
-                    }
-                )
-            yield pd.DataFrame(rows)
-
     docs = t(spark, sf_dir, "documents").select("doc_id", "text")
-    return docs.mapInPandas(
+    return map_rows(
+        docs,
         mux_and_parse,
         "doc_id long, n_records int, rec_type string, uri string, "
         "content_len long, payload_match boolean",
@@ -634,55 +632,30 @@ _HTML_PREFIX = '<div class="post"><p>'
 _HTML_SUFFIX = "</p><br/>&amp; <b>more</b></div>"
 
 
-def _warc_html_batch():
-    """mapInPandas fn: wrap each document in deterministic HTML, mux it
+def _warc_html(doc_id, text, lang, source):
+    """map_rows fn: wrap each document in deterministic HTML, mux it
     into a Common Crawl-layout WARC (warcinfo + response, each record
     its own gzip member), parse the archive back, and emit the text the
     PARSER recovered — downstream gates consume what came out of the
     WARC path, not the original column, so the whole ingestion stack is
     on the hook for every row."""
-
-    def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from evolution_data_warehouse_spark.sources.warc import (
-            build_warc,
-            parse_warc,
-        )
-
-        for pdf in batches:
-            rows = []
-            for doc_id, text, lang, source in zip(
-                pdf["doc_id"], pdf["text"], pdf["lang"], pdf["source"]
-            ):
-                d = int(doc_id)
-                body = "" if text is None else str(text)
-                html = f"{_HTML_PREFIX}{body}{_HTML_SUFFIX}"
-                payload = html.encode("utf-8")
-                data = build_warc(
-                    [
-                        ("warcinfo", "", b"software: engine\r\n"),
-                        ("response", f"http://corpus.local/doc/{d}", payload),
-                    ],
-                    per_record_gzip=True,
-                )
-                recs = parse_warc(data)
-                resp = recs[-1]
-                ok = (
-                    len(recs) == 2
-                    and resp["type"] == "response"
-                    and resp["payload"] == payload
-                )
-                rows.append(
-                    {
-                        "doc_id": d,
-                        "lang": lang,
-                        "source": source,
-                        "html": resp["payload"].decode("utf-8"),
-                        "warc_ok": bool(ok),
-                    }
-                )
-            yield pd.DataFrame(rows)
-
-    return fn
+    body = "" if text is None else str(text)
+    payload = f"{_HTML_PREFIX}{body}{_HTML_SUFFIX}".encode("utf-8")
+    data = build_warc(
+        [
+            ("warcinfo", "", b"software: engine\r\n"),
+            ("response", f"http://corpus.local/doc/{doc_id}", payload),
+        ],
+        per_record_gzip=True,
+    )
+    recs = parse_warc(data)
+    resp = recs[-1]
+    ok = (
+        len(recs) == 2
+        and resp["type"] == "response"
+        and resp["payload"] == payload
+    )
+    yield doc_id, lang, source, resp["payload"].decode("utf-8"), ok
 
 
 #: the funnel's Gopher word-count floor — the corpus-tuned bound the
@@ -841,8 +814,9 @@ def web_corpus_curation(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = t(spark, sf_dir, "documents").select(
         "doc_id", "text", "lang", "source"
     )
-    parsed = docs.mapInPandas(
-        _warc_html_batch(),
+    parsed = map_rows(
+        docs,
+        _warc_html,
         "doc_id long, lang string, source string, html string, "
         "warc_ok boolean",
     )
@@ -959,48 +933,32 @@ FROM documents
     "narrow mapInPandas pass, zero shuffle.",
 )
 def web_charset_detect(spark: SparkSession, sf_dir: str) -> DataFrame:
-    def synth_and_decode(batches):
-        from evolution_data_warehouse_spark.sources.charset import (
-            decode_payload,
-        )
-
-        for pdf in batches:
-            rows = []
-            for doc_id, text in zip(pdf["doc_id"], pdf["text"]):
-                d = int(doc_id)
-                s = "" if text is None else str(text)
-                leg = d % 4
-                if leg == 0:
-                    payload, expect = s.encode("utf-8"), s
-                elif leg == 1:
-                    payload = b"\xef\xbb\xbf" + s.encode("utf-8")
-                    expect = s
-                elif leg == 2:
-                    payload = b"\xff\xfe" + s.encode("utf-16-le")
-                    expect = s
-                else:
-                    # meta-declared legacy page with a genuine non-UTF-8
-                    # byte (0xE9 = e-acute in cp1252) so the UTF-8
-                    # validator could never claim it
-                    expect = (
-                        f'<meta charset="windows-1252"><p>café '
-                        f"page {d} body</p>"
-                    )
-                    payload = expect.encode("windows-1252")
-                charset, method, decoded = decode_payload(payload)
-                rows.append(
-                    {
-                        "doc_id": d,
-                        "charset": charset,
-                        "method": method,
-                        "n_chars": len(decoded),
-                        "text_match": decoded == expect,
-                    }
-                )
-            yield pd.DataFrame(rows)
+    def synth_and_decode(d, text):
+        s = "" if text is None else str(text)
+        leg = d % 4
+        if leg == 0:
+            payload, expect = s.encode("utf-8"), s
+        elif leg == 1:
+            payload = b"\xef\xbb\xbf" + s.encode("utf-8")
+            expect = s
+        elif leg == 2:
+            payload = b"\xff\xfe" + s.encode("utf-16-le")
+            expect = s
+        else:
+            # meta-declared legacy page with a genuine non-UTF-8
+            # byte (0xE9 = e-acute in cp1252) so the UTF-8
+            # validator could never claim it
+            expect = (
+                f'<meta charset="windows-1252"><p>café '
+                f"page {d} body</p>"
+            )
+            payload = expect.encode("windows-1252")
+        charset, method, decoded = decode_payload(payload)
+        yield d, charset, method, len(decoded), decoded == expect
 
     docs = t(spark, sf_dir, "documents").select("doc_id", "text")
-    return docs.mapInPandas(
+    return map_rows(
+        docs,
         synth_and_decode,
         "doc_id long, charset string, method string, n_chars long, "
         "text_match boolean",
@@ -1049,65 +1007,51 @@ FROM documents
     "at host granularity with no shuffle.",
 )
 def src_sitemap_urls(spark: SparkSession, sf_dir: str) -> DataFrame:
-    def mux_and_parse(batches):
-        from evolution_data_warehouse_spark.sources.sitemap import (
-            build_sitemap,
-            build_sitemap_index,
-            parse_sitemap,
+    def mux_and_parse(d):
+        host = f"http://h{d % 5}.corpus.local"
+        if d % 10 == 0:
+            built = [
+                {
+                    "loc": f"{host}/sitemap/{d}/{i}.xml",
+                    "lastmod": f"2026-0{1 + i}-01",
+                }
+                for i in range(2)
+            ]
+            data = build_sitemap_index(built)
+        else:
+            n = 1 + d % 7
+            built = [
+                {
+                    "loc": f"{host}/page/{d}/{i}",
+                    "lastmod": (
+                        f"2026-0{1 + i % 9}-15"
+                        if i % 2 == 0
+                        else None
+                    ),
+                    "priority": "0.5" if i == 0 else None,
+                }
+                for i in range(n)
+            ]
+            data = build_sitemap(built)
+        parsed = parse_sitemap(data)
+        entries = parsed["entries"]
+        ok = len(entries) == len(built) and all(
+            e["loc"] == b["loc"]
+            and e.get("lastmod") == b.get("lastmod")
+            for e, b in zip(entries, built)
+        )
+        yield (
+            d,
+            parsed["kind"],
+            len(entries),
+            entries[0]["loc"],
+            sum(1 for e in entries if e["lastmod"]),
+            ok,
         )
 
-        for pdf in batches:
-            rows = []
-            for doc_id in pdf["doc_id"]:
-                d = int(doc_id)
-                host = f"http://h{d % 5}.corpus.local"
-                if d % 10 == 0:
-                    built = [
-                        {
-                            "loc": f"{host}/sitemap/{d}/{i}.xml",
-                            "lastmod": f"2026-0{1 + i}-01",
-                        }
-                        for i in range(2)
-                    ]
-                    data = build_sitemap_index(built)
-                else:
-                    n = 1 + d % 7
-                    built = [
-                        {
-                            "loc": f"{host}/page/{d}/{i}",
-                            "lastmod": (
-                                f"2026-0{1 + i % 9}-15"
-                                if i % 2 == 0
-                                else None
-                            ),
-                            "priority": "0.5" if i == 0 else None,
-                        }
-                        for i in range(n)
-                    ]
-                    data = build_sitemap(built)
-                parsed = parse_sitemap(data)
-                entries = parsed["entries"]
-                ok = len(entries) == len(built) and all(
-                    e["loc"] == b["loc"]
-                    and e.get("lastmod") == b.get("lastmod")
-                    for e, b in zip(entries, built)
-                )
-                rows.append(
-                    {
-                        "doc_id": d,
-                        "kind": parsed["kind"],
-                        "n_entries": len(entries),
-                        "first_loc": entries[0]["loc"],
-                        "n_with_lastmod": sum(
-                            1 for e in entries if e["lastmod"]
-                        ),
-                        "roundtrip_ok": bool(ok),
-                    }
-                )
-            yield pd.DataFrame(rows)
-
     ids = t(spark, sf_dir, "documents").select("doc_id")
-    return ids.mapInPandas(
+    return map_rows(
+        ids,
         mux_and_parse,
         "doc_id long, kind string, n_entries long, first_loc string, "
         "n_with_lastmod long, roundtrip_ok boolean",
@@ -1409,82 +1353,64 @@ FROM documents
     "One narrow mapInPandas stage, zero shuffle.",
 )
 def src_warc_revisit(spark: SparkSession, sf_dir: str) -> DataFrame:
-    def synth_and_parse(batches):
-        from evolution_data_warehouse_spark.sources.warc import (
-            build_warc,
-            parse_warc,
-            payload_digest,
-        )
-
-        for pdf in batches:
-            rows = []
-            for doc_id, text in zip(pdf["doc_id"], pdf["text"]):
-                d = int(doc_id)
-                body = ("" if text is None else str(text)).encode("utf-8")
-                uri = f"http://corpus.local/doc/{d}"
-                dig1 = payload_digest(body)
-                recs = [
-                    (
-                        "response",
-                        uri,
-                        body,
-                        {"WARC-Payload-Digest": dig1},
-                    )
-                ]
-                if d % 3 == 0:
-                    body2 = body + b" v2"
-                    recs.append(
-                        (
-                            "response",
-                            uri,
-                            body2,
-                            {"WARC-Payload-Digest": payload_digest(body2)},
-                        )
-                    )
-                else:
-                    recs.append(
-                        (
-                            "revisit",
-                            uri,
-                            b"",
-                            {
-                                "WARC-Payload-Digest": dig1,
-                                "WARC-Profile": _REVISIT_PROFILE,
-                                "WARC-Refers-To-Target-URI": uri,
-                            },
-                        )
-                    )
-                parsed = parse_warc(build_warc(recs, per_record_gzip=True))
-                r1, r2 = parsed[0], parsed[1]
-                h2 = r2["headers"]
-                if r2["type"] == "revisit":
-                    digest_ok = (
-                        h2.get("warc-payload-digest")
-                        == payload_digest(r1["payload"])
-                        and r2["payload"] == b""
-                        and h2.get("warc-profile") == _REVISIT_PROFILE
-                    )
-                    refers_ok = h2.get("warc-refers-to-target-uri") == uri
-                else:
-                    digest_ok = (
-                        h2.get("warc-payload-digest")
-                        == payload_digest(r2["payload"])
-                        and h2.get("warc-payload-digest") != dig1
-                    )
-                    refers_ok = r2["uri"] == uri
-                rows.append(
-                    {
-                        "doc_id": d,
-                        "rec2_type": r2["type"],
-                        "n_bytes_2": len(r2["payload"]),
-                        "digest_ok": bool(digest_ok),
-                        "refers_ok": bool(refers_ok),
-                    }
+    def synth_and_parse(d, text):
+        body = ("" if text is None else str(text)).encode("utf-8")
+        uri = f"http://corpus.local/doc/{d}"
+        dig1 = payload_digest(body)
+        recs = [
+            (
+                "response",
+                uri,
+                body,
+                {"WARC-Payload-Digest": dig1},
+            )
+        ]
+        if d % 3 == 0:
+            body2 = body + b" v2"
+            recs.append(
+                (
+                    "response",
+                    uri,
+                    body2,
+                    {"WARC-Payload-Digest": payload_digest(body2)},
                 )
-            yield pd.DataFrame(rows)
+            )
+        else:
+            recs.append(
+                (
+                    "revisit",
+                    uri,
+                    b"",
+                    {
+                        "WARC-Payload-Digest": dig1,
+                        "WARC-Profile": _REVISIT_PROFILE,
+                        "WARC-Refers-To-Target-URI": uri,
+                    },
+                )
+            )
+        parsed = parse_warc(build_warc(recs, per_record_gzip=True))
+        r1, r2 = parsed[0], parsed[1]
+        h2 = r2["headers"]
+        if r2["type"] == "revisit":
+            digest_ok = (
+                h2.get("warc-payload-digest")
+                == payload_digest(r1["payload"])
+                and r2["payload"] == b""
+                and h2.get("warc-profile") == _REVISIT_PROFILE
+            )
+            refers_ok = h2.get("warc-refers-to-target-uri") == uri
+        else:
+            digest_ok = (
+                h2.get("warc-payload-digest")
+                == payload_digest(r2["payload"])
+                and h2.get("warc-payload-digest") != dig1
+            )
+            refers_ok = r2["uri"] == uri
+        yield d, r2["type"], len(r2["payload"]), digest_ok, refers_ok
 
     docs = t(spark, sf_dir, "documents").select("doc_id", "text")
-    return docs.mapInPandas(
+    return map_rows(
+        docs,
         synth_and_parse,
         "doc_id long, rec2_type string, n_bytes_2 long, "
         "digest_ok boolean, refers_ok boolean",
@@ -1580,37 +1506,25 @@ FROM frontier f LEFT JOIN m ON f.url = m.url
 )
 def web_frontier_build(spark: SparkSession, sf_dir: str) -> DataFrame:
 
-    def discover(batches):
-        from evolution_data_warehouse_spark.sources.sitemap import (
-            build_sitemap,
-            parse_sitemap,
-        )
-
-        for pdf in batches:
-            doc_ids: list[int] = []
-            locs: list[str] = []
-            for doc_id in pdf["doc_id"]:
-                d = int(doc_id)
-                if d % 10 == 0:
-                    continue  # index shards: src_sitemap_urls' scope
-                g = d % 20
-                built = [
-                    {
-                        "loc": (
-                            f"HTTP://WWW.H{d % 5}.Corpus.Local:80"
-                            + _FRONTIER_PATHS[(g + i) % 4].format(g=g, i=i)
-                            + "?utm_source=sitemap"
-                        )
-                    }
-                    for i in range(1 + d % 7)
-                ]
-                for e in parse_sitemap(build_sitemap(built))["entries"]:
-                    doc_ids.append(d)
-                    locs.append(e["loc"])
-            yield pd.DataFrame({"doc_id": doc_ids, "loc": locs})
+    def discover(d):
+        if d % 10 == 0:
+            return  # index shards: src_sitemap_urls' scope
+        g = d % 20
+        built = [
+            {
+                "loc": (
+                    f"HTTP://WWW.H{d % 5}.Corpus.Local:80"
+                    + _FRONTIER_PATHS[(g + i) % 4].format(g=g, i=i)
+                    + "?utm_source=sitemap"
+                )
+            }
+            for i in range(1 + d % 7)
+        ]
+        for e in parse_sitemap(build_sitemap(built))["entries"]:
+            yield d, e["loc"]
 
     ids = t(spark, sf_dir, "documents").select("doc_id")
-    discovered = ids.mapInPandas(discover, "doc_id long, loc string")
+    discovered = map_rows(ids, discover, "doc_id long, loc string")
     host = F.regexp_replace(
         F.regexp_replace(
             F.lower(F.regexp_extract("loc", r"^[A-Za-z]+://([^/?#]+)", 1)),
@@ -2219,51 +2133,41 @@ def snk_webdataset_shards(spark: SparkSession, sf_dir: str) -> DataFrame:
         .applyInPandas(_write_shard, "shard bigint, path string, n bigint")
     )
 
-    def _read_shards(batches):
-        for pdf in batches:
-            out = {
-                "shard": [],
-                "pos": [],
-                "doc_id": [],
-                "octet_len": [],
-                "body_h": [],
-                "bad_rk": [],
-            }
-            for shard, path in zip(pdf["shard"], pdf["path"]):
-                with tarfile.open(path, "r") as tar:
-                    pos = 0
-                    pending: dict[str, bytes] = {}
-                    for member in tar:
-                        key, suffix = os.path.splitext(member.name)
-                        payload = tar.extractfile(member).read()
-                        pending[suffix] = payload
-                        if len(pending) < 2:
-                            continue
-                        # one full sample (.txt + .json) collected
-                        pos += 1
-                        body = pending[".txt"]
-                        meta = json.loads(pending[".json"])
-                        pending = {}
-                        doc_id = int(key)
-                        expect_rk = int(
-                            md5(f"wds:{doc_id}".encode()).hexdigest()[:15],
-                            16,
-                        )
-                        bad = (
-                            int(meta["doc_id"]) != doc_id
-                            or int(meta["rk"]) != expect_rk
-                        )
-                        out["shard"].append(int(shard))
-                        out["pos"].append(pos)
-                        out["doc_id"].append(doc_id)
-                        out["octet_len"].append(len(body))
-                        out["body_h"].append(
-                            int(md5(body).hexdigest()[:15], 16) % _WDS_MOD
-                        )
-                        out["bad_rk"].append(1 if bad else 0)
-            yield pd.DataFrame(out)
+    def _read_shards(shard, path, _n):
+        with tarfile.open(path, "r") as tar:
+            pos = 0
+            pending: dict[str, bytes] = {}
+            for member in tar:
+                key, suffix = os.path.splitext(member.name)
+                payload = tar.extractfile(member).read()
+                pending[suffix] = payload
+                if len(pending) < 2:
+                    continue
+                # one full sample (.txt + .json) collected
+                pos += 1
+                body = pending[".txt"]
+                meta = json.loads(pending[".json"])
+                pending = {}
+                doc_id = int(key)
+                expect_rk = int(
+                    md5(f"wds:{doc_id}".encode()).hexdigest()[:15],
+                    16,
+                )
+                bad = (
+                    int(meta["doc_id"]) != doc_id
+                    or int(meta["rk"]) != expect_rk
+                )
+                yield (
+                    shard,
+                    pos,
+                    doc_id,
+                    len(body),
+                    int(md5(body).hexdigest()[:15], 16) % _WDS_MOD,
+                    1 if bad else 0,
+                )
 
-    samples = manifest.repartition(_WDS_SHARDS).mapInPandas(
+    samples = map_rows(
+        manifest.repartition(_WDS_SHARDS),
         _read_shards,
         "shard bigint, pos bigint, doc_id bigint, octet_len bigint, "
         "body_h bigint, bad_rk bigint",

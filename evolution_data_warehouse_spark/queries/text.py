@@ -10,11 +10,12 @@ queries/common.py).
 from __future__ import annotations
 
 from collections import Counter
+from itertools import repeat
 
-import pandas as pd
 from pyspark.sql import Column, DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 
+from evolution_data_warehouse_spark.operators.arrow_map import map_rows
 from evolution_data_warehouse_spark.operators.bpe import (
     bpe_encode_ids,
     bpe_segment_expr,
@@ -32,7 +33,7 @@ from evolution_data_warehouse_spark.operators.gopher import (
     gopher_flags_sql,
     gopher_metrics,
     gopher_metrics_sql,
-    repetition_ngram_stats_batch,
+    repetition_ngram_stats,
     TOP_NGRAM_MAX_PCT,
 )
 from evolution_data_warehouse_spark.operators.textops import (
@@ -445,6 +446,30 @@ GROUP BY doc_id
 )
 
 
+def _bigram_counts(doc_id, text):
+    if text is None:  # NULL text = no bigrams
+        return ()
+    toks = text.split(" ")
+    c = Counter(map(" ".join, zip(toks, toks[1:])))
+    return zip(repeat(doc_id), c.keys(), c.values())
+
+
+def doc_bigram_counts(docs: DataFrame) -> DataFrame:
+    """(doc_id, bigram, k) from (doc_id, text) in ONE narrow map_rows
+    pass: a doc's bigram counts never cross rows, so Counter per doc
+    replaces BOTH the interpreted higher-order bigram transform
+    (guide §4.2 — the r15 profile put 53.4 s of executorRunTime in
+    that scan stage at sf1) AND the (doc_id, bigram) exchange + final
+    aggregate behind it (§2.4 — the counts arrive complete; r14's
+    "spread collapses map-side aggregation" objection dissolves with
+    the aggregation). Strings are exact (JVM lower, single-space
+    split, " ".join == concat_ws), counts are integers: the relation
+    is bit-identical to the old explode + groupBy (exceptAll-proven
+    at sf1, oracle green). Idle sf1 full-query A/B 8.48 -> 7.09 s —
+    a 16% win; the remaining cost is the downstream model joins."""
+    return map_rows(docs, _bigram_counts, "doc_id bigint, bigram string, k bigint")
+
+
 @register(
     "text_lm_score",
     _LM_SCORE_ORACLE,
@@ -462,53 +487,11 @@ GROUP BY doc_id
     "identical to the oracle's per-instance sum.",
 )
 def text_lm_score(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # (doc, bigram, k) in ONE narrow Arrow-batched mapInPandas pass:
-    # a doc's bigram counts never cross rows, so Counter per doc
-    # replaces BOTH the interpreted higher-order bigram transform
-    # (guide §4.2 — the r15 profile put 53.4 s of executorRunTime in
-    # that scan stage at sf1) AND the (doc_id, bigram) exchange + final
-    # aggregate behind it (§2.4 — the counts arrive complete; r14's
-    # "spread collapses map-side aggregation" objection dissolves with
-    # the aggregation). Strings are exact (JVM lower, single-space
-    # split, " ".join == concat_ws), counts are integers: the relation
-    # is bit-identical to the old explode + groupBy (exceptAll-proven
-    # at sf1, oracle green). Idle sf1 full-query A/B 8.48 -> 7.09 s —
-    # a 16% win; the remaining cost is the downstream model joins.
-
-    def bigram_counts(batches):
-        for pdf in batches:
-            ids, bgs, ks = [], [], []
-            for doc_id, text in zip(
-                pdf["doc_id"].values, pdf["text"].values
-            ):
-                if text is None:  # NULL text = no bigrams, as before
-                    continue
-                toks = text.split(" ")
-                if len(toks) < 2:
-                    continue
-                c = Counter(map(" ".join, zip(toks, toks[1:])))
-                ids.extend([doc_id] * len(c))
-                bgs.extend(c.keys())
-                ks.extend(c.values())
-            if ids:
-                yield pd.DataFrame(
-                    {"doc_id": ids, "bigram": bgs, "k": ks}
-                )
-            else:
-                yield pd.DataFrame(
-                    {
-                        "doc_id": pd.Series(dtype="int64"),
-                        "bigram": pd.Series(dtype="object"),
-                        "k": pd.Series(dtype="int64"),
-                    }
-                )
-
-    bgc = (
-        t(spark, sf_dir, "documents")
-        .select("doc_id", F.lower(F.col("text")).alias("text"))
-        .mapInPandas(bigram_counts, "doc_id bigint, bigram string, k bigint")
-        .localCheckpoint(eager=True)
-    )
+    bgc = doc_bigram_counts(
+        t(spark, sf_dir, "documents").select(
+            "doc_id", F.lower(F.col("text")).alias("text")
+        )
+    ).localCheckpoint(eager=True)
     counts = bgc.groupBy("bigram").agg(F.sum("k").alias("cnt"))
     prefixes = counts.groupBy(
         F.split(F.col("bigram"), " ").getItem(0).alias("prefix")
@@ -1755,7 +1738,7 @@ FROM tot t JOIN wide w ON t.doc_id = w.doc_id
     "counts are taken inside ONE narrow Arrow-batched mapInPandas "
     "pass (collections.Counter over exact token tuples — integer "
     "math only, bit-identical to the oracle; operators/gopher.py::"
-    "repetition_ngram_stats_batch). History: explode + two hash "
+    "repetition_ngram_stats). History: explode + two hash "
     "aggregates shuffled ~22M rows (75.8 s sf1, r11); the r11-r14 "
     "JVM sort+RLE F.aggregate form removed the shuffle but Spark "
     "evaluates higher-order functions interpreted per element, which "
@@ -1769,23 +1752,22 @@ FROM tot t JOIN wide w ON t.doc_id = w.doc_id
 def text_repetition_gopher(spark: SparkSession, sf_dir: str) -> DataFrame:
     top_ns = tuple(sorted(TOP_NGRAM_MAX_PCT))
     dup_ns = tuple(sorted(DUP_NGRAM_MAX_PCT))
-    schema = ", ".join(
-        ["doc_id bigint", "total_chars bigint"]
-        + [f"top_cov_{n} bigint" for n in top_ns]
-        + [f"dup_chars_{n} bigint" for n in dup_ns]
-    )
     # Lower-casing stays JVM-side so tokenization semantics are
     # byte-identical to the oracle's lower() on any input (the Python
     # pass only splits on single spaces and counts). Docs with fewer
     # than 2 tokens are dropped inside the batch fn — absent from the
     # oracle's inner join, same as before. The per-doc counting is
     # CPU-bound, so the slim projection repartitions to core width.
-    wide = cpu_repartition(
-        t(spark, sf_dir, "documents").select(
-            "doc_id",
-            F.lower(F.coalesce(F.col("text"), F.lit(""))).alias("text"),
-        )
-    ).mapInPandas(repetition_ngram_stats_batch(top_ns, dup_ns), schema)
+    wide = repetition_ngram_stats(
+        cpu_repartition(
+            t(spark, sf_dir, "documents").select(
+                "doc_id",
+                F.lower(F.coalesce(F.col("text"), F.lit(""))).alias("text"),
+            )
+        ),
+        top_ns,
+        dup_ns,
+    )
     flags = [
         (100 * F.col(f"top_cov_{n}") <= pct * F.col("total_chars")).alias(
             f"r_top_{n}"

@@ -11,10 +11,7 @@ from evolution_data_warehouse_spark.operators.asof import (
     asof_join,
     asof_join_pandas,
 )
-from evolution_data_warehouse_spark.operators.multimodal import (
-    decode_documents,
-    decode_image_batch,
-)
+from evolution_data_warehouse_spark.operators.multimodal import decode_documents
 from evolution_data_warehouse_spark.operators.security import (
     build_agencies,
     build_employees,
@@ -55,16 +52,13 @@ def test_asof_pandas_matches_join_window(spark, sf_dir):
 
 
 def test_multimodal_real_decode_dispatch():
-    # real=True returns the REAL parser (r6); since r7 JPEG decodes for
-    # real too (operators/jpeg.py), so a truncated JPEG now fails as a
-    # malformed stream (ValueError), not as an unimplemented format.
+    # JPEG decodes for real (operators/jpeg.py), so a truncated JPEG
+    # fails as a malformed stream (ValueError), not as an unimplemented
+    # format.
     from evolution_data_warehouse_spark.operators.multimodal import (
         decode_image_auto,
-        decode_image_real_batch,
     )
 
-    fn = decode_image_batch(real=True)
-    assert fn.__qualname__ == decode_image_real_batch().__qualname__
     with pytest.raises(ValueError):
         decode_image_auto(b"\xff\xd8\xff\xe0JFIF")
 
@@ -1084,7 +1078,7 @@ def test_pca_fit_project_properties(spark, sf_dir):
 def test_png_bomb_guards():
     """Hostile-input guards (r8 ADVICE): a forged IHDR (huge or zero
     dims) and a zlib bomb must each raise ValueError BEFORE any large
-    allocation — a MemoryError would escape decode_image_tolerant_batch's
+    allocation — a MemoryError would escape decode_image_tolerant_row's
     (ValueError, NotImplementedError) quarantine net and kill the task.
     CRC-valid payloads are required because the chunk walk checks CRCs
     first (bit-flip fuzzing can never reach these paths)."""
@@ -1093,11 +1087,10 @@ def test_png_bomb_guards():
     import zlib
 
     import numpy as np
-    import pandas as pd
     import pytest
 
     from evolution_data_warehouse_spark.operators.multimodal import (
-        decode_image_tolerant_batch,
+        decode_image_tolerant_row,
         decode_png,
     )
 
@@ -1142,19 +1135,18 @@ def test_png_bomb_guards():
     with pytest.raises(ValueError, match="truncated|length mismatch"):
         decode_png(short)
 
-    # the tolerant batch path quarantines both hostile rows per-row
-    fn = decode_image_tolerant_batch()
-    pdf = pd.DataFrame({"doc_id": [1, 2], "payload": [forged, bomb]})
-    out = pd.concat(list(fn(iter([pdf]))))
-    assert list(out["status"]) == ["error", "error"]
-    assert out["width"].isna().all()
+    # the tolerant row path quarantines both hostile rows per-row
+    # (columns: doc_id, status, format, width, height, sum_r, sum_g, sum_b)
+    out = [r for d, p in [(1, forged), (2, bomb)] for r in decode_image_tolerant_row(d, p)]
+    assert [r[1] for r in out] == ["error", "error"]
+    assert all(r[3] is None for r in out)
     # and a legitimate image still decodes through the same net
     from evolution_data_warehouse_spark.operators.multimodal import encode_png
 
     ok = encode_png(np.full((2, 2, 3), 7, dtype=np.uint8))
-    out2 = pd.concat(list(fn(iter([pd.DataFrame({"doc_id": [3], "payload": [ok]})]))))
-    assert list(out2["status"]) == ["ok"]
-    assert int(out2["sum_r"].iloc[0]) == 7 * 4
+    out2 = list(decode_image_tolerant_row(3, ok))
+    assert [r[1] for r in out2] == ["ok"]
+    assert out2[0][5] == 7 * 4
 
 
 def test_png_text_chunks_roundtrip():
@@ -3351,3 +3343,272 @@ def test_pq_batch_paths_match_expression_forms(spark):
     assert got2.exceptAll(ref2).count() == 0
     assert ref2.exceptAll(got2).count() == 0
     assert got2.count() > 0  # pruning must leave rows or this is vacuous
+
+
+# ---------------------------------------------------------------------------
+# Dirty-input differential matrix for the Arrow map passes
+# ---------------------------------------------------------------------------
+
+# A 4-dim model: 2 PQ subspaces of 2 dims, 3 centroids each (book 0 has a
+# duplicate centroid: argmin ties go to the first), a 3-list coarse
+# quantizer, an orthogonal rotation with non-trivial fixed-point entries
+# and 2 PCA components.
+_MX_BOOKS = [
+    [[0.0, 0.0], [1.0, 1.0], [0.0, 0.0]],
+    [[-1.0, 0.5], [0.25, -0.75], [1.0, 1.0]],
+]
+_MX_COARSE = [[0.0] * 4, [1.0] * 4, [-1.0] * 4]
+_MX_PROBES = [0, 2]
+_MX_ROT = [
+    [0.6, 0.8, 0.0, 0.0],
+    [-0.8, 0.6, 0.0, 0.0],
+    [0.0, 0.0, 0.0, 1.0],
+    [0.0, 0.0, -1.0, 0.0],
+]
+_MX_COMPS = [[0.5, 0.5, 0.5, 0.5], [0.5, -0.5, 0.5, -0.5]]
+_MX_MEAN = [0.1, -0.1, 0.2, 0.0]
+# clean rows: ±0.0, exact centroid hits and ties, negative components,
+# and a duplicate id (row passes are per row, so both rows come out)
+_MX_CLEAN = [
+    (1, [0.0, 0.0, -1.0, 0.5]),
+    (2, [-0.0, 1.0, 0.25, -0.75]),
+    (3, [0.5, 0.5, 0.5, 0.5]),
+    (3, [0.1234567, -0.7654321, 0.9999999, -0.0000001]),
+    (4, [-1.0, -1.0, 1.0, 1.0]),
+]
+# each dirty case adds one row with id 9 that every vector pass rejects
+_MX_DIRTY = {
+    "null_vector": None,
+    "null_element": [0.0, None, 0.0, 0.0],
+    "nan": [0.0, float("nan"), 0.0, 0.0],
+    "inf": [float("-inf"), 0.0, 0.0, 0.0],
+    "ragged": [0.0, 0.0, 0.0],
+}
+_VECTOR_PASSES = (
+    "pq_assign_batch",
+    "pq_adc_scan",
+    "opq_assign",
+    "opq_rotated_energy",
+    "pca_project",
+)
+# dirty text: NULL, empty, one token, doubled spaces, non-ASCII letters
+# and an emoji, and a duplicate doc_id
+_MX_TEXT = [
+    (1, "été café été café été"),
+    (2, None),
+    (3, ""),
+    (4, "solo"),
+    (5, "a  b a  b"),
+    (5, "x y x y x y 🙂 x y"),
+    (6, "ß ß ß ß ß ß ß ß ß ß ß"),
+]
+
+
+def _fixed(v):
+    import math
+
+    return [math.floor(x * 1_000_000) for x in v]
+
+
+def _first_min(dists):
+    return dists.index(min(dists))
+
+
+def _ref_codes(vq, books):
+    dsub = len(books[0][0])
+    return [
+        _first_min(
+            [
+                sum((vq[j * dsub + i] - c[i]) ** 2 for i in range(dsub))
+                for c in book
+            ]
+        )
+        for j, book in enumerate(books)
+    ]
+
+
+def _vector_reference(name, rows):
+    """Python closed forms of the vector passes, row by row."""
+    import numpy as np
+
+    from evolution_data_warehouse_spark.operators.similarity import (
+        opq_quantize_rotation,
+        pq_adc_lut,
+        pq_quantize_codebooks,
+    )
+
+    qbooks = pq_quantize_codebooks(_MX_BOOKS)
+    qrot = opq_quantize_rotation(_MX_ROT)
+    out = []
+    for vid, v in rows:
+        vq = _fixed(v)
+        z = [sum(r * x for r, x in zip(row, vq)) // 1_000_000 for row in qrot]
+        if name == "pq_adc_scan":
+            lid = _ref_codes(vq, pq_quantize_codebooks([_MX_COARSE]))[0]
+            if lid in _MX_PROBES:
+                lut = pq_adc_lut(_MX_BOOKS, [0.3, -0.2, 0.7, 0.1])
+                codes = _ref_codes(vq, qbooks)
+                out.append((vid, lid, sum(lut[j][c] for j, c in enumerate(codes))))
+        elif name == "opq_assign":
+            out.append((vid, *_ref_codes(z, qbooks)))
+        elif name == "opq_rotated_energy":
+            out.append((vid, sum(x * x for x in vq), sum(x * x for x in z[:2])))
+        elif name == "pca_project":
+            proj = (np.asarray(v) - np.asarray(_MX_MEAN)) @ np.asarray(_MX_COMPS).T
+            out.append((vid, tuple(proj.tolist())))
+    return sorted(out)
+
+
+def _run_vector_pass(name, df):
+    from evolution_data_warehouse_spark.operators import similarity as sim
+
+    if name == "pq_assign_batch":
+        return sim.pq_assign_batch(df, _MX_BOOKS)
+    if name == "pq_adc_scan":
+        lut = sim.pq_adc_lut(_MX_BOOKS, [0.3, -0.2, 0.7, 0.1])
+        return sim.pq_adc_scan(df, _MX_COARSE, _MX_BOOKS, lut, _MX_PROBES)
+    if name == "opq_assign":
+        return sim.opq_assign(df, _MX_ROT, _MX_BOOKS)
+    if name == "opq_rotated_energy":
+        return sim.opq_rotated_energy(df, _MX_ROT, 2)
+    return sim.pca_project(df, _MX_COMPS, _MX_MEAN)
+
+
+def _row_pass_reference(name):
+    """Closed forms of the row passes over _MX_TEXT, by plain counting."""
+    out = []
+    for doc_id, text in _MX_TEXT:
+        toks = [] if text is None else text.split(" ")
+        if len(toks) < 2:
+            continue
+        grams = {
+            n: [tuple(toks[i : i + n]) for i in range(len(toks) - n + 1)]
+            for n in (2, 3)
+        }
+        if name == "bigram_counts":
+            for g in sorted(set(grams[2])):
+                out.append((doc_id, " ".join(g), grams[2].count(g)))
+        else:
+            cov = {n: [gs.count(g) * sum(map(len, g)) for g in set(gs)] for n, gs in grams.items()}
+            dup = {
+                n: sum(gs.count(g) * sum(map(len, g)) for g in set(gs) if gs.count(g) >= 2)
+                for n, gs in grams.items()
+            }
+            out.append((doc_id, sum(map(len, toks)), max(cov[2], default=0), dup[3]))
+    return sorted(out)
+
+
+@pytest.mark.parametrize(
+    "pass_name,case",
+    [(p, c) for p in _VECTOR_PASSES for c in ("clean", *_MX_DIRTY)]
+    + [("bigram_counts", "dirty_text"), ("repetition_ngram_stats", "dirty_text")],
+)
+def test_map_pass_dirty_input_matrix(spark, pass_name, case):
+    """Every Arrow map pass on a fixed adversarial table (NULL rows and
+    elements, NaN, ±inf, ±0.0, ragged vectors, duplicate ids, empty
+    partitions, non-ASCII text) either matches its reference — the
+    pq_assign expression form for PQ, Python closed forms for the
+    rest — or raises the documented ValueError naming the offending
+    id. Vector passes keep the input's id type (INT here)."""
+    from evolution_data_warehouse_spark.operators.gopher import (
+        repetition_ngram_stats,
+    )
+    from evolution_data_warehouse_spark.operators.similarity import pq_assign
+    from evolution_data_warehouse_spark.queries.text import doc_bigram_counts
+
+    if case == "dirty_text":
+        # more partitions than rows: some partitions are empty
+        docs = spark.createDataFrame(_MX_TEXT, "doc_id bigint, text string").repartition(10)
+        if pass_name == "bigram_counts":
+            got = doc_bigram_counts(docs)
+        else:
+            got = repetition_ngram_stats(docs, (2,), (3,))
+        assert sorted(tuple(r) for r in got.collect()) == _row_pass_reference(pass_name)
+        return
+
+    rows = list(_MX_CLEAN)
+    if case != "clean":
+        rows.append((9, _MX_DIRTY[case]))
+    df = spark.createDataFrame(rows, "vec_id int, embedding array<double>").repartition(8)
+    got = _run_vector_pass(pass_name, df)
+    assert dict(got.dtypes)["vec_id"] == "int"
+    if case != "clean":
+        with pytest.raises(Exception, match=r"ValueError: vec_id 9: "):
+            got.collect()
+        return
+    if pass_name == "pq_assign_batch":
+        ref = pq_assign(df, _MX_BOOKS)
+        assert got.exceptAll(ref).count() == 0 and ref.exceptAll(got).count() == 0
+        return
+    rows_got = sorted(
+        tuple(tuple(x) if isinstance(x, list) else x for x in r) for r in got.collect()
+    )
+    ref = _vector_reference(pass_name, _MX_CLEAN)
+    if pass_name == "pca_project":
+        import numpy as np
+
+        assert [r[0] for r in rows_got] == [r[0] for r in ref]
+        assert np.allclose([r[1] for r in rows_got], [r[1] for r in ref], atol=1e-12)
+    else:
+        assert rows_got == ref
+
+
+def test_semantic_dedup_duplicate_id_in_one_slice(spark):
+    """A vec_id that appears twice inside one cluster slice: the grouped
+    numpy path never pairs the two rows (the join path's _ida != _idb),
+    sums their counts into one row per id (the join path's groupBy),
+    and so matches both the JVM join path and a brute-force count."""
+    import math
+
+    from evolution_data_warehouse_spark.operators.similarity import semantic_dedup
+
+    rows = [
+        (1, 0, [1.0, 0.0, 0.0]),
+        (2, 0, [0.99, 0.1, 0.0]),
+        (3, 0, [0.98, 0.15, 0.05]),
+        (3, 0, [0.97, 0.2, 0.0]),
+        (4, 0, [0.95, 0.0, 0.3]),
+        (5, 1, [0.0, 1.0, 0.0]),
+        (6, 1, [0.0, 0.98, 0.1]),
+    ]
+    emb = spark.createDataFrame(rows, "vec_id long, label int, embedding array<double>")
+    tau = 0.9
+    grouped = semantic_dedup(emb, tau, max_cluster=1000)
+    joined = semantic_dedup(emb, tau, max_cluster=None)
+
+    def key(df):
+        return sorted((r.vec_id, r.label, r.n_better_neighbors) for r in df.collect())
+
+    got = key(grouped)
+    assert got == key(joined)
+
+    # one output row per input row: the duplicate id does not fan out
+    assert [r[0] for r in got].count(3) == 2
+
+    def cos(a, b):
+        dot = 0.0
+        for x, y in zip(a, b):
+            dot += x * y
+        return dot / (math.sqrt(sum(x * x for x in a)) * math.sqrt(sum(x * x for x in b)))
+
+    # brute force: float centroids (the engine's are fixed point, but no
+    # two centroid cosines here are close enough for that to matter)
+    cent = {}
+    for lbl in {r[1] for r in rows}:
+        members = [r[2] for r in rows if r[1] == lbl]
+        cent[lbl] = [sum(m[i] for m in members) / len(members) for i in range(3)]
+    ccs = [cos(v, cent[lbl]) for _, lbl, v in rows]
+    brute = {}
+    for i, (vid, lbl, v) in enumerate(rows):
+        n = sum(
+            1
+            for j, (vj, lj, w) in enumerate(rows)
+            if lj == lbl
+            and vj != vid
+            and cos(v, w) >= tau
+            and (ccs[j] < ccs[i] or (ccs[j] == ccs[i] and vj < vid))
+        )
+        brute[vid] = brute.get(vid, 0) + n
+    expect = sorted((vid, lbl, brute[vid]) for vid, lbl, _ in rows)
+    assert got == expect
+    assert brute[3] > 0  # the duplicate-id rows do have better neighbours

@@ -810,16 +810,19 @@ def test_jpeg_roundtrip_property(h, w, seed, subsample):
     else:
         # 4:2:0 on noise clips chroma (inherent to subsampling, not a
         # bug), so the bound is asserted on random SMOOTH gradients
-        # with mid-range offsets instead
+        # with mid-range offsets instead; they saturate at 255 rather
+        # than wrap, since a wrap is a hard edge, not a gradient
         gx, gy = rng.integers(1, 8), rng.integers(1, 8)
         base = rng.integers(64, 192, size=3)
         px = np.zeros((h, w, 3), dtype=np.uint8)
         for c in range(3):
-            px[:, :, c] = (
+            px[:, :, c] = np.clip(
                 base[c]
                 + gx * np.arange(w)[None, :] // 4
-                + gy * np.arange(h)[:, None] // 4
-            ) % 256
+                + gy * np.arange(h)[:, None] // 4,
+                0,
+                255,
+            )
         w2, h2, out = decode_jpeg(encode_jpeg(px, subsample=True))
         assert (w2, h2) == (w, h)
         assert np.abs(out.astype(int) - px.astype(int)).max() <= 12

@@ -6,6 +6,10 @@ query name's prefix. Modules named after the build round that added them
 query module reaches into another one's private (``_``-prefixed) names:
 a helper two families need is public in the family that owns it or lives
 in queries/common.py.
+
+The package's Python map passes share one Arrow boundary: only
+operators/arrow_map.py calls ``.mapInPandas(``, and no pass hand-casts
+its output with ``np.int32(`` — Arrow casts to the declared schema.
 """
 
 from __future__ import annotations
@@ -17,7 +21,9 @@ from pathlib import Path
 from evolution_data_warehouse_spark.queries import FAMILIES
 
 REPO = Path(__file__).resolve().parent.parent
-QUERIES = REPO / "evolution_data_warehouse_spark" / "queries"
+PACKAGE = REPO / "evolution_data_warehouse_spark"
+QUERIES = PACKAGE / "queries"
+BOUNDARY = PACKAGE / "operators" / "arrow_map.py"
 PKG = "evolution_data_warehouse_spark.queries"
 
 # name prefix → family module
@@ -72,3 +78,21 @@ def test_every_query_lives_in_its_family_module():
                     if family != name:
                         misplaced.append(f"{query}: in {name}.py, family {family}")
     assert not misplaced, misplaced
+
+
+def _package_files_containing(needle: str) -> list[str]:
+    return [
+        str(p.relative_to(REPO))
+        for p in sorted(PACKAGE.rglob("*.py"))
+        if needle in p.read_text()
+    ]
+
+
+def test_map_passes_go_through_the_arrow_boundary():
+    assert _package_files_containing(".mapInPandas(") == [
+        str(BOUNDARY.relative_to(REPO))
+    ]
+
+
+def test_no_hand_cast_int32_outputs():
+    assert _package_files_containing("np.int32(") == []
