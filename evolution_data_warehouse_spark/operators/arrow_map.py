@@ -1,4 +1,4 @@
-"""The one Arrow boundary of the engine's Python map passes.
+"""The one Arrow boundary between the engine's Python values and Spark.
 
 Every narrow pandas pass (``mapInPandas``) goes through one of two entry
 points here; both take the output schema as a DDL string and leave the
@@ -6,6 +6,8 @@ Python → Arrow conversion to Spark, which casts each returned column to
 the declared type (Spark SQL, SIGMOD'15: the DataFrame declares the
 schema, the engine owns the conversion). So a pass returns plain Python
 or numpy values — no per-column dtype casts, no empty-frame scaffolding.
+The literal tables of the warehouse ETL (dimension seeds, log rows, the
+security hierarchy's root) enter through the third, :func:`local_table`.
 
 * :func:`map_rows` — ``fn(*row)`` yields zero or more output tuples in
   schema column order. Output columns are built as object-dtype series
@@ -17,16 +19,25 @@ or numpy values — no per-column dtype casts, no empty-frame scaffolding.
   vectorised passes; arrays go through untouched, so numpy speed is
   kept.
 
+* :func:`local_table` — literal rows typed by a DDL string become a
+  ``pyarrow.Table``, which Spark plans as a ``LocalTableScan`` in the
+  driver: no RDD, no Python worker, so every reuse of the table (each
+  fact join, each orphan-key check) re-reads rows the JVM already
+  holds. Arrow keeps nullable 64-bit ints exact (``2**62 + 1`` next to
+  a NULL), where a pandas input would route them through float64.
+
 Grouped passes (``applyInPandas``, ``cogroup``,
 ``applyInPandasWithState``) are not map passes and stay direct calls.
 """
 
 from __future__ import annotations
 
-from collections.abc import Callable, Iterable, Iterator, Mapping
+from collections.abc import Callable, Iterable, Iterator, Mapping, Sequence
 
 import pandas as pd
-from pyspark.sql import DataFrame
+import pyarrow as pa
+from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.pandas.types import to_arrow_schema
 from pyspark.sql.types import StructType
 
 
@@ -69,3 +80,18 @@ def map_columns(
                 yield pd.DataFrame(fn(pdf))
 
     return df.mapInPandas(run, schema)
+
+
+def local_table(
+    spark: SparkSession, rows: Sequence[tuple], schema: str
+) -> DataFrame:
+    """The literal ``rows`` (tuples in column order, ``None`` for NULL)
+    as a DataFrame of DDL ``schema``, planned as a ``LocalTableScan``."""
+    struct = StructType.fromDDL(schema)
+    arrow = to_arrow_schema(struct)
+    columns = list(zip(*rows)) or [()] * len(arrow)
+    table = pa.Table.from_arrays(
+        [pa.array(col, type=f.type) for col, f in zip(columns, arrow)],
+        schema=arrow,
+    )
+    return spark.createDataFrame(table, schema=struct)

@@ -13,6 +13,8 @@ from contextlib import contextmanager
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from evolution_data_warehouse_spark.operators.arrow_map import local_table
+
 LOG_SCHEMA = (
     "etape string, nom_table string, statut string, lignes_traitees long, "
     "duree_secondes double, message string, date_execution timestamp"
@@ -29,10 +31,10 @@ def log_event(
     duree: float = 0.0,
     message: str = "",
 ) -> None:
-    row = [(etape, nom_table, statut, lignes, duree, message)]
-    df = spark.createDataFrame(
-        row,
-        schema="etape string, nom_table string, statut string, "
+    df = local_table(
+        spark,
+        [(etape, nom_table, statut, lignes, duree, message)],
+        "etape string, nom_table string, statut string, "
         "lignes_traitees long, duree_secondes double, message string",
     ).withColumn("date_execution", F.current_timestamp())
     df.write.mode("append").parquet(log_dir)
@@ -196,9 +198,10 @@ def log_error(
 ) -> None:
     """Append one row to the error log (dwh.log_erreurs analog,
     008_configure_logging.sql:59-68)."""
-    spark.createDataFrame(
+    local_table(
+        spark,
         [(erreur_id, date_erreur, source, type_erreur, message, est_resolu)],
-        schema="erreur_id long, date_erreur string, source string, "
+        "erreur_id long, date_erreur string, source string, "
         "type_erreur string, message_erreur string, est_resolu boolean",
     ).withColumn("date_erreur", F.col("date_erreur").cast("timestamp")).select(
         "erreur_id", "date_erreur", "source", "type_erreur",

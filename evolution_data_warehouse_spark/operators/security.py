@@ -15,6 +15,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from evolution_data_warehouse_spark.functions.naming import ascii_fold
+from evolution_data_warehouse_spark.operators.arrow_map import local_table
 
 AGENCY_POP_THRESHOLD = 10_000
 
@@ -53,9 +54,10 @@ def build_employees(agencies: DataFrame) -> DataFrame:
     agency table (no driver-side loops over data rows)."""
     depts = agencies.select("departement_code").distinct()
 
-    regional = depts.limit(0).sparkSession.createDataFrame(
+    regional = local_table(
+        agencies.sparkSession,
         [("REG", "Direction", "Regionale", "directeur_regional", None)],
-        schema="zone string, prenom string, nom string, role string, "
+        "zone string, prenom string, nom string, role string, "
         "manager_login string",
     ).select(
         "zone",

@@ -5,9 +5,9 @@ Usage:
     python -m evolution_data_warehouse_spark.run_etl \
         --staging-dir DIR_WITH_CSVS --out OUT_DIR [--skip security ...]
 
---demo generates FIXTURES.md-shaped staging CSVs first (the same
-generator the tests use), then runs the full cascade-skip pipeline:
-staging → security → dimensions → facts → refresh, printing the JSON
+--demo generates FIXTURES.md-shaped staging CSVs first (warehouse/demo.py,
+the generator the tests use too), then runs the full cascade-skip
+pipeline: staging → security → dimensions → facts → refresh, printing the JSON
 step report (run_etl.py:405-410 analog) and writing the HTML report
 next to the warehouse output.
 """
@@ -17,7 +17,6 @@ from __future__ import annotations
 import argparse
 import json
 import os
-import sys
 
 
 def main(argv: list[str] | None = None) -> int:
@@ -36,14 +35,16 @@ def main(argv: list[str] | None = None) -> int:
     if not args.demo and not args.staging_dir:
         parser.error("either --demo or --staging-dir is required")
 
+    from evolution_data_warehouse_spark.operators.arrow_map import local_table
     from evolution_data_warehouse_spark.operators.etl_log import (
         render_report_html,
     )
     from evolution_data_warehouse_spark.session import get_spark
+    from evolution_data_warehouse_spark.warehouse.demo import (
+        make_specs,
+        write_fixtures,
+    )
     from evolution_data_warehouse_spark.warehouse.etl import run_full_etl
-
-    sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
-    from tests.warehouse_fixtures import make_specs, write_fixtures
 
     spark = get_spark(app_name="run_etl")
 
@@ -57,13 +58,14 @@ def main(argv: list[str] | None = None) -> int:
     }
     specs = make_specs(paths)
 
-    communes = spark.createDataFrame(
+    communes = local_table(
+        spark,
         [
             ("59350", "Lille", "59", 236_000),
             ("62041", "Arras", "62", 42_000),
             ("80021", "Amiens", "80", 134_000),
         ],
-        schema="commune_code string, commune_nom string, "
+        "commune_code string, commune_nom string, "
         "departement_code string, population long",
     )
 

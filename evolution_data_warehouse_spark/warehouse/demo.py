@@ -1,10 +1,16 @@
-"""Deterministic staging fixtures shaped like FIXTURES.md §1 (the INSEE
-SDMX-style CSVs the reference ingests)."""
+"""Seeded demo staging data shaped like FIXTURES.md §1 (the INSEE
+SDMX-style CSVs the reference ingests): one CSV per staging table over
+the five départements and three years, plus the :class:`TableSpec` list
+that stages them. ``run_etl --demo`` and the warehouse tests run the
+full ETL on it; the same seed writes the same bytes.
+"""
 
 from __future__ import annotations
 
 import os
 import random
+
+from evolution_data_warehouse_spark.sources.staging import TableSpec
 
 DEPTS = ["02", "59", "60", "62", "80"]
 YEARS = [2019, 2020, 2021]
@@ -14,9 +20,9 @@ def _geo(year: int, dept: str) -> str:
     return f"{year}-DEP-{dept}"
 
 
-def write_fixtures(root: str) -> dict[str, str]:
-    """Write all staging CSVs; returns name → path."""
-    rng = random.Random(42)
+def write_fixtures(root: str, seed: int = 42) -> dict[str, str]:
+    """Write all staging CSVs under ``root``; returns name → path."""
+    rng = random.Random(seed)
     os.makedirs(root, exist_ok=True)
     paths = {}
 
@@ -153,9 +159,7 @@ NUMERIC = {
 }
 
 
-def make_specs(paths: dict[str, str]):
-    from evolution_data_warehouse_spark.sources.staging import TableSpec
-
+def make_specs(paths: dict[str, str]) -> list[TableSpec]:
     return [
         TableSpec(
             name=name,

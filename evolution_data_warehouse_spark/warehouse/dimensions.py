@@ -11,6 +11,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 
+from evolution_data_warehouse_spark.operators.arrow_map import local_table
+
 CENSUS_YEARS = {2010, 2015, 2021}  # 004_populate_dimensions.sql:13-31
 DEPARTEMENTS = [  # 004:44-48
     ("02", "Aisne"),
@@ -80,9 +82,7 @@ def dim_geographie(
 ) -> DataFrame:
     """Departments seed + optional communes append (load_dimensions.py:
     336-366: communes from the JSON payload get niveau_geo='COMMUNE')."""
-    depts = spark.createDataFrame(
-        DEPARTEMENTS, schema="code string, nom string"
-    ).select(
+    depts = local_table(spark, DEPARTEMENTS, "code string, nom string").select(
         F.col("code"),
         F.col("nom"),
         F.lit("DEPARTEMENT").alias("niveau_geo"),
@@ -103,8 +103,8 @@ def dim_geographie(
 
 
 def dim_demographie(spark: SparkSession) -> DataFrame:
-    sexes = spark.createDataFrame([(s,) for s in SEXES], schema="sexe string")
-    ages = spark.createDataFrame([(a,) for a in AGE_GROUPS], schema="age_group string")
+    sexes = local_table(spark, [(s,) for s in SEXES], "sexe string")
+    ages = local_table(spark, [(a,) for a in AGE_GROUPS], "age_group string")
     df = sexes.crossJoin(ages)
     return add_surrogate_key(df, "demo_id", ["sexe", "age_group"]).select(
         "demo_id", "sexe", "age_group"
@@ -112,12 +112,12 @@ def dim_demographie(spark: SparkSession) -> DataFrame:
 
 
 def dim_activite(spark: SparkSession) -> DataFrame:
-    naf = spark.createDataFrame(
-        NAF_SECTIONS, schema="code string, libelle string"
-    ).withColumn("type_activite", F.lit("NAF_SECTION"))
-    forms = spark.createDataFrame(
-        LEGAL_FORMS, schema="code string, libelle string"
-    ).withColumn("type_activite", F.lit("FORME_JURIDIQUE"))
+    naf = local_table(spark, NAF_SECTIONS, "code string, libelle string").withColumn(
+        "type_activite", F.lit("NAF_SECTION")
+    )
+    forms = local_table(spark, LEGAL_FORMS, "code string, libelle string").withColumn(
+        "type_activite", F.lit("FORME_JURIDIQUE")
+    )
     df = naf.unionByName(forms)
     return add_surrogate_key(df, "activite_id", ["type_activite", "code"]).select(
         "activite_id", "code", "libelle", "type_activite"
@@ -125,9 +125,7 @@ def dim_activite(spark: SparkSession) -> DataFrame:
 
 
 def dim_indicateur(spark: SparkSession) -> DataFrame:
-    df = spark.createDataFrame(
-        INDICATEURS, schema="code string, libelle string, unite string"
-    )
+    df = local_table(spark, INDICATEURS, "code string, libelle string, unite string")
     return add_surrogate_key(df, "indicateur_id", ["code"]).select(
         "indicateur_id", "code", "libelle", "unite"
     )
@@ -146,8 +144,8 @@ LOGEMENT_CODES = [  # 004_populate_dimensions.sql:190-209 (overocc + occupancy)
 def dim_logement(spark: SparkSession) -> DataFrame:
     """Sixth dimension (002_create_dimensions.sql:184-205): housing
     occupancy/overcrowding code combinations."""
-    df = spark.createDataFrame(
-        LOGEMENT_CODES, schema="code string, type_code string, libelle string"
+    df = local_table(
+        spark, LOGEMENT_CODES, "code string, type_code string, libelle string"
     )
     return add_surrogate_key(df, "logement_id", ["type_code", "code"]).select(
         "logement_id", "code", "type_code", "libelle"

@@ -10,6 +10,10 @@ in queries/common.py.
 The package's Python map passes share one Arrow boundary: only
 operators/arrow_map.py calls ``.mapInPandas(``, and no pass hand-casts
 its output with ``np.int32(`` — Arrow casts to the declared schema.
+Literal tables cross the same boundary: the warehouse ETL path builds
+them with ``arrow_map.local_table`` (a ``LocalTableScan``, no Python
+worker), and the ``createDataFrame(`` sites left elsewhere are pinned
+in an allowlist that may only shrink.
 """
 
 from __future__ import annotations
@@ -96,3 +100,60 @@ def test_map_passes_go_through_the_arrow_boundary():
 
 def test_no_hand_cast_int32_outputs():
     assert _package_files_containing("np.int32(") == []
+
+
+# Modules on the warehouse ETL path: no ``createDataFrame(`` at all.
+ETL_PATH = ("warehouse/", "operators/etl_log.py", "operators/security.py", "run_etl.py")
+
+# (module, enclosing top-level function) of every other ``createDataFrame(``
+# call in the package. Remove an entry when its site goes; never add one.
+CREATE_DATAFRAME_ALLOWED = sorted(
+    [
+        ("operators/arrow_map.py", "local_table"),
+        ("operators/quality.py", "blocklist_matches"),
+        ("operators/similarity.py", "ivf_index_save"),
+        ("queries/datapipe.py", "chunk_bm25_topk"),
+        ("queries/dedup.py", "dedup_minhash_recall_eval"),
+        ("queries/relational.py", "set_concat_append"),
+        ("queries/scalar_fns.py", "geo_nearest_hub"),
+        ("queries/scalar_fns.py", "udtf_rls_predicate"),
+        ("queries/scd.py", "proc_maintenance_layout"),
+        ("queries/scd.py", "proc_orchestration"),
+        ("queries/scd.py", "proc_refresh_stats"),
+        ("queries/scd.py", "view_scd_summary"),
+        ("queries/similarity.py", "sim_ann_ndcg_eval"),
+        ("queries/sources_ext.py", "snk_python_datasource"),
+        ("queries/sources_ext.py", "src_blob_list"),
+        ("queries/sources_ext.py", "web_frontier_build"),
+        ("queries/sources_ext.py", "web_robots_filter"),
+        ("queries/streaming_ops.py", "stream_hll_merge"),
+        ("queries/streaming_ops.py", "stream_lateness_audit"),
+        ("queries/text.py", "bm25_scores"),
+        ("sources/external.py", "rest_to_dataframe"),
+    ]
+)
+
+
+def _create_dataframe_sites() -> list[tuple[str, str]]:
+    """(module, enclosing top-level function or '<module>') of every
+    ``.createDataFrame(`` call in the package."""
+    sites = []
+    for path in sorted(PACKAGE.rglob("*.py")):
+        module = str(path.relative_to(PACKAGE))
+        for top in ast.parse(path.read_text()).body:
+            owner = top.name if isinstance(top, ast.FunctionDef) else "<module>"
+            sites += [
+                (module, owner)
+                for node in ast.walk(top)
+                if isinstance(node, ast.Call)
+                and isinstance(node.func, ast.Attribute)
+                and node.func.attr == "createDataFrame"
+            ]
+    return sorted(sites)
+
+
+def test_etl_path_builds_literal_tables_as_local_relations():
+    sites = _create_dataframe_sites()
+    on_etl_path = [s for s in sites if s[0].startswith(ETL_PATH)]
+    assert not on_etl_path, f"use arrow_map.local_table: {on_etl_path}"
+    assert sites == CREATE_DATAFRAME_ALLOWED

@@ -10,8 +10,13 @@ from pyspark.sql import functions as F
 from evolution_data_warehouse_spark.sources.staging import prepare_tables
 from evolution_data_warehouse_spark.warehouse import dimensions as dims_mod
 from evolution_data_warehouse_spark.warehouse import facts as facts_mod
+from evolution_data_warehouse_spark.warehouse.demo import (
+    DEPTS,
+    YEARS,
+    make_specs,
+    write_fixtures,
+)
 from evolution_data_warehouse_spark.warehouse.etl import run_full_etl
-from tests.warehouse_fixtures import DEPTS, YEARS, make_specs, write_fixtures
 
 
 @pytest.fixture(scope="module")
@@ -604,3 +609,36 @@ def test_zorder_layout_bounds_both_dimensions(spark, sf_dir, tmp_path):
     # a small rectangle), so min/max stats prune on EITHER predicate
     assert sum(x for x, _ in zs) / 8 < 0.66 * gx, (zs, gx)
     assert sum(y for _, y in zs) / 8 < 0.66 * gy, (zs, gy)
+
+
+def test_log_error_appends_and_open_errors_ages(spark, tmp_path):
+    """log_error appends one row per call; open_errors keeps the
+    unresolved ones with their age in whole hours at ``as_of``."""
+    from evolution_data_warehouse_spark.operators.etl_log import (
+        log_error,
+        open_errors,
+        read_error_log,
+    )
+
+    err_dir = str(tmp_path / "log_erreurs")
+    log_error(spark, err_dir, 2**62 + 1, "2024-03-01 06:00:00", "facts", "FKViolation", "orphan geo_id")
+    log_error(spark, err_dir, 7, "2024-03-02 23:59:59", "api", "Timeout", "")
+
+    def as_text(df):
+        return sorted(
+            tuple(r)
+            for r in df.withColumn("date_erreur", F.col("date_erreur").cast("string")).collect()
+        )
+
+    log = read_error_log(spark, err_dir)
+    assert as_text(log) == [
+        (7, "2024-03-02 23:59:59", "api", "Timeout", "", False),
+        (2**62 + 1, "2024-03-01 06:00:00", "facts", "FKViolation", "orphan geo_id", False),
+    ]
+    opened = open_errors(log, F.lit("2024-03-03 00:00:00").cast("timestamp"))
+    # 2024-03-01 06:00 → 2024-03-03 00:00 is 42 h; one second short of
+    # midnight rounds down to 0 h
+    assert as_text(opened) == [
+        (7, "2024-03-02 23:59:59", "api", "Timeout", "", 0),
+        (2**62 + 1, "2024-03-01 06:00:00", "facts", "FKViolation", "orphan geo_id", 42),
+    ]
