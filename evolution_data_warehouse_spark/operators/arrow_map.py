@@ -86,12 +86,16 @@ def local_table(
     spark: SparkSession, rows: Sequence[tuple], schema: str
 ) -> DataFrame:
     """The literal ``rows`` (tuples in column order, ``None`` for NULL)
-    as a DataFrame of DDL ``schema``, planned as a ``LocalTableScan``."""
+    as a DataFrame of DDL ``schema``, planned as a ``LocalTableScan``.
+    A row whose width differs from the schema's raises ``ValueError``."""
     struct = StructType.fromDDL(schema)
     arrow = to_arrow_schema(struct)
-    columns = list(zip(*rows)) or [()] * len(arrow)
+    columns = list(zip(*rows, strict=True)) or [()] * len(arrow)
     table = pa.Table.from_arrays(
-        [pa.array(col, type=f.type) for col, f in zip(columns, arrow)],
+        [
+            pa.array(col, type=f.type)
+            for col, f in zip(columns, arrow, strict=True)
+        ],
         schema=arrow,
     )
     return spark.createDataFrame(table, schema=struct)

@@ -2,7 +2,8 @@
 SDMX-style CSVs the reference ingests): one CSV per staging table over
 the five départements and three years, plus the :class:`TableSpec` list
 that stages them. ``run_etl --demo`` and the warehouse tests run the
-full ETL on it; the same seed writes the same bytes.
+full ETL on it. The generator's seed is fixed, so every run writes the
+same bytes.
 """
 
 from __future__ import annotations
@@ -20,9 +21,9 @@ def _geo(year: int, dept: str) -> str:
     return f"{year}-DEP-{dept}"
 
 
-def write_fixtures(root: str, seed: int = 42) -> dict[str, str]:
+def write_fixtures(root: str) -> dict[str, str]:
     """Write all staging CSVs under ``root``; returns name → path."""
-    rng = random.Random(seed)
+    rng = random.Random(42)
     os.makedirs(root, exist_ok=True)
     paths = {}
 

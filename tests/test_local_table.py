@@ -37,7 +37,8 @@ COMMUNES_DDL = (
     "departement_code string, population long"
 )
 
-# name → (rows, DDL, expected rows)
+# name → (rows, DDL, expected rows, or ValueError for a row whose width
+# differs from the DDL's: refused, never cut to fit)
 _DIRTY = {
     "bigint_exact_next_to_null": (
         [(2**62 + 1,), (None,), (-(2**63),)],
@@ -50,6 +51,9 @@ _DIRTY = {
         [(None, None), ("", False), ("é🙂", True)],
     ),
     "zero_rows": ([], "x bigint, s string, d double, b boolean", []),
+    "ragged_row": ([(1, "a"), (2,), (3, "c")], "x bigint, s string", ValueError),
+    "too_wide_rows": ([(1, "a", True), (2, "b", False)], "x bigint, s string", ValueError),
+    "too_narrow_rows": ([(1,), (2,)], "x bigint, s string", ValueError),
 }
 
 ETL_TABLES = (
@@ -93,6 +97,10 @@ def _recorded_writes(spark):
 @pytest.mark.parametrize("case", sorted(_DIRTY))
 def test_local_table_dirty_input_matrix(spark, case):
     rows, ddl, expected = _DIRTY[case]
+    if expected is ValueError:
+        with pytest.raises(ValueError):
+            local_table(spark, rows, ddl)
+        return
     df = local_table(spark, rows, ddl)
     assert df.schema == StructType.fromDDL(ddl)
     assert [tuple(r) for r in df.collect()] == expected
