@@ -1,30 +1,30 @@
 """The one Arrow boundary between the engine's Python values and Spark.
 
-Every narrow pandas pass (``mapInPandas``) goes through one of two entry
-points here; both take the output schema as a DDL string and leave the
-Python → Arrow conversion to Spark, which casts each returned column to
-the declared type (Spark SQL, SIGMOD'15: the DataFrame declares the
-schema, the engine owns the conversion). So a pass returns plain Python
-or numpy values — no per-column dtype casts, no empty-frame scaffolding.
-The literal tables of the warehouse ETL (dimension seeds, log rows, the
-security hierarchy's root) enter through the third, :func:`local_table`.
+Every narrow Python pass (``mapInArrow``) and every literal table goes
+through one of three entry points here, each taking its output schema as
+a DDL string. One typing rule serves all three (Spark SQL, SIGMOD'15:
+the DataFrame declares the schema, one engine layer owns the
+conversion): each output column becomes ``pa.array(col, type=f.type)``
+over the DDL's Arrow schema. ``mapInArrow`` does not cast what a pass
+returns (an ``int32`` array under a ``bigint`` field fails in the JVM),
+so the rule is what makes a pass's plain Python or numpy values — or
+Arrow arrays passed through — land as the declared types, with ``None``
+as NULL and no per-column dtype casts in the passes.
 
 * :func:`map_rows` — ``fn(*row)`` yields zero or more output tuples in
-  schema column order. Output columns are built as object-dtype series
-  (not ``pd.DataFrame.from_records``, whose type inference routes a
-  nullable integer column through float64 and so rounds 64-bit values
-  such as ``2**62 + 1``); Arrow then converts each object to the
-  declared type exactly, and ``None`` becomes NULL.
-* :func:`map_columns` — ``fn(pdf)`` returns ``{name: array}`` for
-  vectorised passes; arrays go through untouched, so numpy speed is
-  kept.
-
+  schema column order. Each input column is read exactly: a nullable
+  bigint arrives as ``int`` or ``None`` (never through float64, which
+  rounds ``2**62 + 1``), a NULL double as NaN, an array as an ndarray.
+  A tuple whose width differs from the schema's raises ``ValueError``.
+* :func:`map_columns` — ``fn(batch)`` gets each non-empty
+  ``pa.RecordBatch`` and returns ``{name: array}`` for vectorised
+  passes; numpy arrays and Arrow arrays go through without a Python
+  loop.
 * :func:`local_table` — literal rows typed by a DDL string become a
   ``pyarrow.Table``, which Spark plans as a ``LocalTableScan`` in the
   driver: no RDD, no Python worker, so every reuse of the table (each
   fact join, each orphan-key check) re-reads rows the JVM already
-  holds. Arrow keeps nullable 64-bit ints exact (``2**62 + 1`` next to
-  a NULL), where a pandas input would route them through float64.
+  holds.
 
 Grouped passes (``applyInPandas``, ``cogroup``,
 ``applyInPandasWithState``) are not map passes and stay direct calls.
@@ -34,11 +34,19 @@ from __future__ import annotations
 
 from collections.abc import Callable, Iterable, Iterator, Mapping, Sequence
 
-import pandas as pd
 import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.pandas.types import to_arrow_schema
 from pyspark.sql.types import StructType
+
+
+def _typed_batch(columns: Iterable[Sequence], arrow: pa.Schema) -> pa.RecordBatch:
+    """The typing rule: one ``pa.array(col, type)`` per DDL field; a
+    column count that differs from the schema's raises ``ValueError``."""
+    return pa.RecordBatch.from_arrays(
+        [pa.array(col, type=f.type) for col, f in zip(columns, arrow, strict=True)],
+        schema=arrow,
+    )
 
 
 def map_rows(
@@ -46,40 +54,38 @@ def map_rows(
 ) -> DataFrame:
     """Apply ``fn(*row)`` to every row of ``df``; each tuple it yields
     becomes one output row of DDL ``schema``."""
-    names = StructType.fromDDL(schema).names
+    arrow = to_arrow_schema(StructType.fromDDL(schema))
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = [
-                t for row in pdf.itertuples(index=False, name=None)
-                for t in fn(*row)
+    def run(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        for batch in batches:
+            cols = [
+                c.to_pandas(integer_object_nulls=True).tolist()
+                for c in batch.columns
             ]
+            out = [t for row in zip(*cols) for t in fn(*row)]
             if out:
-                yield pd.DataFrame(
-                    {
-                        n: pd.Series(col, dtype=object)
-                        for n, col in zip(names, zip(*out))
-                    }
-                )
+                yield _typed_batch(zip(*out, strict=True), arrow)
 
-    return df.mapInPandas(run, schema)
+    return df.mapInArrow(run, schema)
 
 
 def map_columns(
     df: DataFrame,
-    fn: Callable[[pd.DataFrame], Mapping[str, object]],
+    fn: Callable[[pa.RecordBatch], Mapping[str, object]],
     schema: str,
 ) -> DataFrame:
-    """Apply ``fn`` to every non-empty Arrow batch of ``df`` as a pandas
-    frame; the ``{name: array}`` it returns becomes the output batch of
-    DDL ``schema``."""
+    """Apply ``fn`` to every non-empty Arrow batch of ``df``; the
+    ``{name: array}`` it returns becomes the output batch of DDL
+    ``schema``."""
+    arrow = to_arrow_schema(StructType.fromDDL(schema))
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            if len(pdf):
-                yield pd.DataFrame(fn(pdf))
+    def run(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        for batch in batches:
+            if batch.num_rows:
+                out = fn(batch)
+                yield _typed_batch([out[name] for name in arrow.names], arrow)
 
-    return df.mapInPandas(run, schema)
+    return df.mapInArrow(run, schema)
 
 
 def local_table(
@@ -91,11 +97,5 @@ def local_table(
     struct = StructType.fromDDL(schema)
     arrow = to_arrow_schema(struct)
     columns = list(zip(*rows, strict=True)) or [()] * len(arrow)
-    table = pa.Table.from_arrays(
-        [
-            pa.array(col, type=f.type)
-            for col, f in zip(columns, arrow, strict=True)
-        ],
-        schema=arrow,
-    )
+    table = pa.Table.from_batches([_typed_batch(columns, arrow)])
     return spark.createDataFrame(table, schema=struct)

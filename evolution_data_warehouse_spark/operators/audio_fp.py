@@ -18,7 +18,7 @@ runs AFTER decode:
   energy-difference fingerprint idea, public paper, reduced to the
   repo's integer dHash shape).
 
-Both run inside the existing mapInPandas decode stage — narrow Arrow
+Both run inside the existing mapInArrow decode stage — narrow Arrow
 batches, zero shuffle, embarrassingly parallel, linear in corpus
 bytes at 100 TB.
 

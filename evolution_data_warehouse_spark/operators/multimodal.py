@@ -2,7 +2,7 @@
 
 Images/audio/video ride through the engine as `binary` columns with a
 metadata struct alongside. The Spark-side machinery — schema, Arrow
-batch shape, `mapInPandas` signatures, partitioning — is real and
+batch shape, `mapInArrow` signatures, partitioning — is real and
 tested. Decode comes in two tiers:
 
 * REAL stdlib codecs (no PIL/libjpeg needed): BMP (24-bit BGR, 32-bit
@@ -37,7 +37,7 @@ import struct
 import zlib
 
 import numpy as np
-
+import pyarrow.compute as pc
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
@@ -129,7 +129,7 @@ def _decode_bmp_rle(body: bytes, w: int, h: int, bpp: int) -> np.ndarray:
     (0,n≥3) absolute run padded to a 16-bit boundary. Pixels skipped
     by deltas stay palette index 0, the documented convention. The
     per-image byte loop is inherently sequential; parallelism lives at
-    the mapInPandas row level, same as the JPEG entropy decode."""
+    the map-pass row level, same as the JPEG entropy decode."""
     out = np.zeros((h, w), dtype=np.uint8)
     x = y = i = 0
     n = len(body)
@@ -1033,14 +1033,14 @@ def decode_documents(df: DataFrame) -> DataFrame:
     """documents table → fake-decoded feature table via Arrow batches:
     deterministic in the payload bytes, for plumbing-only checks."""
 
-    def fake_decode(pdf):
-        n_bytes = pdf["payload"].map(len)
+    def fake_decode(batch):
+        n_bytes = pc.binary_length(batch["payload"]).to_numpy()
         return {
-            "doc_id": pdf["doc_id"],
+            "doc_id": batch["doc_id"],
             "n_bytes": n_bytes,
             "fake_width": 16 + n_bytes % 32,
             "fake_height": 16 + (n_bytes // 32) % 32,
-            "format": "fake/png",
+            "format": ["fake/png"] * batch.num_rows,
         }
 
     payloads = with_binary_payload(df).select("doc_id", "payload")
@@ -1054,14 +1054,14 @@ def resize_documents(df: DataFrame, target: int = 16) -> DataFrame:
     """Fake resize: derive tile grid from the fake decode dimensions.
     Real path would call PIL.Image.resize — same pass shape."""
 
-    def resize(pdf):
-        n_bytes = pdf["payload"].map(len)
+    def resize(batch):
+        n_bytes = pc.binary_length(batch["payload"]).to_numpy()
         w = 16 + n_bytes % 32
         h = 16 + (n_bytes // 32) % 32
         return {
-            "doc_id": pdf["doc_id"],
-            "width": target,
-            "height": target,
+            "doc_id": batch["doc_id"],
+            "width": [target] * batch.num_rows,
+            "height": [target] * batch.num_rows,
             "n_tiles": ((w + target - 1) // target)
             * ((h + target - 1) // target),
         }
@@ -1098,12 +1098,13 @@ def audio_features_documents(df: DataFrame) -> DataFrame:
     as a stand-in loudness — deterministic in the payload, same pass
     shape a librosa-backed extractor would use."""
 
-    def features(pdf):
-        firsts = pdf["payload"].map(lambda b: b[0] if len(b) else 0)
-        lasts = pdf["payload"].map(lambda b: b[-1] if len(b) else 0)
+    def features(batch):
+        payloads = batch["payload"].to_pylist()
+        firsts = np.array([b[0] if len(b) else 0 for b in payloads])
+        lasts = np.array([b[-1] if len(b) else 0 for b in payloads])
         return {
-            "doc_id": pdf["doc_id"],
-            "n_bytes": pdf["payload"].map(len),
+            "doc_id": batch["doc_id"],
+            "n_bytes": pc.binary_length(batch["payload"]),
             "first_byte": firsts,
             "last_byte": lasts,
             "loudness_fake": (firsts + lasts) / 2.0,

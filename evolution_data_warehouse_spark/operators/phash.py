@@ -19,7 +19,7 @@ closed-form oracle. A DCT pHash would reuse jpeg.py's DCT machinery
 but trades away that exactness for no extra recall on the corpus
 shapes tested here.
 
-Scale shape (100 TB): hashing is two narrow Arrow-batched mapInPandas
+Scale shape (100 TB): hashing is two narrow Arrow-batched mapInArrow
 stages (synthesize/fetch payload → 8 bytes), zero shuffle; candidate
 generation explodes each 64-bit hash into 4×16-bit bands (pigeonhole:
 any pair within Hamming distance 3 shares at least one exact band) and

@@ -15,6 +15,7 @@ from dataclasses import dataclass
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from evolution_data_warehouse_spark.operators.arrow_map import local_table
 from evolution_data_warehouse_spark.operators.textops import k_gram_windows, lower_tokens
 
 
@@ -215,9 +216,7 @@ def blocklist_matches(
         )
     parts = []
     for k, plist in sorted(by_len.items()):
-        dic = spark.createDataFrame(
-            sorted(plist), "phrase string, severity int"
-        )
+        dic = local_table(spark, sorted(plist), "phrase string, severity int")
         grams = (
             base.filter(F.size("_tk") >= k)
             .select(
@@ -232,7 +231,7 @@ def blocklist_matches(
                 "phrase",
             )
         )
-        parts.append(grams.join(F.broadcast(dic), "phrase"))
+        parts.append(grams.join(dic, "phrase"))
     out = parts[0]
     for p in parts[1:]:
         out = out.unionByName(p)

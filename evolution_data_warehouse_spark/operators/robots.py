@@ -9,7 +9,7 @@ pages its robots rules disallow). Two layers, both public-spec:
   crawler's group is the one whose user-agent token is the LONGEST
   case-insensitive match for the product token, with ``*`` as the
   fallback group (RFC 9309 §2.2.1); unknown lines and comments are
-  ignored per spec. Runs driver-side or in a mapInPandas over the
+  ignored per spec. Runs driver-side or in a mapInArrow over the
   (tiny) per-host robots corpus — robots files are KBs, hosts are
   dimension-cardinality.
 * :func:`robots_pattern_regex` — one source of truth translating a

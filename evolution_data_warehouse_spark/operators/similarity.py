@@ -16,10 +16,12 @@ is reproducible across runs and engines.
 from __future__ import annotations
 
 import numpy as np
+import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from evolution_data_warehouse_spark.operators.arrow_map import map_columns
+from evolution_data_warehouse_spark.operators.arrow_map import local_table, map_columns
 
 #: id and vector columns of the embeddings relation the numpy vector
 #: passes read (:func:`_vector_pass`).
@@ -263,8 +265,8 @@ def ivf_index_save(
     )
     spark = df.sparkSession
     cent_rows = [(i, list(map(float, c))) for i, c in enumerate(centroids)]
-    spark.createDataFrame(
-        cent_rows, "centroid_id int, centroid array<double>"
+    local_table(
+        spark, cent_rows, "centroid_id int, centroid array<double>"
     ).coalesce(1).write.mode("overwrite").parquet(f"{path}/centroids")
 
 
@@ -352,13 +354,18 @@ def pca_fit(
 ):
     """Distributed PCA via per-batch Gram accumulation.
 
-    The shape that scales: each Arrow batch reduces its vectors to one
-    (d×d partial Gram, d-vector partial sum, count) triple inside a
-    :func:`map_columns` pass (numpy matmul — vectorized, no per-row
-    Python), the driver sums the batch partials (bounded by
-    n_batches · d², never by rows) and eigendecomposes the d×d
-    covariance with numpy. Only O(d²) state ever moves; the corpus is
+    The shape that scales: each Arrow batch of (vec_id, ``vec_col``)
+    reduces its vectors to one (d×d partial Gram, d-vector partial sum,
+    count) triple inside a :func:`map_columns` pass (numpy matmul —
+    vectorized, no per-row Python), the driver sums the batch partials
+    (bounded by n_batches · d², never by rows) and eigendecomposes the
+    d×d covariance with numpy. Only O(d²) state ever moves; the corpus is
     read once. Returns (components k×d, mean d, explained_variance k).
+
+    Dirty input is rejected, never folded into the Gram matrix: a NULL,
+    ragged or non-finite vector raises the :func:`_stack_vectors`
+    ValueError naming its id. The longest vector sets d, in each batch
+    and across the batches' partials.
 
     Determinism: component sign is normalized so each component's
     largest-magnitude coordinate is positive; eigenvalues sort
@@ -368,26 +375,29 @@ def pca_fit(
     registry applies to iterative/spectral ops.)
     """
 
-    def partials(pdf):
-        x = np.stack(pdf[vec_col].to_numpy()).astype(np.float64)
-        return {"gram": [(x.T @ x).ravel()], "s": [x.sum(axis=0)], "n": [len(x)]}
+    def partials(batch):
+        ids, vecs = batch[VEC_ID], batch[vec_col]
+        dim = pc.max(pc.list_value_length(vecs)).as_py() or 0
+        x = _stack_vectors(ids, vecs, dim)
+        gram, s = [(x.T @ x).ravel()], [x.sum(axis=0)]
+        return {VEC_ID: ids[:1], "gram": gram, "s": s, "n": [len(x)]}
 
+    id_type = dict(df.dtypes)[VEC_ID]
     rows = map_columns(
-        df.select(vec_col), partials, "gram array<double>, s array<double>, n long"
+        df.select(VEC_ID, vec_col),
+        partials,
+        f"{VEC_ID} {id_type}, gram array<double>, s array<double>, n long",
     ).collect()
-    gram = None
-    s = None
-    n = 0
+    dim = max(len(r.s) for r in rows)
     for r in rows:
-        g = np.array(r.gram)
-        dim = int(np.sqrt(len(g)))
-        if gram is None:
-            gram = np.zeros((dim, dim))
-            s = np.zeros(dim)
-        gram += g.reshape(dim, dim)
-        s += np.array(r.s)
-        n += r.n
-    mean = s / n
+        if len(r.s) != dim:
+            raise ValueError(
+                f"vec_id {r[VEC_ID]!r}: {len(r.s)}-element vector, "
+                f"expected {dim} elements"
+            )
+    n = sum(r.n for r in rows)
+    mean = np.sum([r.s for r in rows], axis=0) / n
+    gram = np.sum([r.gram for r in rows], axis=0).reshape(dim, dim)
     cov = gram / n - np.outer(mean, mean)
     evals, evecs = np.linalg.eigh(cov)  # ascending
     order = np.argsort(evals)[::-1][:k]
@@ -695,23 +705,27 @@ def semantic_dedup(
 PQ_SCALE = 1_000_000
 
 
-def _stack_vectors(ids: np.ndarray, vecs, dim: int) -> np.ndarray:
-    """The batch's vectors as one (n, dim) float64 matrix. Rejects, with
-    a ValueError naming the first offending id, what the expression
-    forms would turn into NULL or undefined codes: a NULL vector, a
-    vector whose length is not ``dim`` (ragged), and a NULL, NaN or
-    ±inf element (Arrow hands NULL elements over as NaN)."""
-    for i, v in enumerate(vecs):
-        if v is None or len(v) != dim:
-            what = "NULL" if v is None else f"{len(v)}-element"
-            raise ValueError(
-                f"vec_id {ids[i]!r}: {what} vector, expected {dim} elements"
-            )
-    x = np.stack(vecs).astype(np.float64)
+def _stack_vectors(ids: pa.Array, vecs: pa.ListArray, dim: int) -> np.ndarray:
+    """The batch's vectors as one (n, dim) float64 matrix, reshaped from
+    the list column's flat values (no per-row Python). Rejects, with a
+    ValueError naming the first offending id, what the expression forms
+    would turn into NULL or undefined codes: a NULL vector, a vector
+    whose length is not ``dim`` (ragged), and a NULL, NaN or ±inf
+    element (the flat values read a NULL element as NaN)."""
+    lens = pc.list_value_length(vecs).to_numpy(zero_copy_only=False)
+    bad = np.flatnonzero(lens != dim)
+    if len(bad):
+        n = lens[bad[0]]
+        what = "NULL" if np.isnan(n) else f"{int(n)}-element"
+        raise ValueError(
+            f"vec_id {ids[bad[0]].as_py()!r}: {what} vector, "
+            f"expected {dim} elements"
+        )
+    x = vecs.flatten().to_numpy(zero_copy_only=False).astype(np.float64).reshape(-1, dim)
     bad = np.flatnonzero(~np.isfinite(x).all(axis=1))
     if len(bad):
         raise ValueError(
-            f"vec_id {ids[bad[0]]!r}: NULL, NaN or infinite vector element"
+            f"vec_id {ids[bad[0]].as_py()!r}: NULL, NaN or infinite vector element"
         )
     return x
 
@@ -743,15 +757,15 @@ def _nearest(v: np.ndarray, books: np.ndarray) -> np.ndarray:
 def _vector_pass(embeddings: DataFrame, dim: int, fn, schema: str) -> DataFrame:
     """The numpy vector passes' shared core: one :func:`map_columns`
     pass over (vec_id, embedding). Per Arrow batch, ``fn(ids, x)`` gets
-    the ids untouched and the :func:`_stack_vectors` matrix and returns
-    the output columns; ``schema`` declares the columns after vec_id,
-    whose type is taken from the input (Arrow casts each returned array
-    to its declared type)."""
+    the ids untouched (an Arrow array) and the :func:`_stack_vectors`
+    matrix and returns the output columns; ``schema`` declares the
+    columns after vec_id, whose type is taken from the input (each
+    returned array is typed to its declared column)."""
     id_type = dict(embeddings.dtypes)[VEC_ID]
 
-    def run(pdf):
-        ids = pdf[VEC_ID].to_numpy()
-        return fn(ids, _stack_vectors(ids, pdf[VEC].to_numpy(), dim))
+    def run(batch):
+        ids = batch[VEC_ID]
+        return fn(ids, _stack_vectors(ids, batch[VEC], dim))
 
     return map_columns(
         embeddings.select(VEC_ID, VEC), run, f"{VEC_ID} {id_type}, {schema}"
@@ -912,7 +926,7 @@ def pq_adc_scan(
         keep = np.isin(list_id, probe_set)
         codes = _nearest(vq[keep], qbooks)
         return {
-            VEC_ID: ids[keep],
+            VEC_ID: pc.filter(ids, keep),
             "list_id": list_id[keep],
             "adc_dist": lut_np[np.arange(m), codes].sum(axis=1),
         }

@@ -38,6 +38,8 @@ the same report.
 
 from __future__ import annotations
 
+import numpy as np
+import pyarrow.compute as pc
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
@@ -49,21 +51,22 @@ DEFAULT_CAPACITY = 2048
 def _mg_summarize(capacity: int):
     """map_columns fn: one (item string) Arrow batch → its Misra-Gries
     summary as (item, lb) rows, lb = the retained lower-bound count.
+    NULL items are not counted.
 
     Vectorized via the MG MERGE theorem (Agarwal et al., "Mergeable
     Summaries"): the batch is exactly counted with C-speed
-    ``value_counts`` (an error-0 summary, sorted by count) and trimmed
-    to capacity by subtracting the (capacity+1)-th largest count and
-    dropping non-positives — which preserves the n/m undercount bound
-    exactly like per-item decrements, while touching Python only once
-    per batch instead of once per row."""
+    ``value_counts`` (an error-0 summary) and trimmed to capacity by
+    subtracting the (capacity+1)-th largest count and dropping
+    non-positives — which preserves the n/m undercount bound exactly
+    like per-item decrements, while touching Python only once per batch
+    instead of once per row."""
 
-    def fn(pdf):
-        summary = pdf["item"].value_counts()
-        if len(summary) > capacity:
-            thresh = summary.iloc[capacity]
-            summary = summary[summary > thresh] - thresh
-        return {"item": summary.index, "lb": summary.to_numpy()}
+    def fn(batch):
+        summary = pc.value_counts(batch["item"].drop_null())
+        items, counts = summary.field("values"), summary.field("counts").to_numpy()
+        thresh = np.sort(counts)[-capacity - 1] if len(counts) > capacity else 0
+        keep = counts > thresh
+        return {"item": pc.filter(items, keep), "lb": counts[keep] - thresh}
 
     return fn
 

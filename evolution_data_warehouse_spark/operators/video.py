@@ -26,7 +26,7 @@ Reference parity: haelbrek/Evolution-DATA-WAREHOUSE stores media as
 opaque blobs end-to-end (its ETL never decodes; e.g. the blob
 inventory in analytics/etl). Real demux extends that surface the way
 a training-data pipeline grows next, while keeping the engine's
-mapInPandas batch shape unchanged.
+mapInArrow batch shape unchanged.
 """
 
 from __future__ import annotations

@@ -14,6 +14,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 
+from evolution_data_warehouse_spark.operators.arrow_map import local_table
 from evolution_data_warehouse_spark.operators.datapipe import (
     chunk_fixed_tokens,
     CHUNK_OVERLAP,
@@ -75,7 +76,7 @@ from evolution_data_warehouse_spark.queries.dedup import (
 from evolution_data_warehouse_spark.queries.similarity import DIM
 from evolution_data_warehouse_spark.queries.text import (
     BM25_FP,
-    BM25_QUERIES,
+    BM25_QUERY_TERMS,
     BM25_TOP_K,
     doc_shingles,
 )
@@ -2378,11 +2379,7 @@ def chunk_overlap_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _chunk_bm25_oracle() -> str:
 
-    vals = ", ".join(
-        f"({qid}, '{term}')"
-        for qid, terms in BM25_QUERIES
-        for term in terms
-    )
+    vals = ", ".join(f"({qid}, '{term}')" for qid, term in BM25_QUERY_TERMS)
     return f"""
 WITH d AS (
     SELECT doc_id, str_split(COALESCE(text, ''), ' ') AS toks
@@ -2526,14 +2523,7 @@ def chunk_bm25_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.sum("n_chunk_tokens").cast("bigint").alias("total_tokens"),
     )
     dft = tf.groupBy("token").agg(F.count("*").cast("bigint").alias("df"))
-    q = spark.createDataFrame(
-        [
-            (qid, term)
-            for qid, terms in BM25_QUERIES
-            for term in terms
-        ],
-        "query_id int, token string",
-    )
+    q = local_table(spark, BM25_QUERY_TERMS, "query_id int, token string")
     terms = (
         tf.join(F.broadcast(dft.join(F.broadcast(q), "token")), "token")
         .crossJoin(g)

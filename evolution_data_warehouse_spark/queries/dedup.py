@@ -12,7 +12,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 
-from evolution_data_warehouse_spark.operators.arrow_map import map_rows
+from evolution_data_warehouse_spark.operators.arrow_map import local_table, map_rows
 from evolution_data_warehouse_spark.operators.audio import decode_wav, encode_wav
 from evolution_data_warehouse_spark.operators.audio_fp import audio_fingerprint64
 from evolution_data_warehouse_spark.operators.datapipe import incremental_new
@@ -1444,7 +1444,8 @@ def dedup_minhash_recall_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     recall = (
         _RECALL_FP if n_exact == 0 else (n_hit * _RECALL_FP) // n_exact
     )
-    return spark.createDataFrame(
+    return local_table(
+        spark,
         [(n_exact, n_cand, n_hit, recall)],
         "n_exact bigint, n_candidates bigint, n_hit bigint, recall_fp bigint",
     )

@@ -82,7 +82,7 @@ from evolution_data_warehouse_spark.queries.common import cpu_repartition, regis
 
 
 # ---------------------------------------------------------------------------
-# multimodal plumbing (mapInPandas, fake decode)
+# multimodal plumbing (mapInArrow, fake decode)
 # ---------------------------------------------------------------------------
 
 _MM_ORACLE = """
@@ -98,7 +98,7 @@ FROM documents
 @register(
     "mm_decode_stub",
     _MM_ORACLE,
-    doc="Multimodal decode plumbing: binary payload column → mapInPandas "
+    doc="Multimodal decode plumbing: binary payload column → mapInArrow "
     "(Arrow batches) → typed feature rows. Decode here is a "
     "deterministic fake exercising only the plumbing; the REAL "
     "decoders (BMP/PPM/PNG/JPEG) are oracle-checked separately via "
@@ -140,7 +140,7 @@ FROM documents
     "are synthesized per doc with closed-form pixel content, then the "
     "decoder must parse the actual bytes back; the oracle knows the "
     "channel sums analytically, so any header/stride/filter/row-order "
-    "bug breaks the hash. Two narrow mapInPandas stages, no shuffle; "
+    "bug breaks the hash. Two narrow mapInArrow stages, no shuffle; "
     "baseline JPEG decodes for real too (operators/jpeg.py, "
     "exercised by mm_decode_jpeg).",
 )
@@ -217,7 +217,7 @@ FROM b
 @register(
     "mm_resize_stub",
     _RESIZE_ORACLE,
-    doc="Multimodal resize plumbing: mapInPandas batch op deriving the "
+    doc="Multimodal resize plumbing: mapInArrow batch op deriving the "
     "target tile grid (real path: PIL resize with the same signature).",
 )
 def mm_resize_stub(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -263,7 +263,7 @@ FROM documents
     "mm_audio_features",
     _AUDIO_ORACLE,
     doc="Audio feature-extraction plumbing: deterministic fake features "
-    "from the byte payload via mapInPandas (librosa slot in production).",
+    "from the byte payload via mapInArrow (librosa slot in production).",
 )
 def mm_audio_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     return audio_features_documents(t(spark, sf_dir, "documents"))
@@ -356,7 +356,7 @@ GROUP BY wide_enough
     "extracted metadata → per-bucket size accounting — the 'drop images "
     "under the resolution floor' pass a multimodal training pipeline "
     "runs between decode and packing. The metadata predicate runs on "
-    "the mapInPandas OUTPUT columns, so only decode touches the binary "
+    "the mapInArrow OUTPUT columns, so only decode touches the binary "
     "payload; everything after is columnar.",
 )
 def mm_filter_by_meta(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -402,7 +402,7 @@ FROM documents
     "sampling) plus a per-channel reconstruction bound: mean absolute "
     "channel error <= 3 (4:4:4, DCT rounding only) / <= 8 (4:2:0, "
     "adds chroma subsampling) — any Huffman/DC-prediction/IDCT bug "
-    "blows the bound and breaks the hash. Two narrow mapInPandas "
+    "blows the bound and breaks the hash. Two narrow mapInArrow "
     "stages, Arrow-batched, no shuffle.",
 )
 def mm_decode_jpeg(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -513,7 +513,7 @@ FROM documents
     "strongest possible: the decoded progressive pixels must be "
     "BIT-IDENTICAL to decoding the baseline encode of the same image — "
     "any divergence anywhere in the multi-scan path breaks the hash. "
-    "One narrow mapInPandas stage, Arrow-batched, no shuffle; "
+    "One narrow mapInArrow stage, Arrow-batched, no shuffle; "
     "embarrassingly parallel at any corpus size.",
 )
 def mm_decode_progressive(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -571,7 +571,7 @@ FROM documents
     "empty-pass combination (passes vanish when a dimension is smaller "
     "than the pass origin — the classic off-by-one nest). exact_match "
     "asserts the decoded grid is BIT-IDENTICAL to the synthesized "
-    "uint16 pixels. One mapInPandas stage, no shuffle, embarrassingly "
+    "uint16 pixels. One mapInArrow stage, no shuffle, embarrassingly "
     "parallel.",
 )
 def mm_decode_interlaced(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -639,7 +639,7 @@ FROM documents
     "decode to the same closed-form channel sums mm_decode_real "
     "verifies; the hardened ValueError fuzz contract is what makes "
     "the narrow except clause sound (a genuine code bug still fails "
-    "loudly). Same two narrow mapInPandas stages, no shuffle.",
+    "loudly). Same two narrow mapInArrow stages, no shuffle.",
 )
 def mm_decode_tolerant(spark: SparkSession, sf_dir: str) -> DataFrame:
     return decode_documents_tolerant(t(spark, sf_dir, "documents"))
@@ -674,7 +674,7 @@ FROM documents
     "header round-trips exactly. "
     "The scale shape is the point: demux is a cheap byte walk, the "
     "expensive JPEG decode runs ONLY on sampled frames — one narrow "
-    "mapInPandas stage, Arrow-batched, zero shuffle, embarrassingly "
+    "mapInArrow stage, Arrow-batched, zero shuffle, embarrassingly "
     "parallel across a 100 TB corpus.",
 )
 def mm_video_frames(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -763,7 +763,7 @@ FROM documents
     "desynchronization anywhere breaks the hash. The codec also "
     "decodes real third-party-encoder GIFs in tests (CPython idlelib "
     "icons), fencing off complementary encoder/decoder bugs. One "
-    "narrow mapInPandas stage, no shuffle — embarrassingly parallel "
+    "narrow mapInArrow stage, no shuffle — embarrassingly parallel "
     "at corpus scale.",
 )
 def mm_decode_gif(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -842,7 +842,7 @@ FROM documents
     "Paletted is the dominant real-web-PNG shape; the real-encoder "
     "cross-check lives in test_real_file_cross_format_conformance "
     "(CPython's imghdr images: PNG/BMP/PPM channel sums identical). "
-    "Same embarrassingly-parallel mapInPandas shape as every decode "
+    "Same embarrassingly-parallel mapInArrow shape as every decode "
     "query.",
 )
 def mm_decode_paletted(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -944,7 +944,7 @@ FROM documents
     "decode byte-exactly against the stdlib wave module's independent "
     "parse). Per doc a deterministic PCM signal is encoded at width "
     "doc_id%4+1 and decoded back; exact_match demands bit-identical "
-    "samples. One narrow mapInPandas stage, no shuffle.",
+    "samples. One narrow mapInArrow stage, no shuffle.",
 )
 def mm_audio_wav(spark: SparkSession, sf_dir: str) -> DataFrame:
     def synth_and_decode(d):
@@ -1079,7 +1079,7 @@ FROM documents
     "smooth signal. Conformance behind this query: decode tables and "
     "encoders pinned to audioop's independent C implementation over "
     "the full 16-bit sweep and to the real third-party µ-law encode "
-    "CPython ships (tests/data/audio). One narrow mapInPandas stage, "
+    "CPython ships (tests/data/audio). One narrow mapInArrow stage, "
     "no shuffle — linear in corpus bytes like every codec here.",
 )
 def mm_audio_companding(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1164,7 +1164,7 @@ FROM documents
     "decodes bit-identically to the original pixels (metadata-only "
     "surgery, entropy stream untouched). Parse never touches the "
     "entropy stream — header-IO cost, the filter-before-decode "
-    "ordering a 100 TB image corpus needs. One narrow mapInPandas "
+    "ordering a 100 TB image corpus needs. One narrow mapInArrow "
     "stage, no shuffle.",
 )
 def mm_exif_gps_redact(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1248,7 +1248,7 @@ FROM documents
     "dominate the runner-up 4x in quantized integer magnitude (an "
     "integer-cycle tone under a rectangular window leaks nothing, so "
     "only a correct DFT over correctly decoded samples passes). One "
-    "narrow mapInPandas stage, zero shuffle — linear in corpus bytes, "
+    "narrow mapInArrow stage, zero shuffle — linear in corpus bytes, "
     "the same scale shape as every decoder.",
 )
 def mm_audio_spectral(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1363,7 +1363,7 @@ FROM documents
     "or its diff energy exceeds 8x the pixel count. n_keyframes and "
     "the first cut position are closed-form in doc_id; detect_ok "
     "additionally demands zero in-scene energy and geometry match. "
-    "One narrow mapInPandas stage, zero shuffle — demux byte-walk + "
+    "One narrow mapInArrow stage, zero shuffle — demux byte-walk + "
     "one decode per frame, linear in corpus bytes.",
 )
 def mm_video_keyframes(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1483,7 +1483,7 @@ FROM dims
     "too tiny, every 5th+1 a 10:1 banner, every 5th+2 a solid fill; "
     "the rest healthy gradients. Dims and ranges come from the "
     "DECODED pixels, so only a correct decode passes. Flags are "
-    "column expressions over one narrow mapInPandas stage — zero "
+    "column expressions over one narrow mapInArrow stage — zero "
     "shuffle, linear in corpus bytes; composes ahead of "
     "dedup_image_phash the way the text gates feed the funnel.",
 )
@@ -1780,7 +1780,7 @@ FROM m
     "(100% clipped); healthy docs are integer-bin tones whose "
     "near-zero count is exactly 2 per 64-sample period (the zero "
     "crossings), so every count the engine measures is stated "
-    "exactly by the oracle. One narrow mapInPandas stage, zero "
+    "exactly by the oracle. One narrow mapInArrow stage, zero "
     "shuffle — composes ahead of dedup_audio_fingerprint the way "
     "mm_image_quality feeds mm_image_curation.",
 )

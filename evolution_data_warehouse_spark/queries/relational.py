@@ -20,6 +20,7 @@ import math
 from pyspark.sql import DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 
+from evolution_data_warehouse_spark.operators.arrow_map import local_table
 from evolution_data_warehouse_spark.functions.naming import normalize_name
 from evolution_data_warehouse_spark.operators.asof import asof_join
 from evolution_data_warehouse_spark.operators.dedup import (
@@ -1013,8 +1014,8 @@ SELECT CAST(r_regionkey AS VARCHAR) AS code, r_name AS label FROM region
     "seeds). Ref: load_dimensions.py:376-426. createDataFrame + unionByName.",
 )
 def set_concat_append(spark: SparkSession, sf_dir: str) -> DataFrame:
-    seed = spark.createDataFrame(
-        [("_T", "total"), ("_Z", "unknown")], schema="code string, label string"
+    seed = local_table(
+        spark, [("_T", "total"), ("_Z", "unknown")], "code string, label string"
     )
     derived = t(spark, sf_dir, "region").select(
         F.col("r_regionkey").cast("string").alias("code"),
@@ -3559,7 +3560,7 @@ LIMIT {_HH_K}
     "— and an in-plan assert_true certificate (cnt x capacity > n) "
     "proves no true heavy hitter could have been evicted; the "
     "operator throws rather than silently approximating. Arrow-"
-    "batched mapInPandas, candidate-cardinality everything after the "
+    "batched mapInArrow, candidate-cardinality everything after the "
     "first linear scan.",
 )
 def agg_heavy_hitters_mg(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -18,6 +18,7 @@ from pyspark.sql import Column, DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 from pyspark.sql.functions import udtf
 
+from evolution_data_warehouse_spark.operators.arrow_map import local_table
 from evolution_data_warehouse_spark.operators.rls import secured
 from evolution_data_warehouse_spark.operators.textops import (
     lower_tokens,
@@ -495,9 +496,10 @@ def fn_explode_outer(spark: SparkSession, sf_dir: str) -> DataFrame:
     "NULL-grant branches are covered behaviorally in tests/test_rls.py.",
 )
 def udtf_rls_predicate(spark: SparkSession, sf_dir: str) -> DataFrame:
-    zones = spark.createDataFrame(
+    zones = local_table(
+        spark,
         [("analyst_a", 1), ("analyst_a", 2), ("manager", None)],
-        schema="login string, scope int",
+        "login string, scope int",
     )
     dim = t(spark, sf_dir, "customer").select("c_custkey", "c_name", "c_nationkey")
     return secured(dim, zones, "analyst_a", "c_nationkey")
@@ -775,7 +777,7 @@ def geo_nearest_hub(spark: SparkSession, sf_dir: str) -> DataFrame:
         (41.0 + (F.col("s_suppkey") * 37 % 1000) / 100.0).alias("lat"),
         (-5.0 + (F.col("s_suppkey") * 91 % 1300) / 100.0).alias("lon"),
     )
-    hubs = spark.createDataFrame(_GEO_HUBS, "hub string, hlat double, hlon double")
+    hubs = local_table(spark, _GEO_HUBS, "hub string, hlat double, hlon double")
     dlat = F.radians(F.col("hlat") - F.col("lat")) / 2
     dlon = F.radians(F.col("hlon") - F.col("lon")) / 2
     a = (
@@ -786,7 +788,7 @@ def geo_nearest_hub(spark: SparkSession, sf_dir: str) -> DataFrame:
         * F.sin(dlon)
     )
     km = 2.0 * 6371.0 * F.asin(F.sqrt(a))
-    dists = supp.crossJoin(F.broadcast(hubs)).select(
+    dists = supp.crossJoin(hubs).select(
         "s_suppkey", "hub", km.alias("km")
     )
     w = W.partitionBy("s_suppkey").orderBy(F.asc("km"), F.asc("hub"))

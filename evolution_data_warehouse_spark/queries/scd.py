@@ -19,6 +19,7 @@ import shutil
 from pyspark.sql import DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 
+from evolution_data_warehouse_spark.operators.arrow_map import local_table
 from evolution_data_warehouse_spark.operators.layout import (
     grid_expr,
     grid_sql,
@@ -359,7 +360,8 @@ GROUP BY etape, table_cible
     "oracle-checkable.",
 )
 def view_scd_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
-    log = spark.createDataFrame(
+    log = local_table(
+        spark,
         _SCD_LOG_ROWS,
         schema="etape string, table_cible string, statut string, "
         "date_execution string",
@@ -413,7 +415,7 @@ def proc_refresh_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     m = re.search(r"(\d+) rows", stats.data_type if stats else "")
     num_rows = int(m.group(1)) if m else -1
-    return spark.createDataFrame([(num_rows,)], schema="num_rows long")
+    return local_table(spark, [(num_rows,)], schema="num_rows long")
 
 
 @register(
@@ -547,7 +549,7 @@ def proc_orchestration(spark: SparkSession, sf_dir: str) -> DataFrame:
         skip=["optional"],
     )
     rows = [(r.name, r.status) for r in report.results]
-    return spark.createDataFrame(rows, "step_name string, status string")
+    return local_table(spark, rows, "step_name string, status string")
 
 
 _MAINT_ORACLE = """
@@ -592,7 +594,7 @@ def proc_maintenance_layout(spark: SparkSession, sf_dir: str) -> DataFrame:
         ("compacted_to_at_most_4", 1 if 1 <= after <= 4 else 0),
         ("rows_preserved", preserved if preserved == n_rows else -1),
     ]
-    return spark.createDataFrame(rows, "metric string, value long")
+    return local_table(spark, rows, "metric string, value long")
 
 
 # The composed dashboard view, ``analytics.v_tableau_bord_territorial``

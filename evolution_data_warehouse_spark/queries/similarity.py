@@ -15,6 +15,7 @@ import numpy as np
 from pyspark.sql import Column, DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 
+from evolution_data_warehouse_spark.operators.arrow_map import local_table
 from evolution_data_warehouse_spark.operators.dedup import content_hash64_sql
 from evolution_data_warehouse_spark.operators.similarity import (
     as_double,
@@ -915,7 +916,7 @@ def _ivfpq_adc_df(spark: SparkSession, sf_dir: str) -> DataFrame:
     (vec_id, list_id INT, adc_dist BIGINT) for probed-list rows.
 
     r15: the coarse/fine argmin + ADC chain runs as ONE numpy
-    mapInPandas pass (operators/similarity.py::pq_adc_scan) — the
+    mapInArrow pass (operators/similarity.py::pq_adc_scan) — the
     expression form's higher-order-function folds were the leg's
     whole cost (9.5 s executorRunTime at sf1, interpreted per
     element). Exact int64 end to end, so the output is bit-identical
@@ -1486,7 +1487,7 @@ rv AS (
     "so assignment stays bit-deterministic and oracle-checkable. "
     "adc_dist is the compressed-domain distance to the pinned query "
     "under the rotated lookup tables. The rotation runs as ONE "
-    "Arrow-batched numpy int64 matmul (mapInPandas, no shuffle, "
+    "Arrow-batched numpy int64 matmul (mapInArrow, no shuffle, "
     "partitioning preserved — measured 16x faster than the "
     "interpreted higher-order-function form, see SCALE.md); measured "
     "PQ-vs-OPQ recall delta in sim_pq_opq_recall and SCALE.md.",
@@ -2452,11 +2453,8 @@ def sim_ann_ndcg_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .localCheckpoint(eager=True)
     )
-    disc = F.broadcast(
-        spark.createDataFrame(
-            [(i + 1, d) for i, d in enumerate(_NDCG_DISCOUNT)],
-            "pos int, d long",
-        )
+    disc = local_table(
+        spark, [(i + 1, d) for i, d in enumerate(_NDCG_DISCOUNT)], "pos int, d long"
     )
     idcg = (
         bf.join(disc, bf["rank"] == disc["pos"])

@@ -18,7 +18,7 @@ from pyspark.sql import DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from evolution_data_warehouse_spark.operators.arrow_map import map_rows
+from evolution_data_warehouse_spark.operators.arrow_map import local_table, map_rows
 from evolution_data_warehouse_spark.operators.datapipe import hash_bucket
 from evolution_data_warehouse_spark.operators.dedup import (
     content_hash64,
@@ -334,7 +334,7 @@ _TESTDATA_FILES = (
 )
 def src_blob_list(spark: SparkSession, sf_dir: str) -> DataFrame:
     names = list_blobs(spark, sf_dir, suffix=".parquet")
-    return spark.createDataFrame([(n,) for n in names], schema="object_name string")
+    return local_table(spark, [(n,) for n in names], schema="object_name string")
 
 
 def _stub_fetcher(url: str) -> str:
@@ -585,7 +585,7 @@ FROM documents
     "CRLFCRLF, multistream gzip inflate. The member-per-record layout "
     "is the scale property: any worker can start at a member boundary, "
     "so a 100 TB crawl ingests parallel at record granularity with no "
-    "shuffle (one mapInPandas pass, like every codec here). "
+    "shuffle (one mapInArrow pass, like every codec here). "
     "payload_match demands the response payload round-trip "
     "byte-exactly; content_len is cross-checked against the oracle's "
     "octet_length(encode(text)) — UTF-8 octets on both sides, "
@@ -930,7 +930,7 @@ FROM documents
     "exactly; charset/method/char counts are closed-form in doc_id. "
     "decode_payload never raises — the fallback leg accepts every "
     "byte string, so this stage needs no quarantine at all. One "
-    "narrow mapInPandas pass, zero shuffle.",
+    "narrow mapInArrow pass, zero shuffle.",
 )
 def web_charset_detect(spark: SparkSession, sf_dir: str) -> DataFrame:
     def synth_and_decode(d, text):
@@ -1002,7 +1002,7 @@ FROM documents
     "built; entry counts, first loc, and lastmod coverage are "
     "closed-form in doc_id. The protocol's 50,000-entry cap is the "
     "parser's bomb guard, and malformed XML is ValueError-only — the "
-    "same per-row quarantine contract as WARC. One narrow mapInPandas "
+    "same per-row quarantine contract as WARC. One narrow mapInArrow "
     "pass; sitemaps are independent rows, so discovery parallelizes "
     "at host granularity with no shuffle.",
 )
@@ -1290,11 +1290,11 @@ def web_robots_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
         "WHEN 2 THEN '/tmp/x' || CAST(doc_id AS STRING) || '/index.htm' "
         "ELSE '/private/stats' END AS path",
     )
-    rules = spark.createDataFrame(
-        _robots_rule_rows(), "host string, allow_i int, plen int, rx string"
+    rules = local_table(
+        spark, _robots_rule_rows(), "host string, allow_i int, plen int, rx string"
     )
     m = (
-        urls.join(F.broadcast(rules), "host")
+        urls.join(rules, "host")
         .filter(F.expr("path RLIKE rx"))
         .groupBy("doc_id")
         .agg(
@@ -1350,7 +1350,7 @@ FROM documents
     "changed docs, that the new digest header verifies AND differs "
     "from crawl 1's; refers_ok checks the back-reference URI. "
     "rec2_type and the stored byte count are closed-form in doc_id. "
-    "One narrow mapInPandas stage, zero shuffle.",
+    "One narrow mapInArrow stage, zero shuffle.",
 )
 def src_warc_revisit(spark: SparkSession, sf_dir: str) -> DataFrame:
     def synth_and_parse(d, text):
@@ -1493,7 +1493,7 @@ FROM frontier f LEFT JOIN m ON f.url = m.url
     "separately, run as ONE plan the way web_corpus_curation composes "
     "the post-fetch stages: sitemap discovery (sources/sitemap.py — "
     "real urlset XML built AND parsed back per publisher, one "
-    "mapInPandas scan), URL canonicalization (the fn_url_canonicalize "
+    "mapInArrow scan), URL canonicalization (the fn_url_canonicalize "
     "regex pipeline of dedup_url_canonical: lowercase host, strip "
     "www./default port/query) collapsing syndicated duplicates to one "
     "frontier row (keep-lowest discoverer + source count — same URL "
@@ -1548,13 +1548,11 @@ def web_frontier_build(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.count("*").cast("bigint").alias("n_sources"),
         )
     )
-    rules = spark.createDataFrame(
-        _robots_rule_rows(), "host string, allow_i int, plen int, rx string"
+    rules = local_table(
+        spark, _robots_rule_rows(), "host string, allow_i int, plen int, rx string"
     )
     m = (
-        frontier.join(
-            F.broadcast(rules), frontier.host_key == rules.host
-        )
+        frontier.join(rules, frontier.host_key == rules.host)
         .filter(F.expr("path RLIKE rx"))
         .groupBy("url")
         .agg(
@@ -2355,14 +2353,9 @@ def snk_python_datasource(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     manifest = read_manifest(base)
     files = [os.path.join(base, f) for f in manifest["files"]]
-    schema = T.StructType(
-        [
-            T.StructField("doc_id", T.LongType()),
-            T.StructField("lang", T.StringType()),
-        ]
-    )
+    schema = "doc_id long, lang string"
     if not files:  # empty input relation → manifest lists zero files
-        back = spark.createDataFrame([], schema)
+        back = local_table(spark, [], schema)
     else:
         back = spark.read.schema(schema).json(files)
     return back.groupBy("lang").agg(

@@ -16,6 +16,7 @@ import tempfile
 from pyspark.sql import DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 
+from evolution_data_warehouse_spark.operators.arrow_map import local_table
 from evolution_data_warehouse_spark.operators.dedup import content_hash64
 from evolution_data_warehouse_spark.operators.gopher import (
     gopher_flags_sql,
@@ -458,8 +459,8 @@ def stream_hll_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
         # bounded collect: groups x 256 register rows, never keys
         rows = [(r.grp, int(r.reg), int(r.mr)) for r in merged.collect()]
-        spark.createDataFrame(
-            rows, "grp string, reg bigint, mr int"
+        local_table(
+            spark, rows, "grp string, reg bigint, mr int"
         ).coalesce(1).write.mode("overwrite").parquet(store)
 
     def drain() -> int:
@@ -794,7 +795,8 @@ def stream_lateness_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
             f"idem={in_idem} (want 0), applied={applied_late}, "
             f"dropped={dropped_late}, state-drop-groups={drop2}"
         )
-    audit = spark.createDataFrame(
+    audit = local_table(
+        spark,
         [("_audit_applied_late", applied_late),
          ("_audit_dropped_late", dropped_late)],
         "event_type string, n_events long",

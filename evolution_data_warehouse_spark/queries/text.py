@@ -15,7 +15,7 @@ from itertools import repeat
 from pyspark.sql import Column, DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 
-from evolution_data_warehouse_spark.operators.arrow_map import map_rows
+from evolution_data_warehouse_spark.operators.arrow_map import local_table, map_rows
 from evolution_data_warehouse_spark.operators.bpe import (
     bpe_encode_ids,
     bpe_segment_expr,
@@ -1735,7 +1735,7 @@ FROM tot t JOIN wide w ON t.doc_id = w.doc_id
     "percent threshold by cross-multiplication (100*cov <= pct*total "
     "— no float ever decides). Shape: ZERO-shuffle — the grouping key "
     "(doc, n, gram) never crosses documents, so all 9 per-n gram "
-    "counts are taken inside ONE narrow Arrow-batched mapInPandas "
+    "counts are taken inside ONE narrow Arrow-batched mapInArrow "
     "pass (collections.Counter over exact token tuples — integer "
     "math only, bit-identical to the oracle; operators/gopher.py::"
     "repetition_ngram_stats). History: explode + two hash "
@@ -2035,6 +2035,8 @@ BM25_QUERIES = (
     (2, ("window", "sort", "merge")),
     (3, ("spark", "vector", "scan")),
 )
+#: BM25_QUERIES as (query_id, token) rows
+BM25_QUERY_TERMS = [(qid, term) for qid, terms in BM25_QUERIES for term in terms]
 
 
 BM25_TOP_K = 10
@@ -2050,11 +2052,7 @@ def bm25_scored_cte() -> str:
     """The shared WITH chain ending in scored(query_id, doc_id,
     score_q) — one source of truth so text_bm25_topk's and
     sim_rrf_fusion's oracles cannot silently diverge."""
-    vals = ", ".join(
-        f"({qid}, '{term}')"
-        for qid, terms in BM25_QUERIES
-        for term in terms
-    )
+    vals = ", ".join(f"({qid}, '{term}')" for qid, term in BM25_QUERY_TERMS)
     return f"""
 WITH tk AS (
     SELECT doc_id,
@@ -2134,14 +2132,7 @@ def bm25_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.sum("dl").alias("total_tokens"),
     )
     dft = tf.groupBy("token").agg(F.count("*").alias("df"))
-    q = spark.createDataFrame(
-        [
-            (qid, term)
-            for qid, terms in BM25_QUERIES
-            for term in terms
-        ],
-        "query_id int, token string",
-    )
+    q = local_table(spark, BM25_QUERY_TERMS, "query_id int, token string")
     # Widen BEFORE multiplying: the numerator product grows ~scale²
     # (N·22·tf·T·1e6 ≈ 3e34 at the 100 TB shape) and the denominator's
     # (2df+1) factor pushes it past int64 too, so the FIRST factor of
@@ -2980,11 +2971,7 @@ _QL_FP = 1_000_000
 
 
 def _ql_oracle() -> str:
-    vals = ", ".join(
-        f"({qid}, '{term}')"
-        for qid, terms in BM25_QUERIES
-        for term in terms
-    )
+    vals = ", ".join(f"({qid}, '{term}')" for qid, term in BM25_QUERY_TERMS)
     # identical float expression shape engine-side: ctf/T first, then
     # the smoothed ratio, then log2, then per-term floor fixed-point
     score = (
@@ -3074,7 +3061,7 @@ def text_query_likelihood(spark: SparkSession, sf_dir: str) -> DataFrame:
     # vocabulary gets, and the inner join drops OOV terms on both
     # engines identically
     q_tokens = sorted(
-        {term for _, terms in BM25_QUERIES for term in terms}
+        {term for _, term in BM25_QUERY_TERMS}
     )
     ctf = (
         tf.filter(F.col("token").isin(q_tokens))
@@ -3089,8 +3076,7 @@ def text_query_likelihood(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.struct(
                 F.lit(qid).alias("query_id"), F.lit(term).alias("token")
             )
-            for qid, terms in BM25_QUERIES
-            for term in terms
+            for qid, term in BM25_QUERY_TERMS
         ]
     )
     ex = dl.select(

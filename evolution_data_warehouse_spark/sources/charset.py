@@ -16,7 +16,7 @@ subset of the public WHATWG encoding sniff, in its standard order:
 4. **windows-1252 fallback** — the WHATWG default; never fails, so
    the decode step cannot throw on arbitrary bytes.
 
-Scale shape: pure per-row byte work in a mapInPandas batch — the same
+Scale shape: pure per-row byte work in a mapInArrow batch — the same
 record-granularity, zero-shuffle argument as WARC/sitemap parsing.
 """
 

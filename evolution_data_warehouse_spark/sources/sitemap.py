@@ -14,7 +14,7 @@ protocol's 50,000 cap raise ValueError, nothing else — so the per-row
 quarantine pattern holds for sitemap ingestion too.
 
 Scale shape: one sitemap is a ≤50 MB XML document; a host's sitemaps
-are independent rows, so discovery is a narrow mapInPandas over the
+are independent rows, so discovery is a narrow mapInArrow over the
 (host, sitemap_bytes) table — record-granularity parallelism, no
 shuffle, exactly the WARC argument.
 """

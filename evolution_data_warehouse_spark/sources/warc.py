@@ -13,7 +13,7 @@ member-per-record gzip form (multistream inflate via
 zlib.decompressobj and unused_data).
 
 Engine shape: WARC bytes ride a binary column; parsing is a
-mapInPandas batch over payloads (same plumbing as every codec in
+mapInArrow batch over payloads (same plumbing as every codec in
 operators/), so a crawl ingests at scan speed with no shuffle.
 
 Reference parity note: the reference warehouse ingests CSV/JSON/REST

@@ -16,6 +16,7 @@ from pyspark.sql import functions as F
 
 from evolution_data_warehouse_spark.operators.etl_log import logged_step
 from evolution_data_warehouse_spark.operators.quality import (
+    negative_values,
     orphan_keys,
     run_validations,
 )
@@ -151,9 +152,9 @@ def run_full_etl(
             except KeyError:
                 continue
             with logged_step(spark, log_dir, "facts", name) as info:
-                state["facts"][name] = df
                 # Facts partition by the time key (dims stay single-dir).
                 info["lignes"] = write_fact_incremental(df, out_dir, name)
+                state["facts"][name] = df
                 total += info["lignes"]
         return total
 
@@ -178,20 +179,23 @@ def run_full_etl(
         ]
     )
 
+    # The checks read what the ETL stored: a count over an in-memory
+    # fact would re-run its plan from the staging CSV.
     validations = []
     if "facts" in state and "dims" in state:
-        checks = {}
-        for name, df in state["facts"].items():
-            checks[f"{name}_orphan_temps"] = orphan_keys(
-                df, state["dims"]["dim_temps"], "temps_id"
+        stored = {
+            name: spark.read.parquet(os.path.join(out_dir, name))
+            for name in [*state["facts"], "dim_temps", "dim_geographie"]
+        }
+        checks = {
+            f"{name}_orphan_{key}": orphan_keys(stored[name], stored[dim], f"{key}_id")
+            for name in state["facts"]
+            for key, dim in (("temps", "dim_temps"), ("geo", "dim_geographie"))
+        }
+        if "fait_population" in stored:
+            checks["population_non_negative"] = negative_values(
+                stored["fait_population"], "population"
             )
-            checks[f"{name}_orphan_geo"] = orphan_keys(
-                df, state["dims"]["dim_geographie"], "geo_id"
-            )
-        if "fait_population" in state["facts"]:
-            checks["population_non_negative"] = state["facts"][
-                "fait_population"
-            ].filter(F.col("population") < 0)
         validations = run_validations(checks)
     return report, validations
 

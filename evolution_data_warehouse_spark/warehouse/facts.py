@@ -52,12 +52,14 @@ def fait_population(stg: DataFrame, dims: dict) -> DataFrame:
             "demo_id", F.col("sexe").alias("sex"), "age_group"
         )
     )
-    default_demo = (
-        dims["dim_demographie"].agg(F.min("demo_id")).first()[0]
-    )  # agg_scalar_lookup, :141-144
-    df = _with_keys(stg, dims, year, "departement_code")
-    df = df.join(demo, ["sex", "age_group"], "left").withColumn(
-        "demo_id", F.coalesce("demo_id", F.lit(default_demo))
+    # the default member (agg_scalar_lookup, :141-144) is a one-row
+    # aggregate joined in the plan, so building the fact runs no job
+    default_demo = dims["dim_demographie"].agg(F.min("demo_id").alias("_default"))
+    df = (
+        _with_keys(stg, dims, year, "departement_code")
+        .join(demo, ["sex", "age_group"], "left")
+        .crossJoin(default_demo)
+        .withColumn("demo_id", F.coalesce("demo_id", "_default"))
     )
     return df.groupBy("temps_id", "geo_id", "demo_id").agg(
         dsum("population_value").alias("population")

@@ -3498,24 +3498,63 @@ def _row_pass_reference(name):
     return sorted(out)
 
 
+def _pca_reference(rows):
+    """Eigenvalues (descending) and mean of the population covariance."""
+    import numpy as np
+
+    x = np.array([v for _, v in rows], dtype=np.float64)
+    return np.sort(np.linalg.eigvalsh(np.cov(x.T, bias=True)))[::-1], x.mean(axis=0)
+
+
 @pytest.mark.parametrize(
     "pass_name,case",
-    [(p, c) for p in _VECTOR_PASSES for c in ("clean", *_MX_DIRTY)]
-    + [("bigram_counts", "dirty_text"), ("repetition_ngram_stats", "dirty_text")],
+    [(p, c) for p in (*_VECTOR_PASSES, "pca_fit") for c in ("clean", *_MX_DIRTY)]
+    + [("bigram_counts", "dirty_text"), ("repetition_ngram_stats", "dirty_text")]
+    + [("map_rows_identity", "bigint_null"), ("heavy_hitters_exact", "null_items")],
 )
 def test_map_pass_dirty_input_matrix(spark, pass_name, case):
     """Every Arrow map pass on a fixed adversarial table (NULL rows and
     elements, NaN, ±inf, ±0.0, ragged vectors, duplicate ids, empty
-    partitions, non-ASCII text) either matches its reference — the
-    pq_assign expression form for PQ, Python closed forms for the
-    rest — or raises the documented ValueError naming the offending
-    id. Vector passes keep the input's id type (INT here)."""
+    partitions, non-ASCII text, a 64-bit int next to a NULL, NULL
+    items) either matches its reference — the pq_assign expression
+    form for PQ, Python closed forms and numpy for the rest — or raises
+    the documented ValueError naming the offending id. Vector passes
+    keep the input's id type (INT here)."""
+    from evolution_data_warehouse_spark.operators.arrow_map import (
+        local_table,
+        map_columns,
+        map_rows,
+    )
     from evolution_data_warehouse_spark.operators.gopher import (
         repetition_ngram_stats,
     )
-    from evolution_data_warehouse_spark.operators.similarity import pq_assign
+    from evolution_data_warehouse_spark.operators.similarity import pca_fit, pq_assign
+    from evolution_data_warehouse_spark.operators.sketches import (
+        _mg_summarize,
+        heavy_hitters_exact,
+    )
     from evolution_data_warehouse_spark.queries.text import doc_bigram_counts
 
+    if case == "bigint_null":
+        # one batch holding both rows: fn must see the exact int, not a
+        # float64 rounding of it
+        x = local_table(spark, [(2**62 + 1,), (None,)], "x bigint").coalesce(1)
+        got = map_rows(x, lambda v: [(v,)], "x bigint")
+        assert sorted((tuple(r) for r in got.collect()), key=repr) == [
+            (2**62 + 1,),
+            (None,),
+        ]
+        return
+    if case == "null_items":
+        # a 6, b 5, NULL 4, c 1, d 1 in one batch: NULLs are not counted,
+        # so capacity 3 trims at the 4th count (1) and keeps a and b
+        items = [("a",)] * 6 + [("b",)] * 5 + [(None,)] * 4 + [("c",), ("d",)]
+        src = local_table(spark, items, "item string").coalesce(1)
+        summary = map_columns(src, _mg_summarize(3), "item string, lb long")
+        assert sorted(tuple(r) for r in summary.collect()) == [("a", 5), ("b", 4)]
+        got = heavy_hitters_exact(src.repartition(10), "item", k=1, capacity=3)
+        assert [tuple(r) for r in got.collect()] == [("a", 6)]
+        return
     if case == "dirty_text":
         # more partitions than rows: some partitions are empty
         docs = spark.createDataFrame(_MX_TEXT, "doc_id bigint, text string").repartition(10)
@@ -3530,6 +3569,21 @@ def test_map_pass_dirty_input_matrix(spark, pass_name, case):
     if case != "clean":
         rows.append((9, _MX_DIRTY[case]))
     df = spark.createDataFrame(rows, "vec_id int, embedding array<double>").repartition(8)
+    if pass_name == "pca_fit":
+        import numpy as np
+
+        if case != "clean":
+            # a driver-side ValueError when the ragged vector sits alone
+            # in its batch, a worker-side one otherwise
+            with pytest.raises(Exception, match=r"vec_id 9: "):
+                pca_fit(df, k=2)
+            return
+        comps, mean, ev = pca_fit(df, k=2)
+        ref_ev, ref_mean = _pca_reference(_MX_CLEAN)
+        assert np.allclose(ev, ref_ev[:2], atol=1e-12)
+        assert np.allclose(mean, ref_mean, atol=1e-12)
+        assert np.allclose(comps @ comps.T, np.eye(2), atol=1e-12)
+        return
     got = _run_vector_pass(pass_name, df)
     assert dict(got.dtypes)["vec_id"] == "int"
     if case != "clean":

@@ -31,7 +31,7 @@ _BNL_OK = {
     "emb_norm_outliers": "scalar",  # corpus norm stats
     "agg_sketch_union": "scalar",
     "agg_approx_sample_mean": "scalar",
-    "geo_nearest_hub": "Scan ExistingRDD[hub",  # 5-row seeded hub table
+    "geo_nearest_hub": "LocalTableScan [hub",  # 5-row seeded hub table
     "agg_benford_firstdigit": "scalar",  # total count, 9-row left side
     "agg_rfm_segments": "scalar",  # anchor date over the user grain
     "agg_market_basket": "scalar",  # basket count into the pair stats

@@ -8,12 +8,14 @@ a helper two families need is public in the family that owns it or lives
 in queries/common.py.
 
 The package's Python map passes share one Arrow boundary: only
-operators/arrow_map.py calls ``.mapInPandas(``, and no pass hand-casts
-its output with ``np.int32(`` — Arrow casts to the declared schema.
-Literal tables cross the same boundary: the warehouse ETL path builds
-them with ``arrow_map.local_table`` (a ``LocalTableScan``, no Python
-worker), and the ``createDataFrame(`` sites left elsewhere are pinned
-in an allowlist that may only shrink.
+operators/arrow_map.py calls ``.mapInArrow(``, nothing calls
+``.mapInPandas(``, the boundary imports no pandas, and no pass
+hand-casts its output with ``np.int32(`` — the boundary types every
+column to the declared schema. Literal tables cross the same boundary:
+they are built with ``arrow_map.local_table`` (a ``LocalTableScan``, no
+Python worker); the one ``createDataFrame(`` site left besides it
+(rows from outside the program) is pinned in an allowlist that may
+only shrink.
 """
 
 from __future__ import annotations
@@ -93,42 +95,29 @@ def _package_files_containing(needle: str) -> list[str]:
 
 
 def test_map_passes_go_through_the_arrow_boundary():
-    assert _package_files_containing(".mapInPandas(") == [
+    assert _package_files_containing(".mapInArrow(") == [
         str(BOUNDARY.relative_to(REPO))
     ]
+    assert _package_files_containing(".mapInPandas(") == []
+    modules = [
+        node.module if isinstance(node, ast.ImportFrom) else alias.name
+        for node in ast.walk(ast.parse(BOUNDARY.read_text()))
+        if isinstance(node, (ast.Import, ast.ImportFrom))
+        for alias in node.names
+    ]
+    assert "pandas" not in {m.split(".")[0] for m in modules}
 
 
 def test_no_hand_cast_int32_outputs():
     assert _package_files_containing("np.int32(") == []
 
 
-# Modules on the warehouse ETL path: no ``createDataFrame(`` at all.
-ETL_PATH = ("warehouse/", "operators/etl_log.py", "operators/security.py", "run_etl.py")
-
-# (module, enclosing top-level function) of every other ``createDataFrame(``
-# call in the package. Remove an entry when its site goes; never add one.
+# (module, enclosing top-level function) of every ``createDataFrame(`` call
+# in the package: literal tables use ``arrow_map.local_table`` instead.
+# Remove an entry when its site goes; never add one.
 CREATE_DATAFRAME_ALLOWED = sorted(
     [
         ("operators/arrow_map.py", "local_table"),
-        ("operators/quality.py", "blocklist_matches"),
-        ("operators/similarity.py", "ivf_index_save"),
-        ("queries/datapipe.py", "chunk_bm25_topk"),
-        ("queries/dedup.py", "dedup_minhash_recall_eval"),
-        ("queries/relational.py", "set_concat_append"),
-        ("queries/scalar_fns.py", "geo_nearest_hub"),
-        ("queries/scalar_fns.py", "udtf_rls_predicate"),
-        ("queries/scd.py", "proc_maintenance_layout"),
-        ("queries/scd.py", "proc_orchestration"),
-        ("queries/scd.py", "proc_refresh_stats"),
-        ("queries/scd.py", "view_scd_summary"),
-        ("queries/similarity.py", "sim_ann_ndcg_eval"),
-        ("queries/sources_ext.py", "snk_python_datasource"),
-        ("queries/sources_ext.py", "src_blob_list"),
-        ("queries/sources_ext.py", "web_frontier_build"),
-        ("queries/sources_ext.py", "web_robots_filter"),
-        ("queries/streaming_ops.py", "stream_hll_merge"),
-        ("queries/streaming_ops.py", "stream_lateness_audit"),
-        ("queries/text.py", "bm25_scores"),
         ("sources/external.py", "rest_to_dataframe"),
     ]
 )
@@ -154,6 +143,4 @@ def _create_dataframe_sites() -> list[tuple[str, str]]:
 
 def test_etl_path_builds_literal_tables_as_local_relations():
     sites = _create_dataframe_sites()
-    on_etl_path = [s for s in sites if s[0].startswith(ETL_PATH)]
-    assert not on_etl_path, f"use arrow_map.local_table: {on_etl_path}"
-    assert sites == CREATE_DATAFRAME_ALLOWED
+    assert sites == CREATE_DATAFRAME_ALLOWED, "use arrow_map.local_table"
