@@ -29,6 +29,11 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
+# The package's sessions compile with C1 only (session.py, "JIT policy");
+# the headline measures warm steady state, which C2's code pays for, so
+# the bench sessions put the JVM's default tiered compilation back.
+_TIERED_JIT = {"spark.driver.defaultJavaOptions": "-XX:TieredStopAtLevel=4"}
+
 # Headline set: the scans/joins/aggs/windows that dominate warehouse load,
 # plus the scale-relevant LLM ops. Chosen to exercise every shuffle-shaped
 # plan (star join, hash agg, window, full-outer merge, SCD merge, ANN).
@@ -573,10 +578,14 @@ def _scaling_probe(spark, registry, sf1_ok: bool) -> dict | None:
             return round(min(runs), 3)
 
         spark.stop()
-        hi_spark = get_spark(app_name="bench-scaling-hi", master=f"local[{hi}]")
+        hi_spark = get_spark(
+            app_name="bench-scaling-hi", master=f"local[{hi}]", extra_conf=_TIERED_JIT
+        )
         hi_sec = timed(hi_spark)
         hi_spark.stop()
-        lo_spark = get_spark(app_name="bench-scaling-lo", master=f"local[{lo}]")
+        lo_spark = get_spark(
+            app_name="bench-scaling-lo", master=f"local[{lo}]", extra_conf=_TIERED_JIT
+        )
         lo_sec = timed(lo_spark)
         lo_spark.stop()
         return {
@@ -603,7 +612,7 @@ def main() -> None:
     )
     from evolution_data_warehouse_spark.queries import REGISTRY
 
-    spark = get_spark(app_name="bench")
+    spark = get_spark(app_name="bench", extra_conf=_TIERED_JIT)
 
     # Warm the JVM, file listing, codegen and broadcast machinery outside
     # the timed region (steady-state throughput is what's being measured;

@@ -3,7 +3,8 @@
 The reference's integrity tests (analytics/tests/test_dwh.py:199-236:
 orphan FKs via LEFT JOIN ... IS NULL, non-negative measures) become
 anti-join/filter operators returning the violating rows — composable,
-lazily planned, and cheap at scale (anti-join broadcasts the dim side).
+lazily planned, and cheap at scale (the planner broadcasts the small dim
+side of the anti-join).
 """
 
 from __future__ import annotations
@@ -25,7 +26,7 @@ def orphan_keys(
     """Fact rows whose key has no match in the dimension."""
     dim_key = dim_key or fact_key
     keys = dim.select(F.col(dim_key).alias(fact_key)).distinct()
-    return fact.join(F.broadcast(keys), fact_key, "left_anti")
+    return fact.join(keys, fact_key, "left_anti")
 
 
 def negative_values(df: DataFrame, col: str) -> DataFrame:

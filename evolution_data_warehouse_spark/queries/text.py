@@ -2143,7 +2143,7 @@ def bm25_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
     # is linear in corpus tokens (tf and dl are per-doc-bounded) and
     # stays int64 with ~70x margin at 100 TB.
     terms = (
-        tf.join(F.broadcast(dft.join(F.broadcast(q), "token")), "token")
+        tf.join(dft.join(q, "token"), "token")
         .join(dl, "doc_id")
         .crossJoin(g)
         .select(

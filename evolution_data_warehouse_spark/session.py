@@ -10,6 +10,24 @@ UTC-naive).
 At 100 TB the same knobs change value, not shape: shuffle partitions
 sized so ~128-256 MB lands per reducer, `spark.sql.files.maxPartitionBytes`
 left at 128 MB for scan parallelism, AQE handles the rest at runtime.
+
+JIT policy: every session this factory starts compiles with C1 only
+(``-XX:TieredStopAtLevel=1``) — the ETL CLI, the repository benchmark,
+the test suite and ``tools/gen_sf1.py`` alike. They are batch jobs in a
+fresh JVM that mostly exit before C2's optimized code earns back its
+compile time: in a cold ETL or curation pass the C2 compiler threads
+burned 5-6x the CPU of the executor tasks, and C1-only halves the
+pass's CPU time without slowing it (plans/jit_policy.md, which also
+records the two longer-lived runs that read slower: ``tools/gen_sf1.py``
+and the test suite).
+``bench.py`` measures warm steady-state throughput, which C2 does pay
+for, so its sessions pass ``-XX:TieredStopAtLevel=4`` (the JVM default)
+back in through ``extra_conf``. The flag goes in
+``spark.driver.defaultJavaOptions``, which Spark puts in front of
+``spark.driver.extraJavaOptions``: a caller's own JVM flags (a temp
+directory, ``-XX:-UsePerfData``) sit next to it instead of replacing
+it. Like every driver JVM option it applies only when the session
+launches the JVM, i.e. on the process's first ``get_spark``.
 """
 
 from __future__ import annotations
@@ -17,6 +35,9 @@ from __future__ import annotations
 import os
 
 from pyspark.sql import SparkSession
+
+# C1-only JIT for batch sessions (see "JIT policy" above)
+_JIT_POLICY = "-XX:TieredStopAtLevel=1"
 
 
 def resolve_cpus() -> int:
@@ -56,7 +77,8 @@ def get_spark(
     """Build (or fetch) the engine's SparkSession.
 
     ``master`` defaults to ``local[$SPARK_GRAFT_CPUS]`` (env, default 32)
-    so tests and bench share one code path.
+    so tests and bench share one code path. ``extra_conf`` is applied
+    last, so it overrides any default above, the JIT policy included.
     """
     cpus = resolve_cpus()
     master = master or f"local[{cpus}]"
@@ -79,6 +101,7 @@ def get_spark(
         # string expression first runs; JVM case mappings are identical for
         # ASCII and match DuckDB's simple casing.
         .config("spark.sql.icu.caseMappings.enabled", "false")
+        .config("spark.driver.defaultJavaOptions", _JIT_POLICY)
     )
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)

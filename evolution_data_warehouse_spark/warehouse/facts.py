@@ -1,11 +1,13 @@
 """The six fact builders (analytics/etl/load_facts.py) as declarative
 Spark plans.
 
-Every dimension-key resolution is a broadcast join against the
-dimension (replacing the reference's driver-side dict maps,
-load_facts.py:74-88) — the fact side never shuffles for key lookup,
-which is the property that matters at 100 TB. Unresolvable keys are
-dropped (dropna-on-keys, :155,315,397).
+Every dimension-key resolution is a join against the dimension
+(replacing the reference's driver-side dict maps, load_facts.py:74-88).
+The dimensions are small and sized, so the planner broadcasts them and
+the fact side never shuffles for key lookup, which is the property that
+matters at 100 TB. Only the geography lookup keeps a hint, for a
+communes input without size statistics (plans/broadcast_audit.md).
+Unresolvable keys are dropped (dropna-on-keys, :155,315,397).
 """
 
 from __future__ import annotations
@@ -47,10 +49,8 @@ def fait_population(stg: DataFrame, dims: dict) -> DataFrame:
     """load_facts.py:100-166: per (year, dept, sex, age) population with
     demo key resolution (default member when unresolvable)."""
     year = resolve_column(stg, "year", "time_period", "annee")
-    demo = F.broadcast(
-        dims["dim_demographie"].select(
-            "demo_id", F.col("sexe").alias("sex"), "age_group"
-        )
+    demo = dims["dim_demographie"].select(
+        "demo_id", F.col("sexe").alias("sex"), "age_group"
     )
     # the default member (agg_scalar_lookup, :141-144) is a one-row
     # aggregate joined in the plan, so building the fact runs no job
@@ -97,9 +97,9 @@ def fait_evenements_demo(
 
 def fait_entreprises(stg: DataFrame, dims: dict) -> DataFrame:
     """load_facts.py:253-320: creations aggregated per (year, dept, NAF
-    section), activity key via broadcast lookup."""
+    section), activity key via a join to the NAF sections."""
     year = resolve_column(stg, "year", "time_period", "annee")
-    act = F.broadcast(
+    act = (
         dims["dim_activite"]
         .filter(F.col("type_activite") == "NAF_SECTION")
         .select("activite_id", F.col("code").alias("activity_code"))
