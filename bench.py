@@ -29,11 +29,6 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
-# The package's sessions compile with C1 only (session.py, "JIT policy");
-# the headline measures warm steady state, which C2's code pays for, so
-# the bench sessions put the JVM's default tiered compilation back.
-_TIERED_JIT = {"spark.driver.defaultJavaOptions": "-XX:TieredStopAtLevel=4"}
-
 # Headline set: the scans/joins/aggs/windows that dominate warehouse load,
 # plus the scale-relevant LLM ops. Chosen to exercise every shuffle-shaped
 # plan (star join, hash agg, window, full-outer merge, SCD merge, ANN).
@@ -558,6 +553,7 @@ def _scaling_probe(spark, registry, sf1_ok: bool) -> dict | None:
         return None
     try:
         from evolution_data_warehouse_spark.session import (
+            TIERED_JIT,
             get_spark,
             resolve_cpus,
         )
@@ -579,12 +575,12 @@ def _scaling_probe(spark, registry, sf1_ok: bool) -> dict | None:
 
         spark.stop()
         hi_spark = get_spark(
-            app_name="bench-scaling-hi", master=f"local[{hi}]", extra_conf=_TIERED_JIT
+            app_name="bench-scaling-hi", master=f"local[{hi}]", extra_conf=TIERED_JIT
         )
         hi_sec = timed(hi_spark)
         hi_spark.stop()
         lo_spark = get_spark(
-            app_name="bench-scaling-lo", master=f"local[{lo}]", extra_conf=_TIERED_JIT
+            app_name="bench-scaling-lo", master=f"local[{lo}]", extra_conf=TIERED_JIT
         )
         lo_sec = timed(lo_spark)
         lo_spark.stop()
@@ -607,12 +603,14 @@ def main() -> None:
     sf = float(m.group(1)) if m else -1.0
 
     from evolution_data_warehouse_spark.session import (
+        TIERED_JIT,
         get_spark,
         resolve_cpus as _resolve_cpus,
     )
     from evolution_data_warehouse_spark.queries import REGISTRY
 
-    spark = get_spark(app_name="bench", extra_conf=_TIERED_JIT)
+    # warm steady state is what C2's code pays for (session.py, "JIT policy")
+    spark = get_spark(app_name="bench", extra_conf=TIERED_JIT)
 
     # Warm the JVM, file listing, codegen and broadcast machinery outside
     # the timed region (steady-state throughput is what's being measured;

@@ -39,14 +39,16 @@ def main(argv: list[str] | None = None) -> int:
     from evolution_data_warehouse_spark.operators.etl_log import (
         render_report_html,
     )
-    from evolution_data_warehouse_spark.session import get_spark
+    from evolution_data_warehouse_spark.session import TIERED_JIT, get_spark
     from evolution_data_warehouse_spark.warehouse.demo import (
         make_specs,
         write_fixtures,
     )
     from evolution_data_warehouse_spark.warehouse.etl import run_full_etl
 
-    spark = get_spark(app_name="run_etl")
+    # tiered JIT: C1-only was slower in wall time on 720,000 staged rows
+    # (session.py, "JIT policy")
+    spark = get_spark(app_name="run_etl", extra_conf=TIERED_JIT)
 
     staging_dir = args.staging_dir or os.path.join(args.out, "_fixtures")
     if args.demo:

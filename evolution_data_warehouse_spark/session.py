@@ -11,23 +11,18 @@ At 100 TB the same knobs change value, not shape: shuffle partitions
 sized so ~128-256 MB lands per reducer, `spark.sql.files.maxPartitionBytes`
 left at 128 MB for scan parallelism, AQE handles the rest at runtime.
 
-JIT policy: every session this factory starts compiles with C1 only
-(``-XX:TieredStopAtLevel=1``) — the ETL CLI, the repository benchmark,
-the test suite and ``tools/gen_sf1.py`` alike. They are batch jobs in a
-fresh JVM that mostly exit before C2's optimized code earns back its
-compile time: in a cold ETL or curation pass the C2 compiler threads
-burned 5-6x the CPU of the executor tasks, and C1-only halves the
-pass's CPU time without slowing it (plans/jit_policy.md, which also
-records the two longer-lived runs that read slower: ``tools/gen_sf1.py``
-and the test suite).
-``bench.py`` measures warm steady-state throughput, which C2 does pay
-for, so its sessions pass ``-XX:TieredStopAtLevel=4`` (the JVM default)
-back in through ``extra_conf``. The flag goes in
-``spark.driver.defaultJavaOptions``, which Spark puts in front of
-``spark.driver.extraJavaOptions``: a caller's own JVM flags (a temp
-directory, ``-XX:-UsePerfData``) sit next to it instead of replacing
-it. Like every driver JVM option it applies only when the session
-launches the JVM, i.e. on the process's first ``get_spark``.
+JIT policy: a session compiles with C1 only (``-XX:TieredStopAtLevel=1``)
+unless its caller passes ``TIERED_JIT`` in ``extra_conf``. C1-only suits
+a cold, short batch job, such as the perfbench workloads, which exits
+before C2's optimized code earns back its compile time. The entry
+points measured slower under it opt out: ``bench.py`` (warm steady
+state), the ``run_etl`` CLI (slower on larger inputs),
+``tools/gen_sf1.py`` and the test suite. plans/jit_policy.md holds the
+measurements. The flag goes in ``spark.driver.defaultJavaOptions``,
+which Spark puts in front of ``spark.driver.extraJavaOptions``, so a
+caller's own JVM flags sit next to it instead of replacing it. Like
+every driver JVM option it applies only when the session launches the
+JVM, i.e. on the process's first ``get_spark``.
 """
 
 from __future__ import annotations
@@ -36,8 +31,9 @@ import os
 
 from pyspark.sql import SparkSession
 
-# C1-only JIT for batch sessions (see "JIT policy" above)
+# C1-only JIT for batch sessions, and the opt-out (see "JIT policy" above)
 _JIT_POLICY = "-XX:TieredStopAtLevel=1"
+TIERED_JIT = {"spark.driver.defaultJavaOptions": "-XX:TieredStopAtLevel=4"}
 
 
 def resolve_cpus() -> int:

@@ -77,9 +77,10 @@ def pytest_collection_modifyitems(config, items):
 @pytest.fixture(scope="session")
 def spark():
     os.environ.setdefault("SPARK_GRAFT_CPUS", "8")
-    from evolution_data_warehouse_spark.session import get_spark
+    from evolution_data_warehouse_spark.session import TIERED_JIT, get_spark
 
-    s = get_spark(app_name="tests", shuffle_partitions=8)
+    # one JVM for the whole suite: long-lived enough for C2 to pay (session.py)
+    s = get_spark(app_name="tests", shuffle_partitions=8, extra_conf=TIERED_JIT)
     yield s
 
 

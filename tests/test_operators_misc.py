@@ -3073,7 +3073,7 @@ def test_warc_build_parse_and_splittability():
         build_warc([("response", "http://x/a", b"", {"H": "a\r\nX: y"})])
 
 
-def test_gopher_rules_model():
+def test_gopher_rules_model(spark):
     """Gopher quality rules (operators/gopher.py): every rule verified
     on crafted texts that trip it — bullet-started lines, ellipsis-
     ended lines, symbol density, non-alphabetic words, word-length
@@ -3089,9 +3089,7 @@ def test_gopher_rules_model():
         gopher_metrics,
         gopher_metrics_sql,
     )
-    from evolution_data_warehouse_spark.session import get_spark
 
-    spark = get_spark(app_name="tests", shuffle_partitions=8)
     good = " ".join(
         ["the quick brown fox jumps over that lazy dog with zeal"] * 5
     )

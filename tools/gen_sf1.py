@@ -95,8 +95,9 @@ def generate(
 
 if __name__ == "__main__":
     sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
-    from evolution_data_warehouse_spark.session import get_spark
+    from evolution_data_warehouse_spark.session import TIERED_JIT, get_spark
 
     dst = sys.argv[1] if len(sys.argv) > 1 else "/root/repo/.bench/sf1"
-    generate(get_spark(app_name="gen_sf1"), dst_dir=dst)
+    # 10x the data: C2's code pays back its compile time here (session.py)
+    generate(get_spark(app_name="gen_sf1", extra_conf=TIERED_JIT), dst_dir=dst)
     print(f"sf1 testdata written to {dst}")
