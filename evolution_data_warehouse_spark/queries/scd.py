@@ -804,11 +804,12 @@ FROM orders WHERE o_orderkey % 2 = 0 GROUP BY o_orderstatus
 @register(
     "warehouse_time_travel",
     _TT_ORACLE,
-    doc="Time travel on the manifest-pointer snapshot store "
+    doc="Time travel on the versioned-snapshot store "
     "(warehouse/manifest.py): publish two versions of an orders "
-    "aggregate (v0 full, v1 evens-only), flip the _current marker "
-    "atomically each time, then read BOTH the historical v0 (via "
-    "read_version) and the live v1 (via read_current) back. The "
+    "aggregate (v1 full, v2 evens-only, labelled 0 and 1), flip the "
+    "version pointer atomically each time, then read BOTH the "
+    "historical v1 (via read_version) and the live v2 (via "
+    "read_current) back. The "
     "oracle recomputes both snapshots from the base table, so any "
     "marker/versioning/publish bug — wrong version served, torn "
     "flip, history clobbered — breaks the hash. The store root is "
@@ -827,13 +828,13 @@ def warehouse_time_travel(spark: SparkSession, sf_dir: str) -> DataFrame:
     if os.path.exists(root):
         shutil.rmtree(root)
     base = t(spark, sf_dir, "orders").select("o_orderkey", "o_orderstatus")
-    v0 = publish_versioned(spark, {"orders": base}, root)
-    v1 = publish_versioned(
+    v1 = publish_versioned(spark, {"orders": base}, root)
+    v2 = publish_versioned(
         spark, {"orders": base.filter(F.col("o_orderkey") % 2 == 0)}, root
     )
-    assert (v0, v1) == (0, 1) and list_versions(spark, root) == [0, 1]
+    assert (v1, v2) == (1, 2) and list_versions(spark, root) == [1, 2]
     hist = (
-        read_version(spark, root, "orders", 0)
+        read_version(spark, root, "orders", 1)
         .groupBy("o_orderstatus")
         .agg(F.count("*").alias("n_orders"))
         .select(F.lit(0).alias("version"), "o_orderstatus", "n_orders")

@@ -554,10 +554,10 @@ FROM customer WHERE c_custkey % 50 = 0
     "key; the store is version-directory parquet (atomic publish).",
 )
 def stream_scd2_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
+    from evolution_data_warehouse_spark.warehouse.manifest import publish
     from evolution_data_warehouse_spark.warehouse.scd_store import (
         read_dimension,
         scd2_foreach_batch,
-        upsert_scd2,
     )
 
     root = tempfile.mkdtemp(prefix="stream_scd2_")
@@ -567,12 +567,8 @@ def stream_scd2_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     c = t(spark, sf_dir, "customer")
 
     # seed the store with the current dimension (version-1 snapshot)
-    current = current_dim(spark, sf_dir)
-    from evolution_data_warehouse_spark.warehouse.scd_store import (
-        _publish,
-    )
-
-    _publish(current, table_dir)
+    seed = current_dim(spark, sf_dir)
+    publish(spark, table_dir, seed.write.mode("append").parquet)
 
     batch1 = c.select(
         F.col("c_custkey").alias("customer_key"),

@@ -7,9 +7,10 @@ Usage:
 
 --demo generates FIXTURES.md-shaped staging CSVs first (warehouse/demo.py,
 the generator the tests use too), then runs the full cascade-skip
-pipeline: staging → security → dimensions → facts → refresh, printing the JSON
-step report (run_etl.py:405-410 analog) and writing the HTML report
-next to the warehouse output.
+pipeline: staging → security → dimensions → facts, then the orphan-key
+validations, printing the JSON step report (run_etl.py:405-410 analog)
+and writing the HTML report next to the warehouse output. The
+reference's statistics refresh stage has no step here (warehouse/etl.py).
 """
 
 from __future__ import annotations

@@ -1,10 +1,13 @@
 """Full-warehouse ETL: the run_etl.py --full analog, in-process.
 
-Stages (run_etl.py:160-272): staging → security → dimensions → facts →
-refresh/validate — as one cascade-skip DAG over Spark jobs, with
-log_etl events and data-quality gates. Tables persist as parquet under
-``out_dir`` (partitioned facts); a real deployment points this at
-object storage and the same code runs on a cluster.
+Stages (run_etl.py:160-272): staging → security → dimensions → facts,
+then validation — as one cascade-skip DAG over Spark jobs, with
+log_etl events and data-quality gates. The reference's statistics
+refresh (proc_refresh_stats / sp_updatestats) has no plain-parquet
+counterpart: readers plan from file sizes, and AQE re-plans at run
+time. Tables persist as parquet under ``out_dir`` (partitioned facts);
+a real deployment points this at object storage and the same code runs
+on a cluster.
 """
 
 from __future__ import annotations
@@ -35,7 +38,7 @@ from evolution_data_warehouse_spark.warehouse import dimensions as dims_mod
 from evolution_data_warehouse_spark.warehouse import facts as facts_mod
 
 
-def write_table(df: DataFrame, out_dir: str, name: str, partition_by: str | None = None) -> int:
+def write_table(df: DataFrame, out_dir: str, name: str) -> int:
     """Idempotent overwrite write (the skip-if-loaded guards of
     load_facts.py:162-166 become INSERT OVERWRITE semantics).
 
@@ -43,10 +46,11 @@ def write_table(df: DataFrame, out_dir: str, name: str, partition_by: str | None
     a separate post-write ``count()`` would recompute the whole plan,
     doubling every load at scale."""
     obs = Observation()
-    w = df.observe(obs, F.count(F.lit(1)).alias("rows")).write.mode("overwrite")
-    if partition_by:
-        w = w.partitionBy(partition_by)
-    w.parquet(os.path.join(out_dir, name))
+    (
+        df.observe(obs, F.count(F.lit(1)).alias("rows"))
+        .write.mode("overwrite")
+        .parquet(os.path.join(out_dir, name))
+    )
     return int(obs.get["rows"])
 
 
@@ -57,20 +61,16 @@ def write_fact_incremental(
     an overwrite only replaces the partitions present in ``df`` — re-running
     one period never clobbers the others. The 100 TB idiom for incremental
     fact loads (facts are partitioned by the time key, mirroring the
-    reference's composite fact indexes, 003_create_facts.sql:39-42)."""
-    spark = df.sparkSession
-    prev = spark.conf.get("spark.sql.sources.partitionOverwriteMode", "static")
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
+    reference's composite fact indexes, 003_create_facts.sql:39-42). The
+    mode is a writer option, so the session's own setting is untouched."""
     obs = Observation()
-    try:
-        (
-            df.observe(obs, F.count(F.lit(1)).alias("rows"))
-            .write.mode("overwrite")
-            .partitionBy(partition_by)
-            .parquet(os.path.join(out_dir, name))
-        )
-    finally:
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", prev)
+    (
+        df.observe(obs, F.count(F.lit(1)).alias("rows"))
+        .write.mode("overwrite")
+        .option("partitionOverwriteMode", "dynamic")
+        .partitionBy(partition_by)
+        .parquet(os.path.join(out_dir, name))
+    )
     return int(obs.get["rows"])
 
 
@@ -158,24 +158,12 @@ def run_full_etl(
                 total += info["lignes"]
         return total
 
-    def refresh() -> int:
-        # proc_refresh_stats analog (run_etl.py:263; 007:165-175):
-        # recompute statistics on the written tables so downstream
-        # reads plan with fresh sizes.
-        n = 0
-        for name in list(state.get("facts", {})) + list(state.get("dims", {})):
-            path = os.path.join(out_dir, name)
-            spark.read.parquet(path).createOrReplaceTempView(f"_refresh_{name}")
-            n += 1
-        return n
-
     report = run_pipeline(
         [
             Step("staging", staging),
             Step("security", security),
             Step("dimensions", dimensions, depends_on=["staging"]),
             Step("facts", facts, depends_on=["dimensions"]),
-            Step("refresh", refresh, depends_on=["facts"]),
         ]
     )
 
@@ -250,9 +238,9 @@ def compact_small_files(
     Two honest caveats on "crash-safe" (ADVICE r5). (1) Durability, not
     isolation: between the two renames a concurrent reader listing
     ``path`` sees no table — run compaction in the pipeline's
-    maintenance slot, or front the directory with a pointer/manifest
-    (write each rewrite to a versioned dir and flip a ``_current``
-    marker, which readers resolve first) when readers are always-on —
+    maintenance slot, or front the directory with a version pointer
+    (write each rewrite to a versioned dir and flip a pointer file,
+    which readers resolve first) when readers are always-on —
     implemented in warehouse/manifest.py (publish_versioned /
     read_current), which also gives multi-table flip consistency.
     (2) On object stores (s3a://, abfs://) Hadoop ``rename`` is a

@@ -5,9 +5,8 @@ Every dimension-key resolution is a join against the dimension
 (replacing the reference's driver-side dict maps, load_facts.py:74-88).
 The dimensions are small and sized, so the planner broadcasts them and
 the fact side never shuffles for key lookup, which is the property that
-matters at 100 TB. Only the geography lookup keeps a hint, for a
-communes input without size statistics (plans/broadcast_audit.md).
-Unresolvable keys are dropped (dropna-on-keys, :155,315,397).
+matters at 100 TB. Unresolvable keys are dropped (dropna-on-keys,
+:155,315,397).
 """
 
 from __future__ import annotations
@@ -24,10 +23,8 @@ def _temps_lookup(dim_temps: DataFrame) -> DataFrame:
 
 
 def _geo_lookup(dim_geographie: DataFrame) -> DataFrame:
-    return F.broadcast(
-        dim_geographie.filter(F.col("niveau_geo") == "DEPARTEMENT").select(
-            "geo_id", F.col("code").alias("departement_code")
-        )
+    return dim_geographie.filter(F.col("niveau_geo") == "DEPARTEMENT").select(
+        "geo_id", F.col("code").alias("departement_code")
     )
 
 

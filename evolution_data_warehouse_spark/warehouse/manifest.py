@@ -1,12 +1,10 @@
-"""Manifest-pointer publishing: atomic multi-table snapshot flips.
+"""The versioned-snapshot store: atomic publishes of one or more tables.
 
-The r5 review noted (ADVICE, warehouse/etl.py caveat) that directory
-rename-swaps have a reader-visible gap and are non-atomic O(data)
-copies on object stores. This module is the real fix: every publish
-writes to a fresh versioned directory (``root/v{N}/{table}/``), then
-flips ONE small marker file (``root/_current``) naming the version.
-Readers resolve the marker first, so they always see a complete,
-internally consistent set of tables:
+Every publish claims a fresh version directory ``root/v{N}/`` (N from
+1), lets the caller write into it, then flips ONE small pointer file
+(``root/_CURRENT``, the bare version number) to N. Readers resolve the
+pointer first, so they always see a complete, internally consistent
+version:
 
 * single-object writes are atomic on every serious filesystem and
   object store (S3 PUT, ABFS create-with-overwrite, HDFS rename of a
@@ -15,13 +13,20 @@ internally consistent set of tables:
   land under one version, and the flip exposes them together (the
   "dim and fact must change in lockstep" problem rename-swaps cannot
   solve);
-* a crash before the flip leaves the marker on the old version: the
-  half-written ``v{N}`` is invisible garbage, cleaned by retention,
-  never served.
+* a version is claimed exclusively before anything is written to it,
+  so two publishers never write into the same ``v{N}`` and a flip never
+  shows one publisher's table next to another's;
+* a crash before the flip leaves the pointer on the old version: the
+  half-written ``v{N}`` is skipped by the next claim, never served, and
+  deleted by retention.
+
+The SCD2 dimensions (warehouse/scd_store.py) and the multi-table
+``publish_versioned`` both publish here; perfbench/oracle.py reads the
+layout (``_CURRENT``, ``v{N}/*.parquet``) directly.
 
 This is NEW capability relative to the reference: the reference's ETL
 overwrites tables in place in Azure SQL (per-table transactions; no
-multi-table snapshot publish exists there). The manifest pattern is
+multi-table snapshot publish exists there). The pointer pattern is
 the file/object-store analog of what a warehouse would need to serve
 a consistent dim+fact flip — standard practice in table formats
 (Iceberg/Delta commit pointers), re-expressed minimally.
@@ -29,11 +34,17 @@ a consistent dim+fact flip — standard practice in table formats
 
 from __future__ import annotations
 
-import json
+import os
 import time
 import uuid
+from typing import Callable
 
+from py4j.protocol import Py4JJavaError
 from pyspark.sql import DataFrame, SparkSession
+
+_POINTER = "_CURRENT"
+_CLAIM = "_CLAIM"
+_COMMITTED = "_COMMITTED"
 
 
 def _fs(spark: SparkSession, path: str):
@@ -41,6 +52,13 @@ def _fs(spark: SparkSession, path: str):
     conf = spark.sparkContext._jsc.hadoopConfiguration()  # noqa: SLF001
     p = jvm.org.apache.hadoop.fs.Path(path)
     return jvm, p.getFileSystem(conf), p
+
+
+def _local_path(fs, p) -> str | None:
+    """The OS path of ``p`` when it is on the local filesystem."""
+    if fs.getScheme() != "file":
+        return None
+    return fs.makeQualified(p).toUri().getPath()
 
 
 def _write_small_file(spark: SparkSession, path: str, content: str) -> None:
@@ -56,16 +74,27 @@ def _write_small_file(spark: SparkSession, path: str, content: str) -> None:
     final path — the previous implementation — is atomic only on
     stores that materialize on close (S3A/ABFS PUT); on HDFS and local
     filesystems it TRUNCATES in place, so a concurrent
-    ``current_version`` could read an empty or partial marker (the r7
+    ``current_version`` could read an empty or partial pointer (the r7
     ADVICE finding). A delete-then-plain-rename is equally wrong the
-    other way: it opens a window where ``_current`` does not exist and
-    a concurrent publish would restart numbering at v0 (the r6 ADVICE
+    other way: it opens a window where the pointer does not exist and
+    a concurrent publish would restart numbering at v1 (the r6 ADVICE
     finding). Temp names are uuid-unique so concurrent publishers
     never write the same temp object; the loser's flip simply lands
     last. If the backend has no FileContext binding, fall back to
     direct create-with-overwrite (correct on the object stores that
-    lack one, since those materialize on close)."""
+    lack one, since those materialize on close).
+
+    A local path is swapped with ``os.replace``: Hadoop's local
+    filesystem renames a ``.crc`` side file with the pointer, and two
+    concurrent flips fail on each other's side file."""
     jvm, fs, p = _fs(spark, path)
+    local = _local_path(fs, p)
+    if local is not None:
+        tmp = f"{local}.{uuid.uuid4().hex}.tmp"
+        with open(tmp, "w") as f:
+            f.write(content)
+        os.replace(tmp, local)
+        return
     tmp = jvm.org.apache.hadoop.fs.Path(f"{path}.{uuid.uuid4().hex}.tmp")
     out = fs.create(tmp, True)
     try:
@@ -91,7 +120,7 @@ def _write_small_file(spark: SparkSession, path: str, content: str) -> None:
         # Any OTHER failure (transient IOException, permissions,
         # safe-mode) must propagate: silently degrading to the
         # truncate-in-place write on HDFS/local would reopen exactly
-        # the torn-marker window this function exists to close.
+        # the torn-pointer window this function exists to close.
         unsupported = "UnsupportedFileSystem" in str(exc) or isinstance(
             exc, (AttributeError, TypeError)
         )
@@ -116,7 +145,7 @@ def _read_small_file(spark: SparkSession, path: str) -> str | None:
     try:
         # py4j copies buffers, so a read(byte[]) loop can't fill a
         # Python bytearray — per-byte read() is fine for a 1-line
-        # marker (and avoids depending on commons-io being shaded).
+        # pointer (and avoids depending on commons-io being shaded).
         data = bytearray()
         while True:
             b = stream.read()
@@ -129,36 +158,125 @@ def _read_small_file(spark: SparkSession, path: str) -> str | None:
 
 
 def current_version(spark: SparkSession, root: str) -> int:
-    """Resolve the marker. A missing marker means "never published"
-    (-1). An EMPTY or unparseable marker is different: the marker
-    exists, so a publish has happened — tolerate a brief retry in case
-    a non-atomic backend exposed a mid-write state, then fail loudly
-    rather than returning -1 (which would restart version numbering
-    and clobber live data)."""
-    raw = _read_small_file(spark, f"{root}/_current")
-    if raw is None:
-        return -1
-    # TypeError joins the catch: a marker holding valid-JSON non-dict
-    # content ('123', '[1]') fails the ["version"] subscript with
-    # TypeError, which must retry/fail like any other torn read, not
-    # escape with an undocumented exception class.
-    for _ in range(3):
+    """Resolve the pointer. A missing pointer means "never published"
+    (0). An EMPTY or non-integer pointer is different: it exists, so a
+    publish has happened — tolerate a brief retry in case a non-atomic
+    backend exposed a mid-write state, then fail loudly rather than
+    returning 0 (which would restart version numbering and clobber
+    live data)."""
+    path = f"{root}/{_POINTER}"
+    for attempt in range(4):
+        raw = _read_small_file(spark, path)
+        if raw is None:
+            return 0
         try:
-            return int(json.loads(raw)["version"])
-        except (ValueError, KeyError, TypeError):
-            time.sleep(0.1)
-            raw = _read_small_file(spark, f"{root}/_current")
-            if raw is None:
-                return -1
-    # parse the FINAL re-read too — the last fetch inside the loop was
-    # previously never parsed, so a marker that became valid on the
-    # 4th read still failed the publish
+            return int(raw)
+        except ValueError:
+            if attempt < 3:
+                time.sleep(0.1)
+    raise RuntimeError(f"unreadable version marker {path}: {raw!r}")
+
+
+def _claim(spark: SparkSession, vdir: str) -> bool:
+    """Create ``vdir`` exclusively; False when it already exists.
+
+    ``FileSystem.mkdirs`` also succeeds on an existing directory, so it
+    cannot claim. A local path is claimed with ``os.mkdir``; any other
+    scheme with ``create(overwrite=false)`` of a ``_CLAIM`` file inside
+    the directory, which is atomic on HDFS. Stores with no exclusive
+    create (S3A and other object stores where that call is a
+    check-then-write) give no such guarantee: run one publisher per
+    root there."""
+    jvm, fs, p = _fs(spark, vdir)
+    local = _local_path(fs, p)
+    if local is not None:
+        try:
+            os.mkdir(local)
+        except FileExistsError:
+            return False
+        return True
+    fs.mkdirs(p)
     try:
-        return int(json.loads(raw)["version"])
-    except (ValueError, KeyError, TypeError):
-        raise RuntimeError(
-            f"unreadable manifest marker {root}/_current: {raw!r}"
-        ) from None
+        fs.create(jvm.org.apache.hadoop.fs.Path(p, _CLAIM), False).close()
+    except Py4JJavaError as exc:
+        # HDFS: the file exists, or another client is creating it now
+        lost = ("FileAlreadyExists", "AlreadyBeingCreated")
+        if any(name in str(exc.java_exception) for name in lost):
+            return False
+        raise
+    return True
+
+
+def publish(
+    spark: SparkSession,
+    root: str,
+    write: Callable[[str], None],
+    keep_last: int | None = None,
+) -> int:
+    """Claim the next free ``root/v{N}``, call ``write(vdir)`` to fill
+    it, mark it committed and flip the pointer to N. Returns N.
+
+    A version directory that another publisher holds (or a crashed one
+    left behind) is skipped, never written into. The flip itself is
+    last-writer-wins, the same linearization a MERGE gives. With
+    ``keep_last``, ``retention_cleanup`` runs after the flip (readers
+    that resolved an old version mid-flip get a grace of one retention
+    cycle — size ``keep_last`` to exceed the longest query)."""
+    _, fs, p = _fs(spark, root)
+    fs.mkdirs(p)
+    version = current_version(spark, root) + 1
+    while not _claim(spark, f"{root}/v{version}"):
+        version += 1
+    vdir = f"{root}/v{version}"
+    write(vdir)
+    _write_small_file(spark, f"{vdir}/{_COMMITTED}", "")
+    _write_small_file(spark, f"{root}/{_POINTER}", str(version))
+    if keep_last is not None:
+        retention_cleanup(spark, root, keep_last)
+    return version
+
+
+def _version_dirs(spark: SparkSession, root: str) -> list[int]:
+    """Every ``v{N}`` directory under ``root``, published or not."""
+    _, fs, p = _fs(spark, root)
+    if not fs.exists(p):
+        return []
+    names = [s.getPath().getName() for s in fs.listStatus(p) if s.isDirectory()]
+    return sorted(int(n[1:]) for n in names if n[:1] == "v" and n[1:].isdigit())
+
+
+def _committed(spark: SparkSession, root: str, version: int) -> bool:
+    _, fs, p = _fs(spark, f"{root}/v{version}/{_COMMITTED}")
+    return fs.exists(p)
+
+
+def list_versions(spark: SparkSession, root: str) -> list[int]:
+    """Published versions still on disk, ascending: committed and not
+    past the pointer (a claimed directory that was never flipped to is
+    not a version)."""
+    cur = current_version(spark, root)
+    return [
+        v
+        for v in _version_dirs(spark, root)
+        if v <= cur and _committed(spark, root, v)
+    ]
+
+
+def retention_cleanup(spark: SparkSession, root: str, keep_last: int) -> list[int]:
+    """Keep the newest ``keep_last`` published versions and the
+    pointer's target; delete every version directory older than the
+    oldest kept one, including skipped claims. Mirrors
+    operators/backup.retention_cleanup (backup_to_datalake.py:133,
+    250-251). Returns the deleted versions."""
+    if keep_last < 1:
+        raise ValueError("keep_last must be >= 1")
+    kept = list_versions(spark, root)[-keep_last:]
+    oldest = min(kept + [current_version(spark, root)])
+    jvm, fs, _ = _fs(spark, root)
+    doomed = [v for v in _version_dirs(spark, root) if v < oldest]
+    for v in doomed:
+        fs.delete(jvm.org.apache.hadoop.fs.Path(f"{root}/v{v}"), True)
+    return doomed
 
 
 def publish_versioned(
@@ -167,73 +285,36 @@ def publish_versioned(
     root: str,
     keep_last: int = 3,
 ) -> int:
-    """Write every table under ``root/v{N}/`` then atomically flip the
-    ``_current`` marker to N. Returns N. All-or-nothing: a failure
-    before the flip leaves readers on N-1 with no partial state
-    visible. Old versions beyond ``keep_last`` are deleted AFTER the
-    flip (readers that resolved an old version mid-flip get the
-    standard object-store read-after-delete grace of one retention
-    cycle — size ``keep_last`` to exceed the longest query)."""
-    version = current_version(spark, root) + 1
-    vdir = f"{root}/v{version}"
-    for name, df in tables.items():
-        df.write.mode("overwrite").parquet(f"{vdir}/{name}")
-    _write_small_file(
-        spark,
-        f"{root}/_current",
-        json.dumps({"version": version, "tables": sorted(tables)}),
-    )
-    # retention: drop versions older than the keep window
-    jvm, fs, _ = _fs(spark, root)
-    cutoff = version - keep_last + 1
-    for v in range(max(0, cutoff)):
-        old = jvm.org.apache.hadoop.fs.Path(f"{root}/v{v}")
-        if fs.exists(old):
-            fs.delete(old, True)
-    return version
+    """Publish every table as ``root/v{N}/{table}`` in one version.
+    Returns N. All-or-nothing: a failure before the flip leaves readers
+    on N-1 with no partial state visible."""
 
+    def write(vdir: str) -> None:
+        for name, df in tables.items():
+            df.write.parquet(f"{vdir}/{name}")
 
-def read_current(spark: SparkSession, root: str, table: str) -> DataFrame:
-    """Resolve the marker, then read — readers never list unpublished
-    version directories."""
-    v = current_version(spark, root)
-    if v < 0:
-        raise FileNotFoundError(f"no published version under {root}")
-    return spark.read.parquet(f"{root}/v{v}/{table}")
+    return publish(spark, root, write, keep_last)
 
 
 def read_version(
-    spark: SparkSession, root: str, table: str, version: int
+    spark: SparkSession, root: str, table: str = "", version: int | None = None
 ) -> DataFrame:
-    """Time travel: read a specific published version (must be within
-    the retention window and not beyond the current marker — a vN
-    directory past the marker is unpublished garbage, never served)."""
+    """Time travel: read a retained published version (the pointer's
+    target by default); ``table`` names a subdirectory of it. A version
+    past the pointer or never committed is garbage and is never served."""
     cur = current_version(spark, root)
-    if version < 0 or version > cur:
+    v = cur if version is None else version
+    if not 1 <= v <= cur:
         raise FileNotFoundError(
-            f"version {version} not published under {root} (current {cur})"
+            f"version {v} not published under {root} (current {cur})"
         )
-    path = f"{root}/v{version}/{table}"
-    _, fs, p = _fs(spark, path)
-    if not fs.exists(p):
+    if not _committed(spark, root, v):
         raise FileNotFoundError(
-            f"version {version} of {table} dropped by retention"
+            f"version {v} under {root} dropped by retention or never committed"
         )
-    return spark.read.parquet(path)
+    return spark.read.parquet(f"{root}/v{v}/{table}".rstrip("/"))
 
 
-def list_versions(spark: SparkSession, root: str) -> list[int]:
-    """Published versions still on disk, ascending (<= current marker;
-    unpublished directories past the marker are excluded)."""
-    cur = current_version(spark, root)
-    jvm, fs, p = _fs(spark, root)
-    if cur < 0 or not fs.exists(p):
-        return []
-    out = []
-    for status in fs.listStatus(p):
-        name = status.getPath().getName()
-        if name.startswith("v") and name[1:].isdigit():
-            v = int(name[1:])
-            if v <= cur:
-                out.append(v)
-    return sorted(out)
+def read_current(spark: SparkSession, root: str, table: str) -> DataFrame:
+    """Read ``table`` as of the pointer's version."""
+    return read_version(spark, root, table)

@@ -1,106 +1,29 @@
-"""SCD2 write path over plain parquet: read-merge-overwrite, plus the
-streaming (foreachBatch) upsert form.
+"""SCD2 merge over plain parquet: read the current dimension, apply
+``scd2_apply``, publish the result as the dimension's next version
+(warehouse/manifest.py), plus the streaming (foreachBatch) form.
 
 The reference's batch MERGE (010_scd_dimensions.sql:391-522) runs
-inside Azure SQL; on plain parquet the same semantics are
-read → scd2_apply → overwrite-to-new-location → swap. Writing to a
-versioned subdirectory and swapping a pointer file avoids reading and
-overwriting the same files in one job (not allowed) and gives
-snapshot-isolation reads — on Delta/Iceberg this whole module collapses
-into MERGE INTO (jars not present in this image; SURVEY §2.10).
+inside Azure SQL; on Delta/Iceberg this module collapses into MERGE
+INTO (jars not present in this image; SURVEY §2.10).
 """
 
 from __future__ import annotations
 
-import os
-import re
-import shutil
-
 from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import functions as F
 
 from evolution_data_warehouse_spark.operators.scd import scd2_apply
-
-_POINTER = "_CURRENT"
-_VDIR = re.compile(r"^v(\d+)$")
-
-
-def _current_version(table_dir: str) -> int | None:
-    ptr = os.path.join(table_dir, _POINTER)
-    if not os.path.exists(ptr):
-        return None
-    return int(open(ptr).read().strip())
+from evolution_data_warehouse_spark.warehouse import manifest
 
 
 def read_dimension(
     spark: SparkSession, table_dir: str, version: int | None = None
 ) -> DataFrame | None:
-    """Read the current dimension, or time-travel to an earlier published
-    version (every merge keeps its full predecessor snapshot)."""
-    v = version if version is not None else _current_version(table_dir)
-    if v is None:
+    """Read the current dimension (None before the first merge), or
+    time-travel to an earlier published version."""
+    if version is None and manifest.current_version(spark, table_dir) == 0:
         return None
-    path = os.path.join(table_dir, f"v{v}")
-    if not os.path.isdir(path):
-        raise FileNotFoundError(f"no snapshot v{v} under {table_dir}")
-    return spark.read.parquet(path)
-
-
-def _publish(df: DataFrame, table_dir: str) -> int:
-    """Write the next snapshot and swap the pointer.
-
-    The version directory is claimed with an atomic ``mkdir`` before
-    the write: two concurrent publishers can no longer pick the same
-    v{N} (the loser's mkdir raises and it retries with the next number),
-    so no snapshot is silently overwritten. The pointer swap stays
-    last-writer-wins, which is the same linearization a MERGE gives.
-    """
-    os.makedirs(table_dir, exist_ok=True)
-    v = (_current_version(table_dir) or 0) + 1
-    while True:
-        path = os.path.join(table_dir, f"v{v}")
-        try:
-            os.mkdir(path)  # atomic claim; O_EXCL-equivalent for dirs
-            break
-        except FileExistsError:
-            v += 1
-    # append into the just-claimed empty directory: overwrite would
-    # delete and recreate it, briefly reopening the window in which a
-    # concurrent publisher's mkdir could re-claim the same version.
-    df.write.mode("append").parquet(path)
-    tmp = os.path.join(table_dir, _POINTER + f".tmp.{v}")
-    with open(tmp, "w") as f:
-        f.write(str(v))
-    os.replace(tmp, os.path.join(table_dir, _POINTER))  # atomic swap
-    return v
-
-
-def list_versions(table_dir: str) -> list[int]:
-    """Published snapshot versions, ascending."""
-    if not os.path.isdir(table_dir):
-        return []
-    vs = [
-        int(m.group(1))
-        for d in os.listdir(table_dir)
-        if (m := _VDIR.match(d)) and os.path.isdir(os.path.join(table_dir, d))
-    ]
-    return sorted(vs)
-
-
-def retention_cleanup(table_dir: str, keep_last: int) -> list[int]:
-    """Delete all but the newest ``keep_last`` snapshots; the pointer
-    target is always kept. Mirrors operators/backup.retention_cleanup
-    (backup_to_datalake.py:133,250-251). Returns the deleted versions."""
-    if keep_last < 1:
-        raise ValueError("keep_last must be >= 1")
-    current = _current_version(table_dir)
-    doomed = [
-        v
-        for v in list_versions(table_dir)[:-keep_last]
-        if v != current
-    ]
-    for v in doomed:
-        shutil.rmtree(os.path.join(table_dir, f"v{v}"))
-    return doomed
+    return manifest.read_version(spark, table_dir, version=version)
 
 
 def upsert_scd2(
@@ -115,9 +38,7 @@ def upsert_scd2(
     published version. First call bootstraps version 1 rows."""
     current = read_dimension(spark, table_dir)
     if current is None:
-        from pyspark.sql import functions as F
-
-        bootstrap = staged.select(
+        merged = staged.select(
             key,
             *attrs,
             F.lit(1).alias("version"),
@@ -125,9 +46,13 @@ def upsert_scd2(
             effective_ts.alias("date_debut_validite"),
             F.lit(None).cast("timestamp").alias("date_fin_validite"),
         )
-        return _publish(bootstrap, table_dir)
-    merged = scd2_apply(current, staged, key, attrs, effective_ts)
-    return _publish(merged, table_dir)
+    else:
+        merged = scd2_apply(current, staged, key, attrs, effective_ts)
+    # append into the claimed empty directory: overwrite would delete
+    # and recreate it, reopening the claim to a concurrent publisher
+    return manifest.publish(
+        spark, table_dir, merged.write.mode("append").parquet
+    )
 
 
 def scd2_foreach_batch(
@@ -135,7 +60,6 @@ def scd2_foreach_batch(
 ):
     """foreachBatch sink applying the SCD2 merge per micro-batch — the
     Structured Streaming form of the reference's MERGE (SURVEY §2.9)."""
-    from pyspark.sql import functions as F
 
     def apply_batch(batch_df: DataFrame, epoch_id: int) -> None:
         if batch_df.isEmpty():

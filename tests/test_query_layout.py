@@ -16,6 +16,10 @@ they are built with ``arrow_map.local_table`` (a ``LocalTableScan``, no
 Python worker); the one ``createDataFrame(`` site left besides it
 (rows from outside the program) is pinned in an allowlist that may
 only shrink.
+
+Versioned tables have one store: only warehouse/manifest.py names the
+version pointer file, and no module imports a store's private
+``_publish``.
 """
 
 from __future__ import annotations
@@ -144,3 +148,21 @@ def _create_dataframe_sites() -> list[tuple[str, str]]:
 def test_etl_path_builds_literal_tables_as_local_relations():
     sites = _create_dataframe_sites()
     assert sites == CREATE_DATAFRAME_ALLOWED, "use arrow_map.local_table"
+
+
+def test_one_versioned_snapshot_store():
+    pointer = re.compile(r"\b_current\b", re.IGNORECASE)
+    assert [
+        str(p.relative_to(REPO))
+        for p in sorted(PACKAGE.rglob("*.py"))
+        if pointer.search(p.read_text())
+    ] == ["evolution_data_warehouse_spark/warehouse/manifest.py"]
+    importers = [
+        str(p.relative_to(REPO))
+        for root in (PACKAGE, REPO / "tests", REPO / "tools")
+        for p in sorted(root.rglob("*.py"))
+        for node in ast.walk(ast.parse(p.read_text()))
+        if isinstance(node, ast.ImportFrom)
+        and any(a.name == "_publish" for a in node.names)
+    ]
+    assert importers == []

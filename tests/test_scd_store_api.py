@@ -152,7 +152,7 @@ def test_scd2_time_travel(spark, tmp_path):
 def test_scd2_retention_and_version_claim(spark, tmp_path):
     import os
 
-    from evolution_data_warehouse_spark.warehouse.scd_store import (
+    from evolution_data_warehouse_spark.warehouse.manifest import (
         list_versions,
         retention_cleanup,
     )
@@ -163,7 +163,7 @@ def test_scd2_retention_and_version_claim(spark, tmp_path):
             spark, d, _snap(spark, [("59", nom)]),
             "code", ["nom"], F.lit(TS1).cast("timestamp"),
         )
-    assert list_versions(d) == [1, 2, 3, 4]
+    assert list_versions(spark, d) == [1, 2, 3, 4]
 
     # A concurrent publisher that already claimed v5 forces the next
     # merge to skip to v6 instead of silently overwriting v5.
@@ -173,9 +173,14 @@ def test_scd2_retention_and_version_claim(spark, tmp_path):
         "code", ["nom"], F.lit(TS2).cast("timestamp"),
     )
     assert v == 6
+    # the claimed v5 was never published, so it is no version
+    assert list_versions(spark, d) == [1, 2, 3, 4, 6]
 
-    deleted = retention_cleanup(d, keep_last=2)
-    assert deleted == [1, 2, 3, 4]
-    assert list_versions(d) == [5, 6]
+    # keep the newest two published versions; the unpublished v5 above
+    # the window is left to its publisher
+    deleted = retention_cleanup(spark, d, keep_last=2)
+    assert deleted == [1, 2, 3]
+    assert list_versions(spark, d) == [4, 6]
+    assert os.path.isdir(os.path.join(d, "v5"))
     # current pointer target survives and stays readable
     assert read_dimension(spark, d).count() > 0

@@ -7,6 +7,7 @@ import pytest
 
 from pyspark.sql import functions as F
 
+from evolution_data_warehouse_spark.operators.arrow_map import local_table
 from evolution_data_warehouse_spark.sources.staging import prepare_tables
 from evolution_data_warehouse_spark.warehouse import dimensions as dims_mod
 from evolution_data_warehouse_spark.warehouse import facts as facts_mod
@@ -102,20 +103,20 @@ def test_full_etl_end_to_end(spark, tmp_path_factory):
     root = str(tmp_path_factory.mktemp("etl_src"))
     out = str(tmp_path_factory.mktemp("etl_out"))
     specs = make_specs(write_fixtures(root))
-    communes = spark.createDataFrame(
+    communes = local_table(
+        spark,
         [
             ("59350", "Lille", "59", 236_000),
             ("62041", "Arras", "62", 42_000),
             ("59001", "Petit", "59", 500),
         ],
-        schema="commune_code string, commune_nom string, "
+        "commune_code string, commune_nom string, "
         "departement_code string, population long",
     )
     report, validations = run_full_etl(spark, specs, out, communes)
     statuses = {r.name: r.status for r in report.results}
     assert statuses == {
-        "staging": "OK", "security": "OK", "dimensions": "OK",
-        "facts": "OK", "refresh": "OK",
+        "staging": "OK", "security": "OK", "dimensions": "OK", "facts": "OK",
     }
     assert all(v.ok for v in validations), [v for v in validations if not v.ok]
     # written tables readable + communes landed in dim_geographie
@@ -142,7 +143,11 @@ def test_incremental_fact_partition_overwrite(spark, tmp_path):
     fixed = spark.createDataFrame(
         [(2, 10, 999.0)], schema="temps_id int, geo_id int, measure double"
     )
+    mode = "spark.sql.sources.partitionOverwriteMode"
+    before = spark.conf.get(mode)
     write_fact_incremental(fixed, out, "fait_x")
+    # dynamic overwrite is a writer option: the session keeps its mode
+    assert spark.conf.get(mode) == before
     got = spark.read.parquet(f"{out}/fait_x")
     assert got.count() == 3  # 2 rows of period 1 + 1 corrected row
     assert got.filter("temps_id = 1").count() == 2
@@ -323,10 +328,10 @@ def test_zorder_clustering_bounds_both_dimensions(spark, sf_dir, tmp_path):
 
 
 def test_manifest_publish_atomic_and_consistent(spark, sf_dir, tmp_path):
-    """Manifest-pointer publishing: readers resolve _current first, so
+    """Manifest-pointer publishing: readers resolve _CURRENT first, so
     a half-written next version is invisible; multi-table flips are
     all-or-nothing; retention keeps the window."""
-    from pyspark.sql import functions as F
+    import os
 
     from evolution_data_warehouse_spark.queries.common import t
     from evolution_data_warehouse_spark.warehouse.manifest import (
@@ -339,52 +344,153 @@ def test_manifest_publish_atomic_and_consistent(spark, sf_dir, tmp_path):
     orders = t(spark, sf_dir, "orders").limit(100)
     cust = t(spark, sf_dir, "customer").limit(50)
 
-    v0 = publish_versioned(spark, {"orders": orders, "customer": cust}, root)
-    assert v0 == 0 and current_version(spark, root) == 0
+    v1 = publish_versioned(spark, {"orders": orders, "customer": cust}, root)
+    assert v1 == 1 and current_version(spark, root) == 1
     assert read_current(spark, root, "orders").count() == 100
 
-    # v1 changes BOTH tables; readers must never see a mixed pair
-    v1 = publish_versioned(
+    # v2 changes BOTH tables; readers must never see a mixed pair
+    v2 = publish_versioned(
         spark,
         {"orders": orders.limit(10), "customer": cust.limit(5)},
         root,
     )
-    assert v1 == 1
+    assert v2 == 2
     assert read_current(spark, root, "orders").count() == 10
     assert read_current(spark, root, "customer").count() == 5
 
-    # crash-before-flip simulation: write a v2 directory WITHOUT
-    # flipping the marker — readers stay on v1, garbage is invisible
-    orders.limit(3).write.parquet(f"{root}/v2/orders")
-    assert current_version(spark, root) == 1
+    # crash-before-flip simulation: write a v3 directory WITHOUT
+    # flipping the pointer — readers stay on v2, garbage is invisible
+    orders.limit(3).write.parquet(f"{root}/v3/orders")
+    assert current_version(spark, root) == 2
     assert read_current(spark, root, "orders").count() == 10
 
-    # retention: publish past the keep window drops v0
-    import os
-
-    publish_versioned(spark, {"orders": orders}, root, keep_last=2)
-    # marker skipped the crashed v2? No: next version = current+1 = 2 —
-    # the half-written dir is OVERWRITTEN by the real publish (mode
-    # overwrite), which is exactly the recovery semantics we want
-    assert current_version(spark, root) == 2
+    # the crashed v3 holds a claimed directory, so the next publish
+    # skips it (never writes into another publisher's version) and
+    # lands on v4; retention then drops everything below the window
+    assert publish_versioned(spark, {"orders": orders}, root, keep_last=2) == 4
+    assert current_version(spark, root) == 4
     assert read_current(spark, root, "orders").count() == 100
     publish_versioned(spark, {"orders": orders.limit(7)}, root, keep_last=2)
-    assert current_version(spark, root) == 3
-    assert not os.path.exists(f"{root}/v0")
+    assert current_version(spark, root) == 5
     assert not os.path.exists(f"{root}/v1")
-    assert os.path.exists(f"{root}/v2")
-    # marker flips go through write-temp-then-rename-overwrite (the r7
+    assert not os.path.exists(f"{root}/v2")
+    assert not os.path.exists(f"{root}/v3")
+    assert os.path.exists(f"{root}/v4")
+    # pointer flips go through write-temp-then-rename-overwrite (the r7
     # ADVICE fix: bare create-with-overwrite truncates in place on
-    # HDFS/local, exposing an empty marker mid-write) — no temp objects
+    # HDFS/local, exposing an empty pointer mid-write) — no temp objects
     # may survive a publish
     assert not [f for f in os.listdir(root) if f.endswith(".tmp")]
 
 
+def test_manifest_publish_skips_a_claimed_version(spark, sf_dir, tmp_path):
+    """A version another publisher has claimed (its table directory
+    half-written) is skipped: the next publish takes N+1, and finishing
+    the other publisher's table never changes what readers see."""
+    from evolution_data_warehouse_spark.queries.common import t
+    from evolution_data_warehouse_spark.warehouse.manifest import (
+        list_versions,
+        publish_versioned,
+        read_current,
+    )
+
+    root = str(tmp_path / "store")
+    orders = t(spark, sf_dir, "orders").limit(100)
+    cust = t(spark, sf_dir, "customer").limit(50)
+    first = publish_versioned(spark, {"orders": orders, "customer": cust}, root)
+
+    # another publisher claimed the next version and wrote its orders
+    other = f"{root}/v{first + 1}"
+    orders.limit(3).write.parquet(f"{other}/orders")
+    v = publish_versioned(
+        spark, {"orders": orders.limit(10), "customer": cust.limit(5)}, root
+    )
+    # ... and now finishes its customer table
+    cust.limit(2).write.mode("overwrite").parquet(f"{other}/customer")
+
+    assert v == first + 2
+    assert read_current(spark, root, "orders").count() == 10
+    assert read_current(spark, root, "customer").count() == 5
+    assert list_versions(spark, root) == [first, v]
+
+
+def test_manifest_claim_file_on_non_local_schemes(spark, tmp_path, monkeypatch):
+    """Off the local filesystem a version is claimed by creating its
+    ``_CLAIM`` file without overwrite; a second claim of the same
+    version fails."""
+    from evolution_data_warehouse_spark.warehouse import manifest
+
+    vdir = str(tmp_path / "store" / "v1")
+    jvm, fs, _ = manifest._fs(spark, vdir)
+    path = jvm.org.apache.hadoop.fs.Path
+    monkeypatch.setattr(
+        manifest, "_fs", lambda s, p: (jvm, _NonLocal(fs), path(p))
+    )
+    assert manifest._claim(spark, vdir) is True
+    assert (tmp_path / "store" / "v1" / "_CLAIM").exists()
+    assert manifest._claim(spark, vdir) is False
+
+
+def test_manifest_concurrent_publishers_never_share_a_version(spark, tmp_path):
+    """More publishers than cores race for the same root: every one gets
+    its own version, and each version holds only its publisher's write."""
+    import os
+    import sys
+    import threading
+
+    from evolution_data_warehouse_spark.warehouse.manifest import (
+        current_version,
+        publish,
+    )
+
+    root = str(tmp_path / "store")
+    n = 2 * (os.cpu_count() or 1) + 2
+    got: dict[int, int] = {}
+
+    def publisher(i: int) -> None:
+        def write(vdir: str) -> None:
+            with open(os.path.join(vdir, "who"), "w") as f:
+                f.write(str(i))
+
+        got[i] = publish(spark, root, write)
+
+    interval = sys.getswitchinterval()
+    sys.setswitchinterval(1e-5)
+    try:
+        threads = [threading.Thread(target=publisher, args=(i,)) for i in range(n)]
+        for th in threads:
+            th.start()
+        for th in threads:
+            th.join(timeout=120)
+    finally:
+        sys.setswitchinterval(interval)
+    assert not any(th.is_alive() for th in threads)
+    assert sorted(got.values()) == list(range(1, n + 1))
+    for i, v in got.items():
+        assert (tmp_path / "store" / f"v{v}" / "who").read_text() == str(i)
+    assert current_version(spark, root) in got.values()
+
+
+class _NonLocal:
+    """A Hadoop FileSystem handle that reports a non-local scheme."""
+
+    def __init__(self, fs):
+        self._fs = fs
+
+    def getScheme(self):
+        return "hdfs"
+
+    def __getattr__(self, name):
+        return getattr(self._fs, name)
+
+
 def test_manifest_unreadable_marker_fails_loudly(spark, tmp_path):
-    """An EXISTING but unparseable _current marker means a publish
+    """An EXISTING but non-integer _CURRENT pointer means a publish
     happened and something is wrong — current_version must raise, not
-    return -1 (which would restart numbering at v0 and clobber live
-    data). A missing marker still means 'never published'."""
+    return 0 (which would restart numbering at v1 and clobber live
+    data). A missing pointer still means 'never published'."""
+    import threading
+
     import pytest
 
     from evolution_data_warehouse_spark.warehouse.manifest import (
@@ -392,37 +498,28 @@ def test_manifest_unreadable_marker_fails_loudly(spark, tmp_path):
     )
 
     root = str(tmp_path / "store")
-    assert current_version(spark, root) == -1  # missing → never published
+    pointer = tmp_path / "store" / "_CURRENT"
+    assert current_version(spark, root) == 0  # missing → never published
     (tmp_path / "store").mkdir()
-    (tmp_path / "store" / "_current").write_text("")  # torn write residue
+    pointer.write_text("")  # torn write residue
     with pytest.raises(RuntimeError, match="marker"):
         current_version(spark, root)
-    (tmp_path / "store" / "_current").write_text("{not json")
-    with pytest.raises(RuntimeError, match="marker"):
-        current_version(spark, root)
-    # valid-JSON non-dict content must hit the same documented
-    # RuntimeError, not escape as TypeError from the subscript
-    (tmp_path / "store" / "_current").write_text("123")
-    with pytest.raises(RuntimeError, match="marker"):
-        current_version(spark, root)
-    (tmp_path / "store" / "_current").write_text("[1]")
-    with pytest.raises(RuntimeError, match="marker"):
-        current_version(spark, root)
-    # a marker that becomes valid while retrying succeeds instead of
-    # failing with the stale error (the final re-read is parsed too)
-    import threading
+    for garbage in ("{not json", "1.5", "v3"):
+        pointer.write_text(garbage)
+        with pytest.raises(RuntimeError, match="marker"):
+            current_version(spark, root)
+    pointer.write_text("123")  # the bare version number is the format
+    assert current_version(spark, root) == 123
+    # a pointer that becomes valid while retrying succeeds instead of
+    # failing with the stale error
+    pointer.write_text("")
 
-    (tmp_path / "store" / "_current").write_text("")
-
-    def heal():
-        (tmp_path / "store" / "_current").write_text('{"version": 7}')
-
-    t = threading.Timer(0.15, heal)
-    t.start()
+    timer = threading.Timer(0.15, lambda: pointer.write_text("7"))
+    timer.start()
     try:
         assert current_version(spark, root) == 7
     finally:
-        t.cancel()
+        timer.cancel()
 
 
 def test_route_quarantine_single_scan_with_reasons(spark, sf_dir, tmp_path):
@@ -517,9 +614,8 @@ def test_snapshot_diff_separator_collision_detected(spark):
 def test_manifest_time_travel_api(spark, sf_dir, tmp_path):
     """read_version serves retained history, refuses unpublished or
     retention-dropped versions; list_versions excludes garbage past
-    the marker."""
+    the pointer."""
     import pytest
-    from pyspark.sql import functions as F
 
     from evolution_data_warehouse_spark.queries.common import t
     from evolution_data_warehouse_spark.warehouse.manifest import (
@@ -530,25 +626,25 @@ def test_manifest_time_travel_api(spark, sf_dir, tmp_path):
 
     root = str(tmp_path / "store")
     orders = t(spark, sf_dir, "orders").limit(50)
-    publish_versioned(spark, {"orders": orders}, root)           # v0
-    publish_versioned(spark, {"orders": orders.limit(20)}, root)  # v1
-    assert list_versions(spark, root) == [0, 1]
-    assert read_version(spark, root, "orders", 0).count() == 50
-    assert read_version(spark, root, "orders", 1).count() == 20
+    publish_versioned(spark, {"orders": orders}, root)           # v1
+    publish_versioned(spark, {"orders": orders.limit(20)}, root)  # v2
+    assert list_versions(spark, root) == [1, 2]
+    assert read_version(spark, root, "orders", 1).count() == 50
+    assert read_version(spark, root, "orders", 2).count() == 20
 
-    # unpublished directory past the marker is not a version
+    # unpublished directory past the pointer is not a version
     orders.limit(3).write.parquet(f"{root}/v9/orders")
-    assert list_versions(spark, root) == [0, 1]
+    assert list_versions(spark, root) == [1, 2]
     with pytest.raises(FileNotFoundError, match="not published"):
         read_version(spark, root, "orders", 9)
     with pytest.raises(FileNotFoundError):
-        read_version(spark, root, "orders", -1)
-
-    # retention drops v0 (+ overwrites the v9 garbage on its way to v2)
-    publish_versioned(spark, {"orders": orders.limit(5)}, root, keep_last=2)
-    assert 0 not in list_versions(spark, root)
-    with pytest.raises(FileNotFoundError, match="retention"):
         read_version(spark, root, "orders", 0)
+
+    # retention drops v1 (the v9 garbage stays past the pointer)
+    publish_versioned(spark, {"orders": orders.limit(5)}, root, keep_last=2)
+    assert list_versions(spark, root) == [2, 3]
+    with pytest.raises(FileNotFoundError, match="retention"):
+        read_version(spark, root, "orders", 1)
 
 
 def test_zorder_layout_bounds_both_dimensions(spark, sf_dir, tmp_path):
