@@ -1,11 +1,12 @@
 """Z-order (Morton curve) multi-dimensional data layout.
 
 The clustering leg of warehouse layout maintenance (the compaction leg
-is warehouse/etl.py::compact_small_files, driver-checked as
-proc_maintenance_layout): interleave the bits of two grid-normalized
-sort keys so that files written in curve order bound BOTH dimensions —
-parquet min/max footer stats then prune scans filtered on EITHER
-column, where a single-key sort prunes only its leading column. This
+is warehouse/etl.py::compact_small_files, which publishes a versioned
+table's next version, driver-checked as proc_maintenance_layout):
+interleave the bits of two grid-normalized sort keys so that files
+written in curve order bound BOTH dimensions — parquet min/max footer
+stats then prune scans filtered on EITHER column, where a single-key
+sort prunes only its leading column. This
 is the standard lakehouse OPTIMIZE ZORDER BY technique (public
 knowledge: Morton 1966; every major lakehouse documents it), built
 here from closed-form integer expressions so a DuckDB oracle can

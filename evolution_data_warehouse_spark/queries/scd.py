@@ -502,22 +502,22 @@ def view_open_errors(spark: SparkSession, sf_dir: str) -> DataFrame:
     "SELECT r_regionkey, r_name FROM region",
     doc="Snapshot backup + keep-last-N retention + restore-latest "
     "round trip. Ref: backup_to_datalake.py:74-189 (BACPAC export, "
-    "30-day retention) as stamped parquet snapshot copies.",
+    "30-day retention) as versions of the snapshot store "
+    "(warehouse/manifest.py).",
 )
 def proc_backup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from evolution_data_warehouse_spark.operators.backup import (
-        restore_snapshot,
-        retention_cleanup,
-        snapshot_table,
+    from evolution_data_warehouse_spark.warehouse.manifest import (
+        publish,
+        read_version,
     )
 
     root = scratch("backup_q", sf_dir)
     shutil.rmtree(root, ignore_errors=True)
     df = t(spark, sf_dir, "region").select("r_regionkey", "r_name")
-    for stamp in ("20240101", "20240201", "20240301"):
-        snapshot_table(df, root, "region", stamp)
-    retention_cleanup(root, "region", keep_last=2)
-    return restore_snapshot(spark, root, "region")
+    for _ in range(3):
+        # keep_last=2: the 30-day window, scaled to three backups
+        publish(spark, root, df.write.mode("append").parquet, keep_last=2)
+    return read_version(spark, root)
 
 
 @register(
@@ -565,27 +565,29 @@ UNION ALL SELECT 'rows_preserved', (SELECT COUNT(*) FROM orders)
     doc="Layout maintenance — the immutable-parquet analog of the "
     "reference's index-maintenance proc (Terraform/sql/"
     "007_configure_performance.sql): fragment a table to 16 files, run "
-    "compact_small_files down to 4 with the crash-safe swap, and "
+    "compact_small_files down to 4 as the table's next version, and "
     "report file counts + row preservation. On parquet the B-tree "
     "rebuild becomes compaction + clustering + stats refresh; this is "
     "the compaction leg, deterministic because coalesce targets are "
     "exact.",
 )
 def proc_maintenance_layout(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import glob
-
     from evolution_data_warehouse_spark.warehouse.etl import (
         compact_small_files,
     )
+    from evolution_data_warehouse_spark.warehouse.manifest import (
+        publish,
+        read_version,
+    )
 
     path = scratch("proc_maintenance_layout", sf_dir)
+    shutil.rmtree(path, ignore_errors=True)
     orders = t(spark, sf_dir, "orders")
     n_rows = orders.count()
-    orders.repartition(16).write.mode("overwrite").parquet(path)
-    before = len(glob.glob(f"{path}/*.parquet"))
-    compact_small_files(spark, path, target_files=4)
-    after = len(glob.glob(f"{path}/*.parquet"))
-    preserved = spark.read.parquet(path).count()
+    publish(spark, path, orders.repartition(16).write.mode("append").parquet)
+    before = len(read_version(spark, path).inputFiles())
+    after = compact_small_files(spark, path, target_files=4)
+    preserved = read_version(spark, path).count()
     # coalesce cannot RAISE partition counts, so on low-core hosts the
     # 16 tiny files may pack into fewer than 4 read partitions — the
     # oracle-stable claim is "at most the target", not an exact count

@@ -1305,6 +1305,7 @@ def stream_session_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     from evolution_data_warehouse_spark.streaming.incremental import (
         streaming_session_ingest,
     )
+    from evolution_data_warehouse_spark.warehouse.manifest import read_version
 
     ev = t(spark, sf_dir, "events").select("user_id", "event_id", "ts")
     root = tempfile.mkdtemp(prefix="stream_session_ingest_")
@@ -1321,7 +1322,7 @@ def stream_session_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
             f"availableNow idempotence violated: first run {n1} "
             f"input rows, rerun {n2} (expected >=1 then 0)"
         )
-    sessions = spark.read.parquet(store)
+    sessions = read_version(spark, store)
     w = W.partitionBy("user_id").orderBy("session_start", "session_end")
     return sessions.select(
         "user_id",

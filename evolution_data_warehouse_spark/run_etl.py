@@ -3,7 +3,7 @@
 Usage:
     python -m evolution_data_warehouse_spark.run_etl --demo --out OUT_DIR
     python -m evolution_data_warehouse_spark.run_etl \
-        --staging-dir DIR_WITH_CSVS --out OUT_DIR [--skip security ...]
+        --staging-dir DIR_WITH_CSVS --out OUT_DIR
 
 --demo generates FIXTURES.md-shaped staging CSVs first (warehouse/demo.py,
 the generator the tests use too), then runs the full cascade-skip
@@ -27,9 +27,6 @@ def main(argv: list[str] | None = None) -> int:
     parser.add_argument(
         "--demo", action="store_true",
         help="generate demo staging fixtures into --out/_fixtures first",
-    )
-    parser.add_argument(
-        "--skip", nargs="*", default=[], help="step names to skip"
     )
     args = parser.parse_args(argv)
 

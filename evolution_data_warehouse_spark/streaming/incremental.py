@@ -11,6 +11,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
 
+from evolution_data_warehouse_spark.warehouse import manifest
+
 
 def incremental_append(
     spark: SparkSession,
@@ -60,7 +62,7 @@ def read_upsert_store(spark: SparkSession, store_dir: str) -> DataFrame:
     """
     from pyspark.sql import functions as F
 
-    df = spark.read.parquet(store_dir)
+    df = manifest.read_version(spark, store_dir)
     return df.filter(~F.col("_deleted")).drop("_deleted")
 
 
@@ -90,9 +92,10 @@ def incremental_upsert_latest(
     the batch ``cdc_apply_log`` twin, now without any in-order
     delivery assumption. The merge is one window pass over
     batch-latest ∪ store — batch-sized × store-sized, never log-sized —
-    and the store rewrite is the same read-merge-overwrite discipline
-    as the SCD batches. Exactly-once across restarts comes from the
-    file-source checkpoint. (Tombstone markers accumulate one row per
+    and the store is a versioned table (warehouse/manifest.py), like
+    the SCD2 dimensions: each batch reads the current version and
+    publishes the merge as the next one. Exactly-once across restarts
+    comes from the file-source checkpoint. (Tombstone markers accumulate one row per
     deleted key; at real scale pair with a retention sweep that drops
     markers older than the source's max lateness, i.e. the watermark.)
     """
@@ -115,14 +118,8 @@ def incremental_upsert_latest(
             if tombstone_pred is not None
             else F.lit(False),
         )
-        # explicit existence probe — a transient read failure must
-        # PROPAGATE, not silently rebuild the store from one batch
-        jvm = spark_l.sparkContext._jvm
-        conf = spark_l.sparkContext._jsc.hadoopConfiguration()
-        p_store = jvm.org.apache.hadoop.fs.Path(store_dir)
-        fs = p_store.getFileSystem(conf)
-        if fs.exists(p_store):
-            store = spark_l.read.parquet(store_dir)
+        if manifest.current_version(spark_l, store_dir) > 0:
+            store = manifest.read_version(spark_l, store_dir)
             # same-seq ties (at-least-once redelivery in a new file)
             # break toward the NEW row — '_src' asc puts "new" first
             wm = W.partitionBy(key_col).orderBy(
@@ -137,22 +134,11 @@ def incremental_upsert_latest(
             )
         else:
             merged = latest
-        # crash-safe swap, same discipline as compact_small_files:
-        # write staging, move live aside, move staging in, drop backup
-        tmp = f"{store_dir}__staging"
-        bak = f"{store_dir}__prev"
-        merged.write.mode("overwrite").parquet(tmp)
-        p_tmp = jvm.org.apache.hadoop.fs.Path(tmp)
-        p_bak = jvm.org.apache.hadoop.fs.Path(bak)
-        if fs.exists(p_bak):
-            fs.delete(p_bak, True)
-        if fs.exists(p_store) and not fs.rename(p_store, p_bak):
-            raise IOError(f"upsert: could not move {store_dir} aside")
-        if not fs.rename(p_tmp, p_store):
-            if fs.exists(p_bak):
-                fs.rename(p_bak, p_store)
-            raise IOError(f"upsert: could not publish {tmp}")
-        fs.delete(p_bak, True)
+        # keep_last=2: a reader of the previous store finishes while
+        # the next batch publishes
+        manifest.publish(
+            spark_l, store_dir, merged.write.mode("append").parquet, keep_last=2
+        )
 
     q = (
         spark.readStream.schema(schema)
@@ -307,11 +293,13 @@ def streaming_session_ingest(
     the property that lets a 100 TB event stream keep sessions fresh
     without ever reprocessing closed ones. Counts merge by sum.
 
-    The store rewrite follows the incremental_upsert_latest
-    read-merge-overwrite discipline (localCheckpoint before the
-    self-overwrite); restart idempotence rides the file-source
-    checkpoint (row-count-zero rerun, the streaming_minhash_ingest
-    signal). Returns input rows processed this run.
+    The store is a versioned table like incremental_upsert_latest's:
+    each batch merges the current version and publishes the result as
+    the next one, so it never overwrites what it reads, and a store it
+    cannot read fails the run instead of being rebuilt from one batch.
+    Restart idempotence rides the file-source checkpoint
+    (row-count-zero rerun, the streaming_minhash_ingest signal).
+    Returns input rows processed this run.
     """
     processed_rows: list[int] = []
 
@@ -320,19 +308,17 @@ def streaming_session_ingest(
         if n == 0:
             return
         processed_rows.append(n)
-        batch_sessions = sessionize_events(
+        sessions = sessionize_events(
             batch_df.select("user_id", "event_id", "ts"), gap_us
         )
-        try:
-            store = spark.read.parquet(store_dir)
-            merged = coalesce_session_intervals(
-                store.unionByName(batch_sessions), gap_us
-            )
-        except Exception:  # first batch: no store yet
-            merged = coalesce_session_intervals(batch_sessions, gap_us)
-        # pin before the self-overwrite (read-merge-overwrite discipline)
-        merged.localCheckpoint(eager=True).write.mode("overwrite").parquet(
-            store_dir
+        if manifest.current_version(spark, store_dir) > 0:
+            store = manifest.read_version(spark, store_dir)
+            sessions = store.unionByName(sessions)
+        merged = coalesce_session_intervals(sessions, gap_us)
+        # keep_last=2: a reader of the previous store finishes while
+        # the next batch publishes
+        manifest.publish(
+            spark, store_dir, merged.write.mode("append").parquet, keep_last=2
         )
 
     q = (

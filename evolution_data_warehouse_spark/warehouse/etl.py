@@ -36,6 +36,7 @@ from evolution_data_warehouse_spark.sources.staging import (
 )
 from evolution_data_warehouse_spark.warehouse import dimensions as dims_mod
 from evolution_data_warehouse_spark.warehouse import facts as facts_mod
+from evolution_data_warehouse_spark.warehouse import manifest
 
 
 def write_table(df: DataFrame, out_dir: str, name: str) -> int:
@@ -216,69 +217,23 @@ def write_clustered(
     return path
 
 
-def compact_small_files(
-    spark: SparkSession,
-    path: str,
-    target_files: int,
-) -> int:
-    """Rewrite a parquet directory into ``target_files`` files — the
+def compact_small_files(spark: SparkSession, root: str, target_files: int) -> int:
+    """Compact the versioned table at ``root`` (warehouse/manifest.py):
+    publish its current version coalesced to ``target_files`` files as
+    the next version and return that version's file count — the
     maintenance pass a landing zone needs after many small incremental
-    appends (file-count growth is the classic small-files failure mode
-    at scale: planning time and NameNode/listing pressure grow with
-    file count, not data size).
+    appends (planning time and NameNode/listing pressure grow with file
+    count, not data size).
 
     coalesce (not repartition): merging partitions needs no shuffle.
-    Crash-safe swap order: write tmp → rename live aside as backup →
-    rename tmp into place → drop backup. At every intermediate point a
-    complete copy of the data exists under a deterministic name, so a
-    crash can lose at most the *rewrite*, never the table; each rename
-    return value is checked because Hadoop rename reports failure as
-    False, not an exception.
-
-    Two honest caveats on "crash-safe" (ADVICE r5). (1) Durability, not
-    isolation: between the two renames a concurrent reader listing
-    ``path`` sees no table — run compaction in the pipeline's
-    maintenance slot, or front the directory with a version pointer
-    (write each rewrite to a versioned dir and flip a pointer file,
-    which readers resolve first) when readers are always-on —
-    implemented in warehouse/manifest.py (publish_versioned /
-    read_current), which also gives multi-table flip consistency.
-    (2) On object stores (s3a://, abfs://) Hadoop ``rename`` is a
-    non-atomic O(data) copy-then-delete, so both the window and the
-    crash exposure grow with table size there — the pointer/manifest
-    publish (warehouse/manifest.py) is the right discipline on those
-    schemes; directory rename is only metadata-atomic on HDFS-like
-    filesystems.
+    Readers keep the fragmented version until the pointer flips, so
+    they never see a missing or half-written table, on any scheme.
     """
-    df = spark.read.parquet(path)
-    tmp = f"{path}__compacting"
-    bak = f"{path}__precompact"
-    df.coalesce(target_files).write.mode("overwrite").parquet(tmp)
-    jvm = spark.sparkContext._jvm
-    conf = spark.sparkContext._jsc.hadoopConfiguration()
-    p_old = jvm.org.apache.hadoop.fs.Path(path)
-    p_tmp = jvm.org.apache.hadoop.fs.Path(tmp)
-    p_bak = jvm.org.apache.hadoop.fs.Path(bak)
-    # resolve the filesystem FROM the path so non-default schemes
-    # (s3a://, abfs://) compact too
-    fs = p_old.getFileSystem(conf)
-    if fs.exists(p_bak):
-        fs.delete(p_bak, True)
-    if not fs.rename(p_old, p_bak):
-        raise IOError(f"compact: could not move {path} aside to {bak}")
-    if not fs.rename(p_tmp, p_old):
-        # roll the original back; the rewrite is the casualty, not the data
-        fs.rename(p_bak, p_old)
-        raise IOError(f"compact: could not move {tmp} into place at {path}")
-    fs.delete(p_bak, True)
-    n = len(
-        [
-            f
-            for f in fs.listStatus(p_old)
-            if f.getPath().getName().endswith(".parquet")
-        ]
-    )
-    return n
+    df = manifest.read_version(spark, root).coalesce(target_files)
+    # keep_last=2: a reader that resolved the fragmented version before
+    # the flip finishes; the next publish drops it
+    v = manifest.publish(spark, root, df.write.mode("append").parquet, keep_last=2)
+    return len(manifest.read_version(spark, root, version=v).inputFiles())
 
 
 def zorder_key(col_a: Column, col_b: Column, bits: int = 16) -> Column:

@@ -20,8 +20,11 @@ version:
   half-written ``v{N}`` is skipped by the next claim, never served, and
   deleted by retention.
 
-The SCD2 dimensions (warehouse/scd_store.py) and the multi-table
-``publish_versioned`` both publish here; perfbench/oracle.py reads the
+Every stored table that is replaced publishes here: the SCD2
+dimensions (warehouse/scd_store.py), the multi-table
+``publish_versioned``, compaction (warehouse/etl.py), the streaming
+CDC and session stores (streaming/incremental.py) and the backup
+query (queries/scd.py::proc_backup). perfbench/oracle.py reads the
 layout (``_CURRENT``, ``v{N}/*.parquet``) directly.
 
 This is NEW capability relative to the reference: the reference's ETL
@@ -217,11 +220,15 @@ def publish(
     it, mark it committed and flip the pointer to N. Returns N.
 
     A version directory that another publisher holds (or a crashed one
-    left behind) is skipped, never written into. The flip itself is
-    last-writer-wins, the same linearization a MERGE gives. With
-    ``keep_last``, ``retention_cleanup`` runs after the flip (readers
-    that resolved an old version mid-flip get a grace of one retention
-    cycle — size ``keep_last`` to exceed the longest query)."""
+    left behind) is skipped, never written into. The pointer never
+    moves backwards: the flip is skipped when the pointer, re-read just
+    before it, already reads N or more (a slower publisher finishing
+    after a newer one), and N is still committed and listed. A window
+    remains between that re-read and the flip: a newer publisher that
+    flips inside it is flipped back to N. With ``keep_last``,
+    ``retention_cleanup`` runs after the flip (readers that resolved an
+    old version mid-flip get a grace of one retention cycle — size
+    ``keep_last`` to exceed the longest query)."""
     _, fs, p = _fs(spark, root)
     fs.mkdirs(p)
     version = current_version(spark, root) + 1
@@ -230,7 +237,8 @@ def publish(
     vdir = f"{root}/v{version}"
     write(vdir)
     _write_small_file(spark, f"{vdir}/{_COMMITTED}", "")
-    _write_small_file(spark, f"{root}/{_POINTER}", str(version))
+    if current_version(spark, root) < version:
+        _write_small_file(spark, f"{root}/{_POINTER}", str(version))
     if keep_last is not None:
         retention_cleanup(spark, root, keep_last)
     return version
@@ -265,9 +273,9 @@ def list_versions(spark: SparkSession, root: str) -> list[int]:
 def retention_cleanup(spark: SparkSession, root: str, keep_last: int) -> list[int]:
     """Keep the newest ``keep_last`` published versions and the
     pointer's target; delete every version directory older than the
-    oldest kept one, including skipped claims. Mirrors
-    operators/backup.retention_cleanup (backup_to_datalake.py:133,
-    250-251). Returns the deleted versions."""
+    oldest kept one, including skipped claims: the 30-day backup
+    retention of backup_to_datalake.py:133,250-251 as a version count.
+    Returns the deleted versions."""
     if keep_last < 1:
         raise ValueError("keep_last must be >= 1")
     kept = list_versions(spark, root)[-keep_last:]

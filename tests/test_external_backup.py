@@ -1,15 +1,9 @@
-"""External connector gates + backup/retention tests."""
+"""External connector gates."""
 
 from __future__ import annotations
 
 import pytest
 
-from evolution_data_warehouse_spark.operators.backup import (
-    list_snapshots,
-    restore_snapshot,
-    retention_cleanup,
-    snapshot_table,
-)
 from evolution_data_warehouse_spark.sources.external import (
     jdbc_available,
     list_blobs,
@@ -101,23 +95,6 @@ def test_excel_writes_real_openable_xlsx(spark, tmp_path):
 def test_list_blobs(spark, sf_dir):
     names = list_blobs(spark, sf_dir, suffix=".parquet")
     assert "lineitem.parquet" in names and names == sorted(names)
-
-
-def test_backup_snapshot_retention(spark, sf_dir, tmp_path):
-    root = str(tmp_path / "backups")
-    df = t(spark, sf_dir, "region")
-    for stamp in ["20260101", "20260102", "20260103"]:
-        snapshot_table(df, root, "region", stamp)
-    assert list_snapshots(root, "region") == ["20260101", "20260102", "20260103"]
-
-    deleted = retention_cleanup(root, "region", keep_last=2)
-    assert deleted == ["20260101"]
-    assert list_snapshots(root, "region") == ["20260102", "20260103"]
-
-    restored = restore_snapshot(spark, root, "region")  # latest
-    assert restored.count() == df.count()
-    with pytest.raises(FileNotFoundError):
-        restore_snapshot(spark, root, "nope")
 
 
 def test_jdbc_roundtrip_embedded_derby(spark, sf_dir, tmp_path):

@@ -166,3 +166,10 @@ def test_one_versioned_snapshot_store():
         and any(a.name == "_publish" for a in node.names)
     ]
     assert importers == []
+    # one way to replace a stored table: no rename-aside swaps
+    assert [
+        str(p.relative_to(REPO))
+        for p in sorted(PACKAGE.rglob("*.py"))
+        if ".rename(" in p.read_text()
+    ] == ["evolution_data_warehouse_spark/warehouse/manifest.py"]
+    assert not (PACKAGE / "operators" / "backup.py").exists()

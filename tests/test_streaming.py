@@ -479,6 +479,48 @@ def test_upsert_tombstone_blocks_out_of_order_resurrection(spark, tmp_path):
     assert got == {1: 5, 2: 3}
 
 
+def test_session_store_read_failure_fails_the_drain(spark, tmp_path):
+    """A session store that cannot be read fails the drain instead of
+    being rebuilt from the new batch alone, and the sessions already
+    published stay readable at their version."""
+    import datetime
+    from pathlib import Path
+
+    from pyspark.errors import StreamingQueryException
+
+    from evolution_data_warehouse_spark.streaming.incremental import (
+        streaming_session_ingest,
+    )
+    from evolution_data_warehouse_spark.warehouse.manifest import (
+        current_version,
+        read_version,
+    )
+
+    src, store, ckpt = (str(tmp_path / d) for d in ("src", "store", "ckpt"))
+    schema = "user_id long, event_id long, ts timestamp"
+
+    def land(user_id: int) -> None:
+        row = (user_id, user_id, datetime.datetime(2024, 1, 1))
+        spark.createDataFrame([row], schema).write.mode("append").parquet(src)
+
+    land(1)
+    land(2)
+    assert streaming_session_ingest(spark, src, store, ckpt, schema) == 2
+    v = current_version(spark, store)
+    saved = {f: f.read_bytes() for f in Path(store).rglob("*.parquet")}
+    for f in saved:
+        f.write_bytes(b"not parquet")
+    land(3)
+    with pytest.raises(StreamingQueryException):
+        streaming_session_ingest(spark, src, store, ckpt, schema)
+    assert current_version(spark, store) == v
+
+    for f, data in saved.items():
+        f.write_bytes(data)
+    got = sorted(r.user_id for r in read_version(spark, store, version=v).collect())
+    assert got == [1, 2]
+
+
 def test_incremental_append_bounded_batches(spark, sf_dir, tmp_path):
     from pyspark.sql import functions as F
 

@@ -219,18 +219,25 @@ def test_compact_small_files_preserves_data(spark, sf_dir, tmp_path):
     from pyspark.sql import functions as F
 
     from evolution_data_warehouse_spark.warehouse.etl import compact_small_files
+    from evolution_data_warehouse_spark.warehouse.manifest import (
+        list_versions,
+        publish,
+        read_version,
+    )
 
     src = spark.read.parquet(f"{sf_dir}/nation.parquet")
     path = str(tmp_path / "nation_many")
-    src.repartition(16).write.mode("overwrite").parquet(path)
-    assert len(glob.glob(f"{path}/*.parquet")) == 16
+    publish(spark, path, src.repartition(16).write.mode("append").parquet)
+    assert len(glob.glob(f"{path}/v1/*.parquet")) == 16
 
     n_files = compact_small_files(spark, path, target_files=2)
     assert n_files <= 2
-    assert len(glob.glob(f"{path}/*.parquet")) == n_files
-    assert len(glob.glob(f"{path}__compacting/*")) == 0  # temp dir gone
+    assert list_versions(spark, path) == [1, 2]
+    assert len(glob.glob(f"{path}/v2/*.parquet")) == n_files
+    # readers of the fragmented v1 are untouched by the compaction
+    assert len(glob.glob(f"{path}/v1/*.parquet")) == 16
 
-    after = spark.read.parquet(path)
+    after = read_version(spark, path)
     assert after.count() == src.count()
     assert after.exceptAll(src).count() == 0
 
@@ -471,6 +478,54 @@ def test_manifest_concurrent_publishers_never_share_a_version(spark, tmp_path):
     assert current_version(spark, root) in got.values()
 
 
+def test_manifest_pointer_never_moves_backwards(spark, tmp_path):
+    """A publisher that claimed v1 but finishes after another publisher
+    flipped v2 commits v1 without moving the pointer back to it."""
+    import threading
+
+    from evolution_data_warehouse_spark.warehouse.manifest import (
+        current_version,
+        list_versions,
+        publish,
+    )
+
+    root = str(tmp_path / "store")
+    claimed, release = threading.Event(), threading.Event()
+    got: dict[str, int] = {}
+
+    def slow_write(vdir: str) -> None:
+        claimed.set()
+        release.wait(120)
+
+    slow = threading.Thread(
+        target=lambda: got.update(slow=publish(spark, root, slow_write))
+    )
+    slow.start()
+    try:
+        assert claimed.wait(120)
+        got["fast"] = publish(spark, root, lambda vdir: None)
+    finally:
+        release.set()
+        slow.join(120)
+    assert got == {"slow": 1, "fast": 2}
+    assert current_version(spark, root) == 2
+    assert list_versions(spark, root) == [1, 2]
+
+
+def test_run_etl_rejects_skip_before_a_session_starts(monkeypatch, tmp_path):
+    """``--skip`` is not an option: argparse rejects it before
+    ``get_spark`` runs."""
+    from evolution_data_warehouse_spark import run_etl, session
+
+    def no_session(*args, **kwargs):
+        raise AssertionError("a session started")
+
+    monkeypatch.setattr(session, "get_spark", no_session)
+    with pytest.raises(SystemExit) as exc:
+        run_etl.main(["--demo", "--out", str(tmp_path), "--skip", "security"])
+    assert exc.value.code == 2
+
+
 class _NonLocal:
     """A Hadoop FileSystem handle that reports a non-local scheme."""
 
@@ -622,9 +677,12 @@ def test_manifest_time_travel_api(spark, sf_dir, tmp_path):
         list_versions,
         publish_versioned,
         read_version,
+        retention_cleanup,
     )
 
     root = str(tmp_path / "store")
+    with pytest.raises(FileNotFoundError, match="not published"):
+        read_version(spark, root, "orders")  # nothing published yet
     orders = t(spark, sf_dir, "orders").limit(50)
     publish_versioned(spark, {"orders": orders}, root)           # v1
     publish_versioned(spark, {"orders": orders.limit(20)}, root)  # v2
@@ -645,6 +703,10 @@ def test_manifest_time_travel_api(spark, sf_dir, tmp_path):
     assert list_versions(spark, root) == [2, 3]
     with pytest.raises(FileNotFoundError, match="retention"):
         read_version(spark, root, "orders", 1)
+    # keep_last=1 drops exactly the one older version; the latest reads
+    assert retention_cleanup(spark, root, keep_last=1) == [2]
+    assert list_versions(spark, root) == [3]
+    assert read_version(spark, root, "orders").count() == 5
 
 
 def test_zorder_layout_bounds_both_dimensions(spark, sf_dir, tmp_path):
