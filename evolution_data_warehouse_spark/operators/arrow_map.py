@@ -1,15 +1,16 @@
 """The one Arrow boundary between the engine's Python values and Spark.
 
-Every narrow Python pass (``mapInArrow``) and every literal table goes
-through one of three entry points here, each taking its output schema as
-a DDL string. One typing rule serves all three (Spark SQL, SIGMOD'15:
-the DataFrame declares the schema, one engine layer owns the
-conversion): each output column becomes ``pa.array(col, type=f.type)``
-over the DDL's Arrow schema. ``mapInArrow`` does not cast what a pass
-returns (an ``int32`` array under a ``bigint`` field fails in the JVM),
-so the rule is what makes a pass's plain Python or numpy values — or
-Arrow arrays passed through — land as the declared types, with ``None``
-as NULL and no per-column dtype casts in the passes.
+Every stateless Python pass (``mapInArrow``, grouped ``applyInArrow``)
+and every literal table goes through one of four entry points here, each
+taking its output schema as a DDL string. One typing rule serves all
+four (Spark SQL, SIGMOD'15: the DataFrame declares the schema, one
+engine layer owns the conversion): each output column becomes
+``pa.array(col, type=f.type)`` over the DDL's Arrow schema. Spark's
+Arrow passes do not cast what a pass returns (an ``int32`` array under a
+``bigint`` field fails in the JVM), so the rule is what makes a pass's
+plain Python or numpy values — or Arrow arrays passed through — land
+as the declared types, with ``None`` as NULL and no per-column dtype
+casts in the passes.
 
 * :func:`map_rows` — ``fn(*row)`` yields zero or more output tuples in
   schema column order. Each input column is read exactly: a nullable
@@ -20,14 +21,17 @@ as NULL and no per-column dtype casts in the passes.
   ``pa.RecordBatch`` and returns ``{name: array}`` for vectorised
   passes; numpy arrays and Arrow arrays go through without a Python
   loop.
+* :func:`map_groups` — ``fn(table)`` gets each group of a ``groupBy``
+  as one ``pa.Table`` and returns ``{name: column}``, the
+  :func:`map_columns` contract; a group may return zero rows.
 * :func:`local_table` — literal rows typed by a DDL string become a
   ``pyarrow.Table``, which Spark plans as a ``LocalTableScan`` in the
   driver: no RDD, no Python worker, so every reuse of the table (each
   fact join, each orphan-key check) re-reads rows the JVM already
   holds.
 
-Grouped passes (``applyInPandas``, ``cogroup``,
-``applyInPandasWithState``) are not map passes and stay direct calls.
+The stateful ``applyInPandasWithState`` passes (streaming/events.py)
+keep their state in pandas: PySpark has no Arrow form of that API.
 """
 
 from __future__ import annotations
@@ -35,7 +39,7 @@ from __future__ import annotations
 from collections.abc import Callable, Iterable, Iterator, Mapping, Sequence
 
 import pyarrow as pa
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, GroupedData, SparkSession
 from pyspark.sql.pandas.types import to_arrow_schema
 from pyspark.sql.types import StructType
 
@@ -86,6 +90,25 @@ def map_columns(
                 yield _typed_batch([out[name] for name in arrow.names], arrow)
 
     return df.mapInArrow(run, schema)
+
+
+def map_groups(
+    grouped: GroupedData,
+    fn: Callable[[pa.Table], Mapping[str, object]],
+    schema: str,
+) -> DataFrame:
+    """Apply ``fn`` to every group of ``grouped`` as one ``pa.Table``;
+    the ``{name: column}`` it returns becomes the group's output rows of
+    DDL ``schema``."""
+    arrow = to_arrow_schema(StructType.fromDDL(schema))
+
+    def run(table: pa.Table) -> pa.Table:
+        out = fn(table)
+        return pa.Table.from_batches(
+            [_typed_batch([out[name] for name in arrow.names], arrow)]
+        )
+
+    return grouped.applyInArrow(run, schema)
 
 
 def local_table(

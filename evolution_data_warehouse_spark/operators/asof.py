@@ -2,15 +2,10 @@
 
 The reference's SCD2 validity window (date_debut/date_fin_validite,
 010_scd_dimensions.sql:114-127) is the natural home of an as-of join
-(SURVEY.md §2.3). Spark has no native as-of join; two strategies:
-
-* ``asof_join`` — equi-join on the key + inequality filter + per-left-row
-  row_number. One shuffle; fine when the per-key right-side fan-out is
-  bounded (dimension versions: a handful per key). Fully expressible to
-  the DuckDB oracle.
-* ``asof_join_pandas`` — groups co-partitioned by key, pd.merge_asof
-  inside ``applyInPandas``. The scale path when the right side has many
-  rows per key (sorted-merge is O(n+m) per key instead of O(n·m)).
+(SURVEY.md §2.3). Spark has no native as-of join; ``asof_join`` is an
+equi-join on the key + inequality filter + per-left-row row_number. One
+shuffle; fine when the per-key right-side fan-out is bounded (dimension
+versions: a handful per key). Fully expressible to the DuckDB oracle.
 """
 
 from __future__ import annotations
@@ -49,30 +44,3 @@ def asof_join(
         .drop("_rn", "_r_key")
     )
 
-
-def asof_join_pandas(
-    left: DataFrame,
-    right: DataFrame,
-    on: str,
-    left_ts: str,
-    right_ts: str,
-    out_schema: str,
-) -> DataFrame:
-    """merge_asof per co-partitioned key group (the 100 TB path: one
-    shuffle each side, linear merge per group, no pairwise blow-up)."""
-    import pandas as pd
-
-    lcols = left.columns
-
-    def merge(key, pdf_l: pd.DataFrame, pdf_r: pd.DataFrame) -> pd.DataFrame:
-        pdf_l = pdf_l.sort_values(left_ts)
-        pdf_r = pdf_r.sort_values(right_ts)
-        if pdf_l.empty:
-            return pd.DataFrame(
-                columns=lcols + [c for c in pdf_r.columns if c != on]
-            )
-        return pd.merge_asof(
-            pdf_l, pdf_r.drop(columns=[on]), left_on=left_ts, right_on=right_ts
-        )
-
-    return left.groupBy(on).cogroup(right.groupBy(on)).applyInPandas(merge, out_schema)

@@ -21,7 +21,11 @@ import pyarrow.compute as pc
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from evolution_data_warehouse_spark.operators.arrow_map import local_table, map_columns
+from evolution_data_warehouse_spark.operators.arrow_map import (
+    local_table,
+    map_columns,
+    map_groups,
+)
 
 #: id and vector columns of the embeddings relation the numpy vector
 #: passes read (:func:`_vector_pass`).
@@ -434,8 +438,9 @@ def _neighbor_counts_grouped(
     guarded: DataFrame, tau: float, label_col: str, id_col: str
 ) -> DataFrame:
     """Per-slice better-neighbor counts for :func:`semantic_dedup`'s
-    guarded path: one applyInPandas group per (label, _sub) slice
-    (bounded by the max_cluster guard), pairwise cosines in numpy.
+    guarded path: one Arrow group per (label, _sub) slice (bounded by
+    the max_cluster guard), pairwise cosines in numpy over the slice's
+    flat vector values.
 
     Exactness contract (the oracle models the JVM expressions, so this
     must be bit-identical to the former self-join):
@@ -462,26 +467,26 @@ def _neighbor_counts_grouped(
       and the counts of rows sharing an id add up into one output row
       (the join's ``groupBy("_ida")``).
     """
-    import pandas as pd
-
     id_type = dict(guarded.dtypes)[id_col]
     out_schema = f"_ida {id_type}, _n_better bigint"
 
-    def counts(pdf: pd.DataFrame) -> pd.DataFrame:
-        work = pdf[~pdf["_bad"]]
+    def counts(table: pa.Table) -> dict:
+        work = table.filter(pc.invert(table["_bad"]))
+        vecs = work["_vec"].combine_chunks()
+        lens = pc.list_value_length(vecs).to_numpy(zero_copy_only=False)
         better = {}
-        arrs = [np.asarray(v, dtype="float64") for v in work["_vec"]]
-        lens = np.array([a.shape[0] for a in arrs])
         for dim in np.unique(lens):
             sel = lens == dim
-            if sel.sum() < 2:
+            n = int(sel.sum())
+            if n < 2:
                 continue
-            V = np.stack([a for a, s in zip(arrs, sel) if s])
-            sub = work[sel]
+            mask = pa.array(sel)
+            flat = pc.list_flatten(vecs.filter(mask))
+            V = flat.to_numpy(zero_copy_only=False).reshape(n, dim)
+            sub = work.filter(mask)
             ids = sub[id_col].to_numpy()
-            ccv = sub["_cc"].to_numpy(dtype="float64")
-            norms = sub["_norm"].to_numpy(dtype="float64")
-            n = V.shape[0]
+            ccv = sub["_cc"].to_numpy()
+            norms = sub["_norm"].to_numpy()
             seeded = np.empty((n, dim + 1), dtype="float64")
             seeded[:, 0] = 0.0
             cc_nan = np.isnan(ccv)
@@ -504,12 +509,7 @@ def _neighbor_counts_grouped(
                 c = int(np.count_nonzero(qual))
                 if c:
                     better[ids[i]] = better.get(ids[i], 0) + c
-        return pd.DataFrame(
-            {
-                "_ida": pd.Series(list(better), dtype=object),
-                "_n_better": list(better.values()),
-            }
-        )
+        return {"_ida": list(better), "_n_better": list(better.values())}
 
     slim = guarded.select(
         label_col,
@@ -523,7 +523,7 @@ def _neighbor_counts_grouped(
             | F.col("_cc").isNull()
         ).alias("_bad"),
     )
-    return slim.groupBy(label_col, "_sub").applyInPandas(counts, out_schema)
+    return map_groups(slim.groupBy(label_col, "_sub"), counts, out_schema)
 
 
 def semantic_dedup(
@@ -635,15 +635,16 @@ def semantic_dedup(
         # Spark evaluates INTERPRETED per element (r15 profile at sf1:
         # 111.8 s executorRunTime in that one stage for ~17M pairs).
         # With the guard ON every (label, _sub) slice is bounded by
-        # ~max_cluster rows, so the whole slice fits one applyInPandas
-        # group and the pairwise math runs vectorized in numpy — with
-        # the fold's EXACT left-to-right float64 addition order
-        # reproduced via np.add.accumulate over a 0.0-seeded product
-        # row, so every cosine is bit-identical to the JVM expression
-        # (r15 A/B: output identical via exceptAll at sf0.1 AND sf1;
-        # sf1 same-session min-of-3 5.83 s -> 2.32 s). The unguarded
-        # opt-out keeps the JVM join: a degenerate unbounded cluster
-        # must melt CPU gradually there, not OOM a Python worker.
+        # ~max_cluster rows, so the whole slice fits one Arrow group
+        # (arrow_map.map_groups) and the pairwise math runs vectorized
+        # in numpy — with the fold's EXACT left-to-right float64
+        # addition order reproduced via np.add.accumulate over a
+        # 0.0-seeded product row, so every cosine is bit-identical to
+        # the JVM expression (r15 A/B: output identical via exceptAll
+        # at sf0.1 AND sf1; sf1 same-session min-of-3 5.83 s ->
+        # 2.32 s). The unguarded opt-out keeps the JVM join: a
+        # degenerate unbounded cluster must melt CPU gradually there,
+        # not OOM a Python worker.
         nb = _neighbor_counts_grouped(guarded, tau, label_col, id_col)
         return cc.join(nb, cc[id_col] == nb["_ida"], "left").select(
             id_col,

@@ -195,8 +195,7 @@ def mm_png_metadata(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# multimodal breadth: resize / frame-sample / audio features; grouped
-# applyInPandas normalization
+# multimodal breadth: resize / frame-sample / audio features
 # ---------------------------------------------------------------------------
 _OB = "octet_length(encode(text))"
 

@@ -17,7 +17,7 @@ from __future__ import annotations
 
 import math
 
-from pyspark.sql import DataFrame, SparkSession, Window as W
+from pyspark.sql import Column, DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 
 from evolution_data_warehouse_spark.operators.arrow_map import local_table
@@ -1185,7 +1185,7 @@ SELECT purchase_id, user_id, purchase_ts, last_view_id, last_view_ts FROM (
     _ASOF_ORACLE,
     doc="Backward as-of join (latest prior view per purchase) — engine "
     "extension motivated by the SCD2 validity window (SURVEY §2.3). "
-    "Equi-join on key + window; asof_join_pandas is the high-fanout path.",
+    "Equi-join on key + inequality window + per-purchase row_number.",
 )
 def join_asof(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = t(spark, sf_dir, "events")

@@ -589,8 +589,8 @@ FROM cc c LEFT JOIN nb ON nb.vec_id = c.vec_id
     "engine's default-on max_cluster guard sub-splits any oversize "
     "cluster by an md5-based id hash — modeled EXACTLY in this oracle "
     "(the g CTE), so the query stays scale-independent even on a "
-    "degenerate clustering. r15: the guarded pair stage runs as one "
-    "numpy applyInPandas group per bounded slice with the fold's "
+    "degenerate clustering. r15: the guarded pair stage runs in numpy, "
+    "one Arrow group per bounded slice, with the fold's "
     "exact addition order (np.add.accumulate, 0.0-seeded) — "
     "bit-identical output (exceptAll-proven at sf0.1/sf1 plus a "
     "JVM-vs-numpy differential test on NULL/NaN/tie edges), sf1 "

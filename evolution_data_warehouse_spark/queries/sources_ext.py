@@ -13,12 +13,16 @@ import tarfile
 import tempfile
 from hashlib import md5
 
-import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from evolution_data_warehouse_spark.operators.arrow_map import local_table, map_rows
+from evolution_data_warehouse_spark.operators.arrow_map import (
+    local_table,
+    map_groups,
+    map_rows,
+)
 from evolution_data_warehouse_spark.operators.datapipe import hash_bucket
 from evolution_data_warehouse_spark.operators.dedup import (
     content_hash64,
@@ -2070,7 +2074,7 @@ FROM p GROUP BY shard
     "shard, samples are laid out in (rank, doc_id) order and written "
     "as {doc_id}.txt (the body) + {doc_id}.json (metadata incl. the "
     "rank key) with pinned mtime/uid so the tar bytes are fully "
-    "deterministic. The writer is one applyInPandas per shard group "
+    "deterministic. The writer is one Arrow group per shard "
     "(atomic tmp+rename, so task retries are idempotent); the reader "
     "re-opens every tar in a second Arrow stage, walks members IN TAR "
     "ORDER, recomputes the rank from the payload, and checks the "
@@ -2082,8 +2086,6 @@ FROM p GROUP BY shard
     "global sort, no driver data path.",
 )
 def snk_webdataset_shards(spark: SparkSession, sf_dir: str) -> DataFrame:
-
-
     base = scratch("snk_webdataset_shards", sf_dir)
     shutil.rmtree(base, ignore_errors=True)
     os.makedirs(base, exist_ok=True)
@@ -2099,21 +2101,19 @@ def snk_webdataset_shards(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).alias("rk"),
     ).withColumn("shard", F.col("rk") % _WDS_SHARDS)
 
-    def _write_shard(pdf: pd.DataFrame) -> pd.DataFrame:
-        shard = int(pdf["shard"].iloc[0])
-        pdf = pdf.sort_values(["rk", "doc_id"])
+    def _write_shard(table: pa.Table) -> dict:
+        shard = table["shard"][0].as_py()
+        table = table.sort_by([("rk", "ascending"), ("doc_id", "ascending")])
         path = os.path.join(base, f"shard-{shard:05d}.tar")
         fd, tmp = tempfile.mkstemp(dir=base, suffix=".tmp")
         with os.fdopen(fd, "wb") as fh:
             with tarfile.open(fileobj=fh, mode="w") as tar:
-                for doc_id, body, rk in zip(
-                    pdf["doc_id"], pdf["body"], pdf["rk"]
-                ):
-                    key = f"{int(doc_id):012d}"
-                    txt = str(body).encode("utf-8")
+                cols = (table[c].to_pylist() for c in ("doc_id", "body", "rk"))
+                for doc_id, body, rk in zip(*cols):
+                    key = f"{doc_id:012d}"
+                    txt = body.encode("utf-8")
                     meta = json.dumps(
-                        {"doc_id": int(doc_id), "rk": int(rk)},
-                        sort_keys=True,
+                        {"doc_id": doc_id, "rk": rk}, sort_keys=True
                     ).encode("utf-8")
                     for suffix, payload in ((".txt", txt), (".json", meta)):
                         info = tarfile.TarInfo(name=key + suffix)
@@ -2121,14 +2121,12 @@ def snk_webdataset_shards(spark: SparkSession, sf_dir: str) -> DataFrame:
                         info.mtime = 0  # pinned: byte-deterministic tars
                         tar.addfile(info, io.BytesIO(payload))
         os.replace(tmp, path)  # atomic publish — retries are idempotent
-        return pd.DataFrame(
-            {"shard": [shard], "path": [path], "n": [len(pdf)]}
-        )
+        return {"shard": [shard], "path": [path], "n": [table.num_rows]}
 
-    manifest = (
-        keyed.repartition(_WDS_SHARDS, "shard")
-        .groupBy("shard")
-        .applyInPandas(_write_shard, "shard bigint, path string, n bigint")
+    manifest = map_groups(
+        keyed.repartition(_WDS_SHARDS, "shard").groupBy("shard"),
+        _write_shard,
+        "shard bigint, path string, n bigint",
     )
 
     def _read_shards(shard, path, _n):

@@ -14,7 +14,7 @@ from __future__ import annotations
 
 import os
 
-from pyspark.sql import DataFrame, Observation, SparkSession
+from pyspark.sql import Column, DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from evolution_data_warehouse_spark.operators.etl_log import logged_step

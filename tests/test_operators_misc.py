@@ -1,5 +1,5 @@
-"""Misc operator tests: as-of pandas path, multimodal stub gating,
-security generation, datamart views, surrogate keys."""
+"""Misc operator tests: multimodal stub gating, security generation,
+datamart views, surrogate keys, the Arrow boundary's dirty inputs."""
 
 from __future__ import annotations
 
@@ -7,10 +7,6 @@ import pytest
 
 from pyspark.sql import functions as F
 
-from evolution_data_warehouse_spark.operators.asof import (
-    asof_join,
-    asof_join_pandas,
-)
 from evolution_data_warehouse_spark.operators.multimodal import decode_documents
 from evolution_data_warehouse_spark.operators.security import (
     build_agencies,
@@ -19,36 +15,6 @@ from evolution_data_warehouse_spark.operators.security import (
 )
 from evolution_data_warehouse_spark.plans.datamarts import create_datamarts
 from evolution_data_warehouse_spark.queries.common import t
-
-
-def test_asof_pandas_matches_join_window(spark, sf_dir):
-    ev = t(spark, sf_dir, "events")
-    purchases = ev.filter(F.col("event_type") == "purchase").select(
-        F.col("event_id").alias("purchase_id"),
-        "user_id",
-        F.col("ts").alias("purchase_ts"),
-    )
-    views = ev.filter(F.col("event_type") == "view").select(
-        "user_id",
-        F.col("event_id").alias("view_id"),
-        F.col("ts").alias("view_ts"),
-    )
-    a = asof_join(
-        purchases, views, on="user_id", left_ts="purchase_ts",
-        right_ts="view_ts", left_key="purchase_id",
-        right_cols=["view_id", "view_ts"], tie_breaker="view_id",
-    )
-    b = asof_join_pandas(
-        purchases, views, on="user_id", left_ts="purchase_ts",
-        right_ts="view_ts",
-        out_schema="purchase_id long, user_id long, purchase_ts timestamp, "
-        "view_id long, view_ts timestamp",
-    )
-    am = {r.purchase_id: r.view_ts for r in a.collect()}
-    bm = {r.purchase_id: r.view_ts for r in b.collect()}
-    # merge_asof picks the same latest-prior timestamp (ties may pick a
-    # different id; timestamps must agree).
-    assert am == bm
 
 
 def test_multimodal_real_decode_dispatch():
@@ -3232,7 +3198,7 @@ def test_audio_fingerprint_and_spectrum():
 
 
 def test_semantic_dedup_grouped_path_matches_join_path(spark):
-    """The r15 guarded fast path (numpy applyInPandas per slice) must be
+    """The r15 guarded fast path (numpy per Arrow group slice) must be
     row-identical to the unguarded JVM pair-join formulation whenever no
     cluster exceeds the cap (slice count 1 → same pair set), including
     the edge inputs the numpy mirror handles explicitly: cent_cos ties
@@ -3263,7 +3229,7 @@ def test_semantic_dedup_grouped_path_matches_join_path(spark):
     df = spark.createDataFrame(
         rows, "vec_id long, label int, embedding array<double>"
     )
-    fast = semantic_dedup(df, 0.95)  # guarded: applyInPandas path
+    fast = semantic_dedup(df, 0.95)  # guarded: map_groups path
     ref = semantic_dedup(df, 0.95, max_cluster=None)  # JVM join path
     assert fast.exceptAll(ref).count() == 0
     assert ref.exceptAll(fast).count() == 0
@@ -3389,6 +3355,13 @@ _VECTOR_PASSES = (
     "opq_rotated_energy",
     "pca_project",
 )
+# grouped passes: (key, bigint) rows per case
+_MX_GROUPS = {
+    "null_key": [(None, 2**62 + 1), (None, 2), ("a", 3)],
+    "non_ascii_key": [("été", 1), ("ß🙂", 2), ("ete", 3), ("été", 4)],
+    "empty_partitions": [("a", 1), ("b", 2), ("a", 3)],
+    "empty_result": [("a", 1), ("b", 2), ("b", 3)],
+}
 # dirty text: NULL, empty, one token, doubled spaces, non-ASCII letters
 # and an emoji, and a duplicate doc_id
 _MX_TEXT = [
@@ -3508,7 +3481,9 @@ def _pca_reference(rows):
     "pass_name,case",
     [(p, c) for p in (*_VECTOR_PASSES, "pca_fit") for c in ("clean", *_MX_DIRTY)]
     + [("bigram_counts", "dirty_text"), ("repetition_ngram_stats", "dirty_text")]
-    + [("map_rows_identity", "bigint_null"), ("heavy_hitters_exact", "null_items")],
+    + [("map_rows_identity", "bigint_null"), ("heavy_hitters_exact", "null_items")]
+    + [("map_groups_identity", "bigint_null")]
+    + [("map_groups", c) for c in _MX_GROUPS],
 )
 def test_map_pass_dirty_input_matrix(spark, pass_name, case):
     """Every Arrow map pass on a fixed adversarial table (NULL rows and
@@ -3517,10 +3492,15 @@ def test_map_pass_dirty_input_matrix(spark, pass_name, case):
     items) either matches its reference — the pq_assign expression
     form for PQ, Python closed forms and numpy for the rest — or raises
     the documented ValueError naming the offending id. Vector passes
-    keep the input's id type (INT here)."""
+    keep the input's id type (INT here). The grouped boundary
+    (``map_groups``) gets NULL and non-ASCII group keys, more
+    partitions than groups, and a group whose pass returns no rows."""
+    import pyarrow.compute as pc
+
     from evolution_data_warehouse_spark.operators.arrow_map import (
         local_table,
         map_columns,
+        map_groups,
         map_rows,
     )
     from evolution_data_warehouse_spark.operators.gopher import (
@@ -3542,6 +3522,41 @@ def test_map_pass_dirty_input_matrix(spark, pass_name, case):
             (2**62 + 1,),
             (None,),
         ]
+        return
+    if pass_name == "map_groups_identity":
+        # one group holding both rows: fn must see the exact int, not a
+        # float64 rounding of it
+        x = local_table(spark, [("g", 2**62 + 1), ("g", None)], "k string, x bigint")
+        ident = lambda t: {"k": t.column("k"), "x": t.column("x")}
+        got = map_groups(x.groupBy("k"), ident, "k string, x bigint")
+        assert sorted((tuple(r) for r in got.collect()), key=repr) == [
+            ("g", 2**62 + 1),
+            ("g", None),
+        ]
+        return
+    if pass_name == "map_groups":
+        rows = _MX_GROUPS[case]
+
+        def summarize(t):
+            # the "b" group of the empty_result case returns no rows
+            if case == "empty_result" and t.column("k")[0].as_py() == "b":
+                return {"k": [], "n": [], "s": []}
+            return {
+                "k": t.column("k")[:1],
+                "n": [t.num_rows],
+                "s": [pc.sum(t.column("x")).as_py()],
+            }
+
+        # 10 hash partitions for at most 3 groups: most are empty
+        src = local_table(spark, rows, "k string, x bigint").repartition(10, "k")
+        got = map_groups(src.groupBy("k"), summarize, "k string, n bigint, s bigint")
+        ref = {}
+        for k, x in rows:
+            if not (case == "empty_result" and k == "b"):
+                n, s = ref.get(k, (0, 0))
+                ref[k] = (n + 1, s + x)
+        expect = sorted(((k, n, s) for k, (n, s) in ref.items()), key=repr)
+        assert sorted((tuple(r) for r in got.collect()), key=repr) == expect
         return
     if case == "null_items":
         # a 6, b 5, NULL 4, c 1, d 1 in one batch: NULLs are not counted,

@@ -7,11 +7,13 @@ query module reaches into another one's private (``_``-prefixed) names:
 a helper two families need is public in the family that owns it or lives
 in queries/common.py.
 
-The package's Python map passes share one Arrow boundary: only
-operators/arrow_map.py calls ``.mapInArrow(``, nothing calls
-``.mapInPandas(``, the boundary imports no pandas, and no pass
-hand-casts its output with ``np.int32(`` — the boundary types every
-column to the declared schema. Literal tables cross the same boundary:
+The package's stateless Python passes share one Arrow boundary: only
+operators/arrow_map.py calls ``.mapInArrow(`` or ``.applyInArrow(``,
+nothing calls ``.mapInPandas(``, the only ``applyInPandas`` left is
+streaming/events.py's stateful ``applyInPandasWithState(``, no module
+but streaming/events.py imports pandas, and no pass hand-casts its
+output with ``np.int32(`` — the boundary types every column to the
+declared schema. Literal tables cross the same boundary:
 they are built with ``arrow_map.local_table`` (a ``LocalTableScan``, no
 Python worker); the one ``createDataFrame(`` site left besides it
 (rows from outside the program) is pinned in an allowlist that may
@@ -34,6 +36,7 @@ REPO = Path(__file__).resolve().parent.parent
 PACKAGE = REPO / "evolution_data_warehouse_spark"
 QUERIES = PACKAGE / "queries"
 BOUNDARY = PACKAGE / "operators" / "arrow_map.py"
+STATEFUL = PACKAGE / "streaming" / "events.py"
 PKG = "evolution_data_warehouse_spark.queries"
 
 # name prefix → family module
@@ -98,18 +101,33 @@ def _package_files_containing(needle: str) -> list[str]:
     ]
 
 
+def _imports_pandas(path: Path) -> bool:
+    """Whether ``path`` imports pandas anywhere, at any depth."""
+    for node in ast.walk(ast.parse(path.read_text())):
+        if isinstance(node, ast.Import):
+            names = [alias.name for alias in node.names]
+        elif isinstance(node, ast.ImportFrom):
+            names = [node.module or ""]
+        else:
+            continue
+        if any(name.split(".")[0] == "pandas" for name in names):
+            return True
+    return False
+
+
 def test_map_passes_go_through_the_arrow_boundary():
-    assert _package_files_containing(".mapInArrow(") == [
-        str(BOUNDARY.relative_to(REPO))
-    ]
+    boundary = [str(BOUNDARY.relative_to(REPO))]
+    stateful = [str(STATEFUL.relative_to(REPO))]
+    assert _package_files_containing(".mapInArrow(") == boundary
+    assert _package_files_containing(".applyInArrow(") == boundary
     assert _package_files_containing(".mapInPandas(") == []
-    modules = [
-        node.module if isinstance(node, ast.ImportFrom) else alias.name
-        for node in ast.walk(ast.parse(BOUNDARY.read_text()))
-        if isinstance(node, (ast.Import, ast.ImportFrom))
-        for alias in node.names
-    ]
-    assert "pandas" not in {m.split(".")[0] for m in modules}
+    assert _package_files_containing("applyInPandas(") == []
+    assert _package_files_containing("applyInPandasWithState(") == stateful
+    assert [
+        str(p.relative_to(REPO))
+        for p in sorted(PACKAGE.rglob("*.py"))
+        if _imports_pandas(p)
+    ] == stateful
 
 
 def test_no_hand_cast_int32_outputs():
